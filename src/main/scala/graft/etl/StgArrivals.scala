@@ -9,7 +9,7 @@ import graft.core.{GraftSession, Schemas}
 /** Typed staging model — the engine's `stg_arrivals`
   * (reference `dbt_project/models/staging/stg_arrivals.sql:18-40`).
   *
-  * Raw hive-partitioned parquet glob (`date=.../arrivals_&#42;.parquet`) → 7
+  * Raw hive-partitioned snapshots (`date=.../arrivals_&#42;.parquet`) → 7
   * typed columns:
   *  - explicit casts to the declared types (P3)
   *  - fault-tolerant timestamp parse: malformed → NULL, never an error
@@ -20,15 +20,20 @@ import graft.core.{GraftSession, Schemas}
   *    reference's Jinja glob-count guard, reproduced as a runtime FS check
   *    because Catalyst cannot plan a nonexistent path)
   *
-  * Scale notes: the select is a pure projection over the scan — Catalyst
-  * pushes column pruning into parquet, and hive partition discovery on
-  * `date=` directories gives partition pruning for free the moment a date
-  * filter is applied downstream (the reference writes the partition but
-  * never prunes on it; we keep the layout so incremental marts can).
+  * Scale notes: raw reads (batch [[apply]] and [[streamRaw]]) declare
+  * `Schemas.rawArrivals`, so no schema-inference job runs, and name the
+  * `date=` directories as root paths with a `pathGlobFilter` for the
+  * snapshot files. Spark lists one path per date directory on the
+  * driver; its parallel listing job only appears beyond 32 date
+  * directories (`spark.sql.sources.parallelPartitionDiscovery.threshold`;
+  * a glob over the snapshot files themselves crosses it at a day's 33rd
+  * poll). The select is a pure projection over the scan — Catalyst
+  * pushes column pruning into parquet — and one date is read by naming
+  * its directory.
   */
 object StgArrivals {
 
-  /** True if the glob matches at least one file (reference
+  /** True if the glob matches at least one path (reference
     * `stg_arrivals.sql:5-14`, compile-time `glob()` count).
     */
   def globNonEmpty(spark: SparkSession, pattern: String): Boolean = {
@@ -38,15 +43,29 @@ object StgArrivals {
     matches != null && matches.nonEmpty
   }
 
-  /** Build the staging frame from a raw zone directory
-    * (`{raw}/date=YYYY-MM-DD/arrivals_*.parquet`).
+  /** The snapshot files `Jobs.ingest` names each poll: a `part-` file a
+    * crashed ingest left before its rename is not a snapshot.
     */
-  def apply(spark: SparkSession, rawDir: String): DataFrame = {
+  private val snapshotFiles = "arrivals_*.parquet"
+
+  private def dateDirs(rawDir: String, date: String) = s"$rawDir/date=$date"
+
+  /** Build the staging frame from a raw zone directory
+    * (`{raw}/date=YYYY-MM-DD/arrivals_*.parquet`), over every date or over
+    * the one `date` given.
+    */
+  def apply(spark: SparkSession, rawDir: String, date: String = "*"): DataFrame = {
     GraftSession.tune(spark)
-    val pattern = s"$rawDir/date=*/arrivals_*.parquet"
-    if (!globNonEmpty(spark, pattern)) Schemas.emptyRelation(spark, Schemas.stgArrivals)
-    else fromRaw(spark.read.parquet(pattern))
+    val dirs = dateDirs(rawDir, date)
+    if (!globNonEmpty(spark, dirs)) Schemas.emptyRelation(spark, Schemas.stgArrivals)
+    else fromRaw(spark.read.schema(Schemas.rawArrivals)
+      .option("pathGlobFilter", snapshotFiles).parquet(dirs))
   }
+
+  /** The raw zone as a file-source stream (untyped raw columns). */
+  def streamRaw(spark: SparkSession, rawDir: String): DataFrame =
+    spark.readStream.schema(Schemas.rawArrivals)
+      .option("pathGlobFilter", snapshotFiles).parquet(dateDirs(rawDir, "*"))
 
   /** The typed projection itself, reusable over any frame with the raw
     * arrival columns (reference `stg_arrivals.sql:18-25`).

@@ -117,10 +117,19 @@ object Jobs {
     n
   }
 
-  /** E2 — transform: raw glob → staging → headway mart (both fully
+  /** E2 — transform: raw zone → staging → headway mart (both fully
     * recomputed — the reference's `+materialized: table` semantics) →
-    * quality gate (the 9 dbt not_null tests + 2 GX checks on a 10k
-    * sample). Returns the check results; callers decide error-vs-warn.
+    * quality gate. Returns the check results (the 9 dbt not_null tests,
+    * then the 2 GX checks); callers decide error-vs-warn.
+    *
+    * The dbt tests ride the writes as observed metrics
+    * ([[graft.quality.Expectations.observe]]): the 3 staging tests on the
+    * `stg_arrivals` write, the 6 mart tests on the `fct_headways` write,
+    * so each counts exactly the rows written in the write's own pass. The
+    * GX checks keep their own job over the reference's 10k-row `limit`
+    * sample of the written staging table (`tfl_transform_dag.py:15`).
+    * Every read has a declared schema, so no listing or schema-inference
+    * job runs besides these.
     *
     * `lineage` (default off) emits an OpenLineage-shaped START/COMPLETE
     * run-event pair with the job's dataset URIs — the counterpart of the
@@ -134,22 +143,19 @@ object Jobs {
       inputs = Seq(rawDir),
       outputs = Seq(s"$silverDir/stg_arrivals", s"$silverDir/fct_headways")) {
       GraftSession.tune(spark)
-      val stg = StgArrivals(spark, rawDir)
+      val (stg, stgChecks) = Expectations.observe(StgArrivals(spark, rawDir),
+        Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts")))
       stg.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/stg_arrivals")
       val stgBack = spark.read.schema(Schemas.stgArrivals)
         .parquet(s"$silverDir/stg_arrivals")
-      FctHeadways(stgBack).write.mode(SaveMode.Overwrite)
-        .parquet(s"$silverDir/fct_headways")
-      val fctBack = spark.read.parquet(s"$silverDir/fct_headways")
-      val dbtChecks = Expectations.run(stgBack,
-        Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts"))) ++
-        Expectations.run(fctBack, Seq(
-          NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
-          NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
+      val (fct, fctChecks) = Expectations.observe(FctHeadways(stgBack), Seq(
+        NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
+        NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
+      fct.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/fct_headways")
       val gxChecks = Expectations.run(stgBack, Seq(
         Between("time_to_station_s", 0, 3600, Warning),
         NotNull("line_id", Warning)), sample = Some(10000))
-      dbtChecks ++ gxChecks
+      stgChecks() ++ fctChecks() ++ gxChecks
     }
 
   /** E2-incremental — maintain a DATE-PARTITIONED silver layout for one
@@ -181,12 +187,8 @@ object Jobs {
       GraftSession.tune(spark)
       val stgRoot = s"$silverDir/stg_arrivals_by_date"
       val stateRoot = s"$silverDir/state_last_arrival"
-      val rawGlob = s"$rawDir/date=$date/arrivals_*.parquet"
-      val stgNew =
-        if (!StgArrivals.globNonEmpty(spark, rawGlob))
-          Schemas.emptyRelation(spark, Schemas.stgArrivals)
-        else StgArrivals.fromRaw(spark.read.parquet(rawGlob))
-      stgNew.write.mode(SaveMode.Overwrite).parquet(s"$stgRoot/date=$date")
+      StgArrivals(spark, rawDir, date)
+        .write.mode(SaveMode.Overwrite).parquet(s"$stgRoot/date=$date")
       // boundary source, in preference order: (1) the latest maintained
       // state partition before `date`, UNIONED with any staged partitions
       // NEWER than that state (a crash between the mart write and the

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Data-quality expectations as data — the engine's reimplementation of the
@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   * Design: all expectations against one frame evaluate in a SINGLE
   * aggregation pass (one job, one scan) — each check is a conditional-count
   * expression, so N checks cost one parquet scan regardless of N. At 100 TB
-  * that is the difference between one pass and N passes.
+  * that is the difference between one pass and N passes. [[observe]] goes
+  * one step further: the same counts ride another action's pass (a layer's
+  * write) through `Dataset.observe`, so they cost no pass of their own and
+  * cover exactly the rows that action processed.
   *
   * GX parity notes: `Between` checks only non-null values (GX semantics —
   * nulls are the `NotNull` check's business); `sample` reproduces the
@@ -30,6 +33,7 @@ object Expectations {
 
   sealed trait Expectation {
     def name: String
+    def severity: Severity
     /** 1 when the row fails the expectation, else 0. */
     def failureFlag: Column
   }
@@ -59,7 +63,7 @@ object Expectations {
   def check(df: DataFrame, expectations: Seq[Expectation],
       sample: Option[Int] = None): DataFrame = {
     val sampled = sample.fold(df)(df.limit)
-    val aggs = expectations.map(e => sum(e.failureFlag).as(e.name))
+    val aggs = failureCounts(expectations)
     val oneRow = sampled.agg(aggs.head, aggs.tail: _*)
     // pivot the single row of counts into (check_name, failures) rows
     val stackExpr = expectations
@@ -71,17 +75,38 @@ object Expectations {
       .orderBy("check_name")
   }
 
-  /** Driver-side evaluation for jobs that gate on severity (TransformJob). */
+  /** Driver-side evaluation for jobs that gate on severity (TransformJob):
+    * one aggregation, collected as one row.
+    */
   def run(df: DataFrame, expectations: Seq[Expectation],
       sample: Option[Int] = None): Seq[Result] = {
-    val byName = expectations.map(e => e.name -> e).toMap
-    check(df, expectations, sample).collect().toSeq.map { r =>
-      val name = r.getString(0)
-      val failures = r.getLong(1)
-      Result(name, failures, failures == 0L, byName(name) match {
-        case NotNull(_, sev) => sev
-        case Between(_, _, _, sev) => sev
-      })
-    }
+    val aggs = failureCounts(expectations)
+    val row = sample.fold(df)(df.limit).agg(aggs.head, aggs.tail: _*).collect().head
+    results(expectations, row.getValuesMap[Any](expectations.map(_.name)))
   }
+
+  /** `df` with `expectations` attached as observed metrics, and their
+    * results over the rows an action on that frame processes, in the
+    * action's own pass. The results block until such an action finished.
+    */
+  def observe(df: DataFrame, expectations: Seq[Expectation]):
+      (DataFrame, () => Seq[Result]) = {
+    val observation = Observation()
+    val aggs = failureCounts(expectations)
+    (df.observe(observation, aggs.head, aggs.tail: _*),
+      () => results(expectations, observation.get))
+  }
+
+  private def failureCounts(expectations: Seq[Expectation]): Seq[Column] =
+    expectations.map(e => sum(e.failureFlag).as(e.name))
+
+  /** Results ordered by check name, from the failure counts by name (a
+    * null count — no rows — is zero failures).
+    */
+  private def results(expectations: Seq[Expectation],
+      failures: Map[String, Any]): Seq[Result] =
+    expectations.map { e =>
+      val n = Option(failures(e.name)).fold(0L)(_.asInstanceOf[Long])
+      Result(e.name, n, n == 0L, e.severity)
+    }.sortBy(_.name)
 }

@@ -32,16 +32,6 @@ import graft.etl.{FctHeadways, StgArrivals}
   */
 object HeadwaysStream {
 
-  /** The raw-zone file stream — one definition of the layout contract
-    * (declared schema, snapshot glob, hive date dirs) for all three
-    * streaming paths.
-    */
-  private def rawStream(spark: SparkSession, rawDir: String) =
-    spark.readStream
-      .schema(Schemas.rawArrivals)
-      .option("pathGlobFilter", "arrivals_*.parquet")
-      .parquet(s"$rawDir/date=*")
-
   /** Start the stream: raw files in → silver parquet out, one full
     * recompute per trigger. `Trigger.AvailableNow` processes everything
     * present and stops — the scheduled-batch cadence of the reference.
@@ -49,7 +39,7 @@ object HeadwaysStream {
   def start(spark: SparkSession, rawDir: String, silverDir: String,
       checkpointDir: String, availableNow: Boolean = true): StreamingQuery = {
     GraftSession.tune(spark)
-    val raw = rawStream(spark, rawDir)
+    val raw = StgArrivals.streamRaw(spark, rawDir)
     val trigger =
       if (availableNow) Trigger.AvailableNow()
       else Trigger.ProcessingTime("2 minutes") // the reference's cron cadence
@@ -138,7 +128,7 @@ object HeadwaysStream {
   def windowedArrivalCounts(spark: SparkSession, rawDir: String,
       lateness: String = "10 minutes"): DataFrame = {
     GraftSession.tune(spark)
-    StgArrivals.fromRaw(rawStream(spark, rawDir))
+    StgArrivals.fromRaw(StgArrivals.streamRaw(spark, rawDir))
       .filter(col("event_ts").isNotNull)
       .withWatermark("event_ts", lateness)
       .groupBy(window(col("event_ts"), "1 hour"), col("line_id"))
@@ -153,7 +143,7 @@ object HeadwaysStream {
       checkpointDir: String): StreamingQuery = {
     GraftSession.tune(spark)
     import spark.implicits._
-    val arrivals = StgArrivals.fromRaw(rawStream(spark, rawDir))
+    val arrivals = StgArrivals.fromRaw(StgArrivals.streamRaw(spark, rawDir))
       .filter(col("event_ts").isNotNull)
       .select(col("line_id"), col("stop_id"), col("event_ts"))
       .as[ArrivalEvent]
@@ -187,7 +177,7 @@ object HeadwaysStream {
       outDir: String, checkpointDir: String): StreamingQuery = {
     GraftSession.tune(spark)
     import spark.implicits._
-    val arrivals = StgArrivals.fromRaw(rawStream(spark, rawDir))
+    val arrivals = StgArrivals.fromRaw(StgArrivals.streamRaw(spark, rawDir))
       .filter(col("event_ts").isNotNull)
       .select(col("line_id"), col("stop_id"), col("event_ts"))
       .as[ArrivalEvent]

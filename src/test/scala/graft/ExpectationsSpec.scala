@@ -50,4 +50,16 @@ class ExpectationsSpec extends AnyFunSuite {
       NotNull("id", Warning), Between("v", 0, 3600, Warning)))
     assert(r.forall(_.severity == Warning))
   }
+
+  test("observe counts the rows an action writes, as run does (no rows: zero failures)") {
+    val checks = Seq(NotNull("id"), NotNull("v"), Between("v", 0, 3600))
+    Seq(df, df.filter($"id" > 100)).foreach { frame =>
+      val (observed, results) = Expectations.observe(frame, checks)
+      observed.write.format("noop").mode("overwrite").save()
+      assert(results() == Expectations.run(frame, checks))
+    }
+    val (none, results) = Expectations.observe(df.filter($"id" > 100), checks)
+    none.write.format("noop").mode("overwrite").save()
+    assert(results().forall(r => r.failures == 0 && r.passed))
+  }
 }

@@ -1,13 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.Instant
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.{Http, SyntheticArrivals}
 import graft.jobs.Jobs
+import graft.quality.Expectations
+import graft.quality.Expectations.NotNull
 import graft.streaming.HeadwaysStream
 
 /** End-to-end pipeline tests: ingest → raw zone → transform → silver →
@@ -40,6 +48,97 @@ class JobsSpec extends AnyFunSuite {
     assert(fct.columns.toSeq == Seq("line_id", "stop_id", "hour",
       "avg_headway_s", "p50_headway_s", "p90_headway_s"))
     assert(results.filter(_.name.startsWith("not_null_p")).forall(_.passed))
+  }
+
+  /** 33 polls into one date directory: one path past Spark's 32-path
+    * parallel-listing threshold, were the snapshot files globbed one by one.
+    */
+  private lazy val raw33: String = {
+    val raw = s"${Files.createTempDirectory("graft-raw33")}/raw"
+    (0 until 33).foreach { i =>
+      val at = t0.plusSeconds(i * 120L)
+      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
+    }
+    raw
+  }
+
+  private def snapshotIn(dateDir: String) =
+    new java.io.File(dateDir).listFiles().map(_.toPath)
+      .find(_.getFileName.toString.startsWith("arrivals_")).get
+
+  test("transform past the 32-path listing threshold runs only SQL-execution jobs") {
+    val silver = s"${Files.createTempDirectory("graft-jobs")}/silver"
+    val outside = new ConcurrentLinkedQueue[Int]
+    val seenMarker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("graft.test.marker") != null)) seenMarker.countDown()
+        else if (props.forall(_.getProperty("spark.sql.execution.id") == null))
+          outside.add(j.jobId)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val results = try {
+      val r = Jobs.transform(spark, raw33, silver)
+      // events reach a listener in order: once the marker job's start
+      // arrives, every job the transform ran has been seen
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(seenMarker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(outside.isEmpty,
+      s"listing or schema-inference jobs outside any SQL execution: $outside")
+    assert(results.size == 11, "9 dbt not_null + 2 GX checks")
+  }
+
+  test("observed dbt counts equal Expectations.run over the written tables") {
+    val silver = s"${Files.createTempDirectory("graft-parity")}/silver"
+    val observed = Jobs.transform(spark, raw33, silver).take(9)
+    val stgBack = spark.read.parquet(s"$silver/stg_arrivals")
+    val fctBack = spark.read.parquet(s"$silver/fct_headways")
+    val recomputed =
+      Expectations.run(stgBack, Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts"))) ++
+        Expectations.run(fctBack, Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
+          NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
+    assert(observed == recomputed)
+    // the dirty synthetic data must exercise a non-zero count
+    assert(observed.find(_.name == "not_null_event_ts").get.failures > 0, s"$observed")
+  }
+
+  test("empty raw zone: 11 zero-failure checks, no wait on the observation") {
+    val root = Files.createTempDirectory("graft-empty").toString
+    // a date directory whose only file is a stray part- file (an ingest
+    // that crashed before its rename) holds no snapshot either
+    val strayOnly = s"$root/stray/date=2025-11-20"
+    Files.createDirectories(Paths.get(strayOnly))
+    Files.copy(snapshotIn(s"$raw33/date=2025-11-20"),
+      Paths.get(s"$strayOnly/part-00000-crashed.snappy.parquet"))
+    Seq(s"$root/missing", s"$root/stray").foreach { raw =>
+      val results = Await.result(
+        Future(Jobs.transform(spark, raw, s"$root/silver")), 120.seconds)
+      assert(results.size == 11, raw)
+      assert(results.forall(r => r.failures == 0 && r.passed), s"$raw: $results")
+    }
+  }
+
+  test("a stray part- file beside a snapshot is not staged") {
+    val root = Files.createTempDirectory("graft-stray").toString
+    val raw = s"$root/raw"
+    Jobs.ingest(spark, raw, t0, SyntheticArrivals.transport(t0))
+    val dateDir = Paths.get(s"$raw/date=2025-11-20")
+    val snapshot = snapshotIn(dateDir.toString)
+    val rows = spark.read.parquet(snapshot.toString).count()
+    Files.copy(snapshot, dateDir.resolve("part-00000-crashed.snappy.parquet"))
+    assert(graft.etl.StgArrivals(spark, raw).count() == rows)
+    Jobs.transform(spark, raw, s"$root/silver")
+    assert(spark.read.parquet(s"$root/silver/stg_arrivals").count() == rows)
+    Jobs.transformIncremental(spark, raw, s"$root/silver", "2025-11-20")
+    assert(spark.read.parquet(s"$root/silver/stg_arrivals_by_date/date=2025-11-20")
+      .count() == rows)
   }
 
   test("align writes one flat snapshot for the requested line, enriched via broadcast lookup") {
