@@ -19,8 +19,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Entries are held strongly but the queue is drained on every [[clear]],
   * so retention is bounded by the call sites of one query run. Streaming
-  * writers do NOT register here — they own their per-wave persists
-  * explicitly ([[graft.streaming.NearDupStream.writer]]'s wave scope).
+  * writers do NOT register here: [[graft.streaming.WaveCommit]] scopes
+  * their persists to one wave.
   */
 object TransientCache {
   private val entries =

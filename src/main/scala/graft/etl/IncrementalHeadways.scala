@@ -29,12 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalHeadways {
 
-  /** Mart rows for `date` (ISO `yyyy-MM-dd`), exactly as the full
-    * recompute would produce them. `newEvents`: the staged events of that
-    * date. `prior`: staged events from any superset of "each key's latest
-    * arrival before `date`" (pass all history for exactness, a pruned
-    * lookback for economy).
-    */
   /** The maintained boundary source: one row per (line_id, stop_id) with
     * the key's latest arrival — O(active keys) rows, independent of
     * history depth. Passing this as `prior` to [[forDate]] replaces the
@@ -46,14 +40,13 @@ object IncrementalHeadways {
     events.filter(col("event_ts").isNotNull)
       .groupBy("line_id", "stop_id").agg(max("event_ts").as("event_ts"))
 
-  /** Advance the state table past one new batch of events: max-merge —
-    * associative and idempotent, so replays and out-of-order maintenance
-    * within a date cannot corrupt it.
+  /** Mart rows for `date` (ISO `yyyy-MM-dd`), exactly as the full
+    * recompute would produce them. `newEvents`: staged events from any
+    * superset of that date's arrivals (a late poll's partition holds
+    * next-date arrivals). `prior`: staged events from any superset of
+    * "each key's latest arrival before `date`" (pass all history for
+    * exactness, a pruned lookback for economy).
     */
-  def advanceState(state: DataFrame, newEvents: DataFrame): DataFrame =
-    lastArrivalState(state.select("line_id", "stop_id", "event_ts")
-      .unionByName(newEvents.select("line_id", "stop_id", "event_ts")))
-
   def forDate(newEvents: DataFrame, prior: DataFrame, date: String): DataFrame = {
     val d = to_date(lit(date))
     val ev = newEvents.filter(col("event_ts").isNotNull &&

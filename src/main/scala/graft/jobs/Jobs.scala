@@ -168,14 +168,21 @@ object Jobs {
     * `<silver>/stg_arrivals_by_date/date=<d>/`,
     * `<silver>/fct_headways_by_date/date=<d>/`.
     *
+    * A staged partition holds the arrivals its polls PREDICT, so a late
+    * poll's partition also holds arrivals of the next date (a poll
+    * predicts less than a day ahead). The mart of `date` therefore reads
+    * its events from every staged partition up to `date`, not from its
+    * own partition alone.
+    *
     * `lookbackDays`: bound the boundary scan to the last N date
-    * partitions (partition-pruned). None = exact over all history; only
-    * consulted on the fallback path — once a LAST-ARRIVAL STATE TABLE
-    * exists (`<silver>/state_last_arrival/date=<d>`, maintained here), the
-    * boundary reads that instead: O(active keys) rows regardless of
-    * history depth, the extreme-scale shape. The state advances by
-    * max-merge each run ([[graft.etl.IncrementalHeadways.advanceState]]),
-    * so re-running a date is idempotent.
+    * partitions. None = exact over all history; only consulted on the
+    * fallback path — once a LAST-ARRIVAL STATE TABLE exists
+    * (`<silver>/state_last_arrival/date=<d>`: each key's latest arrival
+    * dated `d` or earlier, maintained here), the boundary reads that
+    * instead, plus the staged partitions from the state's date on:
+    * O(active keys) rows regardless of history depth, the extreme-scale
+    * shape. The state is a per-key max, so re-running a date is
+    * idempotent.
     */
   def transformIncremental(spark: SparkSession, rawDir: String,
       silverDir: String, date: String, lookbackDays: Option[Int] = None,
@@ -187,56 +194,44 @@ object Jobs {
       GraftSession.tune(spark)
       val stgRoot = s"$silverDir/stg_arrivals_by_date"
       val stateRoot = s"$silverDir/state_last_arrival"
+      val events = Seq("line_id", "stop_id", "event_ts")
       StgArrivals(spark, rawDir, date)
         .write.mode(SaveMode.Overwrite).parquet(s"$stgRoot/date=$date")
-      // boundary source, in preference order: (1) the latest maintained
-      // state partition before `date`, UNIONED with any staged partitions
-      // NEWER than that state (a crash between the mart write and the
-      // state write — or a date staged but never transformed — leaves
-      // such partitions; consulting only the state would silently skip
-      // their arrivals for every future boundary AND bake the gap into
-      // the advancing state forever); (2) previously staged partitions,
-      // pruned on the partition column (and further by lookback when
-      // given); (3) empty (first-ever date)
-      def stagedBetween(exclusiveLo: Option[String]) = {
-        val priorGlob = s"$stgRoot/date=*"
-        if (!StgArrivals.globNonEmpty(spark, s"$priorGlob/*.parquet"))
-          Schemas.emptyRelation(spark, Schemas.stgArrivals)
-        else {
-          val upTo = spark.read.option("basePath", stgRoot).parquet(priorGlob)
-            .filter(col("date") < to_date(lit(date)))
-          exclusiveLo.fold(upTo)(lo => upTo.filter(col("date") > to_date(lit(lo))))
-        }
+      // staged partitions from `from` (inclusive) through `date`
+      def staged(from: String) = {
+        val dirs = listPartitionDates(spark, stgRoot)
+          .filter(d => d >= from && d <= date).map(d => s"$stgRoot/date=$d")
+        spark.read.schema(Schemas.stgArrivals).parquet(dirs: _*)
+          .select(events.map(col): _*)
       }
-      val stateDates = listPartitionDates(spark, stateRoot).filter(_ < date)
-      val stateDate = stateDates.maxOption
-      // exact boundary superset (no lookback truncation): feeds the STATE,
-      // which is persistent — a truncated first build would corrupt every
-      // later date. The mart's own boundary may apply the caller's
-      // explicitly-accepted lookback approximation on the fallback path.
-      val priorExact = stateDate match {
-        case Some(d) => spark.read.parquet(s"$stateRoot/date=$d")
-          .select("line_id", "stop_id", "event_ts")
-          .unionByName(stagedBetween(Some(d)).select("line_id", "stop_id", "event_ts"))
-        case None => stagedBetween(None).select("line_id", "stop_id", "event_ts")
+      // history: everything up to `date` that can hold a key's latest
+      // arrival before `date` or an arrival of `date` — the latest state
+      // before `date` UNIONED with the staged partitions from the state's
+      // own date on (the state's date may hold next-date arrivals; a crash
+      // between the mart and state writes, or a date staged but never
+      // transformed, leaves later partitions the state has not absorbed),
+      // else every staged partition
+      val stateDate = listPartitionDates(spark, stateRoot).filter(_ < date)
+        .maxOption
+      val history = stateDate match {
+        case Some(d) => spark.read.schema(Schemas.stgArrivals)
+          .parquet(s"$stateRoot/date=$d").select(events.map(col): _*)
+          .unionByName(staged(d))
+        case None => staged("")
       }
-      val prior = (stateDate, lookbackDays) match {
+      // the mart may apply the caller's explicitly-accepted lookback on
+      // the fallback path; the state never does — it is persistent, and a
+      // truncated first build would corrupt every later date
+      val martInput = (stateDate, lookbackDays) match {
         case (None, Some(n)) =>
-          stagedBetween(None)
-            .filter(col("date") >= date_sub(to_date(lit(date)), n))
-        case _ => priorExact
+          staged(java.time.LocalDate.parse(date).minusDays(n).toString)
+        case _ => history
       }
-      val stgToday = spark.read.parquet(s"$stgRoot/date=$date")
-      graft.etl.IncrementalHeadways.forDate(stgToday, prior, date)
+      graft.etl.IncrementalHeadways.forDate(martInput, martInput, date)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$silverDir/fct_headways_by_date/date=$date")
-      // advance the state past this date. `priorExact` may be
-      // multi-row-per-key (fallback/gap partitions) — advanceState
-      // max-merges either shape exactly
-      graft.etl.IncrementalHeadways.advanceState(
-          priorExact.filter(col("event_ts").isNotNull &&
-            to_date(col("event_ts")) < to_date(lit(date))),
-          stgToday)
+      graft.etl.IncrementalHeadways.lastArrivalState(
+          history.filter(to_date(col("event_ts")) <= to_date(lit(date))))
         .write.mode(SaveMode.Overwrite).parquet(s"$stateRoot/date=$date")
     }
 

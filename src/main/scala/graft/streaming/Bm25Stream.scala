@@ -90,23 +90,16 @@ object Bm25Stream {
   def writer(postingsDir: String, statsDir: String, totalsDir: String,
       textCol: String, idCol: String,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val (p, st) = graft.text.IncrementalBm25.indexWave(batch, textCol, idCol)
-      val pp = p.persist()
-      val stp = st.persist()
-      try {
-        // marker-hit replays: the first sink still evaluates the source
-        // batch (no state store below it — same rationale as DedupStream),
-        // the later sinks skip entirely
-        IdempotentSink.writer(postingsDir,
-          onReplay = _ => batch.foreach(_ => ()))(pp, batchId)
-        IdempotentSink.writer(statsDir, onReplay = _ => ())(stp, batchId)
-        IdempotentSink.writer(totalsDir, onReplay = _ => ())(
-          graft.text.IncrementalBm25.totalsDelta(stp, batchId), batchId)
-      } finally { pp.unpersist(); stp.unpersist() }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(batch.sparkSession, postingsDir, statsDir, totalsDir)
-      ()
+    WaveCommit.writer(compactEvery,
+        compactLedgers(_, postingsDir, statsDir, totalsDir)) { wave =>
+      val (p, st) =
+        graft.text.IncrementalBm25.indexWave(wave.batch, textCol, idCol)
+      val postings = wave.persist(p)
+      val stats = wave.persist(st)
+      wave.commit(postingsDir, postings)
+      wave.commit(statsDir, stats)
+      wave.commit(totalsDir,
+        graft.text.IncrementalBm25.totalsDelta(stats, wave.batchId))
     }
 
   /** BM25 scores of `terms` against the ledgered index — hash-identical to

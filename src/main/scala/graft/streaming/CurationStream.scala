@@ -28,12 +28,8 @@ import graft.dedup.Dedup
   * exact_new, admitted, first_match) — so downstream consumers can split
   * rejects by cause without re-deriving anything.
   *
-  * Exactly-once: every stage reads COMMITTED ledger state only, so the
-  * whole verdict is a pure function of (batch, committed ledgers);
-  * verdict commits FIRST, ledgers LAST (fps → bands → sigs), and the
-  * ledger rows are re-derived from the DURABLE verdict parquet
-  * ([[NearDupStream.writer]]'s recacheByPath argument — the in-memory
-  * plans read the very dirs the appends touch).
+  * Exactly-once by [[WaveCommit]]'s protocol: the verdict commits first,
+  * then the fps → bands → sigs ledgers, derived from the durable verdict.
   */
 object CurationStream {
 
@@ -97,72 +93,8 @@ object CurationStream {
       qualityThreshold: Double = 0.7, simThreshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      // quality + fingerprint in one pass over the batch source; every
-      // downstream frame reads this cache (lineage = batch source only,
-      // safe from the ledger appends' recacheByPath invalidation)
-      val scored = waveScope(batch.select(
-        col(idCol).as("id"), col(textCol).as("text"),
-        graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
-        graft.text.TextFunctions.fingerprint(col(textCol)).as("fp")))
-      val exactNew = waveScope(scored
-        .filter(col("quality") >= qualityThreshold)
-        .join(DedupStream.ledgerFps(spark, fpsDir).select("fp").distinct(),
-          Seq("fp"), "left_anti")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("fp").orderBy("id")))
-        .filter(col("rn") === 1).drop("rn"))
-      val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = waveScope(exactNew.select(col("id"),
-        (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-         else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
-      val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, NearDupStream.ledgerBandsApprox(spark, bandsDir),
-        NearDupStream.ledgerSigs(spark, sigsDir), simThreshold, waveScope,
-        hotBandCap = 4096)
-      val verdict = scored
-        .select(col("id").as("doc_id"), col("quality"),
-          (col("quality") >= qualityThreshold).as("q_pass"))
-        .join(exactNew.select(col("id").as("doc_id"),
-          lit(true).as("en")), Seq("doc_id"), "left")
-        .join(admission.select(col("doc_id"),
-          col("admitted").as("adm"), col("first_match")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("quality"), col("q_pass"),
-          coalesce(col("en"), lit(false)).as("exact_new"),
-          coalesce(col("adm"), lit(false)).as("admitted"),
-          col("first_match"))
-        .persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // ledger rows from the JUST-COMMITTED verdict parquet (see the
-        // class doc); the joins hit the persisted scored/sk caches —
-        // batch-sized work, no stage re-runs
-        val durable = spark.read.parquet(s"$verdictDir/batch=$batchId")
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(
-          scored.join(durable.filter(col("exact_new"))
-            .select(col("doc_id").as("id")), Seq("id"))
-            .select("fp"), batchId)
-        val admittedSk = sk.join(durable.filter(col("admitted"))
-          .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, fpsDir, bandsDir, sigsDir)
-      ()
-    }
+    curate(verdictDir, fpsDir, bandsDir, sigsDir, None, textCol, idCol,
+      qualityThreshold, simThreshold, portable, compactEvery)
 
   /** [[writer]] with the remaining production stage composed in: quality
     * gate → BENCHMARK DECONTAMINATION against the gram ledger
@@ -186,84 +118,80 @@ object CurationStream {
       simThreshold: Double = 0.5, gramN: Int = 5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      val scored = waveScope(batch.select(
+    curate(verdictDir, fpsDir, bandsDir, sigsDir, Some((benchGramsDir, gramN)),
+      textCol, idCol, qualityThreshold, simThreshold, portable, compactEvery)
+
+  /** The one curation wave; `benchGrams` (gram dir, n) inserts the
+    * decontamination stage between the quality gate and exact dedup. */
+  private def curate(verdictDir: String, fpsDir: String, bandsDir: String,
+      sigsDir: String, benchGrams: Option[(String, Int)], textCol: String,
+      idCol: String, qualityThreshold: Double, simThreshold: Double,
+      portable: Boolean, compactEvery: Int): (DataFrame, Long) => Unit =
+    WaveCommit.writer(compactEvery,
+        compactLedgers(_, fpsDir, bandsDir, sigsDir)) { wave =>
+      // quality + fingerprint in one pass over the batch source; every
+      // downstream frame reads this cache (lineage = batch source only,
+      // safe from the ledger appends' recacheByPath invalidation)
+      val scored = wave.persist(wave.batch.select(
         col(idCol).as("id"), col(textCol).as("text"),
         graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
         graft.text.TextFunctions.fingerprint(col(textCol)).as("fp")))
       val qp = scored.filter(col("quality") >= qualityThreshold)
-      // static at-rest state: never appended by this pipeline, so the
-      // cached flags plan is safe from recacheByPath invalidation
-      val benchGrams = spark.read.parquet(benchGramsDir)
-      // localCheckpoint, not a waveScope persist: the gram/broadcast
-      // subtree would otherwise be re-ANALYZED by each of the wave's ~6
-      // commit actions (persist substitutes the cache only after
-      // analysis) — measured +17 s/wave at sf0.1 with CPU flat, the
-      // q119 fold's driver-analysis lesson in streaming form. The
-      // checkpoint is wave-sized and eager; its blocks free via the
-      // ContextCleaner once the wave's frames are unreachable.
-      val flags = graft.pipeline.Curation.contaminationFlags(
-        qp.select("id", "text"), benchGrams, "text", "id", gramN)
-        .localCheckpoint()
-      val cleanDocs = qp.join(
-        flags.filter(!col("contaminated")).select("id"), Seq("id"))
-      val exactNew = waveScope(cleanDocs
-        .join(DedupStream.ledgerFps(spark, fpsDir).select("fp").distinct(),
+      // a leaf, not a persist: the gram/broadcast subtree would otherwise
+      // be re-ANALYZED by each of the wave's commit actions (persist
+      // substitutes the cache only after analysis) — measured +17 s/wave
+      // at sf0.1 with CPU flat. The gram set is static at-rest state,
+      // never appended by this pipeline.
+      val flags = benchGrams.map { case (dir, n) =>
+        wave.leaf(graft.pipeline.Curation.contaminationFlags(
+          qp.select("id", "text"), wave.spark.read.parquet(dir), "text",
+          "id", n))
+      }
+      val cleanDocs = flags.fold(qp)(f =>
+        qp.join(f.filter(!col("contaminated")).select("id"), Seq("id")))
+      val exactNew = wave.persist(cleanDocs
+        .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("fp").orderBy("id")))
         .filter(col("rn") === 1).drop("rn"))
       val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = waveScope(exactNew.select(col("id"),
+      val sk = wave.persist(exactNew.select(col("id"),
         (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
          else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, NearDupStream.ledgerBandsApprox(spark, bandsDir),
-        NearDupStream.ledgerSigs(spark, sigsDir), simThreshold, waveScope,
+        sk, wave.ledger(bandsDir, NearDupStream.ApproxBandsSchema),
+        wave.ledger(sigsDir, NearDupStream.SigsSchema), simThreshold,
+        wave.persist,
         hotBandCap = 4096)
-      val verdict = scored
-        .select(col("id").as("doc_id"), col("quality"),
-          (col("quality") >= qualityThreshold).as("q_pass"))
-        .join(flags.select(col("id").as("doc_id"),
-          col("n_shared_grams"), col("contaminated")), Seq("doc_id"), "left")
+      val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
+        (col("quality") >= qualityThreshold).as("q_pass"))
+      val verdict = wave.persist(flags.fold(scoredVerdict)(f =>
+          scoredVerdict.join(f.select(col("id").as("doc_id"),
+            col("n_shared_grams"), col("contaminated")), Seq("doc_id"), "left"))
         .join(exactNew.select(col("id").as("doc_id"),
           lit(true).as("en")), Seq("doc_id"), "left")
         .join(admission.select(col("doc_id"),
           col("admitted").as("adm"), col("first_match")),
           Seq("doc_id"), "left")
-        .select(col("doc_id"), col("quality"), col("q_pass"),
-          col("n_shared_grams"),
-          // flags rows exist iff q_pass — already (q_pass AND clean)
-          coalesce(!col("contaminated"), lit(false)).as("clean"),
-          coalesce(col("en"), lit(false)).as("exact_new"),
-          coalesce(col("adm"), lit(false)).as("admitted"),
-          col("first_match"))
-        .persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        val durable = spark.read.parquet(s"$verdictDir/batch=$batchId")
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(
-          scored.join(durable.filter(col("exact_new"))
-            .select(col("doc_id").as("id")), Seq("id"))
-            .select("fp"), batchId)
-        val admittedSk = sk.join(durable.filter(col("admitted"))
-          .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, fpsDir, bandsDir, sigsDir)
-      ()
+        .select(Seq(col("doc_id"), col("quality"), col("q_pass")) ++
+          flags.map(_ => Seq(col("n_shared_grams"),
+            // flags rows exist iff q_pass — already (q_pass AND clean)
+            coalesce(!col("contaminated"), lit(false)).as("clean")))
+            .getOrElse(Nil) ++
+          Seq(coalesce(col("en"), lit(false)).as("exact_new"),
+            coalesce(col("adm"), lit(false)).as("admitted"),
+            col("first_match")): _*))
+      wave.commit(verdictDir, verdict)
+      // ledger rows from the durable verdict; the joins hit the persisted
+      // scored/sk caches — batch-sized work, no stage re-runs
+      val durable = wave.committed(verdictDir)
+      wave.commit(fpsDir, scored.join(durable.filter(col("exact_new"))
+        .select(col("doc_id").as("id")), Seq("id")).select("fp"))
+      val admittedSk = sk.join(durable.filter(col("admitted"))
+        .select(col("doc_id").as("id")), Seq("id"))
+      wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
+      wave.commit(sigsDir, admittedSk.select("id", "sig"))
     }
 }

@@ -24,20 +24,9 @@ import graft.dedup.Dedup
   * compact old `batch=` dirs into one bucketed-by-`fp` segment and the
   * anti-join's ledger exchange disappears).
   *
-  * Exactly-once across crash/replay, with NO cross-write transaction
-  * (the sink and ledger commit independently):
-  *
-  *  1. survivors are computed against the COMMITTED ledger only
-  *     ([[IdempotentSink.readCommitted]]) — a half-written ledger batch
-  *     is invisible, so the computation is a pure function of (batch
-  *     data, committed history) and every replay of a `batchId` derives
-  *     the identical survivor set;
-  *  2. survivors commit FIRST, the ledger LAST. A crash between the two
-  *     replays into: survivors marker present → data write skipped;
-  *     ledger marker absent → ledger batch rebuilt from the identical
-  *     recomputed set. The opposite order would be a data-loss bug: a
-  *     committed ledger without its survivors makes the replay see its
-  *     own fingerprints as "already seen" and admit nothing.
+  * Exactly-once across crash/replay with NO cross-write transaction:
+  * survivors are computed against the ledger as committed before the
+  * batch, and commit before it ([[WaveCommit]]'s protocol).
   *
   * Reference shape: tfl-realtime-lakehouse re-snapshots and re-dedupes
   * whole tables per DAG run (`airflow/dags/tfl_transform_dag.py`); this
@@ -46,7 +35,7 @@ import graft.dedup.Dedup
   */
 object DedupStream {
 
-  private val FpSchema = StructType(Seq(StructField("fp", StringType)))
+  private[streaming] val FpSchema = StructType(Seq(StructField("fp", StringType)))
 
   /** The committed ledger's fingerprints: the fp-bucketed compacted table
     * (if [[compactLedger]] has run) unioned with every `batch=` dir
@@ -95,36 +84,16 @@ object DedupStream {
     * `survivorsDir/batch=<id>`, and the admitted fingerprints under
     * `ledgerDir/batch=<id>`.
     *
-    * `compactEvery > 0` runs [[compactLedger]] from INSIDE the batch
-    * function once per that many batches (after the batch's own commits)
-    * — the built-in form of the maintenance cadence, satisfying the
-    * single-writer/between-micro-batches contract by construction:
-    * foreachBatch IS the micro-batch, so nothing else reads the ledger
-    * while it runs. A replayed batch may re-trigger a compaction — pure
-    * idempotent re-invocation (typically just the deferred sweep).
+    * `compactEvery` runs [[compactLedger]] on [[WaveCommit]]'s cadence.
     */
   def writer(survivorsDir: String, ledgerDir: String, textCol: String,
       idCol: String, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-    val spark = batch.sparkSession
-    val survivors = Dedup.exactIncremental(
-      batch, textCol, idCol, ledgerFps(spark, ledgerDir)).persist()
-    // both writes action the same plan; the cache keeps the dedup +
-    // anti-join from running twice (and pins one consistent result even
-    // if it were nondeterministic — it is not, but cheap insurance)
-    try {
-      // marker-hit replays evaluate only the source batch (first sink) or
-      // nothing (second — the first already covered the source): no state
-      // store sits between the file source and these sinks, so the
-      // default full evaluation would re-run the dedup + anti-join for a
-      // discarded result
-      IdempotentSink.writer(survivorsDir,
-        onReplay = _ => batch.foreach(_ => ()))(survivors, batchId)
-      IdempotentSink.writer(ledgerDir, onReplay = _ => ())(
-        survivors.select("fp"), batchId)
-    } finally survivors.unpersist()
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-      compactLedger(spark, ledgerDir)
-    ()
-  }
+    WaveCommit.writer(compactEvery, compactLedger(_, ledgerDir)) { wave =>
+      // both commits action the same plan; the persist keeps the dedup +
+      // anti-join from running twice
+      val survivors = wave.persist(Dedup.exactIncremental(
+        wave.batch, textCol, idCol, wave.ledger(ledgerDir, FpSchema)))
+      wave.commit(survivorsDir, survivors)
+      wave.commit(ledgerDir, survivors.select("fp"))
+    }
 }

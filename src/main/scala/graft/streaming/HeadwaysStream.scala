@@ -181,7 +181,7 @@ object HeadwaysStream {
       .filter(col("event_ts").isNotNull)
       .select(col("line_id"), col("stop_id"), col("event_ts"))
       .as[ArrivalEvent]
-    val sink = IdempotentSink.writer(outDir)
+    val sink = WaveCommit.writer()(wave => wave.commit(outDir, wave.batch))
     incrementalGaps(spark, arrivals)
       .writeStream
       .outputMode(OutputMode.Append)

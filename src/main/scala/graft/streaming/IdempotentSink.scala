@@ -42,13 +42,8 @@ object IdempotentSink {
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(writer(dir))`.
     *
     * `onReplay` runs INSTEAD of the write when the batch's marker already
-    * exists (a replayed batch whose data is durable). The default fully
-    * evaluates the frame — see step 5's rationale in the class doc — which
-    * for an expensive stateless plan pays the whole computation again for
-    * a discarded result. Callers whose frame has NO upstream state store
-    * below the expensive part (e.g. [[NearDupStream]]'s admission plan
-    * over a file source) pass a cheaper action that still evaluates the
-    * upstream source (`batch.foreach`) or nothing at all.
+    * exists; the default fully evaluates the frame. Multi-sink writers
+    * take their replay policy from [[WaveCommit]].
     */
   def writer(outDir: String,
       onReplay: DataFrame => Unit = _.foreach(_ => ())): (DataFrame, Long) => Unit =
@@ -71,13 +66,9 @@ object IdempotentSink {
       fs.create(marker, true).close()
     } else {
       // marker hit (replayed batch): the DATA is already committed, but
-      // by default the batch is still fully evaluated — an upstream
-      // STATEFUL operator (flatMapGroupsWithState, windowed agg)
-      // re-computes this batch's state updates during replay, and Spark
-      // refuses to commit the batch unless every partition's state store
-      // committed (STATE_STORE_COMMIT_VALIDATION_FAILED otherwise). A
-      // zero-effect action runs all partitions without writing a byte;
-      // `onReplay` lets stateless pipelines substitute a cheaper one.
+      // an upstream STATEFUL operator (flatMapGroupsWithState, windowed
+      // agg) must still re-compute this batch's state updates, or Spark
+      // refuses to commit the batch (STATE_STORE_COMMIT_VALIDATION_FAILED)
       onReplay(df)
     }
     ()

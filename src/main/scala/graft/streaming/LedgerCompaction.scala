@@ -209,7 +209,13 @@ object LedgerCompaction {
     * below re-plans), plus one more before the returned frame's action.
     */
   def read(spark: SparkSession, ledgerDir: String,
-      schema: StructType): DataFrame = {
+      schema: StructType): DataFrame =
+    read(spark, ledgerDir, schema, Long.MaxValue)
+
+  /** [[read]] without the `batch=` dirs from `before` on — the ledger as
+    * committed before a wave ([[WaveCommit.ledger]]). */
+  private[streaming] def read(spark: SparkSession, ledgerDir: String,
+      schema: StructType, before: Long): DataFrame = {
     var tries = 0
     var lastFailure: Throwable = null
     while (tries < 64) {
@@ -230,12 +236,13 @@ object LedgerCompaction {
           return planned match {
             case None =>
               batchFrame(spark, ledgerDir, schema,
-                IdempotentSink.committedBatches(spark, ledgerDir))
+                IdempotentSink.committedBatches(spark, ledgerDir)
+                  .filter(_ < before))
             case Some((version, table, loc)) =>
               val compacted = conform(
                 generationFrame(spark, table, loc), schema)
               val fresh = IdempotentSink.committedBatches(spark, ledgerDir)
-                .filter(_ > version)
+                .filter(id => id > version && id < before)
               if (fresh.isEmpty)
                 compacted // preserve the bucketed partitioning — no union node
               else compacted.unionByName(

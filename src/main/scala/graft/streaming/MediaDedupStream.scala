@@ -31,13 +31,9 @@ import graft.dedup.Dedup
   * > maxHamming apart by construction, so no two ledger rows ever share
   * an identical fingerprint.
   *
-  * Exactly-once across crash/replay by [[NearDupStream]]'s argument
-  * (verdict-first / ledger-last, marker-skipped replays, admitted rows
-  * re-derived from the DURABLE verdict so the ledger append cannot
-  * invalidate the plan that computed it): admission is a pure function
-  * of (batch fingerprints, COMMITTED ledger), so every replay derives
-  * the identical verdict and rebuilds whichever ledger batch lacks its
-  * marker.
+  * Exactly-once across crash/replay: admission is a pure function of
+  * (batch fingerprints, COMMITTED ledger), committed by [[WaveCommit]]'s
+  * protocol.
   */
 object MediaDedupStream {
 
@@ -99,50 +95,29 @@ object MediaDedupStream {
   def writer(verdictDir: String, chunksDir: String, idCol: String,
       fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
+    WaveCommit.writer(compactEvery, compactLedger(_, chunksDir)) { wave =>
       // one persisted fingerprint frame per batch: the verdict and the
       // ledger write both read it from cache, and its lineage reads only
-      // the batch source — safe from the recacheByPath invalidation the
-      // ledger append fires (the NearDupStream argument)
-      val all = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
-        .persist()
+      // the batch source
+      val all = wave.persist(
+        wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
       val fps = all.filter(col("fp").isNotNull)
       val quarantined = all.filter(col("fp").isNull)
         .select(col("id").as("doc_id"),
           org.apache.spark.sql.functions.lit(false).as("admitted"),
           org.apache.spark.sql.functions.lit(QuarantinedMatch)
             .as("first_match"))
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
       // hotChunkCap = 4096: the long-lived at-rest chunk ledger is the
       // hot-bucket-guard exposure (an adversarial storm can fix one
       // 16-bit chunk value and stay admitted — Dedup.fingerprintMatches)
-      val verdict = Dedup.fingerprintAdmit(fps, "id", "fp",
-        ledgerChunks(spark, chunksDir), maxHamming,
-        scope = waveScope, hotChunkCap = 4096)
-        .unionByName(quarantined).persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // admitted rows from the JUST-COMMITTED verdict parquet — the
-        // in-memory verdict plan's lineage reads the ledger dir this
-        // write appends to (see NearDupStream.writer for the full
-        // invalidation argument)
-        val admitted = fps.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(chunksDir, onReplay = _ => ())(
-          Dedup.fingerprintChunkRows(admitted, "id", "fp"), batchId)
-      } finally {
-        verdict.unpersist(); all.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedger(spark, chunksDir)
-      ()
+      val verdict = wave.persist(Dedup.fingerprintAdmit(fps, "id", "fp",
+        wave.ledger(chunksDir, ChunksSchema), maxHamming,
+        scope = wave.persist, hotChunkCap = 4096)
+        .unionByName(quarantined))
+      wave.commit(verdictDir, verdict)
+      val admitted = fps.join(wave.committed(verdictDir)
+        .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
+      wave.commit(chunksDir, Dedup.fingerprintChunkRows(admitted, "id", "fp"))
     }
 
   /** Incremental media CLUSTER maintenance — [[NearDupStream.clusterWriter]]
@@ -158,38 +133,25 @@ object MediaDedupStream {
     * (the batch fold against q85's brute-force closure oracle) and the
     * MediaDedupStreamSpec wave-parity case. Same labels → merges →
     * chunks commit order and replay argument as the text cluster
-    * writers: the fold is eager and its label/merge outputs are
-    * driver-built frames with no ledger lineage.
+    * writers.
     */
   def clusterWriter(labelsDir: String, mergesDir: String, chunksDir: String,
       idCol: String, fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val fps = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
-        .persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val edges = waveScope(Dedup.fingerprintVerifiedPairs(
-          fps, "id", "fp", ledgerChunks(spark, chunksDir), maxHamming,
-          scope = waveScope, hotChunkCap = 4096))
-        val (labelRows, mergeRows) =
-          graft.dedup.IncrementalClusters.foldEdgeFrame(
-            fps, edges, NearDupStream.ledgerLabels(spark, labelsDir),
-            NearDupStream.ledgerMerges(spark, mergesDir), waveScope)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(chunksDir, onReplay = _ => ())(
-          Dedup.fingerprintChunkRows(fps, "id", "fp"), batchId)
-      } finally {
-        fps.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgers(spark, labelsDir, mergesDir, chunksDir)
-      ()
+    WaveCommit.writer(compactEvery,
+        compactClusterLedgers(_, labelsDir, mergesDir, chunksDir)) { wave =>
+      val fps = wave.persist(
+        wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
+      val edges = wave.persist(Dedup.fingerprintVerifiedPairs(
+        fps, "id", "fp", wave.ledger(chunksDir, ChunksSchema), maxHamming,
+        scope = wave.persist, hotChunkCap = 4096))
+      val (labelRows, mergeRows) =
+        graft.dedup.IncrementalClusters.foldEdgeFrame(
+          fps, edges, wave.ledger(labelsDir, NearDupStream.LabelsSchema),
+          wave.ledger(mergesDir, NearDupStream.MergesSchema), wave.persist)
+      wave.commit(labelsDir, labelRows)
+      wave.commit(mergesDir, mergeRows)
+      wave.commit(chunksDir, Dedup.fingerprintChunkRows(fps, "id", "fp"))
     }
 
   /** Cluster-ledger maintenance for the media deployment: labels/merges

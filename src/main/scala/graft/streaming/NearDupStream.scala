@@ -48,19 +48,14 @@ import graft.dedup.Dedup
   * re-lists and re-reads all of them — per-batch cost growing with
   * stream age, the exact small-file pathology compaction kills.
   *
-  * Exactly-once across crash/replay with NO cross-write transaction,
-  * by [[DedupStream]]'s argument extended to three sinks: admission is a
-  * pure function of (batch data, COMMITTED ledgers), and the verdict
-  * commits FIRST, the ledgers LAST. At any kill point a replay
-  * recomputes the identical verdict (committed ledgers unchanged —
-  * foreachBatch replays batch N before N+1 ever runs) and rebuilds
-  * whichever ledger batches lack markers; the reverse order would let a
-  * committed ledger without its verdict reject the replay's own
-  * documents.
+  * Exactly-once across crash/replay: admission is a pure function of
+  * (batch data, COMMITTED ledgers), committed by [[WaveCommit]]'s
+  * protocol (verdict first, ledgers last, ledger rows re-derived from
+  * the durable verdict).
   */
 object NearDupStream {
 
-  private val BandsSchema = StructType(Seq(
+  private[streaming] val BandsSchema = StructType(Seq(
     StructField("band", org.apache.spark.sql.types.IntegerType),
     StructField("bkey", LongType),
     StructField("id", LongType),
@@ -74,18 +69,18 @@ object NearDupStream {
     // prefilter, strictly more verify work per batch forever
     StructField("kpfx", ArrayType(LongType), nullable = true),
     StructField("sz", org.apache.spark.sql.types.IntegerType, nullable = true)))
-  private val SetsSchema = StructType(Seq(
+  private[streaming] val SetsSchema = StructType(Seq(
     StructField("id", LongType),
     StructField("sset", ArrayType(LongType, containsNull = false))))
   // the APPROXIMATE (signature-only) mode's ledgers: band rows without
   // `sz` (no shingle-set size exists — the estimator verify needs none)
   // and a 256 B/doc signature ledger in place of the O(tokens) sset one
-  private val ApproxBandsSchema = StructType(Seq(
+  private[streaming] val ApproxBandsSchema = StructType(Seq(
     StructField("band", org.apache.spark.sql.types.IntegerType),
     StructField("bkey", LongType),
     StructField("id", LongType),
     StructField("kpfx", ArrayType(LongType), nullable = true)))
-  private val SigsSchema = StructType(Seq(
+  private[streaming] val SigsSchema = StructType(Seq(
     StructField("id", LongType),
     StructField("sig", ArrayType(LongType, containsNull = false))))
   private val VerdictSchema = StructType(Seq(
@@ -254,17 +249,14 @@ object NearDupStream {
     * under `verdictDir/batch=<id>`, and the band/sset rows of ADMITTED
     * docs under the two ledger dirs.
     *
-    * `compactEvery > 0` runs [[compactLedgers]] from inside the batch
-    * function once per that many batches — the built-in maintenance
-    * cadence, single-writer-safe by construction (foreachBatch IS the
-    * micro-batch); see [[DedupStream.writer]] for the contract.
+    * `compactEvery` runs [[compactLedgers]] on [[WaveCommit]]'s cadence.
     */
   def writer(verdictDir: String, bandsDir: String, setsDir: String,
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
+    WaveCommit.writer(compactEvery,
+        compactLedgers(_, bandsDir, setsDir)) { wave =>
       // ONE persisted sketch frame for the whole batch: sig and sset come
       // from a single shingle traversal (graft.functions.MinHashSigSet,
       // sz = set length), and admission plus BOTH ledger writes read it
@@ -273,75 +265,26 @@ object NearDupStream {
       // times per wave: twice inside admission, twice re-sketching the
       // admitted docs. Lineage reads only the batch source (never the
       // ledger dirs), so the ledger writes below cannot invalidate it.
-      // Batch-bounded memory, same persist contract as the verdict.
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
+      val sk = wave.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
-        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset")))
-        .persist()
-      // tracked persist for the admission plan's internal mid-frames
-      // (banded batch rows, candidate pairs — each consumed by several
-      // subtrees): the default session-lifetime cache would accumulate
-      // one entry per wave forever on an unbounded stream, so the writer
-      // owns the lifecycle and releases them with the wave
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
+        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset"))))
       // hotBandCap = 4096: the long-lived at-rest band ledger is exactly
       // the hot-bucket-guard exposure (see Dedup.guardedCorpusCandidates)
       // — on the EXACT path identically to the approx one
-      val verdict = Dedup.MinHashLsh.nearDupAdmitSketched(
-        sk, batch,
-        ledgerBands(spark, bandsDir), ledgerSets(spark, setsDir),
-        threshold, waveScope, hotBandCap = 4096).persist()
-      try {
-        // on a marker-hit replay evaluate only the SOURCE batch, not the
-        // discarded admission plan: there is no state store between the
-        // file source and this sink (the admission joins are stateless),
-        // so the default full evaluation would pay the pipeline's most
-        // expensive plan twice per replayed batch for nothing — and in
-        // the crash window where this batch's ledger rows are already
-        // committed, pay it against ledgers containing the batch's own
-        // rows (result discarded either way; verdicts stay correct via
-        // the durable parquet read below)
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // the ledger writes re-derive the admitted set from the
-        // JUST-COMMITTED verdict parquet, not from the in-memory verdict
-        // plan: that plan's lineage reads the very ledger dirs the next
-        // two writes append to, and any cache invalidation
-        // (CacheManager.recacheByPath fires when a written path overlaps
-        // a cached scan's roots) would re-derive the verdict against
-        // ledgers that already contain this batch — every doc then
-        // rejects against itself. Reading the durable verdict severs
-        // that lineage entirely; on a replay whose verdict marker
-        // already exists the batch dir is present and identical, so the
-        // read is the same either way. The admitted filter joins the
-        // PERSISTED sketch to the durable verdict — batch-sized work, no
-        // re-traversal, and sk's lineage (batch source only) keeps it
-        // safe from the recacheByPath invalidation the ledger writes fire.
-        val admittedSk = sk.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        // ledger sinks: a marker-hit replay needs no evaluation at all —
-        // the verdict sink above already evaluated the batch source, and
-        // these frames are projections of the durable verdict ⨝ sketch
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")),
-          batchId)
-        IdempotentSink.writer(setsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sset"), batchId)
-      } finally {
-        verdict.unpersist(); sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgers(spark, bandsDir, setsDir)
-      ()
+      val verdict = wave.persist(Dedup.MinHashLsh.nearDupAdmitSketched(
+        sk, wave.batch,
+        wave.ledger(bandsDir, BandsSchema), wave.ledger(setsDir, SetsSchema),
+        threshold, wave.persist, hotBandCap = 4096))
+      wave.commit(verdictDir, verdict)
+      val admittedSk = sk.join(wave.committed(verdictDir)
+        .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
+      wave.commit(bandsDir,
+        Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")))
+      wave.commit(setsDir, admittedSk.select("id", "sset"))
     }
 
   /** APPROXIMATE (signature-only) streaming admission — [[writer]] with
@@ -362,58 +305,37 @@ object NearDupStream {
     * intersections — the verify stage is a codegen `sig_agreement` over
     * two 32-long arrays.
     *
-    * Same exactly-once protocol as [[writer]] (verdict-first /
-    * ledgers-last, marker-skipped replays, re-derive-from-durable-verdict
-    * severing the recacheByPath invalidation) — the argument there is
-    * mode-agnostic: admission is a pure function of (batch data,
-    * COMMITTED ledgers) in both modes. `compactEvery` runs
-    * [[compactLedgersApprox]] on the same cadence contract.
+    * Same [[WaveCommit]] protocol as [[writer]]; `compactEvery` runs
+    * [[compactLedgersApprox]].
     */
   def approxWriter(verdictDir: String, bandsDir: String, sigsDir: String,
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
+    WaveCommit.writer(compactEvery,
+        compactLedgersApprox(_, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
       // ONE persisted (id, sig) frame per wave: admission and both ledger
-      // writes read it from cache; lineage reads only the batch source,
-      // so the ledger writes below cannot invalidate it
-      val sk = batch
+      // writes read it from cache
+      val sk = wave.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-           else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
-        .persist()
+           else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       // one count materializes the wave persist AND feeds the verify-
       // broadcast gate (knownRows) — the admission plan then schedules no
       // extra driver job per wave (spec-pinned: constructing the verdict
       // frame with knownRows runs zero jobs)
       val waveRows = sk.count()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, ledgerBandsApprox(spark, bandsDir), ledgerSigs(spark, sigsDir),
-        threshold, waveScope, knownRows = Some(waveRows),
-        hotBandCap = 4096).persist()
-      try {
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        val admittedSk = sk.join(
-          spark.read.parquet(s"$verdictDir/batch=$batchId")
-            .filter(col("admitted"))
-            .select(col("doc_id").as("id")), Seq("id"))
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(admittedSk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          admittedSk.select("id", "sig"), batchId)
-      } finally {
-        verdict.unpersist(); sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactLedgersApprox(spark, bandsDir, sigsDir)
-      ()
+      val verdict = wave.persist(Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+        sk, wave.ledger(bandsDir, ApproxBandsSchema),
+        wave.ledger(sigsDir, SigsSchema),
+        threshold, wave.persist, knownRows = Some(waveRows),
+        hotBandCap = 4096))
+      wave.commit(verdictDir, verdict)
+      val admittedSk = sk.join(wave.committed(verdictDir)
+        .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
+      wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
+      wave.commit(sigsDir, admittedSk.select("id", "sig"))
     }
 
   /** Incrementally-maintained APPROX duplicate CLUSTERS — the streaming
@@ -426,72 +348,47 @@ object NearDupStream {
     * from the same banded-candidate + estimator-verify kernel as
     * [[approxWriter]] (signature-only — no shingle set anywhere).
     *
-    * Exactly-once across crash/replay, [[writer]]'s argument specialized:
-    * the fold is a pure function of (batch, COMMITTED ledgers), and the
-    * four sinks commit in the order labels → merges → bands → sigs. At any
-    * kill point the replay's fold re-derives the uncommitted suffix
-    * exactly: with the wave's labels already committed, edge endpoints
-    * resolve to their final components and the fold re-emits identical
-    * rows (a lost merge row re-emerges because the stale label it
-    * redirects still resolves to itself — [[graft.dedup.IncrementalClusters
-    * .foldWave]]'s replay analysis); committed sinks skip via markers.
-    * Cache safety needs no durable-verdict re-read here (contrast
-    * [[writer]]): the label rows are evaluated exactly once, by the FIRST
-    * sink, before any ledger dir is appended — the later sinks' frames
-    * read only the wave sketch (batch-source lineage) and the CC result
-    * (driver- or checkpoint-backed, lineage severed from the ledgers), so
-    * no recacheByPath invalidation can re-derive them against ledgers
-    * containing this batch.
+    * Exactly-once across crash/replay by [[WaveCommit]]'s protocol, with
+    * the commit order labels → merges → bands → sigs: the fold reads the
+    * ledgers as committed before the wave, so a replay re-emits the first
+    * attempt's rows. No durable re-read is needed: the fold is eager, and
+    * the later sinks' frames read only the wave sketch (batch-source
+    * lineage) and the CC result (driver- or checkpoint-backed, lineage
+    * severed from the ledgers).
     *
-    * `compactEvery` runs [[compactClusterLedgers]] on [[writer]]'s cadence
-    * contract. Unlike the admission writers it DEFAULTS ON (every 16
-    * waves): uncompacted merge chains grow one level per merging wave,
-    * and while [[graft.dedup.IncrementalClusters.resolveThrough]] now
-    * degrades gracefully past depth 64 (full-closure fallback, never a
-    * wedge), a cluster deployment that never compacts pays
-    * ledger-sized resolution every wave — the cadence keeps steady-state
-    * chains shallow. Pass 0 to manage maintenance externally.
+    * `compactEvery` runs [[compactClusterLedgers]]. Unlike the admission
+    * writers it DEFAULTS ON (every 16 waves): uncompacted merge chains
+    * grow one level per merging wave, and while
+    * [[graft.dedup.IncrementalClusters.resolveThrough]] now degrades
+    * gracefully past depth 64 (full-closure fallback, never a wedge), a
+    * cluster deployment that never compacts pays ledger-sized resolution
+    * every wave — the cadence keeps steady-state chains shallow. Pass 0
+    * to manage maintenance externally.
     */
   def clusterWriter(labelsDir: String, mergesDir: String, bandsDir: String,
       sigsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
+    WaveCommit.writer(compactEvery, compactClusterLedgers(_, labelsDir,
+        mergesDir, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
+      val sk = wave.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-           else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
-        .persist()
+           else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       // one count materializes the wave persist AND threads the verify-
       // broadcast gate (knownRows) — no second driver job inside the fold
       val waveRows = sk.count()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        // the fold is EAGER (resolution counts + the wave-local CC run
-        // inside), so the batch source is always evaluated on a replay
-        // before any marker check — the onReplay hooks can all no-op
-        val (labelRows, mergeRows) = graft.dedup.IncrementalClusters.foldWave(
-          sk, ledgerBandsApprox(spark, bandsDir), ledgerSigs(spark, sigsDir),
-          ledgerLabels(spark, labelsDir), ledgerMerges(spark, mergesDir),
-          threshold, waveScope, knownRows = Some(waveRows),
-          hotBandCap = 4096)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOfSigs(sk), batchId)
-        IdempotentSink.writer(sigsDir, onReplay = _ => ())(
-          sk.select("id", "sig"), batchId)
-      } finally {
-        sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgers(spark, labelsDir, mergesDir, bandsDir, sigsDir)
-      ()
+      val (labelRows, mergeRows) = graft.dedup.IncrementalClusters.foldWave(
+        sk, wave.ledger(bandsDir, ApproxBandsSchema),
+        wave.ledger(sigsDir, SigsSchema), wave.ledger(labelsDir, LabelsSchema),
+        wave.ledger(mergesDir, MergesSchema),
+        threshold, wave.persist, knownRows = Some(waveRows),
+        hotBandCap = 4096)
+      wave.commit(labelsDir, labelRows)
+      wave.commit(mergesDir, mergeRows)
+      wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(sk))
+      wave.commit(sigsDir, sk.select("id", "sig"))
     }
 
   /** [[clusterWriter]] under the EXACT-Jaccard contract: the wave's edges
@@ -501,52 +398,36 @@ object NearDupStream {
     * rest, the price of exact semantics ([[clusterWriter]] is the
     * signature-only scale mode). Same labels → merges → bands → sets
     * commit order and replay argument; the fold's label/merge outputs are
-    * driver-built frames with no ledger lineage at all, so the
-    * cache-invalidation analysis is trivial here. Gated end-to-end by
-    * q110 (the batch fold against q109's from-scratch-closure oracle) and
-    * the StreamingNearDupSpec exact-cluster case. `compactEvery` runs
-    * [[compactClusterLedgersExact]] on the usual cadence contract,
-    * defaulting ON every 16 waves for [[clusterWriter]]'s chain-depth
-    * reason.
+    * driver-built frames with no ledger lineage at all. Gated end-to-end
+    * by q110 (the batch fold against q109's from-scratch-closure oracle)
+    * and the StreamingNearDupSpec exact-cluster case. `compactEvery` runs
+    * [[compactClusterLedgersExact]], defaulting ON every 16 waves for
+    * [[clusterWriter]]'s chain-depth reason.
     */
   def clusterWriterExact(labelsDir: String, mergesDir: String,
       bandsDir: String, setsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
+    WaveCommit.writer(compactEvery, compactClusterLedgersExact(_, labelsDir,
+        mergesDir, bandsDir, setsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = batch
+      val sk = wave.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
-        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset")))
-        .persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val (labelRows, mergeRows) =
-          graft.dedup.IncrementalClusters.foldWaveExact(
-            sk, batch, ledgerBands(spark, bandsDir),
-            ledgerSets(spark, setsDir), ledgerLabels(spark, labelsDir),
-            ledgerMerges(spark, mergesDir), threshold, waveScope,
-            hotBandCap = 4096)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(bandsDir, onReplay = _ => ())(
-          Dedup.MinHashLsh.bandRowsOf(sk.select("id", "sig", "sz")), batchId)
-        IdempotentSink.writer(setsDir, onReplay = _ => ())(
-          sk.select("id", "sset"), batchId)
-      } finally {
-        sk.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactClusterLedgersExact(spark, labelsDir, mergesDir, bandsDir,
-          setsDir)
-      ()
+        .withColumn("sz", org.apache.spark.sql.functions.size(col("sset"))))
+      val (labelRows, mergeRows) =
+        graft.dedup.IncrementalClusters.foldWaveExact(
+          sk, wave.batch, wave.ledger(bandsDir, BandsSchema),
+          wave.ledger(setsDir, SetsSchema), wave.ledger(labelsDir, LabelsSchema),
+          wave.ledger(mergesDir, MergesSchema), threshold, wave.persist,
+          hotBandCap = 4096)
+      wave.commit(labelsDir, labelRows)
+      wave.commit(mergesDir, mergeRows)
+      wave.commit(bandsDir,
+        Dedup.MinHashLsh.bandRowsOf(sk.select("id", "sig", "sz")))
+      wave.commit(setsDir, sk.select("id", "sset"))
     }
 
   /** [[compactClusterLedgers]] for the exact-mode cluster deployment:

@@ -95,40 +95,28 @@ object SemanticStream {
       repsDir: String, fpsDir: String, vecCol: String, idCol: String,
       centroids: DataFrame, threshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      val asg = SemanticDedup.assignWithSim(
-        batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
-        centroids).persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        // the fold is EAGER (edge counts + the wave-local CC run inside),
-        // so the batch source is evaluated on a replay before any marker
-        // check, and the wave-scoped mid-frames (the fps probe the
-        // rep/fp deltas project from) are materialized BEFORE any ledger
-        // dir is appended — the later sinks read cached blocks, never a
-        // re-derivation against ledgers already containing this batch
-        val (labelRows, mergeRows, memberRows, repRows, fpRows) =
-          SemanticDedup.foldWaveSemantic(asg,
-            ledgerReps(spark, repsDir), ledgerFps(spark, fpsDir),
-            NearDupStream.ledgerLabels(spark, labelsDir),
-            NearDupStream.ledgerMerges(spark, mergesDir),
-            threshold, waveScope)
-        IdempotentSink.writer(labelsDir, onReplay = _ => ())(labelRows, batchId)
-        IdempotentSink.writer(mergesDir, onReplay = _ => ())(mergeRows, batchId)
-        IdempotentSink.writer(membersDir, onReplay = _ => ())(memberRows, batchId)
-        IdempotentSink.writer(repsDir, onReplay = _ => ())(repRows, batchId)
-        IdempotentSink.writer(fpsDir, onReplay = _ => ())(fpRows, batchId)
-      } finally {
-        asg.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactSemanticLedgers(spark, labelsDir, mergesDir, membersDir,
-          repsDir, fpsDir)
-      ()
+    WaveCommit.writer(compactEvery, compactSemanticLedgers(_, labelsDir,
+        mergesDir, membersDir, repsDir, fpsDir)) { wave =>
+      val asg = wave.persist(SemanticDedup.assignWithSim(
+        wave.batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
+        centroids))
+      // the fold is EAGER (edge counts + the wave-local CC run inside), so
+      // the wave-scoped mid-frames (the fps probe the rep/fp deltas
+      // project from) are materialized BEFORE any ledger dir is appended —
+      // the later sinks read cached blocks, never a re-derivation against
+      // ledgers already containing this batch
+      val (labelRows, mergeRows, memberRows, repRows, fpRows) =
+        SemanticDedup.foldWaveSemantic(asg,
+          wave.ledger(repsDir, RepsSchema), wave.ledger(fpsDir, FpsSchema),
+          wave.ledger(labelsDir, NearDupStream.LabelsSchema),
+          wave.ledger(mergesDir, NearDupStream.MergesSchema),
+          threshold, wave.persist)
+      wave.adopt(repRows) // the fold cuts the rep and fp deltas to one leaf
+      wave.commit(labelsDir, labelRows)
+      wave.commit(mergesDir, mergeRows)
+      wave.commit(membersDir, memberRows)
+      wave.commit(repsDir, repRows)
+      wave.commit(fpsDir, fpRows)
     }
 
   // ==== streaming semantic ADMISSION (with the eval-exclusion gate) =========
@@ -163,12 +151,8 @@ object SemanticStream {
     *     the reps ledger via [[SemanticDedup.admitVsReps]] — the
     *     at-rest corpus side is already assigned and cell-bucketed, so
     *     the probe never re-runs the O(corpus) argmax;
-    *  4. verdict-first / ledger-last commit order: a crash window
-    *     between the two leaves committed verdicts and a missing reps
-    *     delta, healed on replay by re-deriving the delta from the
-    *     JUST-COMMITTED verdict parquet (marker skips the verdict
-    *     write; the reps derivation is a pure function of the committed
-    *     rows + the batch).
+    *  4. the verdict commits before the reps delta, which derives from
+    *     the committed verdict ([[WaveCommit]]'s protocol).
     *
     * State = ONE ledger: `repsDir` (cell, rep, ce, cn2), one row per
     * admitted distinct nonzero vector, cell-bucketed by
@@ -184,56 +168,36 @@ object SemanticStream {
       idCol: String, centroids: DataFrame, evalSet: DataFrame,
       dupThreshold: Double = 0.97, decontamThreshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
+    WaveCommit.writer(compactEvery, compactAdmitLedger(_, repsDir)) { wave =>
       import org.apache.spark.sql.functions.{coalesce, when}
-      val spark = batch.sparkSession
-      val b = batch.select(col(idCol).as("vec_id"),
-        col(vecCol).as("embedding")).persist()
-      val scoped = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-      val waveScope: DataFrame => DataFrame =
-        d => { val p = d.persist(); scoped.add(p); p }
-      try {
-        val contam = waveScope(SemanticDedup.semanticDecontaminate(
-          b, evalSet, decontamThreshold))
-        val clean = b.join(
-          contam.filter(col("contaminated")).select("vec_id"),
-          Seq("vec_id"), "left_anti")
-        val admit = SemanticDedup.admitVsReps(clean,
-            ledgerReps(spark, repsDir)
-              .select(col("rep"), col("cell"), col("ce"), col("cn2")),
-            dupThreshold, centroids, waveScope)
-          .withColumnRenamed("admitted", "clean_admitted")
-          .withColumnRenamed("first_match", "dup_match")
-        // the verdict is MATERIALIZED (waveScope) before any ledger
-        // append — the later reps write must not re-derive it against a
-        // ledger already containing this batch (the writer-family
-        // invalidation argument)
-        val verdict = waveScope(contam
-          .select(col("vec_id"), col("contaminated"),
-            when(col("contaminated"), col("first_match")).as("eval_match"))
-          .join(admit, Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            coalesce(col("clean_admitted"), lit(false)).as("admitted"),
-            col("dup_match").as("first_match"),
-            col("contaminated"), col("eval_match")))
-        IdempotentSink.writer(verdictDir,
-          onReplay = _ => batch.foreach(_ => ()))(verdict, batchId)
-        // reps delta off the COMMITTED verdict rows (crash-window heal:
-        // a replay re-derives the identical delta from durable parquet)
-        val admitted = spark.read.parquet(s"$verdictDir/batch=$batchId")
-          .filter(col("admitted")).select("vec_id")
-        val newReps = graft.similarity.Ann.indexWithCentroids(
-            b.join(admitted, Seq("vec_id")), centroids).assigned
-          .filter(col("cn2") > 0)
-          .select(col("cell"), col("nid").as("rep"), col("ce"), col("cn2"))
-        IdempotentSink.writer(repsDir, onReplay = _ => ())(newReps, batchId)
-      } finally {
-        b.unpersist()
-        scoped.forEach(_.unpersist())
-      }
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        compactAdmitLedger(spark, repsDir)
-      ()
+      val b = wave.persist(wave.batch.select(col(idCol).as("vec_id"),
+        col(vecCol).as("embedding")))
+      val contam = wave.persist(SemanticDedup.semanticDecontaminate(
+        b, evalSet, decontamThreshold))
+      val clean = b.join(
+        contam.filter(col("contaminated")).select("vec_id"),
+        Seq("vec_id"), "left_anti")
+      val admit = SemanticDedup.admitVsReps(clean,
+          wave.ledger(repsDir, RepsSchema)
+            .select(col("rep"), col("cell"), col("ce"), col("cn2")),
+          dupThreshold, centroids, wave.persist)
+        .withColumnRenamed("admitted", "clean_admitted")
+        .withColumnRenamed("first_match", "dup_match")
+      val verdict = wave.persist(contam
+        .select(col("vec_id"), col("contaminated"),
+          when(col("contaminated"), col("first_match")).as("eval_match"))
+        .join(admit, Seq("vec_id"), "left")
+        .select(col("vec_id"),
+          coalesce(col("clean_admitted"), lit(false)).as("admitted"),
+          col("dup_match").as("first_match"),
+          col("contaminated"), col("eval_match")))
+      wave.commit(verdictDir, verdict)
+      val admitted = wave.committed(verdictDir)
+        .filter(col("admitted")).select("vec_id")
+      wave.commit(repsDir, graft.similarity.Ann.indexWithCentroids(
+          b.join(admitted, Seq("vec_id")), centroids).assigned
+        .filter(col("cn2") > 0)
+        .select(col("cell"), col("nid").as("rep"), col("ce"), col("cn2")))
     }
 
   /** Compact the admission reps ledger into one cell-bucketed table —
@@ -312,7 +276,7 @@ object SemanticStream {
       }.map(_._1)
       val v = healedVersion.getOrElse(last.map(_._1 + 1).getOrElse(0L))
       if (healedVersion.isEmpty)
-        IdempotentSink.writer(centroidsDir, onReplay = _ => ())(cent, v)
+        IdempotentSink.writer(centroidsDir)(cent, v)
       cent.unpersist()
       // remap against the COMMITTED table (not the in-memory derivation):
       // every replay of step 3 then remaps through the same bytes

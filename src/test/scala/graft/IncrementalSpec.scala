@@ -124,4 +124,41 @@ class IncrementalSpec extends AnyFunSuite {
     val cleanState = spark.read.parquet(s"$root/clean/state_last_arrival/date=${days.last}")
     sameFrames(state, cleanState)
   }
+
+  test("Jobs.transformIncremental: arrivals a late poll predicts for the next date reach that date's mart") {
+    val root = Files.createTempDirectory("graft-inc-midnight").toString
+    val raw = s"$root/raw"
+    val (d1, d2) = ("2025-11-20", "2025-11-21")
+    def poll(start: String, n: Int): Unit = (0 until n).foreach { i =>
+      val at = Instant.parse(start).plusSeconds(i * 120L)
+      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
+    }
+    // polls 23:40–23:58 on d1, then 00:00–00:20 on d2, each date
+    // transformed after its polls, as a poll loop does
+    poll(s"${d1}T23:40:00Z", 10)
+    Jobs.transformIncremental(spark, raw, s"$root/silver", d1)
+    poll(s"${d2}T00:00:00Z", 11)
+    Jobs.transformIncremental(spark, raw, s"$root/silver", d2)
+    val day = (d: String) => to_date(col("event_ts")) === to_date(lit(d))
+    assert(graft.etl.StgArrivals(spark, raw, d1).filter(day(d2)).count() > 0,
+      "the fixture must hold next-date arrivals in the late polls")
+
+    Jobs.transform(spark, raw, s"$root/silver_full")
+    val inc = spark.read
+      .option("basePath", s"$root/silver/fct_headways_by_date")
+      .parquet(s"$root/silver/fct_headways_by_date/date=*")
+      .drop("date")
+    sameFrames(spark.read.parquet(s"$root/silver_full/fct_headways"), inc)
+
+    // each state partition holds every key's latest arrival dated on or
+    // before its date — never a next-date arrival
+    val staged = spark.read.parquet(s"$root/silver_full/stg_arrivals")
+    Seq(d1, d2).foreach { d =>
+      sameFrames(
+        spark.read.parquet(s"$root/silver/state_last_arrival/date=$d"),
+        IncrementalHeadways.lastArrivalState(staged
+          .filter(to_date(col("event_ts")) <= to_date(lit(d)))
+          .select("line_id", "stop_id", "event_ts")))
+    }
+  }
 }
