@@ -48,8 +48,11 @@ object TransientCache {
     * the eager cut computes the frame exactly once and every consumer
     * reads stored blocks. Same storage class (MEMORY_AND_DISK), plus the
     * lineage truncation that keeps re-analysis off the driver. Costs one
-    * eager action per call — use [[persist]] when the caller runs its
-    * own sequenced actions anyway (streaming writers).
+    * eager action per call — use [[persist]] for frames only a caller's
+    * SEQUENCED actions consume, each from one place of its plan. The
+    * streaming writers follow the same rule through
+    * [[graft.streaming.WaveCommit]]'s `leaf`/`persist` (an admission
+    * kernel feeding one verdict commit gets `leaf`).
     */
   def leaf(df: DataFrame): DataFrame = {
     val l = df.localCheckpoint()

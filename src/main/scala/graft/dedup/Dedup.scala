@@ -45,8 +45,9 @@ object Dedup {
     * via [[graft.core.TransientCache.clear]] (or wrap each query in
     * [[graft.core.TransientCache.scoped]]); an application invoking
     * dedup operators repeatedly without clearing accumulates cache
-    * entries without bound. The streaming writers manage their own
-    * per-wave persists and never register here.
+    * entries without bound. The streaming writers scope their own
+    * per-wave persists and leaves ([[graft.streaming.WaveCommit]]) and
+    * never register here.
     */
   private[dedup] def cachedSketch(df: DataFrame): DataFrame =
     graft.core.TransientCache.persist(df)
@@ -658,10 +659,9 @@ object Dedup {
       // executed 11× (~17-25 s of executor time each) because the
       // differently-aliased consumer subtrees never canonicalize equal.
       // The default session-lifetime persist suits the one-shot batch
-      // query; the STREAMING writer passes a tracked persist it
-      // unpersists at wave end, so per-wave cache entries cannot
-      // accumulate across an unbounded stream
-      // (graft.streaming.NearDupStream.writer).
+      // query; the STREAMING writer passes a wave-scoped eager leaf
+      // released at wave end, so per-wave entries cannot accumulate
+      // across an unbounded stream (graft.streaming.NearDupStream.writer).
       val spark = sk.sparkSession
       // verify-broadcast gate (the micro-batch is the small side by
       // construction; past the gate the plan degrades to the honest
@@ -934,9 +934,9 @@ object Dedup {
       * under duplicate edges).
       *
       * `knownRows` threads an already-materialized batch count into the
-      * broadcast gate (the streaming writers count their persisted wave
-      * sketch once anyway) so constructing the plan schedules no extra
-      * driver job; without it the gate counts `sk` itself — eager
+      * broadcast gate (the streaming cluster writer counts its persisted
+      * wave sketch once anyway) so constructing the plan schedules no
+      * extra driver job; without it the gate counts `sk` itself — eager
       * construction, same caveat as [[nearDupPairsApprox]].
       */
     private[graft] def approxVerifiedPairs(sk: DataFrame,

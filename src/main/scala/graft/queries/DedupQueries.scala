@@ -916,10 +916,13 @@ object DedupQueries extends QueryModule {
     "q112_semantic_admit_incr" -> QueryDef(
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
+        // scope = EAGER leaf — see q106's comment (the assigned batch,
+        // its reps and the candidate frames feed this one action)
         graft.dedup.SemanticDedup.semanticAdmit(
             emb.filter(pmod(col("vec_id"), lit(2)) === 1),
             emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-            threshold = 0.4, graft.similarity.Ann.strideCentroids(emb))
+            threshold = 0.4, graft.similarity.Ann.strideCentroids(emb),
+            scope = graft.core.TransientCache.leaf)
           .orderBy("vec_id")
       },
       Some(semanticAdmitOracleSql)),
@@ -1132,7 +1135,8 @@ object DedupQueries extends QueryModule {
             nonEval.filter(pmod(col("vec_id"), lit(2)) === 0),
             emb.filter(pmod(col("vec_id"), lit(97)) === 0),
             dupThreshold = 0.4, decontamThreshold = 0.4,
-            graft.similarity.Ann.strideCentroids(emb))
+            graft.similarity.Ann.strideCentroids(emb),
+            scope = graft.core.TransientCache.leaf) // as q112
           .orderBy("vec_id")
       },
       Some(s"""WITH $semanticMemCtes, contam AS MATERIALIZED (

@@ -149,28 +149,34 @@ object CurationStream {
       }
       val cleanDocs = flags.fold(qp)(f =>
         qp.join(f.filter(!col("contaminated")).select("id"), Seq("id")))
-      val exactNew = wave.persist(cleanDocs
+      // ONE eager leaf: the exact-new survivors with their minhash sketch.
+      // The verdict commit reads it from several subtrees (the exact_new
+      // flag, the kernel's batch bands, candidates and verify), and the
+      // band/sig commits read it again; a lazy persist would be raced by
+      // the verdict's own consumers (WaveCommit's SCOPE)
+      val toks = graft.text.TextFunctions.tokens(col("text"))
+      val sk = wave.leaf(cleanDocs
         .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy("fp").orderBy("id")))
-        .filter(col("rn") === 1).drop("rn"))
-      val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = wave.persist(exactNew.select(col("id"),
-        (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
-         else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
+        .filter(col("rn") === 1)
+        .select(col("id"),
+          (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
+           else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
+      // the kernel's band rows, hot keys and candidates feed this one
+      // commit: leaves too (the gate's count of sk reads stored blocks)
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, NearDupStream.ApproxBandsSchema),
         wave.ledger(sigsDir, NearDupStream.SigsSchema), simThreshold,
-        wave.persist,
-        hotBandCap = 4096)
+        wave.leaf, hotBandCap = 4096)
       val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
         (col("quality") >= qualityThreshold).as("q_pass"))
-      val verdict = wave.persist(flags.fold(scoredVerdict)(f =>
+      val verdict = flags.fold(scoredVerdict)(f =>
           scoredVerdict.join(f.select(col("id").as("doc_id"),
             col("n_shared_grams"), col("contaminated")), Seq("doc_id"), "left"))
-        .join(exactNew.select(col("id").as("doc_id"),
+        .join(sk.select(col("id").as("doc_id"),
           lit(true).as("en")), Seq("doc_id"), "left")
         .join(admission.select(col("doc_id"),
           col("admitted").as("adm"), col("first_match")),
@@ -182,10 +188,10 @@ object CurationStream {
             .getOrElse(Nil) ++
           Seq(coalesce(col("en"), lit(false)).as("exact_new"),
             coalesce(col("adm"), lit(false)).as("admitted"),
-            col("first_match")): _*))
+            col("first_match")): _*)
       wave.commit(verdictDir, verdict)
-      // ledger rows from the durable verdict; the joins hit the persisted
-      // scored/sk caches — batch-sized work, no stage re-runs
+      // ledger rows from the durable verdict; the joins read the scored
+      // cache and the sketch leaf — batch-sized work, no stage re-runs
       val durable = wave.committed(verdictDir)
       wave.commit(fpsDir, scored.join(durable.filter(col("exact_new"))
         .select(col("doc_id").as("id")), Seq("id")).select("fp"))

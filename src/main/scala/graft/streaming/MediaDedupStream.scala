@@ -96,10 +96,9 @@ object MediaDedupStream {
       fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
     WaveCommit.writer(compactEvery, compactLedger(_, chunksDir)) { wave =>
-      // one persisted fingerprint frame per batch: the verdict and the
-      // ledger write both read it from cache, and its lineage reads only
-      // the batch source
-      val all = wave.persist(
+      // one fingerprint leaf per batch: the verdict commit reads it from
+      // two subtrees (admission, quarantine) and the ledger write again
+      val all = wave.leaf(
         wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
       val fps = all.filter(col("fp").isNotNull)
       val quarantined = all.filter(col("fp").isNull)
@@ -110,11 +109,10 @@ object MediaDedupStream {
       // hotChunkCap = 4096: the long-lived at-rest chunk ledger is the
       // hot-bucket-guard exposure (an adversarial storm can fix one
       // 16-bit chunk value and stay admitted — Dedup.fingerprintMatches)
-      val verdict = wave.persist(Dedup.fingerprintAdmit(fps, "id", "fp",
+      wave.commit(verdictDir, Dedup.fingerprintAdmit(fps, "id", "fp",
         wave.ledger(chunksDir, ChunksSchema), maxHamming,
-        scope = wave.persist, hotChunkCap = 4096)
+        scope = wave.leaf, hotChunkCap = 4096)
         .unionByName(quarantined))
-      wave.commit(verdictDir, verdict)
       val admitted = fps.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commit(chunksDir, Dedup.fingerprintChunkRows(admitted, "id", "fp"))

@@ -257,16 +257,14 @@ object NearDupStream {
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
     WaveCommit.writer(compactEvery,
         compactLedgers(_, bandsDir, setsDir)) { wave =>
-      // ONE persisted sketch frame for the whole batch: sig and sset come
-      // from a single shingle traversal (graft.functions.MinHashSigSet,
-      // sz = set length), and admission plus BOTH ledger writes read it
-      // from cache — the previous independent bandsFor/setsFor plans paid
-      // the shingle-hashing pass (the sketch stage's dominant cost) four
-      // times per wave: twice inside admission, twice re-sketching the
-      // admitted docs. Lineage reads only the batch source (never the
-      // ledger dirs), so the ledger writes below cannot invalidate it.
+      // ONE sketch leaf for the whole batch: sig and sset come from a
+      // single shingle traversal (graft.functions.MinHashSigSet, sz = set
+      // length), and admission plus BOTH ledger writes read its blocks,
+      // so the shingle-hashing pass (the sketch stage's dominant cost)
+      // runs once per wave. A leaf, not a persist: the verdict commit
+      // reads it from several subtrees (WaveCommit's SCOPE).
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = wave.persist(wave.batch
+      val sk = wave.leaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
@@ -275,11 +273,10 @@ object NearDupStream {
       // hotBandCap = 4096: the long-lived at-rest band ledger is exactly
       // the hot-bucket-guard exposure (see Dedup.guardedCorpusCandidates)
       // — on the EXACT path identically to the approx one
-      val verdict = wave.persist(Dedup.MinHashLsh.nearDupAdmitSketched(
+      wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitSketched(
         sk, wave.batch,
         wave.ledger(bandsDir, BandsSchema), wave.ledger(setsDir, SetsSchema),
-        threshold, wave.persist, hotBandCap = 4096))
-      wave.commit(verdictDir, verdict)
+        threshold, wave.leaf, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commit(bandsDir,
@@ -315,23 +312,16 @@ object NearDupStream {
     WaveCommit.writer(compactEvery,
         compactLedgersApprox(_, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      // ONE persisted (id, sig) frame per wave: admission and both ledger
-      // writes read it from cache
-      val sk = wave.persist(wave.batch
+      // ONE (id, sig) leaf per wave: admission (its verify-broadcast gate
+      // counts it too) and both ledger writes read its blocks
+      val sk = wave.leaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
-      // one count materializes the wave persist AND feeds the verify-
-      // broadcast gate (knownRows) — the admission plan then schedules no
-      // extra driver job per wave (spec-pinned: constructing the verdict
-      // frame with knownRows runs zero jobs)
-      val waveRows = sk.count()
-      val verdict = wave.persist(Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+      wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema),
-        threshold, wave.persist, knownRows = Some(waveRows),
-        hotBandCap = 4096))
-      wave.commit(verdictDir, verdict)
+        threshold, wave.leaf, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))

@@ -170,9 +170,11 @@ object SemanticStream {
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
     WaveCommit.writer(compactEvery, compactAdmitLedger(_, repsDir)) { wave =>
       import org.apache.spark.sql.functions.{coalesce, when}
-      val b = wave.persist(wave.batch.select(col(idCol).as("vec_id"),
+      // leaves: the verdict commit reads the batch and its contamination
+      // flags from several subtrees each (WaveCommit's SCOPE)
+      val b = wave.leaf(wave.batch.select(col(idCol).as("vec_id"),
         col(vecCol).as("embedding")))
-      val contam = wave.persist(SemanticDedup.semanticDecontaminate(
+      val contam = wave.leaf(SemanticDedup.semanticDecontaminate(
         b, evalSet, decontamThreshold))
       val clean = b.join(
         contam.filter(col("contaminated")).select("vec_id"),
@@ -180,10 +182,10 @@ object SemanticStream {
       val admit = SemanticDedup.admitVsReps(clean,
           wave.ledger(repsDir, RepsSchema)
             .select(col("rep"), col("cell"), col("ce"), col("cn2")),
-          dupThreshold, centroids, wave.persist)
+          dupThreshold, centroids, wave.leaf)
         .withColumnRenamed("admitted", "clean_admitted")
         .withColumnRenamed("first_match", "dup_match")
-      val verdict = wave.persist(contam
+      wave.commit(verdictDir, contam
         .select(col("vec_id"), col("contaminated"),
           when(col("contaminated"), col("first_match")).as("eval_match"))
         .join(admit, Seq("vec_id"), "left")
@@ -191,7 +193,6 @@ object SemanticStream {
           coalesce(col("clean_admitted"), lit(false)).as("admitted"),
           col("dup_match").as("first_match"),
           col("contaminated"), col("eval_match")))
-      wave.commit(verdictDir, verdict)
       val admitted = wave.committed(verdictDir)
         .filter(col("admitted")).select("vec_id")
       wave.commit(repsDir, graft.similarity.Ann.indexWithCentroids(

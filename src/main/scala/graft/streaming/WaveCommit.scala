@@ -11,12 +11,21 @@ import graft.core.Leaves
   * protocol every `foreachBatch` writer in this package runs. A writer
   * body holds only its stage logic; the wave owns everything else:
   *
-  *  - SCOPE: [[persist]] (lazy, for frames the wave's sequenced commits
-  *    consume; it is also the `scope` argument of the Dedup /
-  *    IncrementalClusters / SemanticDedup kernels) and [[leaf]] (an eager
-  *    localCheckpoint cut, for a subtree every commit would otherwise
-  *    re-analyze). Both are released when the body returns or throws, so
-  *    an unbounded stream holds no wave's blocks past its wave.
+  *  - SCOPE: [[persist]] is lazy, for frames the wave's SEQUENCED commits
+  *    consume, each reading the frame from one place of its plan: the
+  *    first commit fills the cache and the later ones read it. [[leaf]]
+  *    is an eager localCheckpoint cut, for frames ONE action consumes
+  *    from several subtrees — a lazy persist there is raced under AQE by
+  *    its own consumers, which start before the cache holds a block and
+  *    compute the chain concurrently — and for subtrees every commit
+  *    would otherwise re-analyze. A kernel's `scope` argument (Dedup /
+  *    IncrementalClusters / SemanticDedup) follows the same rule: `leaf`
+  *    when the kernel's output feeds a single commit (the admission
+  *    writers' verdict), `persist` when sequenced actions fold it (the
+  *    cluster writers' label/merge state). A verdict frame one commit
+  *    consumes is not scoped at all. Both kinds are released when the
+  *    body returns or throws, so an unbounded stream holds no wave's
+  *    blocks past its wave.
   *  - COMMIT ORDER: [[commit]] writes through [[IdempotentSink]] in call
   *    order. Every writer commits its verdict (or the delta every later
   *    sink derives from) FIRST and its ledgers LAST, so a ledger never
@@ -51,6 +60,9 @@ final class WaveCommit private (val batch: DataFrame, val batchId: Long) {
   // it was derived from, so no still-cached dependent is re-planned
   private val releases = new ConcurrentLinkedDeque[() => Unit]
   private var commits = 0
+  // each committed sink's schema, as written: the durable re-read needs
+  // no inference job
+  private val written = scala.collection.mutable.Map.empty[String, StructType]
 
   /** Lazy persist released at wave end. */
   def persist(df: DataFrame): DataFrame = {
@@ -80,12 +92,14 @@ final class WaveCommit private (val batch: DataFrame, val batchId: Long) {
     val onReplay: DataFrame => Unit =
       if (commits == 0) _ => batch.foreach(_ => ()) else _ => ()
     commits += 1
+    written(dir) = rows.schema
     IdempotentSink.writer(dir, onReplay)(rows, batchId)
   }
 
-  /** This wave's committed batch of the sink at `dir`. */
+  /** This wave's committed batch of the sink at `dir`, read with the
+    * schema its [[commit]] wrote. */
   def committed(dir: String): DataFrame =
-    spark.read.parquet(s"$dir/batch=$batchId")
+    spark.read.schema(written(dir)).parquet(s"$dir/batch=$batchId")
 
   private def release(): Unit = releases.forEach(_())
 }

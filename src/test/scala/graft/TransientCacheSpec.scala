@@ -80,9 +80,9 @@ class TransientCacheSpec extends AnyFunSuite {
       .start()
     assert(q.awaitTermination(120000), "query did not terminate")
     assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
-    // the wave persisted its sketch frame, verdict, and the admission
-    // plan's scoped mid-frames (banded rows, candidate pairs) — ALL must
-    // be released with the wave: a leaked entry here is an unbounded
+    // the wave cut its sketch frame and the admission plan's scoped
+    // mid-frames (banded rows, candidate pairs) to leaves — ALL must be
+    // released with the wave: a leaked entry here is an unbounded
     // stream's memory leak
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,

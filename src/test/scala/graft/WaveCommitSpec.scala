@@ -2,10 +2,22 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+  InMemoryTableScanExec}
+import org.apache.spark.sql.execution.datasources
+  .InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.streaming._
 
@@ -14,7 +26,8 @@ import graft.streaming._
   * leaves no persisted RDD behind, and a crash after ANY commit step of a
   * wave replays to exactly the uninterrupted run's committed outputs —
   * including windows no per-writer spec reaches (e.g. between the bands
-  * and sigs commits).
+  * and sigs commits). For the single-commit admission writers, no commit
+  * reads one cached frame from two places of its plan (the scope rule).
   */
 class WaveCommitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -128,6 +141,41 @@ class WaveCommitSpec extends AnyFunSuite {
       () => textWaves, r => Bm25Stream.writer(s"$r/postings", s"$r/stats",
         s"$r/totals", "text", "doc_id")))
 
+  /** The writers whose kernel output feeds ONE verdict commit — the
+    * frames that commit reads are leaves under [[WaveCommit]]'s scope
+    * rule. The cluster writers fold state across sequenced actions. */
+  private val singleCommit = Set("CurationStream.writer",
+    "CurationStream.decontamWriter", "NearDupStream.writer",
+    "NearDupStream.approxWriter", "MediaDedupStream.writer",
+    "SemanticStream.admitWriter")
+
+  /** Every write command's (output path, plan), as executed. */
+  private class Writes extends QueryExecutionListener {
+    val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit =
+      qe.logical.collectFirst { case w: InsertIntoHadoopFsRelationCommand =>
+        w.outputPath.toString }.foreach(p => seen.add((p, qe)))
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
+  /** The cached relations `plan` reads, each once per place it is read
+    * from — including the places inside the plans of other caches it
+    * reads. */
+  private def cacheReads(plan: LogicalPlan): Seq[InMemoryRelation] = {
+    def inPhysical(p: SparkPlan): Seq[InMemoryRelation] = p match {
+      case a: AdaptiveSparkPlanExec => inPhysical(a.executedPlan)
+      case s: QueryStageExec => inPhysical(s.plan)
+      case s: InMemoryTableScanExec => expand(s.relation)
+      case other => (other.children ++ other.subqueries).flatMap(inPhysical)
+    }
+    def expand(r: InMemoryRelation): Seq[InMemoryRelation] =
+      r +: inPhysical(r.cacheBuilder.cachedPlan)
+    plan.collectWithSubqueries { case r: InMemoryRelation => r }
+      .flatMap(expand)
+  }
+
   /** Every sink's committed rows, order-free. */
   private def outputs(root: String, f: Family): Map[String, Seq[String]] =
     f.sinks.map(s => s -> IdempotentSink.readCommitted(spark, s"$root/$s")
@@ -177,5 +225,43 @@ class WaveCommitSpec extends AnyFunSuite {
           s"crash after commit $k of ${f.sinks.mkString(" → ")}")
       }
     }
+
+    // A lazy persist read twice by ONE action is the cache race: under AQE
+    // both consumers start before the cache holds a block, so the chain
+    // computes concurrently. Every commit's `withCachedData` plan is
+    // walked through every cached plan it reads.
+    if (singleCommit(f.name))
+      test(s"${f.name}: no commit reads a cached frame twice") {
+        val root = freshDir("graft-wave-plan")
+        f.setup(root)
+        val writes = new Writes
+        spark.listenerManager.register(writes)
+        try {
+          val w = f.make(root)
+          val waves = f.waves()
+          waves.zipWithIndex.foreach { case (b, i) => w(b, i.toLong) }
+          val expected = f.sinks.size * waves.size
+          // listener delivery is asynchronous
+          val deadline = System.currentTimeMillis() + 30000
+          while (writes.seen.size < expected &&
+              System.currentTimeMillis() < deadline) Thread.sleep(50)
+          val commits = writes.seen.asScala.toSeq
+          assert(commits.size == expected, commits.map(_._1).mkString("\n"))
+          commits.foreach { case (path, qe) =>
+            val counts = new java.util.IdentityHashMap[AnyRef, Integer]
+            val names = new java.util.IdentityHashMap[AnyRef, String]
+            cacheReads(qe.withCachedData).foreach { r =>
+              val k = r.cacheBuilder
+              counts.put(k, counts.getOrDefault(k, 0) + 1)
+              names.put(k, r.output.map(_.name).mkString("(", ", ", ")"))
+            }
+            val twice = counts.asScala.collect {
+              case (k, n) if n > 1 => s"${names.get(k)} read $n times"
+            }
+            assert(twice.isEmpty,
+              s"commit to ${path.stripPrefix("file:")}: ${twice.mkString("; ")}")
+          }
+        } finally spark.listenerManager.unregister(writes)
+      }
   }
 }
