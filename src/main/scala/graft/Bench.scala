@@ -71,7 +71,8 @@ object Bench {
 
     val warmDir = "/root/testdata/sf0.001"
     selected.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+      try graft.core.Cuts.scoped(
+        fn(spark, warmDir).write.format("noop").mode("overwrite").save())
       catch { case _: Throwable => () }
     }
 
@@ -83,20 +84,20 @@ object Bench {
     // of the plan (measured: q97 shuffle 1.9 KB under count() vs the
     // real multi-MB span exchange). The noop sink computes every output
     // column and discards rows executor-side.
-    def once(fn: (SparkSession, String) => DataFrame): Double = {
-      // release the engine's compute-once persists the previous sample
-      // left behind: every sample then pays its own sketch/feature
-      // kernels — the honest single-run cost — and a 23-query tier sweep
-      // cannot accumulate cross-query cache pressure (measured: q90's
-      // warm runs DOUBLED under the eviction/GC churn of upstream
-      // leftovers). Deliberately NOT spark.catalog.clearCache(): that
-      // would also drop the memoized synthetic-media fixtures and the
+    def once(fn: (SparkSession, String) => DataFrame): Double =
+      // each sample owns the engine's compute-once cuts it makes, released
+      // after the timer stops: every sample then pays its own
+      // sketch/feature kernels — the honest single-run cost — and a
+      // 23-query tier sweep cannot accumulate cross-query cache pressure
+      // (measured: q90's warm runs DOUBLED under the eviction/GC churn of
+      // upstream leftovers). Deliberately NOT spark.catalog.clearCache():
+      // that would also drop the memoized synthetic-media fixtures and the
       // bench would measure ImageIO re-encoding, not the queries.
-      graft.core.TransientCache.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+      graft.core.Cuts.scoped {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     // a failed query reports -1, never a plausible-looking wall time
     val walls = scala.collection.mutable.Map.empty[String, Double]
     val plan = scala.collection.mutable.Map.empty[String, (Long, Long)]

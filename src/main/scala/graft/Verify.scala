@@ -23,11 +23,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // release the previous query's compute-once persists (memory
-      // hygiene over a 104-query session; fixture memoization survives)
-      graft.core.TransientCache.clear()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // each query owns its compute-once cuts, released once its result
+      // is written (memory hygiene over a 125-query session; fixture
+      // memoization survives)
+      try graft.core.Cuts.scoped(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -1,0 +1,125 @@
+package graft.core
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The engine's one way to cut lineage and cache a mid-frame, and to free
+  * it again.
+  *
+  *  - [[persist]] is LAZY, for frames a caller's SEQUENCED actions
+  *    consume, each reading the frame from one place of its plan: the
+  *    first action fills the cache and the later ones read it.
+  *  - [[leaf]] is an EAGER cut, for frames ONE action consumes from
+  *    several subtrees (a lazy persist there is raced under AQE by its
+  *    own consumers, which start before the cache holds a block and
+  *    compute the chain concurrently) and for subtrees every later
+  *    action would otherwise re-analyze. It is a reliable `checkpoint()`
+  *    when the context has a checkpoint dir (`spark.checkpoint.dir` /
+  *    `setCheckpointDir`: files that survive executor loss) and a
+  *    `localCheckpoint()` otherwise.
+  *  - [[release]] frees a leaf early, once nothing will read it again.
+  *  - [[scoped]] opens an OWNER on the calling thread: every cut made on
+  *    that thread inside the block is released, newest first, when the
+  *    block returns or throws. A query (Bench, Verify, the tools) and a
+  *    streaming wave ([[graft.streaming.WaveCommit]]) each run in one
+  *    scope, so nothing they cut outlives them, and two queries on two
+  *    threads never release each other's frames. A scope nests: an inner
+  *    scope releases only what it cut itself.
+  *
+  * Outside any scope a cut has no owner and keeps Spark's own lifetime
+  * (the CacheManager holds a persist until `unpersist`; a leaf's blocks
+  * or files live until the ContextCleaner collects its RDD). A frame
+  * cached before [[persist]] is called — a session-lifetime fixture memo
+  * — is never registered, so no scope releases it.
+  *
+  * A scoped block must CONSUME what it builds (collect/write) before it
+  * returns: a lazy frame escaping the block reads released cuts.
+  */
+object Cuts {
+
+  private final class Owner(val outer: Owner) {
+    // release actions, newest first: a frame is released before the
+    // frames it was derived from, so no still-cached dependent is
+    // re-planned over a dropped parent
+    var releases: List[() => Unit] = Nil
+  }
+
+  // a plain ThreadLocal: a thread started inside a scope does not inherit
+  // its owner, so its cuts keep Spark's lifetime unless it opens its own
+  private val owner = new ThreadLocal[Owner]
+
+  private def own(release: () => Unit): Unit = {
+    val o = owner.get
+    if (o != null) o.releases ::= release
+  }
+
+  /** Persist `df` lazily and register it with the current scope. A plan
+    * the CacheManager already holds (a semantically equal frame cached
+    * earlier) is returned as is and not registered: its owner is whoever
+    * cached it first. */
+  def persist(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist()
+      own(() => df.unpersist(false))
+    }
+    df
+  }
+
+  /** Cut `df` eagerly to a checkpoint-backed leaf — reliable when the
+    * context has a checkpoint dir, local otherwise — and register it with
+    * the current scope. */
+  def leaf(df: DataFrame): DataFrame = {
+    val l =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+      else df.localCheckpoint()
+    own(() => release(l))
+    l
+  }
+
+  @scala.annotation.tailrec
+  private def stored(r: RDD[_]): Option[RDD[_]] =
+    if (r.getCheckpointFile.isDefined || r.getStorageLevel != StorageLevel.NONE) Some(r)
+    else r.dependencies.headOption.map(_.rdd) match {
+      case Some(parent) => stored(parent)
+      case None => None
+    }
+
+  /** Free the storage behind a [[leaf]] — reliable checkpoint files
+    * deleted, local-checkpoint blocks unpersisted — and a no-op on a frame
+    * that is not a checkpoint-backed leaf. A leaf rebuilt over the cut's
+    * rows ([[org.apache.spark.sql.GraftShim.checkpointFresh]]) has a
+    * metrics RDD between its scan and the stored RDD, so the walk follows
+    * the (linear) dependency chain down to the RDD that owns the files or
+    * blocks.
+    *
+    * Only call it on a leaf nothing will read again: a truncated lineage
+    * cannot recompute, so an action over a released leaf FAILS rather
+    * than silently recomputing. */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: LogicalRDD =>
+      stored(l.rdd).foreach { r =>
+        r.getCheckpointFile match {
+          case Some(f) =>
+            val p = new org.apache.hadoop.fs.Path(f)
+            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+              .delete(p, true)
+          case None => r.unpersist(false)
+        }
+      }
+    case _ => ()
+  }
+
+  /** Run `f` as the owner of every cut made on this thread inside it, and
+    * release them all, newest first, when `f` returns or throws. */
+  def scoped[T](f: => T): T = {
+    val o = new Owner(owner.get)
+    owner.set(o)
+    try f
+    finally {
+      if (o.outer == null) owner.remove() else owner.set(o.outer)
+      o.releases.foreach(_())
+    }
+  }
+}

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cuts
 import graft.similarity.VectorFunctions
 import graft.text.TextFunctions
 
@@ -22,35 +23,20 @@ import graft.text.TextFunctions
   *  - [[embeddingNearDup]] — semantic near-dup: cosine over embeddings.
   *
   * All sketches use deterministic seeds → replayable at any parallelism.
+  *
+  * Compute-once cuts: an expensive SKETCH frame consumed by several
+  * subtrees of one plan (candidate generation + verification + duplicate
+  * stars) is cut through [[graft.core.Cuts]] — Spark shares work across
+  * subtrees only through ReusedExchange, and per-branch column pruning
+  * makes the branches' exchanges canonicalize unequal, so without the cut
+  * every branch re-runs the sketch kernel (measured at the 100× tier: 3×
+  * the minhash+shingle pass in q31, ~90 s of ~310 s executor time). A
+  * kernel's `scope` argument is that cut: `Cuts.persist` by default,
+  * `Cuts.leaf` where one action reads the kernel's frames from several
+  * subtrees. The cuts belong to the caller's [[graft.core.Cuts.scoped]]
+  * owner (a query, a streaming wave) and are released when it closes.
   */
 object Dedup {
-
-  /** Compute-once persist for an expensive SKETCH frame consumed by
-    * several subtrees of one plan (candidate generation + verification +
-    * duplicate stars): Spark shares work across subtrees only through
-    * ReusedExchange, and per-branch column pruning makes the branches'
-    * exchanges canonicalize unequal, so without the cache every branch
-    * re-runs the sketch kernel — the dominant CPU of every near-dup
-    * operator (measured at the 100× tier: 3× the minhash+shingle pass in
-    * q31, ~90 s of ~310 s executor time). MEMORY_AND_DISK (the Dataset
-    * default) spills instead of OOM; the CacheManager's semantic-equality
-    * lookup makes the persist idempotent across repeated builds in one
-    * session, and cached entries die with the session. At cluster scale
-    * this is the "materialize the sketch table before pairwise analysis"
-    * pattern — the cached bytes are O(corpus sketch), strictly smaller
-    * than the O(branches · corpus) kernel work they replace.
-    *
-    * LIFECYCLE CONTRACT for long-lived callers: these persists are
-    * registry-scoped, not query-scoped — release them between queries
-    * via [[graft.core.TransientCache.clear]] (or wrap each query in
-    * [[graft.core.TransientCache.scoped]]); an application invoking
-    * dedup operators repeatedly without clearing accumulates cache
-    * entries without bound. The streaming writers scope their own
-    * per-wave persists and leaves ([[graft.streaming.WaveCommit]]) and
-    * never register here.
-    */
-  private[dedup] def cachedSketch(df: DataFrame): DataFrame =
-    graft.core.TransientCache.persist(df)
 
   /** Exact dedup: survivors + duplicate counts per normalized fingerprint. */
   def exact(df: DataFrame, textCol: String, idCol: String): DataFrame =
@@ -240,14 +226,14 @@ object Dedup {
       // pressure every later query in the session. MEMORY_AND_DISK
       // spills instead of OOM; the CacheManager's semantic-equality
       // lookup makes the persist idempotent across repeated builds.
-      val slim = cachedSketch(base.select(col("id"), col("sig"),
+      val slim = Cuts.persist(base.select(col("id"), col("sig"),
         size(col("sset")).as("sz"), xxhash64(col("sset")).as("sfp")))
       // identical-set collapse via AGGREGATION, not a window: sig is a
       // pure function of the shingle set and sfp fingerprints the set,
       // so first() per sfp group is exact — and partial (map-side)
       // aggregation collapses duplicate-set groups BEFORE the exchange.
       // Cached: the collapsed frame feeds banding AND the stars join.
-      val reps = cachedSketch(slim.groupBy("sfp")
+      val reps = Cuts.persist(slim.groupBy("sfp")
         .agg(min(col("id")).as("id"),
           first(col("sig")).as("sig"), first(col("sz")).as("sz")))
       // duplicate-set members point at their set's min id; the reps side
@@ -297,7 +283,7 @@ object Dedup {
       // persisted: the pair list (two longs per candidate) is consumed by
       // the verify stream AND the set-pruning id list — without the cache
       // the banded self-join subtree re-evaluates per consumer
-      val candidates = cachedSketch(l.join(r, Seq("band", "bkey"))
+      val candidates = Cuts.persist(l.join(r, Seq("band", "bkey"))
         .filter(col("id_a") < col("id_b") && !sharesEarlierBand &&
           sizesCompatible)
         .select("id_a", "id_b"))
@@ -405,13 +391,13 @@ object Dedup {
       // metadata-width sketch cache (id + 32-long signature): the collapse
       // agg, stars, and banding all read it — same cache-altitude rule as
       // [[nearDupPairs]], with nothing fat to leave out this time
-      val slim = cachedSketch(src.select(col(idCol).as("id"),
+      val slim = Cuts.persist(src.select(col(idCol).as("id"),
         (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
          else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       // identical-SIGNATURE collapse (the approx analog of the exact
       // path's identical-set collapse): grouping key is the signature
       // array itself — 256 B, still metadata-width
-      val reps = cachedSketch(slim.groupBy("sig")
+      val reps = Cuts.persist(slim.groupBy("sig")
         .agg(min(col("id")).as("id")))
       val stars = slim.select(col("sig"), col("id"))
         .join(reps.select(col("sig"), col("id").as("rep")), Seq("sig"))
@@ -433,7 +419,7 @@ object Dedup {
       val sharesEarlierBand = exists(
         zip_with(col("keys_a"), col("keys_b"), (ka, kb) => ka === kb),
         b => b)
-      val candidates = cachedSketch(l.join(r, Seq("band", "bkey"))
+      val candidates = Cuts.persist(l.join(r, Seq("band", "bkey"))
         .filter(col("id_a") < col("id_b") && !sharesEarlierBand)
         .select("id_a", "id_b"))
       // estimate = positional agreement over the two signatures; the
@@ -496,7 +482,7 @@ object Dedup {
     def nearDupIncremental(batch: DataFrame, corpus: DataFrame,
         textCol: String, idCol: String, threshold: Double = 0.5,
         portable: Boolean = false,
-        scope: DataFrame => DataFrame = cachedSketch): DataFrame =
+        scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
       nearDupIncrementalLedger(batch, textCol, idCol,
         bandsFor(corpus, textCol, idCol, portable),
         setsFor(corpus, textCol, idCol, portable), threshold, portable,
@@ -588,7 +574,7 @@ object Dedup {
     def nearDupIncrementalLedger(batch: DataFrame, textCol: String,
         idCol: String, corpusBands: DataFrame, corpusSets: DataFrame,
         threshold: Double = 0.5, portable: Boolean = false,
-        scope: DataFrame => DataFrame = cachedSketch): DataFrame = {
+        scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
       val toks = TextFunctions.tokens(col(textCol))
       // one-pass batch sketch (sig + sset in one shingle traversal, sz =
       // set length); the banding and verification branches below each
@@ -621,7 +607,7 @@ object Dedup {
     private[graft] def nearDupAdmitSketched(sk: DataFrame,
         sizeHint: DataFrame, corpusBands: DataFrame, corpusSets: DataFrame,
         threshold: Double,
-        scope: DataFrame => DataFrame = cachedSketch,
+        scope: DataFrame => DataFrame = Cuts.persist,
         hotBandCap: Int = 0): DataFrame = {
       val verified = exactVerifiedPairs(sk, sizeHint, corpusBands,
         corpusSets, threshold, scope, hotBandCap)
@@ -649,7 +635,7 @@ object Dedup {
     private[graft] def exactVerifiedPairs(sk: DataFrame,
         sizeHint: DataFrame, corpusBands: DataFrame, corpusSets: DataFrame,
         threshold: Double,
-        scope: DataFrame => DataFrame = cachedSketch,
+        scope: DataFrame => DataFrame = Cuts.persist,
         hotBandCap: Int = 0): DataFrame = {
       // `scope` = compute-once persist for the batch-bounded mid-frames
       // several subtrees consume (the banded batch rows feed the corpus
@@ -658,10 +644,10 @@ object Dedup {
       // the 100× tier WITHOUT it: the same 110 MB banded-batch exchange
       // executed 11× (~17-25 s of executor time each) because the
       // differently-aliased consumer subtrees never canonicalize equal.
-      // The default session-lifetime persist suits the one-shot batch
-      // query; the STREAMING writer passes a wave-scoped eager leaf
-      // released at wave end, so per-wave entries cannot accumulate
-      // across an unbounded stream (graft.streaming.NearDupStream.writer).
+      // The default is a lazy Cuts.persist; the STREAMING writer passes
+      // Cuts.leaf (its verdict is one action reading these frames from
+      // several subtrees). Either way the caller's scope — the query, the
+      // wave — releases them (graft.streaming.NearDupStream.writer).
       val spark = sk.sparkSession
       // verify-broadcast gate (the micro-batch is the small side by
       // construction; past the gate the plan degrades to the honest
@@ -858,7 +844,7 @@ object Dedup {
     def nearDupIncrementalApprox(batch: DataFrame, corpus: DataFrame,
         textCol: String, idCol: String, threshold: Double = 0.5,
         portable: Boolean = false,
-        scope: DataFrame => DataFrame = cachedSketch): DataFrame =
+        scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
       nearDupIncrementalLedgerApprox(batch, textCol, idCol,
         bandsForApprox(corpus, textCol, idCol, portable),
         sigsFor(corpus, textCol, idCol, portable), threshold, portable,
@@ -877,7 +863,7 @@ object Dedup {
     def nearDupIncrementalLedgerApprox(batch: DataFrame, textCol: String,
         idCol: String, corpusBands: DataFrame, corpusSigs: DataFrame,
         threshold: Double = 0.5, portable: Boolean = false,
-        scope: DataFrame => DataFrame = cachedSketch): DataFrame = {
+        scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
       val toks = TextFunctions.tokens(col(textCol))
       val sk = graft.core.Parallelism.ensure(
           batch.select(col(idCol), col(textCol)))
@@ -904,7 +890,7 @@ object Dedup {
       */
     private[graft] def nearDupAdmitApproxSketched(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
-        scope: DataFrame => DataFrame = cachedSketch,
+        scope: DataFrame => DataFrame = Cuts.persist,
         knownRows: Option[Long] = None, hotBandCap: Int = 0): DataFrame = {
       val verified = approxVerifiedPairs(sk, corpusBands, corpusSigs,
         threshold, scope, knownRows, hotBandCap)
@@ -941,7 +927,7 @@ object Dedup {
       */
     private[graft] def approxVerifiedPairs(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
-        scope: DataFrame => DataFrame = cachedSketch,
+        scope: DataFrame => DataFrame = Cuts.persist,
         knownRows: Option[Long] = None, hotBandCap: Int = 0): DataFrame = {
       require(threshold > 0 && threshold <= 1,
         s"similarity threshold must lie in (0, 1], got $threshold")
@@ -1199,7 +1185,7 @@ object Dedup {
     // collapse, chunk-join sides, member expansion) — cache it so the
     // md5-heavy sketch kernel runs once, not once per branch; 16 B/row
     hammingPairs(
-      cachedSketch(src.select(col(idCol).as("id"),
+      Cuts.persist(src.select(col(idCol).as("id"),
         sketch(TextFunctions.tokens(col(textCol))).as("sh"))),
       "id", "sh", maxHamming,
       collapseIdentical = saturated, subSplit = saturated)
@@ -1444,7 +1430,7 @@ object Dedup {
   def fingerprintAdmit(batch: DataFrame, idCol: String, fpCol: String,
       ledgerChunks: DataFrame, maxHamming: Int = 3, nChunks: Int = 4,
       totalBits: Int = 64,
-      scope: DataFrame => DataFrame = cachedSketch,
+      scope: DataFrame => DataFrame = Cuts.persist,
       hotChunkCap: Int = 0): DataFrame = {
     val sh = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
     // a pair meeting in several chunks duplicates — min() absorbs it
@@ -1523,12 +1509,10 @@ object Dedup {
     */
   def fingerprintVerifiedPairs(wave: DataFrame, idCol: String, fpCol: String,
       corpusChunks: DataFrame, maxHamming: Int = 3, nChunks: Int = 4,
-      totalBits: Int = 64,
-      scope: DataFrame => DataFrame = cachedSketch,
-      hotChunkCap: Int = 0): DataFrame =
+      totalBits: Int = 64, hotChunkCap: Int = 0): DataFrame =
     fingerprintMatches(
       wave.select(col(idCol).as("id"), col(fpCol).as("fp")),
-      corpusChunks, maxHamming, nChunks, totalBits, scope, hotChunkCap)
+      corpusChunks, maxHamming, nChunks, totalBits, Cuts.persist, hotChunkCap)
       .dropDuplicates("bid", "mid")
 
   /** Shared candidate+verify kernel of [[fingerprintAdmit]] /
@@ -1792,19 +1776,19 @@ object Dedup {
     * id) plus one partial-agg shuffle (min per node) — both on the same
     * key, both skew-handled by AQE. `labels` feeds into itself TWICE per
     * round (union + join), so without lineage truncation the analyzed plan
-    * doubles every iteration — exponential. Each round is therefore
-    * checkpointed: reliably if the session has a checkpoint dir (the
-    * cluster setting — survives executor loss), else `localCheckpoint`
-    * (executor-block-backed; right for local mode and short jobs). Ids
-    * must be numeric (min ordering); doc ids here are int64.
+    * doubles every iteration — exponential. Each round is therefore cut
+    * to a [[graft.core.Cuts.leaf]]: reliable if the session has a
+    * checkpoint dir (the cluster setting — survives executor loss), else
+    * local (executor-block-backed; right for local mode and short jobs).
+    * Ids must be numeric (min ordering); doc ids here are int64.
     *
     * Checkpoint hygiene: superseded rounds are RELEASED as the loop
     * advances (reliable checkpoint files deleted, local-checkpoint blocks
     * unpersisted — GraphFrames-style), and the edge checkpoint is released
     * on exit, so a long-running session accumulates nothing. The RETURNED
     * frame stays backed by the final round's checkpoint — one round's
-    * labels, the irreducible storage of the result; a caller that persists
-    * the assignment elsewhere may drop it via the session checkpoint dir.
+    * labels, the irreducible storage of the result — until the caller's
+    * [[graft.core.Cuts.scoped]] owner closes.
     */
   /** Directed-edge-row gate for the driver union-find fast path in
     * [[connectedComponents]]. Edges are streamed off the checkpointed
@@ -1859,35 +1843,11 @@ object Dedup {
     // Dataset.checkpoint under AQE records UnknownPartitioning and every
     // round's edges⋈delta join then re-exchanged the static edge list
     // (see GraftShim.checkpointFresh).
+    // Every truncated frame is a Cuts leaf owned by the caller's scope; a
+    // superseded one is released as soon as its successor is materialized
+    // (checkpoint() is eager, so the successor never reads it again).
     def truncate(df: DataFrame): DataFrame =
       org.apache.spark.sql.GraftShim.checkpointFresh(df)
-    // free a superseded truncated frame: the checkpointed RDD sits in the
-    // plan as a LogicalRDD leaf — delete its files (reliable) or unpersist
-    // its blocks (local). Safe immediately: checkpoint() is eager, so the
-    // successor round was fully materialized before its parent is released.
-    // the stats-reset wrapper (see truncate) puts a metrics RDD between
-    // the LogicalRDD leaf and the checkpoint-backed ancestor, so walk the
-    // (linear) dependency chain to the RDD that actually owns files/blocks
-    @scala.annotation.tailrec
-    def ckptAncestor(r: org.apache.spark.rdd.RDD[_]): Option[org.apache.spark.rdd.RDD[_]] =
-      if (r.getCheckpointFile.isDefined ||
-          r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) Some(r)
-      else r.dependencies.headOption.map(_.rdd) match {
-        case Some(parent) => ckptAncestor(parent)
-        case None => None
-      }
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.flatMap(ckptAncestor).foreach { r =>
-        r.getCheckpointFile match {
-          case Some(f) =>
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          case None => r.unpersist(false)
-        }
-      }
     val half = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
     // directed edges via explode, NOT half.union(half.reversed): a union
@@ -1994,7 +1954,7 @@ object Dedup {
           k += 2
         }
       }
-      release(edges)
+      Cuts.release(edges)
       val minOf = new Array[Long](n)
       java.util.Arrays.fill(minOf, 0, n, Long.MaxValue)
       (0 until n).foreach { i =>
@@ -2096,8 +2056,8 @@ object Dedup {
         .join(labels.withColumnRenamed("comp", "oldc"), "id")
         .filter(col("comp") < col("oldc"))
         .select("id", "comp"))
-      if (!(delta eq labels)) release(delta)
-      release(labels)
+      if (!(delta eq labels)) Cuts.release(delta)
+      Cuts.release(labels)
       labels = next
       delta = nd
       converged = s.compareTo(prevSum) == 0
@@ -2105,13 +2065,13 @@ object Dedup {
       iter += 1
       logRound("round")
     }
-    if (!(delta eq labels)) release(delta)
-    release(edges)
+    if (!(delta eq labels)) Cuts.release(delta)
+    Cuts.release(edges)
     // partially propagated labels would silently split one component into
     // several "clusters" (several dedup survivors) — refuse instead; the
     // refused frame is useless to any caller, so release it too (otherwise
     // the failure path would be the one place checkpoints accumulate)
-    if (!converged) release(labels)
+    if (!converged) Cuts.release(labels)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds: the pair " +
         "graph has a longer chain than pointer-jumping can close in " +
@@ -2328,24 +2288,20 @@ object Dedup {
     // aggregations consume it (per-gram histogram, per-doc totals), and
     // without the cache each would re-run the tokenize→shingle→explode
     // pass — the operator's dominant CPU. MEMORY_AND_DISK spills rather
-    // than evicts under pressure; the entry is released by Spark's
-    // ContextCleaner once the returned plan is unreferenced (and
-    // re-invocations of the same query reuse it via the CacheManager's
-    // canonicalized-plan key in the meantime).
+    // than evicts under pressure; the caller's Cuts scope releases it.
     // native shingle loop (same XXH64-seed-42 hashes as the old
     // string-gram + xxhash64 chain, one JVM pass per doc) — the
     // interpreted transform/concat_ws gram builder dominated this
     // operator's CPU at the 100× tier; short docs are filtered before
     // the loop, whose sub-width shingle would otherwise mint a phantom
     // gram for them
-    val g = graft.core.Parallelism.ensure(
+    val g = Cuts.persist(graft.core.Parallelism.ensure(
         df.select(col(idCol), col(textCol)))
       .select(col(idCol).as("doc_id"),
         TextFunctions.tokens(lower(col(textCol))).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"),
-        explode(graft.functions.Sketches.shingleSetN(col("toks"), n)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        explode(graft.functions.Sketches.shingleSetN(col("toks"), n)).as("g")))
     // Every step below is PARTIAL-AGG-SAFE — the earlier window-over-
     // gram-partition formulation buffered one gram's entire occurrence
     // list in a single task, so a boilerplate gram present in most

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Cuts
+
 /** Incrementally-maintained APPROXIMATE duplicate clusters — the streaming
   * close of the signature-only near-dup family (pairs: q105, admission:
   * q106, batch clusters: q107): fold each arriving wave's estimator-
@@ -297,8 +299,8 @@ object IncrementalClusters {
     * committed, the sinks' markers skip the writes entirely.
     *
     * `knownRows` threads the writer's once-per-wave batch count into the
-    * verify-broadcast gate (no extra driver job); `scope` is the wave
-    * persist for the mid-frames several subtrees consume.
+    * verify-broadcast gate (no extra driver job); the mid-frames several
+    * subtrees consume are [[Cuts.persist]] cuts the wave owns.
     */
   private def packedPairs(df: DataFrame, a: String,
       b: String): Array[Array[Long]] =
@@ -414,14 +416,13 @@ object IncrementalClusters {
 
   def foldWave(sk: DataFrame, corpusBands: DataFrame, corpusSigs: DataFrame,
       labels: DataFrame, merges: DataFrame, threshold: Double,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch,
       knownRows: Option[Long] = None,
       hotBandCap: Int = 0): (DataFrame, DataFrame) =
-    // no scope() on the edge frame: foldEdgeFrame cuts it to a leaf
-    // itself, and a cache on top would just hold a redundant copy
+    // no cut on the edge frame: foldEdgeFrame cuts it to a leaf itself,
+    // and a cache on top would just hold a redundant copy
     foldEdgeFrame(sk, Dedup.MinHashLsh.approxVerifiedPairs(
-      sk, corpusBands, corpusSigs, threshold, scope, knownRows, hotBandCap),
-      labels, merges, scope)
+      sk, corpusBands, corpusSigs, threshold, Cuts.persist, knownRows,
+      hotBandCap), labels, merges)
 
   /** [[foldWave]] with the EXACT-Jaccard edge kernel
     * ([[Dedup.MinHashLsh.exactVerifiedPairs]] over band + shingle-set
@@ -437,11 +438,10 @@ object IncrementalClusters {
   def foldWaveExact(sk: DataFrame, sizeHint: DataFrame,
       corpusBands: DataFrame, corpusSets: DataFrame,
       labels: DataFrame, merges: DataFrame, threshold: Double,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch,
       hotBandCap: Int = 0): (DataFrame, DataFrame) =
     foldEdgeFrame(sk, Dedup.MinHashLsh.exactVerifiedPairs(
-      sk, sizeHint, corpusBands, corpusSets, threshold, scope, hotBandCap),
-      labels, merges, scope)
+      sk, sizeHint, corpusBands, corpusSets, threshold, Cuts.persist,
+      hotBandCap), labels, merges)
 
   /** The shared fold over an already-built (bid, mid) wave edge frame —
     * PUBLIC because the fold is genuinely edge-source-agnostic: any
@@ -453,9 +453,10 @@ object IncrementalClusters {
     * closure guarantee.
     *
     * RETURNED FRAMES ARE LEAF-SHAPED on both paths — parallelized local
-    * arrays under the driver gate, localCheckpoint leaves past it — so
-    * callers fold them into their ledgers with PLAIN unions: a per-wave
-    * cumulative `union(...).localCheckpoint()` on top re-copies the
+    * arrays under the driver gate, [[Cuts.leaf]] cuts past it (owned by
+    * the caller's scope, like every cut the fold makes) — so callers
+    * fold them into their ledgers with PLAIN unions: a per-wave
+    * cumulative `union(...)` cut on top re-copies the
     * whole ledger every wave (O(waves·corpus) for the fold) and pays an
     * extra eager action+job, for lineage that is already cut.
     *
@@ -464,19 +465,15 @@ object IncrementalClusters {
     * caller or built over persisted parents).
     *
     * FAILURE SEMANTICS of the lineage cuts: every eager cut in the fold
-    * family (here, [[SemanticDedup.foldWaveSemantic]], and the fold
-    * queries' per-wave leaves) uses `localCheckpoint` — executor-local,
-    * non-replicated blocks. On `local[n]` (this engine's measured tier)
-    * executor loss is process death, so the risk is zero; on a real
-    * cluster, losing an executor makes a truncated-lineage RDD
-    * unrecoverable and FAILS THE JOB — the recovery contract is
-    * re-run-the-batch (every fold is a pure function of (wave, committed
-    * ledgers), so a re-run is safe and exactly-once under the streaming
-    * writers' marker protocol). Deployments that prefer in-job recovery
-    * over batch re-runs should set a Spark checkpoint dir and route cuts
-    * through `Dataset.checkpoint()` (the convention
-    * [[Dedup.connectedComponents]] and [[SemanticDedup.fromIndex]]
-    * already follow via `getCheckpointDir.isDefined`).
+    * family is a [[Cuts.leaf]]. Without a checkpoint dir that is a
+    * `localCheckpoint` — executor-local, non-replicated blocks. On
+    * `local[n]` (this engine's measured tier) executor loss is process
+    * death, so the risk is zero; on a real cluster, losing an executor
+    * makes a truncated-lineage RDD unrecoverable and FAILS THE JOB — the
+    * recovery contract is re-run-the-batch (every fold is a pure function
+    * of (wave, committed ledgers), so a re-run is safe and exactly-once
+    * under the streaming writers' marker protocol). With a Spark
+    * checkpoint dir set every leaf is a reliable `checkpoint()` instead.
     *
     * The edge plan is the fold's ONE fat plan (band probe + verify over
     * the ledgers). Materialize it, then fetch the wave-sized edge list as
@@ -493,8 +490,7 @@ object IncrementalClusters {
     * over.
     */
   def foldEdgeFrame(sk: DataFrame, edges: DataFrame,
-      labels: DataFrame, merges: DataFrame,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch): (DataFrame, DataFrame) = {
+      labels: DataFrame, merges: DataFrame): (DataFrame, DataFrame) = {
     val spark = sk.sparkSession
     // cut the edge frame to a leaf BEFORE the fold's driver round trips:
     // the gate count, the packed collect, and (driver path) nothing else
@@ -502,24 +498,24 @@ object IncrementalClusters {
     // re-ANALYZED it (measured at sf0.1: 0.3-0.4 s of driver gap per
     // count across q108/q110's waves; q110's whole wall was 114 tiny
     // stages + 3.6 s of such gaps over 6.7 s total executor time).
-    // Storage class is unchanged — the caller's scope() cache put the
-    // materialized edges in MEMORY_AND_DISK already; a localCheckpoint
-    // leaf is the same bytes minus the re-analysis. The distributed
+    // Storage class is unchanged — the caller's cut put the
+    // materialized edges in MEMORY_AND_DISK already; a leaf is the same
+    // bytes minus the re-analysis. The distributed
     // path gets the leaf too (its five consumers then share one
     // materialization).
-    val e = edges.localCheckpoint()
+    val e = Cuts.leaf(edges)
     val nPairs = e.count()
     if (nPairs > driverMaxPairs(spark)) {
-      val out = foldWaveDistributed(spark, sk, e, labels, merges, scope)
-      // the returned deltas were localCheckpointed eagerly inside
-      // foldWaveDistributed, so nothing re-evaluates the edge leaf —
-      // release its blocks now instead of waiting on ContextCleaner GC
-      graft.core.Leaves.release(e)
+      val out = foldWaveDistributed(spark, sk, e, labels, merges)
+      // the returned deltas were cut eagerly inside foldWaveDistributed,
+      // so nothing re-evaluates the edge leaf — release it now instead
+      // of at scope close
+      Cuts.release(e)
       return out
     }
     val blocks = packedPairs(e, "bid", "mid")
     // the packed collect was the leaf's last consumer on this path
-    graft.core.Leaves.release(e)
+    Cuts.release(e)
     // distinct endpoints
     val seenEp = scala.collection.mutable.LongMap.empty[Boolean]
     val eps = scala.collection.mutable.ArrayBuilder.make[Long]
@@ -630,15 +626,15 @@ object IncrementalClusters {
     * semantics, graph closed by [[Dedup.connectedComponents]] (delta
     * pointer-jumping with its own deployment-tunable driver gate). */
   private def foldWaveDistributed(spark: org.apache.spark.sql.SparkSession,
-      sk: DataFrame, edges: DataFrame, labels: DataFrame, merges: DataFrame,
-      scope: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      sk: DataFrame, edges: DataFrame, labels: DataFrame,
+      merges: DataFrame): (DataFrame, DataFrame) = {
     val eps = edges.select(col("bid").as("id"))
       .unionByName(edges.select(col("mid").as("id")))
       .distinct()
     val stored = eps.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("lbl"))
       .groupBy("id").agg(min(col("lbl")).as("lbl"))
-    val nodeOf = scope(resolveThrough(stored, merges, scope)
+    val nodeOf = Cuts.persist(resolveThrough(stored, merges, Cuts.persist)
       .select(col("id"), col("lbl").as("node")))
     val g = edges
       .join(nodeOf.select(col("id").as("bid"), col("node").as("na")), Seq("bid"))
@@ -663,6 +659,6 @@ object IncrementalClusters {
     // ledger unions re-nest the fat plan per wave. The checkpoint also
     // means a writer's two sink actions (labels, merges) share one
     // materialization instead of re-running the edge plan each.
-    (labelRows.localCheckpoint(), mergeRows.localCheckpoint())
+    (Cuts.leaf(labelRows), Cuts.leaf(mergeRows))
   }
 }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cuts
 import graft.functions.FloatVecDot
 import graft.similarity.{Ann, VectorFunctions}
 
@@ -66,12 +67,11 @@ object SemanticDedup {
     // whole O(n·√n) assignment-kernel pipeline: measured at the 100× tier
     // the un-materialized form ran ~80 stages / 2,567 tasks with the same
     // ~140 MB assignment exchange executed once PER consumer. One eager
-    // truncation (same checkpoint discipline as
-    // [[Dedup.connectedComponents]]) computes the kernel once and every
+    // [[Cuts.leaf]] (as in [[Dedup.connectedComponents]]) computes the
+    // kernel once and every
     // consumer starts from stored blocks — the standard shape for
     // iterative/multi-consumer frames, and strictly cheaper than k
     // kernel replays at any tier.
-    val spark = idx.assigned.sparkSession
     val membersPlan = idx.assigned
       .join(broadcast(idx.centroids), Seq("cell"))
       .select(col("nid"), col("cell"), col("ce"), col("cn2"),
@@ -79,8 +79,7 @@ object SemanticDedup {
           FloatVecDot.dot(col("ce"), col("cvec")), col("cn2"), col("cvn2"))
           .as("centroid_sim"))
     val members = org.apache.spark.sql.GraftShim.resetStats(
-      if (spark.sparkContext.getCheckpointDir.isDefined) membersPlan.checkpoint()
-      else membersPlan.localCheckpoint())
+      Cuts.leaf(membersPlan))
 
     val edges = dupEdges(members, threshold)
 
@@ -223,8 +222,7 @@ object SemanticDedup {
     * under duplicate edges).
     */
   private[graft] def semanticWaveDelta(asg: DataFrame, corpusReps: DataFrame,
-      corpusFps: DataFrame, threshold: Double,
-      scope: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      corpusFps: DataFrame, threshold: Double): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1,
       s"semantic-dup cosine threshold must lie in (0, 1], got $threshold")
     val nz = asg.filter(col("cn2") > 0)
@@ -235,8 +233,8 @@ object SemanticDedup {
       .select(col("cefp"), col("g.nid").as("wrep"), col("g.cell").as("cell"),
         col("g.ce").as("ce"), col("g.cn2").as("cn2"))
     // wave-sized probe of the cefp-bucketed fps ledger: ledger side ships
-    // nothing at rest; scoped because anchors + newReps both consume it
-    val probed = scope(groups
+    // nothing at rest; persisted because anchors + newReps both consume it
+    val probed = Cuts.persist(groups
       .join(corpusFps.select(col("cefp"), col("rep").as("crep")),
         Seq("cefp"), "left"))
     val anchors = probed
@@ -285,13 +283,12 @@ object SemanticDedup {
     * (several subtrees consume it). */
   def foldWaveSemantic(asg: DataFrame, corpusReps: DataFrame,
       corpusFps: DataFrame, labels: DataFrame, merges: DataFrame,
-      threshold: Double,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch)
+      threshold: Double)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (edges, newReps) =
-      semanticWaveDelta(asg, corpusReps, corpusFps, threshold, scope)
+      semanticWaveDelta(asg, corpusReps, corpusFps, threshold)
     val (labelRows, mergeRows) = IncrementalClusters.foldEdgeFrame(
-      asg.select(col("nid").as("id")), edges, labels, merges, scope)
+      asg.select(col("nid").as("id")), edges, labels, merges)
     // Cut the rep delta to a LEAF before projecting the two ledger
     // deltas from it: a caller folds rep/fp rows back into the ledgers
     // the NEXT wave's probe joins against, so un-cut deltas nest every
@@ -301,9 +298,8 @@ object SemanticDedup {
     // Catalyst re-analysis). The checkpoint is wave-sized, reads the
     // already-scoped probe cache (the edge fold just materialized it),
     // and matches the fold contract: every returned frame leaf-shaped.
-    val repDelta = newReps
-      .select(col("cefp"), col("rep"), col("cell"), col("ce"), col("cn2"))
-      .localCheckpoint()
+    val repDelta = Cuts.leaf(newReps
+      .select(col("cefp"), col("rep"), col("cell"), col("ce"), col("cn2")))
     (labelRows, mergeRows,
       asg.select(col("nid").as("id"), col("cell"), col("centroid_sim")),
       repDelta.select(col("cell"), col("rep"), col("ce"), col("cn2")),
@@ -403,7 +399,7 @@ object SemanticDedup {
     */
   def semanticAdmit(batch: DataFrame, corpus: DataFrame, threshold: Double,
       centroids: DataFrame,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch): DataFrame =
+      scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
     admitVsReps(batch,
       repsOfAsg(Ann.indexWithCentroids(corpus, centroids).assigned),
       threshold, centroids, scope)
@@ -427,7 +423,7 @@ object SemanticDedup {
     * (that method delegates here). */
   private[graft] def admitVsReps(batch: DataFrame, corpusReps: DataFrame,
       threshold: Double, centroids: DataFrame,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch): DataFrame = {
+      scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"semantic-dup cosine threshold must lie in (0, 1], got $threshold")
     val ba = scope(Ann.indexWithCentroids(batch, centroids).assigned)
@@ -586,7 +582,7 @@ object SemanticDedup {
   def semanticAdmitDecontam(batch: DataFrame, corpus: DataFrame,
       evalSet: DataFrame, dupThreshold: Double, decontamThreshold: Double,
       centroids: DataFrame,
-      scope: DataFrame => DataFrame = Dedup.cachedSketch): DataFrame = {
+      scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
     val contam = scope(
       semanticDecontaminate(batch, evalSet, decontamThreshold))
     val clean = batch.join(

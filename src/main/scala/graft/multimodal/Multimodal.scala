@@ -69,10 +69,11 @@ object Multimodal {
     * table degrades to local spill, never OOM. At cluster scale this is
     * the standard "materialize extracted features before pairwise
     * analysis" move — the cached rows are O(corpus), the branches that
-    * reread them are O(branches·corpus) decode work avoided.
+    * reread them are O(branches·corpus) decode work avoided. A
+    * [[graft.core.Cuts.persist]], so the caller's scope releases it.
     */
   private def cachedFeature(build: => DataFrame): DataFrame =
-    graft.core.TransientCache.persist(build)
+    graft.core.Cuts.persist(build)
 
   case class MediaRow(doc_id: Long, kind: String, bytes: Array[Byte],
       width: Int, height: Int)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{Cuts, QueryDef, QueryModule, Tables}
 import graft.pipeline.Curation
 
 /** Set-level curation operators over `documents`: benchmark
@@ -324,13 +324,11 @@ object CurationQueries extends QueryModule {
       (s, dir) => {
         import graft.dedup.Dedup
         import graft.text.TextFunctions
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
         // one parquet scan for all four waves (each wave filters the
         // cached projection, not the source); its count doubles as a
         // safe over-bound for every wave's broadcast gate — one job
         // replaces four per-wave sk.count() gate jobs
-        val docs = cache(Tables.documents(s, dir).select("doc_id", "text"))
+        val docs = Cuts.persist(Tables.documents(s, dir).select("doc_id", "text"))
         val nDocs = docs.count()
         val none = docs.filter(lit(false))
         var fpLedger = none.select(
@@ -342,10 +340,10 @@ object CurationQueries extends QueryModule {
         var out: org.apache.spark.sql.DataFrame = null
         (0 until 4).foreach { w =>
           val wave = docs.filter(pmod(col("doc_id"), lit(4)) === w)
-          val scored = cache(wave.select(col("doc_id"), col("text"),
+          val scored = Cuts.persist(wave.select(col("doc_id"), col("text"),
             TextFunctions.qualityScore(col("text")).as("quality")))
           val qp = scored.filter(col("quality") >= 0.7)
-          val exactNew = cache(qp
+          val exactNew = Cuts.persist(qp
             .select(col("doc_id"), col("text"),
               TextFunctions.fingerprint(col("text")).as("fp"))
             .join(fpLedger, Seq("fp"), "left_anti")
@@ -359,15 +357,15 @@ object CurationQueries extends QueryModule {
           // sit on BlockInfoManager locks while one computes (measured
           // at sf0.1: 28 s/wave of blocked executorRunTime vs 20 s CPU,
           // and the fused-checkpoint wall drops ~1 s/wave with the leaf)
-          val sk = Dedup.MinHashLsh.sigsFor(
-            exactNew, "text", "doc_id", portable = true).localCheckpoint()
+          val sk = Cuts.leaf(Dedup.MinHashLsh.sigsFor(
+            exactNew, "text", "doc_id", portable = true))
           val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-            sk, bands, sigs, threshold = 0.35, cache,
+            sk, bands, sigs, threshold = 0.35,
             knownRows = Some(nDocs))
           // ONE per-wave lineage cut (q108's discipline, fused): the
           // wave's ENTIRE product — verdict columns + the fp ledger
           // delta + the admitted-survivor sigs — rides a single
-          // localCheckpoint; the three ledger deltas AND the wave's
+          // Cuts.leaf; the three ledger deltas AND the wave's
           // output rows are then leaf PROJECTIONS of it. The previous
           // shape cut the fp delta and the admitted sketch as two
           // separate eager actions and left `out` uncut, so every wave
@@ -382,7 +380,7 @@ object CurationQueries extends QueryModule {
           // checkpoints: + the wave's quality-reject rows (small, and
           // wave-sized either way); `sig` is masked to admitted rows so
           // the leaf never retains a rejected doc's 256 B signature.
-          val cpW = scored.select(col("doc_id"), col("quality"),
+          val cpW = Cuts.leaf(scored.select(col("doc_id"), col("quality"),
               (col("quality") >= 0.7).as("q_pass"))
             .join(exactNew.select(col("doc_id"), col("fp"),
               lit(true).as("en")), Seq("doc_id"), "left")
@@ -395,8 +393,7 @@ object CurationQueries extends QueryModule {
               coalesce(col("en"), lit(false)).as("exact_new"),
               coalesce(col("adm"), lit(false)).as("admitted"),
               col("first_match"), col("fp"),
-              when(coalesce(col("adm"), lit(false)), col("sig")).as("sig"))
-            .localCheckpoint()
+              when(coalesce(col("adm"), lit(false)), col("sig")).as("sig")))
           val waveOut = cpW.select(col("doc_id"), col("quality"),
             col("q_pass"), col("exact_new"), col("admitted"),
             col("first_match"))
@@ -435,12 +432,10 @@ object CurationQueries extends QueryModule {
       (s, dir) => {
         import graft.dedup.Dedup
         import graft.text.TextFunctions
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
-        val all = cache(Tables.documents(s, dir).select("doc_id", "text"))
+        val all = Cuts.persist(Tables.documents(s, dir).select("doc_id", "text"))
         val docs = all.filter(pmod(col("doc_id"), lit(97)) =!= 0)
         val bench = all.filter(pmod(col("doc_id"), lit(97)) === 0)
-        val benchGrams = cache(Curation.benchGramSet(bench, "text", "doc_id"))
+        val benchGrams = Cuts.persist(Curation.benchGramSet(bench, "text", "doc_id"))
         val nDocs = all.count()
         // contamination is WAVE-INDEPENDENT (fixed gram set, per-doc
         // verdict, no ledger) — the batch fold hoists it OUT of the
@@ -448,7 +443,7 @@ object CurationQueries extends QueryModule {
         // whose HIT SET (docs sharing ≥1 gram — small by the operator's
         // purpose) broadcasts back onto the scored corpus; the flag
         // columns are then row-local and each wave just FILTERS the
-        // flagged frame. The localCheckpoint is the same lineage
+        // flagged frame. The leaf is the same lineage
         // discipline as the fold's ledgers, for the same measured
         // reason: the gram/broadcast subtree would otherwise be
         // re-ANALYZED by every one of the fold's ~20 downstream actions
@@ -458,18 +453,17 @@ object CurationQueries extends QueryModule {
         // pass. The STREAMING writer necessarily grams per wave — it
         // only ever sees the wave — which is the production shape
         // anyway: waves are small and the gram pass is map-side.
-        val scoredAll = cache(docs.select(col("doc_id"), col("text"),
+        val scoredAll = Cuts.persist(docs.select(col("doc_id"), col("text"),
           TextFunctions.qualityScore(col("text")).as("quality")))
         val hits = Curation.contaminationHits(
           scoredAll.filter(col("quality") >= 0.7).select("doc_id", "text"),
           benchGrams, "text", "doc_id")
-        val scoredFlagged = scoredAll
+        val scoredFlagged = Cuts.leaf(scoredAll
           .join(broadcast(hits), Seq("doc_id"), "left")
           .select(col("doc_id"), col("text"), col("quality"),
             when(col("quality") >= 0.7, coalesce(col("n_shared"), lit(0L)))
               .as("n_shared_grams"),
-            (col("quality") >= 0.7 && col("n_shared").isNull).as("clean"))
-          .localCheckpoint()
+            (col("quality") >= 0.7 && col("n_shared").isNull).as("clean")))
         val none = all.filter(lit(false))
         var fpLedger = none.select(
           TextFunctions.fingerprint(col("text")).as("fp"))
@@ -481,7 +475,7 @@ object CurationQueries extends QueryModule {
         (0 until 4).foreach { w =>
           val scored = scoredFlagged.filter(pmod(col("doc_id"), lit(4)) === w)
           val cleanDocs = scored.filter(col("clean"))
-          val exactNew = cache(cleanDocs
+          val exactNew = Cuts.persist(cleanDocs
             .select(col("doc_id"), col("text"),
               TextFunctions.fingerprint(col("text")).as("fp"))
             .join(fpLedger, Seq("fp"), "left_anti")
@@ -495,16 +489,16 @@ object CurationQueries extends QueryModule {
           // sit on BlockInfoManager locks while one computes (measured
           // at sf0.1: 28 s/wave of blocked executorRunTime vs 20 s CPU,
           // and the fused-checkpoint wall drops ~1 s/wave with the leaf)
-          val sk = Dedup.MinHashLsh.sigsFor(
-            exactNew, "text", "doc_id", portable = true).localCheckpoint()
+          val sk = Cuts.leaf(Dedup.MinHashLsh.sigsFor(
+            exactNew, "text", "doc_id", portable = true))
           val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-            sk, bands, sigs, threshold = 0.35, cache,
+            sk, bands, sigs, threshold = 0.35,
             knownRows = Some(nDocs))
           // same fused per-wave lineage cut as q116 (see its in-fold
           // comment): verdict columns + fp delta + admitted sigs ride
-          // ONE localCheckpoint; ledgers and the output union are leaf
+          // ONE Cuts.leaf; ledgers and the output union are leaf
           // projections of it
-          val cpW = scored.select(col("doc_id"), col("quality"),
+          val cpW = Cuts.leaf(scored.select(col("doc_id"), col("quality"),
               (col("quality") >= 0.7).as("q_pass"),
               col("n_shared_grams"), col("clean"))
             .join(exactNew.select(col("doc_id"), col("fp"),
@@ -519,8 +513,7 @@ object CurationQueries extends QueryModule {
               coalesce(col("en"), lit(false)).as("exact_new"),
               coalesce(col("adm"), lit(false)).as("admitted"),
               col("first_match"), col("fp"),
-              when(coalesce(col("adm"), lit(false)), col("sig")).as("sig"))
-            .localCheckpoint()
+              when(coalesce(col("adm"), lit(false)), col("sig")).as("sig")))
           val waveOut = cpW.select(col("doc_id"), col("quality"),
             col("q_pass"), col("n_shared_grams"), col("clean"),
             col("exact_new"), col("admitted"), col("first_match"))
@@ -550,7 +543,7 @@ object CurationQueries extends QueryModule {
     // histogram window.
     "q121_ks_drift_incremental" -> QueryDef(
       (s, dir) => {
-        val docs = graft.core.TransientCache.persist(
+        val docs = Cuts.persist(
           Tables.documents(s, dir).select("doc_id", "n_chars"))
         var out: org.apache.spark.sql.DataFrame = null
         (1 until 4).foreach { w =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{Cuts, QueryDef, QueryModule, Tables}
 import graft.dedup.Dedup
 
 /** Deduplication operator inventory over `documents`/`embeddings`.
@@ -416,19 +416,17 @@ object DedupQueries extends QueryModule {
     "q118_ivf_retrain_remap" -> QueryDef(
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
-        val cent0 = cache(graft.similarity.Ann.strideCentroids(emb))
+        val cent0 = Cuts.persist(graft.similarity.Ann.strideCentroids(emb))
         var reps = s.range(0).select(col("id").cast("int").as("cell"),
           col("id").as("rep"), lit(Array.empty[Float]).as("ce"),
           lit(0.0).as("cn2"))
         var fps = s.range(0).select(col("id").as("cefp"), col("id").as("rep"))
         (0 until 4).foreach { w =>
-          val asg = cache(graft.dedup.SemanticDedup.assignWithSim(
+          val asg = Cuts.persist(graft.dedup.SemanticDedup.assignWithSim(
             emb.filter(pmod(col("vec_id"), lit(4)) === w), cent0))
           val (_, nr) = graft.dedup.SemanticDedup.semanticWaveDelta(
-            asg, reps, fps, threshold = 0.4, cache)
-          val nrc = cache(nr)
+            asg, reps, fps, threshold = 0.4)
+          val nrc = Cuts.persist(nr)
           reps = reps.unionByName(nrc.select("cell", "rep", "ce", "cn2"))
           fps = fps.unionByName(nrc.select("cefp", "rep"))
         }
@@ -439,7 +437,7 @@ object DedupQueries extends QueryModule {
         // of pure driver gaps on an 8.4 s wall (0.6-0.9 s per action).
         // Behind the leaf every retrain action analyzes one scan.
         val (_, remapped) = graft.dedup.SemanticDedup.retrainRemap(
-          reps.localCheckpoint(), refineIters = 0)
+          Cuts.leaf(reps), refineIters = 0)
         remapped.select(col("rep"), col("cell").cast("long").as("cell"))
           .orderBy("rep")
       },
@@ -459,13 +457,13 @@ object DedupQueries extends QueryModule {
         // from several AQE subtrees at once — concurrent stage
         // materialization re-computed the chains and blocked on
         // BlockInfoManager locks (see q113's identical fix). Leaves
-        // compute each mid-frame once; TransientCache releases them
-        // between queries exactly like the persists they replace.
+        // compute each mid-frame once; the query's Cuts scope releases
+        // them exactly like the persists they replace.
         Dedup.MinHashLsh.nearDupIncrementalApprox(
             docs.filter(pmod(col("doc_id"), lit(2)) === 1),
             docs.filter(pmod(col("doc_id"), lit(2)) === 0),
             "text", "doc_id", threshold = 0.35, portable = true,
-            scope = graft.core.TransientCache.leaf)
+            scope = Cuts.leaf)
           .orderBy("doc_id")
       },
       Some(incrementalNearDupApproxOracleSql)),
@@ -518,23 +516,21 @@ object DedupQueries extends QueryModule {
         var labels = s.range(0).select(col("id"), col("id").as("label"))
         var merges = s.range(0).select(col("id").as("old_label"),
           col("id").as("new_label"))
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
         // ALL FOUR ledgers stay PLAIN UNIONS: band/sig state is cheap
-        // projections over TransientCache entries, and the fold's
+        // projections over the query's Cuts.persist cuts, and the fold's
         // label/merge returns are LEAF-SHAPED by contract (parallelized
-        // driver arrays under the wave gate, localCheckpoint leaves past
+        // driver arrays under the wave gate, Cuts.leaf cuts past
         // it — see foldEdgeFrame's scaladoc), so the former per-wave
-        // cumulative union+localCheckpoint re-copied the whole ledger
+        // cumulative union+leaf re-copied the whole ledger
         // every wave and paid an eager action+job each, for lineage that
         // was already cut (measured at sf0.1: two actions/wave of pure
         // orchestration; the union of ≤4 leaves analyzes linearly).
         (0 until 4).foreach { w =>
-          val sk = cache(Dedup.MinHashLsh.sigsFor(
+          val sk = Cuts.persist(Dedup.MinHashLsh.sigsFor(
             docs.filter(pmod(col("doc_id"), lit(4)) === w),
             "text", "doc_id", portable = true))
           val (lr, mr) = graft.dedup.IncrementalClusters.foldWave(
-            sk, bands, sigs, labels, merges, threshold = 0.35, cache)
+            sk, bands, sigs, labels, merges, threshold = 0.35)
           labels = labels.unionByName(lr)
           merges = merges.unionByName(mr)
           bands = bands.unionByName(Dedup.MinHashLsh.bandRowsOfSigs(sk))
@@ -579,8 +575,6 @@ object DedupQueries extends QueryModule {
         var labels = s.range(0).select(col("id"), col("id").as("label"))
         var merges = s.range(0).select(col("id").as("old_label"),
           col("id").as("new_label"))
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
         // ledger lineage: plain unions throughout — the fold's returns
         // are leaf-shaped by contract (see q108's in-fold comment and
         // foldEdgeFrame's scaladoc)
@@ -588,14 +582,14 @@ object DedupQueries extends QueryModule {
           val wave = docs.filter(pmod(col("doc_id"), lit(4)) === w)
           val toks = graft.text.TextFunctions.tokens(col("text"))
           // one-pass sig+sset sketch, the nearDupIncrementalLedger shape
-          val sk = cache(wave
+          val sk = Cuts.persist(wave
             .select(col("doc_id").as("id"),
               graft.functions.Sketches.minhashSigSetPortable(toks).as("ms"))
             .select(col("id"), col("ms.sig").as("sig"),
               col("ms.sset").as("sset"))
             .withColumn("sz", size(col("sset"))))
           val (lr, mr) = graft.dedup.IncrementalClusters.foldWaveExact(
-            sk, wave, bands, sets, labels, merges, threshold = 0.35, cache)
+            sk, wave, bands, sets, labels, merges, threshold = 0.35)
           labels = labels.unionByName(lr)
           merges = merges.unionByName(mr)
           bands = bands.unionByName(
@@ -699,7 +693,7 @@ object DedupQueries extends QueryModule {
             docs.filter(pmod(col("doc_id"), lit(2)) === 1),
             docs.filter(pmod(col("doc_id"), lit(2)) === 0),
             "text", "doc_id", threshold = 0.35, portable = true,
-            scope = graft.core.TransientCache.leaf)
+            scope = Cuts.leaf)
           .orderBy("doc_id")
       },
       Some(incrementalNearDupOracleSql)),
@@ -869,12 +863,10 @@ object DedupQueries extends QueryModule {
     "q111_semantic_dedup_incr" -> QueryDef(
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
         // the frozen coordinate system, CACHED: every per-wave assignment
         // collects it (the argmax kernel embeds it as a literal), and the
         // uncached stride draw re-runs its count + window sort per wave
-        val cent = cache(graft.similarity.Ann.strideCentroids(emb))
+        val cent = Cuts.persist(graft.similarity.Ann.strideCentroids(emb))
         var reps = s.range(0).select(col("id").cast("int").as("cell"),
           col("id").as("rep"), lit(Array.empty[Float]).as("ce"),
           lit(0.0).as("cn2"))
@@ -890,11 +882,11 @@ object DedupQueries extends QueryModule {
         // foldEdgeFrame's scaladoc); reps/fps/members stay plain unions
         // of projections over per-wave cached frames as before
         (0 until 4).foreach { w =>
-          val asg = cache(graft.dedup.SemanticDedup.assignWithSim(
+          val asg = Cuts.persist(graft.dedup.SemanticDedup.assignWithSim(
             emb.filter(pmod(col("vec_id"), lit(4)) === w), cent))
           val (lr, mr, mem, nr, nf) =
             graft.dedup.SemanticDedup.foldWaveSemantic(
-              asg, reps, fps, labels, merges, threshold = 0.4, cache)
+              asg, reps, fps, labels, merges, threshold = 0.4)
           labels = labels.unionByName(lr)
           merges = merges.unionByName(mr)
           members = members.unionByName(mem)
@@ -922,7 +914,7 @@ object DedupQueries extends QueryModule {
             emb.filter(pmod(col("vec_id"), lit(2)) === 1),
             emb.filter(pmod(col("vec_id"), lit(2)) === 0),
             threshold = 0.4, graft.similarity.Ann.strideCentroids(emb),
-            scope = graft.core.TransientCache.leaf)
+            scope = Cuts.leaf)
           .orderBy("vec_id")
       },
       Some(semanticAdmitOracleSql)),
@@ -1136,7 +1128,7 @@ object DedupQueries extends QueryModule {
             emb.filter(pmod(col("vec_id"), lit(97)) === 0),
             dupThreshold = 0.4, decontamThreshold = 0.4,
             graft.similarity.Ann.strideCentroids(emb),
-            scope = graft.core.TransientCache.leaf) // as q112
+            scope = Cuts.leaf) // as q112
           .orderBy("vec_id")
       },
       Some(s"""WITH $semanticMemCtes, contam AS MATERIALIZED (

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{Cuts, QueryDef, QueryModule, Tables}
 import graft.multimodal.Multimodal
 
 /** Multimodal-column inventory — every query ORACLE-HASH-GATED, codecs
@@ -579,17 +579,15 @@ object MultimodalQueries extends QueryModule {
         var labels = s.range(0).select(col("id"), col("id").as("label"))
         var merges = s.range(0).select(col("id").as("old_label"),
           col("id").as("new_label"))
-        val cache: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
         // ledger lineage: plain unions — the fold's returns are
         // leaf-shaped by contract (see foldEdgeFrame's scaladoc)
         (0 until 4).foreach { w =>
-          val wave = cache(hashes.filter(pmod(col("doc_id"), lit(4)) === w)
+          val wave = Cuts.persist(hashes.filter(pmod(col("doc_id"), lit(4)) === w)
             .select(col("doc_id").as("id"), col("dhash").as("fp")))
-          val edges = cache(Dedup.fingerprintVerifiedPairs(
-            wave, "id", "fp", chunks, scope = cache))
+          val edges = Cuts.persist(Dedup.fingerprintVerifiedPairs(
+            wave, "id", "fp", chunks))
           val (lr, mr) = graft.dedup.IncrementalClusters.foldEdgeFrame(
-            wave, edges, labels, merges, cache)
+            wave, edges, labels, merges)
           labels = labels.unionByName(lr)
           merges = merges.unionByName(mr)
           chunks = chunks.unionByName(

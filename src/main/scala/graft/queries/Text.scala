@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, QueryModule, Tables}
+import graft.core.{Cuts, QueryDef, QueryModule, Tables}
 import graft.text.TextFunctions._
 
 /** Text-analysis operator inventory over the `documents` fixture: token
@@ -317,7 +317,7 @@ object Text extends QueryModule {
         // 106.7 s executorRunTime, stages of 10-19 s run for wave-sized
         // reads, 6.66 s min-of-3 wall). Now each wave's docstats —
         // 16 B/row, the slim ledger the operator persists in production —
-        // is cut to ONE eager wave-sized localCheckpoint; the totals
+        // is cut to ONE eager wave-sized leaf; the totals
         // delta and the dl rollup are leaf projections of it (zero
         // re-tokenize), and the only remaining tokenize passes are the
         // 4 eager docstats builds plus the postings branch's
@@ -342,7 +342,7 @@ object Text extends QueryModule {
         // per-wave totalsDelta calls (all waves non-empty here; an empty
         // wave would drop its (w,0,0) row, which the downstream SUM
         // treats identically).
-        val statsLeaf = stats.localCheckpoint()
+        val statsLeaf = Cuts.leaf(stats)
         val totals = statsLeaf
           .groupBy(pmod(col("doc_id"), lit(4)).cast("long").as("batch_id"))
           .agg(count(lit(1)).as("n_docs"),
@@ -358,7 +358,7 @@ object Text extends QueryModule {
         quantizeBm25(graft.text.IncrementalBm25.scoreFromIndex(
           postings, stats, Seq("spark", "merge", "stream"),
           totalsLedger = Some(totals),
-          scope = df => df.localCheckpoint()))
+          scope = Cuts.leaf))
       },
       Some(bm25OracleSql)),
   ) ++ queries2

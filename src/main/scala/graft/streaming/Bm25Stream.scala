@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
 
+import graft.core.Cuts
+
 /** Streaming BM25 index maintenance: a `foreachBatch` pipeline that folds
   * each micro-batch of documents into the persisted inverted-index ledgers
   * of [[graft.text.IncrementalBm25]], exactly-once, so lexical retrieval
@@ -94,8 +96,8 @@ object Bm25Stream {
         compactLedgers(_, postingsDir, statsDir, totalsDir)) { wave =>
       val (p, st) =
         graft.text.IncrementalBm25.indexWave(wave.batch, textCol, idCol)
-      val postings = wave.persist(p)
-      val stats = wave.persist(st)
+      val postings = Cuts.persist(p)
+      val stats = Cuts.persist(st)
       wave.commit(postingsDir, postings)
       wave.commit(statsDir, stats)
       wave.commit(totalsDir,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType,
   StructField, StructType}
 
+import graft.core.Cuts
 import graft.dedup.Dedup
 
 /** END-TO-END streaming curation: quality gate → exact dedup against the
@@ -132,7 +133,7 @@ object CurationStream {
       // quality + fingerprint in one pass over the batch source; every
       // downstream frame reads this cache (lineage = batch source only,
       // safe from the ledger appends' recacheByPath invalidation)
-      val scored = wave.persist(wave.batch.select(
+      val scored = Cuts.persist(wave.batch.select(
         col(idCol).as("id"), col(textCol).as("text"),
         graft.text.TextFunctions.qualityScore(col(textCol)).as("quality"),
         graft.text.TextFunctions.fingerprint(col(textCol)).as("fp")))
@@ -143,7 +144,7 @@ object CurationStream {
       // at sf0.1 with CPU flat. The gram set is static at-rest state,
       // never appended by this pipeline.
       val flags = benchGrams.map { case (dir, n) =>
-        wave.leaf(graft.pipeline.Curation.contaminationFlags(
+        Cuts.leaf(graft.pipeline.Curation.contaminationFlags(
           qp.select("id", "text"), wave.spark.read.parquet(dir), "text",
           "id", n))
       }
@@ -155,7 +156,7 @@ object CurationStream {
       // band/sig commits read it again; a lazy persist would be raced by
       // the verdict's own consumers (WaveCommit's SCOPE)
       val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = wave.leaf(cleanDocs
+      val sk = Cuts.leaf(cleanDocs
         .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
@@ -170,7 +171,7 @@ object CurationStream {
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, NearDupStream.ApproxBandsSchema),
         wave.ledger(sigsDir, NearDupStream.SigsSchema), simThreshold,
-        wave.leaf, hotBandCap = 4096)
+        Cuts.leaf, hotBandCap = 4096)
       val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
         (col("quality") >= qualityThreshold).as("q_pass"))
       val verdict = flags.fold(scoredVerdict)(f =>

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.core.Cuts
 import graft.dedup.Dedup
 
 /** Streaming exact dedup: a `foreachBatch` pipeline that admits each
@@ -91,7 +92,7 @@ object DedupStream {
     WaveCommit.writer(compactEvery, compactLedger(_, ledgerDir)) { wave =>
       // both commits action the same plan; the persist keeps the dedup +
       // anti-join from running twice
-      val survivors = wave.persist(Dedup.exactIncremental(
+      val survivors = Cuts.persist(Dedup.exactIncremental(
         wave.batch, textCol, idCol, wave.ledger(ledgerDir, FpSchema)))
       wave.commit(survivorsDir, survivors)
       wave.commit(ledgerDir, survivors.select("fp"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType,
   StructField, StructType}
 
+import graft.core.Cuts
 import graft.dedup.Dedup
 
 /** Streaming MULTIMODAL near-dup admission: the streaming form of
@@ -98,7 +99,7 @@ object MediaDedupStream {
     WaveCommit.writer(compactEvery, compactLedger(_, chunksDir)) { wave =>
       // one fingerprint leaf per batch: the verdict commit reads it from
       // two subtrees (admission, quarantine) and the ledger write again
-      val all = wave.leaf(
+      val all = Cuts.leaf(
         wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
       val fps = all.filter(col("fp").isNotNull)
       val quarantined = all.filter(col("fp").isNull)
@@ -111,7 +112,7 @@ object MediaDedupStream {
       // 16-bit chunk value and stay admitted — Dedup.fingerprintMatches)
       wave.commit(verdictDir, Dedup.fingerprintAdmit(fps, "id", "fp",
         wave.ledger(chunksDir, ChunksSchema), maxHamming,
-        scope = wave.leaf, hotChunkCap = 4096)
+        scope = Cuts.leaf, hotChunkCap = 4096)
         .unionByName(quarantined))
       val admitted = fps.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
@@ -138,15 +139,15 @@ object MediaDedupStream {
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
     WaveCommit.writer(compactEvery,
         compactClusterLedgers(_, labelsDir, mergesDir, chunksDir)) { wave =>
-      val fps = wave.persist(
+      val fps = Cuts.persist(
         wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))
-      val edges = wave.persist(Dedup.fingerprintVerifiedPairs(
+      val edges = Cuts.persist(Dedup.fingerprintVerifiedPairs(
         fps, "id", "fp", wave.ledger(chunksDir, ChunksSchema), maxHamming,
-        scope = wave.persist, hotChunkCap = 4096))
+        hotChunkCap = 4096))
       val (labelRows, mergeRows) =
         graft.dedup.IncrementalClusters.foldEdgeFrame(
           fps, edges, wave.ledger(labelsDir, NearDupStream.LabelsSchema),
-          wave.ledger(mergesDir, NearDupStream.MergesSchema), wave.persist)
+          wave.ledger(mergesDir, NearDupStream.MergesSchema))
       wave.commit(labelsDir, labelRows)
       wave.commit(mergesDir, mergeRows)
       wave.commit(chunksDir, Dedup.fingerprintChunkRows(fps, "id", "fp"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StructField, StructType}
 
+import graft.core.Cuts
 import graft.dedup.Dedup
 
 /** Streaming near-dup ADMISSION: the streaming form of
@@ -264,7 +265,7 @@ object NearDupStream {
       // runs once per wave. A leaf, not a persist: the verdict commit
       // reads it from several subtrees (WaveCommit's SCOPE).
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = wave.leaf(wave.batch
+      val sk = Cuts.leaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
@@ -276,7 +277,7 @@ object NearDupStream {
       wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitSketched(
         sk, wave.batch,
         wave.ledger(bandsDir, BandsSchema), wave.ledger(setsDir, SetsSchema),
-        threshold, wave.leaf, hotBandCap = 4096))
+        threshold, Cuts.leaf, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commit(bandsDir,
@@ -314,14 +315,14 @@ object NearDupStream {
       val toks = graft.text.TextFunctions.tokens(col(textCol))
       // ONE (id, sig) leaf per wave: admission (its verify-broadcast gate
       // counts it too) and both ledger writes read its blocks
-      val sk = wave.leaf(wave.batch
+      val sk = Cuts.leaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema),
-        threshold, wave.leaf, hotBandCap = 4096))
+        threshold, Cuts.leaf, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
@@ -362,7 +363,7 @@ object NearDupStream {
     WaveCommit.writer(compactEvery, compactClusterLedgers(_, labelsDir,
         mergesDir, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = wave.persist(wave.batch
+      val sk = Cuts.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
@@ -373,7 +374,7 @@ object NearDupStream {
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema), wave.ledger(labelsDir, LabelsSchema),
         wave.ledger(mergesDir, MergesSchema),
-        threshold, wave.persist, knownRows = Some(waveRows),
+        threshold, knownRows = Some(waveRows),
         hotBandCap = 4096)
       wave.commit(labelsDir, labelRows)
       wave.commit(mergesDir, mergeRows)
@@ -401,7 +402,7 @@ object NearDupStream {
     WaveCommit.writer(compactEvery, compactClusterLedgersExact(_, labelsDir,
         mergesDir, bandsDir, setsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      val sk = wave.persist(wave.batch
+      val sk = Cuts.persist(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashSigSetPortable(toks)
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
@@ -411,8 +412,7 @@ object NearDupStream {
         graft.dedup.IncrementalClusters.foldWaveExact(
           sk, wave.batch, wave.ledger(bandsDir, BandsSchema),
           wave.ledger(setsDir, SetsSchema), wave.ledger(labelsDir, LabelsSchema),
-          wave.ledger(mergesDir, MergesSchema), threshold, wave.persist,
-          hotBandCap = 4096)
+          wave.ledger(mergesDir, MergesSchema), threshold, hotBandCap = 4096)
       wave.commit(labelsDir, labelRows)
       wave.commit(mergesDir, mergeRows)
       wave.commit(bandsDir,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{avg, col, count, lit, max}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType,
   IntegerType, LongType, StructField, StructType}
 
+import graft.core.Cuts
 import graft.dedup.{IncrementalClusters, SemanticDedup}
 
 /** Streaming SEMANTIC duplicate clusters — the SemDeDup mirror of
@@ -97,7 +98,7 @@ object SemanticStream {
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
     WaveCommit.writer(compactEvery, compactSemanticLedgers(_, labelsDir,
         mergesDir, membersDir, repsDir, fpsDir)) { wave =>
-      val asg = wave.persist(SemanticDedup.assignWithSim(
+      val asg = Cuts.persist(SemanticDedup.assignWithSim(
         wave.batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
         centroids))
       // the fold is EAGER (edge counts + the wave-local CC run inside), so
@@ -110,8 +111,7 @@ object SemanticStream {
           wave.ledger(repsDir, RepsSchema), wave.ledger(fpsDir, FpsSchema),
           wave.ledger(labelsDir, NearDupStream.LabelsSchema),
           wave.ledger(mergesDir, NearDupStream.MergesSchema),
-          threshold, wave.persist)
-      wave.adopt(repRows) // the fold cuts the rep and fp deltas to one leaf
+          threshold)
       wave.commit(labelsDir, labelRows)
       wave.commit(mergesDir, mergeRows)
       wave.commit(membersDir, memberRows)
@@ -172,9 +172,9 @@ object SemanticStream {
       import org.apache.spark.sql.functions.{coalesce, when}
       // leaves: the verdict commit reads the batch and its contamination
       // flags from several subtrees each (WaveCommit's SCOPE)
-      val b = wave.leaf(wave.batch.select(col(idCol).as("vec_id"),
+      val b = Cuts.leaf(wave.batch.select(col(idCol).as("vec_id"),
         col(vecCol).as("embedding")))
-      val contam = wave.leaf(SemanticDedup.semanticDecontaminate(
+      val contam = Cuts.leaf(SemanticDedup.semanticDecontaminate(
         b, evalSet, decontamThreshold))
       val clean = b.join(
         contam.filter(col("contaminated")).select("vec_id"),
@@ -182,7 +182,7 @@ object SemanticStream {
       val admit = SemanticDedup.admitVsReps(clean,
           wave.ledger(repsDir, RepsSchema)
             .select(col("rep"), col("cell"), col("ce"), col("cn2")),
-          dupThreshold, centroids, wave.leaf)
+          dupThreshold, centroids, Cuts.leaf)
         .withColumnRenamed("admitted", "clean_admitted")
         .withColumnRenamed("first_match", "dup_match")
       wave.commit(verdictDir, contam
@@ -255,38 +255,41 @@ object SemanticStream {
     * [[SemanticDedup.retrainRemap]]'s contract on what retraining
     * touches. */
   def retrainAndRemap(spark: SparkSession, centroidsDir: String,
-      repsDir: String, refineIters: Int = 1, buckets: Int = 8): Long = {
-    val reps = ledgerReps(spark, repsDir).persist()
-    try {
-      val cent = graft.similarity.Ann.retrainCentroids(
-        reps.select(col("rep").as("vec_id"), col("ce").as("embedding")),
-        refineIters).select("cell", "cvec").persist()
-      // CRASH-HEAL BY CONTENT: a death between the version commit and the
-      // remap is re-run with the reps unchanged, so the deterministic
-      // retrain re-derives byte-identical centroids — detect that against
-      // the LAST COMMITTED table (√n rows, one tiny join) and reuse its
-      // version instead of minting N+2 with the same bytes. A genuine new
-      // cadence over drifted reps derives a different table and commits
-      // fresh. (Also makes a no-op cadence version-stable.)
-      val last = currentCentroids(spark, centroidsDir)
-      val healedVersion = last.filter { case (_, lt) =>
-        val n = cent.count()
-        lt.count() == n && lt.as("a").join(cent.as("b"),
-          col("a.cell") === col("b.cell") &&
-            col("a.cvec") === col("b.cvec")).count() == n
-      }.map(_._1)
-      val v = healedVersion.getOrElse(last.map(_._1 + 1).getOrElse(0L))
-      if (healedVersion.isEmpty)
-        IdempotentSink.writer(centroidsDir)(cent, v)
-      cent.unpersist()
+      repsDir: String, refineIters: Int = 1, buckets: Int = 8): Long =
+    Cuts.scoped {
+      val reps = Cuts.persist(ledgerReps(spark, repsDir))
+      // the centroid table's own scope closes before the remap compacts
+      val v = Cuts.scoped {
+        val cent = Cuts.persist(graft.similarity.Ann.retrainCentroids(
+          reps.select(col("rep").as("vec_id"), col("ce").as("embedding")),
+          refineIters).select("cell", "cvec"))
+        // CRASH-HEAL BY CONTENT: a death between the version commit and
+        // the remap is re-run with the reps unchanged, so the
+        // deterministic retrain re-derives byte-identical centroids —
+        // detect that against the LAST COMMITTED table (√n rows, one tiny
+        // join) and reuse its version instead of minting N+2 with the
+        // same bytes. A genuine new cadence over drifted reps derives a
+        // different table and commits fresh. (Also makes a no-op cadence
+        // version-stable.)
+        val last = currentCentroids(spark, centroidsDir)
+        val healedVersion = last.filter { case (_, lt) =>
+          val n = cent.count()
+          lt.count() == n && lt.as("a").join(cent.as("b"),
+            col("a.cell") === col("b.cell") &&
+              col("a.cvec") === col("b.cvec")).count() == n
+        }.map(_._1)
+        val v = healedVersion.getOrElse(last.map(_._1 + 1).getOrElse(0L))
+        if (healedVersion.isEmpty)
+          IdempotentSink.writer(centroidsDir)(cent, v)
+        v
+      }
       // remap against the COMMITTED table (not the in-memory derivation):
       // every replay of step 3 then remaps through the same bytes
       val committed = currentCentroids(spark, centroidsDir).get._2
       LedgerCompaction.compact(spark, repsDir, RepsSchema, Seq("cell"),
         buckets, SemanticDedup.remapRepsTo(_, committed))
       v
-    } finally reps.unpersist()
-  }
+    }
 
   /** The cheap drift monitor an operator runs on the maintenance cadence:
     * (cells, max occupancy, mean occupancy) of the reps ledger — ONE

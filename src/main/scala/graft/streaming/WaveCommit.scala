@@ -1,31 +1,28 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedDeque
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Leaves
+import graft.core.Cuts
 
 /** One streaming WAVE — the single definition of the exactly-once
   * protocol every `foreachBatch` writer in this package runs. A writer
   * body holds only its stage logic; the wave owns everything else:
   *
-  *  - SCOPE: [[persist]] is lazy, for frames the wave's SEQUENCED commits
-  *    consume, each reading the frame from one place of its plan: the
-  *    first commit fills the cache and the later ones read it. [[leaf]]
-  *    is an eager localCheckpoint cut, for frames ONE action consumes
-  *    from several subtrees — a lazy persist there is raced under AQE by
-  *    its own consumers, which start before the cache holds a block and
-  *    compute the chain concurrently — and for subtrees every commit
-  *    would otherwise re-analyze. A kernel's `scope` argument (Dedup /
-  *    IncrementalClusters / SemanticDedup) follows the same rule: `leaf`
-  *    when the kernel's output feeds a single commit (the admission
-  *    writers' verdict), `persist` when sequenced actions fold it (the
-  *    cluster writers' label/merge state). A verdict frame one commit
-  *    consumes is not scoped at all. Both kinds are released when the
-  *    body returns or throws, so an unbounded stream holds no wave's
-  *    blocks past its wave.
+  *  - SCOPE: the body runs inside one [[graft.core.Cuts.scoped]] owner,
+  *    so every cut the wave makes — its own and the ones its kernels
+  *    make, fold deltas included — is released when the body returns or
+  *    throws, and an unbounded stream holds no wave's blocks past its
+  *    wave. The body picks each cut by the Cuts rule: `Cuts.persist` for
+  *    frames the wave's SEQUENCED commits consume, each reading the frame
+  *    from one place of its plan; `Cuts.leaf` for frames ONE action
+  *    consumes from several subtrees and for subtrees every commit would
+  *    otherwise re-analyze. A kernel's `scope` argument (Dedup /
+  *    SemanticDedup) follows the same rule: `Cuts.leaf` when the kernel's
+  *    output feeds a single commit (the admission writers' verdict), the
+  *    default `Cuts.persist` when sequenced actions fold it (the cluster
+  *    writers' label/merge state). A verdict frame one commit consumes is
+  *    not cut at all.
   *  - COMMIT ORDER: [[commit]] writes through [[IdempotentSink]] in call
   *    order. Every writer commits its verdict (or the delta every later
   *    sink derives from) FIRST and its ledgers LAST, so a ledger never
@@ -56,31 +53,10 @@ import graft.core.Leaves
   */
 final class WaveCommit private (val batch: DataFrame, val batchId: Long) {
   val spark: SparkSession = batch.sparkSession
-  // release actions, newest first: a frame is released before the frames
-  // it was derived from, so no still-cached dependent is re-planned
-  private val releases = new ConcurrentLinkedDeque[() => Unit]
   private var commits = 0
   // each committed sink's schema, as written: the durable re-read needs
   // no inference job
   private val written = scala.collection.mutable.Map.empty[String, StructType]
-
-  /** Lazy persist released at wave end. */
-  def persist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    releases.push(() => p.unpersist())
-    p
-  }
-
-  /** Eager localCheckpoint cut released at wave end (through
-    * [[graft.core.Leaves.release]]). */
-  def leaf(df: DataFrame): DataFrame = adopt(df.localCheckpoint())
-
-  /** Release the checkpoint behind a frame a kernel cut (see
-    * [[graft.core.Leaves.release]]) at wave end, like [[leaf]]. */
-  def adopt(cut: DataFrame): DataFrame = {
-    releases.push(() => Leaves.release(cut))
-    cut
-  }
 
   /** The ledger at `dir`, read with `schema`, as committed before this
     * wave. */
@@ -100,8 +76,6 @@ final class WaveCommit private (val batch: DataFrame, val batchId: Long) {
     * schema its [[commit]] wrote. */
   def committed(dir: String): DataFrame =
     spark.read.schema(written(dir)).parquet(s"$dir/batch=$batchId")
-
-  private def release(): Unit = releases.forEach(_())
 }
 
 object WaveCommit {
@@ -111,8 +85,7 @@ object WaveCommit {
   def writer(compactEvery: Int = 0, compact: SparkSession => Unit = _ => ())(
       body: WaveCommit => Unit): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      val wave = new WaveCommit(batch, batchId)
-      try body(wave) finally wave.release()
+      Cuts.scoped(body(new WaveCommit(batch, batchId)))
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
         compact(batch.sparkSession)
     }

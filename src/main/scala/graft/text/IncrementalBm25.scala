@@ -44,16 +44,12 @@ object IncrementalBm25 {
     * functions of the batch (the property the streaming writer's
     * exactly-once argument needs). Tokenization is [[Retrieval.bm25]]'s
     * exactly (lowercased whitespace tokens). */
-  def indexWave(wave: DataFrame, textCol: String, idCol: String,
-      scope: DataFrame => DataFrame = identity): (DataFrame, DataFrame) = {
+  def indexWave(wave: DataFrame, textCol: String, idCol: String)
+      : (DataFrame, DataFrame) = {
     val toks = TextFunctions.tokens(lower(col(textCol)))
-    // `scope` shares ONE tokenize pass between the two outputs (postings
-    // explode+groupBy and docstats both consume `base`); the streaming
-    // writer persists its deltas directly instead, so it keeps the
-    // default identity
-    val base = scope(graft.core.Parallelism.ensure(
+    val base = graft.core.Parallelism.ensure(
         wave.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc_id"), toks.as("toks")))
+      .select(col(idCol).as("doc_id"), toks.as("toks"))
     val postings = base
       .select(col("doc_id"), explode(col("toks")).as("token"))
       .groupBy("token", "doc_id").agg(count(lit(1)).as("tf"))
@@ -87,7 +83,8 @@ object IncrementalBm25 {
       scope: DataFrame => DataFrame = identity): DataFrame = {
     require(terms.nonEmpty && terms == terms.distinct,
       s"query terms must be non-empty and distinct: $terms")
-    // `scope` wraps the two multiply-consumed frames: dl feeds the tf
+    // `scope` cuts the two multiply-consumed frames (identity: no cut;
+    // q113 passes [[graft.core.Cuts.leaf]]): dl feeds the tf
     // prune, the scoring join, and (absent a totals ledger) the totals
     // aggregate; tf feeds df and the scoring join — unscoped, the
     // postings/stats reads run once per consumer. Values identical.

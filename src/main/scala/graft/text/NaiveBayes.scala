@@ -47,7 +47,7 @@ object NaiveBayes {
     // itself, |V|·|C| rows — feeds the class-table collect AND the
     // pivoted scoring join; un-persisted it would re-run the training
     // tokenize+shuffle once per action
-    val counts = graft.core.TransientCache.persist(
+    val counts = graft.core.Cuts.persist(
       trOcc.groupBy("label", "token").agg(count(lit(1)).as("cnt")))
     val classTotals = counts.groupBy("label").agg(sum("cnt").as("t_occ"))
     val vocabRow = counts.select("token").distinct()

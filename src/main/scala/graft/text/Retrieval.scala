@@ -30,19 +30,13 @@ object Retrieval {
     * score), ordered by score desc then doc_id.
     */
   def bm25(docs: DataFrame, textCol: String, idCol: String,
-      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      scope: DataFrame => DataFrame = identity): DataFrame = {
+      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty && terms == terms.distinct,
       s"query terms must be non-empty and distinct: $terms")
     val toks = TextFunctions.tokens(lower(col(textCol)))
-    // `scope` (a caller-managed persist, e.g. TransientCache.persist)
-    // wraps the tokenized base: dl and tf both consume it, and dl itself
-    // feeds both the totals aggregate and the scoring join — unscoped,
-    // the tokenize pass runs three times (measured 6.7 s vs 3.4 s for
-    // q113's 4-wave union at sf0.1). Values are identical either way.
-    val base = scope(graft.core.Parallelism.ensure(
+    val base = graft.core.Parallelism.ensure(
         docs.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("doc_id"), toks.as("toks")))
+      .select(col(idCol).as("doc_id"), toks.as("toks"))
     val dl = base.select(col("doc_id"), size(col("toks")).as("dl"))
     val totals = dl.agg(count(lit(1)).as("n_docs"),
       sum(col("dl").cast("long")).as("sum_dl"))

@@ -128,8 +128,7 @@ object BenchBandStorm {
       .persist()
     val probeRows = probe.count()
 
-    def run(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = {
-      graft.core.TransientCache.clear()
+    def run(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
       Thread.sleep(200); stats.reset()
       val t0 = System.nanoTime()
@@ -189,8 +188,7 @@ object BenchBandStorm {
       .persist()
     probeE.count()
 
-    def runExact(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = {
-      graft.core.TransientCache.clear()
+    def runExact(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
       Thread.sleep(200); stats.reset()
       val t0 = System.nanoTime()

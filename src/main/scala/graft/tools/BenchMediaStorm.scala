@@ -82,8 +82,7 @@ object BenchMediaStorm {
       .persist()
     val probeRows = probe.count()
 
-    def run(cap: Int): (Double, Array[(Long, Boolean, Any)]) = {
-      graft.core.TransientCache.clear()
+    def run(cap: Int): (Double, Array[(Long, Boolean, Any)]) = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
       val t0 = System.nanoTime()
       val v = Dedup.fingerprintAdmit(probe, "id", "fp", chunks,
@@ -95,8 +94,7 @@ object BenchMediaStorm {
     }
     // the deterministic partition-layout evidence: the candidate join's
     // per-partition rows, verify-off (the blowup the wall numbers pay)
-    def candPartitions(cap: Int): Seq[Long] = {
-      graft.core.TransientCache.clear()
+    def candPartitions(cap: Int): Seq[Long] = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
       val bb = Dedup.fingerprintChunkRows(probe, "id", "fp")
       val cand = Dedup.guardedCorpusCandidates(

@@ -205,7 +205,7 @@ object BenchStreamApprox {
     // doc length doesn't change it; the base artifact carries the table)
     val sweep = (if (groupN > 1) Seq.empty[Double]
       else Seq(0.5, 0.7, 0.8, 0.9)).map { t =>
-      graft.core.TransientCache.scoped {
+      graft.core.Cuts.scoped {
         val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         val corpus = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
         val ve = graft.dedup.Dedup.MinHashLsh.nearDupIncremental(

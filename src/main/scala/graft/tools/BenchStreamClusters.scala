@@ -25,7 +25,7 @@ import graft.streaming.{LedgerCompaction, NearDupStream}
   * [[NearDupStream.clusterWriter]] (fresh AvailableNow query per wave =
   * kill-and-restart, built-in compaction cadence every 4 waves). After
   * selected waves the FROM-SCRATCH clusters over the corpus-so-far are
-  * timed (cold TransientCache per sample, like the sweep bench). Gates
+  * timed (cold cuts per sample, like the sweep bench). Gates
   * (required): the final ledger-maintained assignments are ROW-IDENTICAL
   * to the from-scratch closure over the full corpus, and the per-wave
   * ledger probe joins run exchange-free once compacted.
@@ -99,7 +99,7 @@ object BenchStreamClusters {
       val c = cpu.takeSeconds()
       if (scratchAt.contains(b)) {
         val sofar = docs.filter(col("doc_id") < (b + 1) * maxId / nWaves)
-        val s = timed(graft.core.TransientCache.scoped {
+        val s = timed(graft.core.Cuts.scoped {
           scratchClusters(sofar).write.format("noop").mode("overwrite").save()
         })
         scratchWalls += ((b + 1, s))
@@ -111,11 +111,12 @@ object BenchStreamClusters {
 
     // equality gate: ledger-maintained assignments ≡ from-scratch closure
     val ledgerC = NearDupStream.clusterAssignments(spark, labels, merges)
-    val scratchC = graft.core.TransientCache.persist(scratchClusters(docs))
-    val nLedger = ledgerC.count(); val nScratch = scratchC.count()
-    val diff = ledgerC.exceptAll(scratchC).count() +
-      scratchC.exceptAll(ledgerC).count()
-    graft.core.TransientCache.clear()
+    val (nLedger, nScratch, diff) = graft.core.Cuts.scoped {
+      val scratchC = graft.core.Cuts.persist(scratchClusters(docs))
+      (ledgerC.count(), scratchC.count(),
+        ledgerC.exceptAll(scratchC).count() +
+          scratchC.exceptAll(ledgerC).count())
+    }
 
     // state at rest (bytes): the whole cluster deployment's four ledgers
     def ledgerBytes(dir: String): Long = {

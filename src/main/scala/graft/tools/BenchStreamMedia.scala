@@ -105,22 +105,22 @@ object BenchStreamMedia {
     // batch-sequential parity gate
     val streamed = MediaDedupStream.verdicts(spark, out)
       .select("doc_id", "admitted", "first_match")
-    var ledger = Dedup.fingerprintChunkRows(
-      fps.filter(lit(false)), "doc_id", "dhash")
-    var seq: DataFrame = null
-    (0 until nWaves).foreach { b =>
-      val w = waveOf(b)
-      val v = graft.core.TransientCache.persist(
-        Dedup.fingerprintAdmit(w, "doc_id", "dhash", ledger))
-      seq = if (seq == null) v else seq.unionByName(v)
-      ledger = ledger.unionByName(Dedup.fingerprintChunkRows(
-        w.join(v.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
-        "doc_id", "dhash")).localCheckpoint()
+    val (diff, nStream, nSeq, admitted) = graft.core.Cuts.scoped {
+      var ledger = Dedup.fingerprintChunkRows(
+        fps.filter(lit(false)), "doc_id", "dhash")
+      var seq: DataFrame = null
+      (0 until nWaves).foreach { b =>
+        val w = waveOf(b)
+        val v = graft.core.Cuts.persist(
+          Dedup.fingerprintAdmit(w, "doc_id", "dhash", ledger))
+        seq = if (seq == null) v else seq.unionByName(v)
+        ledger = ledger.unionByName(Dedup.fingerprintChunkRows(
+          w.join(v.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
+          "doc_id", "dhash")).localCheckpoint()
+      }
+      (streamed.exceptAll(seq).count() + seq.exceptAll(streamed).count(),
+        streamed.count(), seq.count(), streamed.filter(col("admitted")).count())
     }
-    val diff = streamed.exceptAll(seq).count() + seq.exceptAll(streamed).count()
-    val nStream = streamed.count(); val nSeq = seq.count()
-    val admitted = streamed.filter(col("admitted")).count()
-    graft.core.TransientCache.clear()
 
     // final compaction + the never-reshuffles plan gate
     val compactS = timed {

@@ -28,7 +28,7 @@ import graft.text.Retrieval
   * writer (fresh AvailableNow query per wave = kill-and-restart; built-in
   * compaction cadence every 4 waves). After EVERY wave the ledger query is
   * timed; after selected waves the from-scratch query over the
-  * corpus-so-far is timed (cold TransientCache per sample). Gate
+  * corpus-so-far is timed (cold cuts per sample). Gate
   * (required): final ledger scores ROW-IDENTICAL to from-scratch over the
   * full corpus — same doubles, same order.
   */
@@ -107,7 +107,7 @@ object BenchStreamRetrieval {
       if (scratchAt.contains(b)) {
         val sofar = docs.filter(col("doc_id") < (b + 1) * maxId / nWaves)
         def scratch(ts: Seq[String]): Double =
-          timed2(graft.core.TransientCache.scoped {
+          timed2(graft.core.Cuts.scoped {
             Retrieval.bm25(sofar, "text", "doc_id", ts)
               .write.format("noop").mode("overwrite").save()
           })

@@ -30,7 +30,7 @@ import graft.streaming.{LedgerCompaction, SemanticStream}
   * the same frame, so the equality gate is exact). Fresh AvailableNow
   * query per wave = kill-and-restart; built-in compaction cadence every
   * 4 waves. After selected waves the from-scratch SemDeDup over the
-  * corpus-so-far is timed (cold TransientCache per sample). Gate
+  * corpus-so-far is timed (cold cuts per sample). Gate
   * (required): the final ledger-derived (vec_id, cluster, centroid_sim,
   * keep) rows are ROW-IDENTICAL to the from-scratch run over the full
   * corpus.
@@ -98,7 +98,7 @@ object BenchStreamSemantic {
       val w = cycle(b)
       if (scratchAt.contains(b)) {
         val sofar = emb.filter(col("vec_id") < (b + 1) * maxId / nWaves)
-        val s = timed(graft.core.TransientCache.scoped {
+        val s = timed(graft.core.Cuts.scoped {
           scratch(sofar).write.format("noop").mode("overwrite").save()
         })
         scratchWalls += ((b + 1, s))
@@ -109,11 +109,12 @@ object BenchStreamSemantic {
     // equality gate: ledger-derived output ≡ from-scratch SemDeDup
     val ledgerC = SemanticStream.semanticAssignments(
       spark, members, labels, merges)
-    val scratchC = graft.core.TransientCache.persist(scratch(emb))
-    val nLedger = ledgerC.count(); val nScratch = scratchC.count()
-    val diff = ledgerC.exceptAll(scratchC).count() +
-      scratchC.exceptAll(ledgerC).count()
-    graft.core.TransientCache.clear()
+    val (nLedger, nScratch, diff) = graft.core.Cuts.scoped {
+      val scratchC = graft.core.Cuts.persist(scratch(emb))
+      (ledgerC.count(), scratchC.count(),
+        ledgerC.exceptAll(scratchC).count() +
+          scratchC.exceptAll(ledgerC).count())
+    }
 
     // state at rest (bytes): the five-ledger semantic deployment
     def ledgerBytes(dir: String): Long = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Dev probe — phase decomposition of the q116 curation fold (not engine
   * API): times each wave's checkpoints separately from the final verdict
   * write, then re-writes the SAME frame a second time. A cheap second
-  * write proves the fold's TransientCache entries serve the final plan;
+  * write proves the fold's persisted cuts serve the final plan;
   * an expensive one means the final action recomputes kernels.
   */
 object ProbeCuration {
@@ -49,8 +49,7 @@ object ProbeCuration {
     import graft.dedup.Dedup
     import graft.text.TextFunctions
     val cache: org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame = graft.core.TransientCache.persist
-    graft.core.TransientCache.clear()
+      org.apache.spark.sql.DataFrame = graft.core.Cuts.persist
     val docs = cache(graft.core.Tables.documents(s, dir).select("doc_id", "text"))
     val nDocs = t("count")(docs.count())
     val none = docs.filter(lit(false))
@@ -75,7 +74,7 @@ object ProbeCuration {
         exactNew, "text", "doc_id", portable = true).localCheckpoint())
       val verdict = t(s"w$w verdict-build")(
         Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-          sk, bands, sigs, threshold = 0.35, cache,
+          sk, bands, sigs, threshold = 0.35,
           knownRows = Some(nDocs)))
       val cpW = t(s"w$w cpW ckpt")(scored.select(col("doc_id"), col("quality"),
           (col("quality") >= 0.7).as("q_pass"))

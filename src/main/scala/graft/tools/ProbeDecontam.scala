@@ -39,12 +39,13 @@ object ProbeDecontam {
       .foreach { q =>
         val fn = graft.SparkEntry.queries(q)
         (1 to 2).foreach { rep =>
-          graft.core.TransientCache.clear()
           tag = if (rep == 2) q.take(4) else ""
           execTotal.set(0)
-          val t0 = System.nanoTime()
-          val n = fn(spark, dir).collect().length
-          val wall = (System.nanoTime() - t0) / 1e9
+          val (n, wall) = graft.core.Cuts.scoped {
+            val t0 = System.nanoTime()
+            val n = fn(spark, dir).collect().length
+            (n, (System.nanoTime() - t0) / 1e9)
+          }
           println(f"[total] $q rep$rep wall=$wall%.2f execSum=${execTotal.get / 1e3}%.1f rows=$n")
         }
       }

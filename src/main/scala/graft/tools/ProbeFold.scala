@@ -34,10 +34,9 @@ object ProbeFold {
       println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s")
       r
     }
-    (1 to 2).foreach { rep =>
+    (1 to 2).foreach { rep => graft.core.Cuts.scoped {
       println(s"[probe] ===== rep $rep =====")
       listen = rep == 2
-      graft.core.TransientCache.clear()
       import graft.dedup.Dedup
       val docs = graft.core.Tables.documents(s, dir)
       val none = docs.filter(lit(false))
@@ -46,7 +45,7 @@ object ProbeFold {
       var labels = s.range(0).select(col("id"), col("id").as("label"))
       var merges = s.range(0).select(col("id").as("old_label"), col("id").as("new_label"))
       val cache: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        graft.core.TransientCache.persist
+        graft.core.Cuts.persist
       var old: Seq[org.apache.spark.sql.DataFrame] = Nil
       (0 until 4).foreach { w =>
         val sk = t(s"w$w sketch+cache") {
@@ -62,7 +61,7 @@ object ProbeFold {
         t(s"w$w edge-kernel count") { println(s"[probe]   edges=${edges.count()}") }
         val (lr, mr) = t(s"w$w foldEdgeFrame") {
           graft.dedup.IncrementalClusters.foldEdgeFrame(
-            sk, edges, labels, merges, cache)
+            sk, edges, labels, merges)
         }
         t(s"w$w ckpt labels") { labels = labels.unionByName(lr).localCheckpoint() }
         t(s"w$w ckpt merges") { merges = merges.unionByName(mr).localCheckpoint() }
@@ -75,7 +74,7 @@ object ProbeFold {
         graft.dedup.IncrementalClusters.clusters(labels, merges)
           .orderBy("doc_id").write.format("noop").mode("overwrite").save()
       }
-    }
+    }}
     spark.stop()
   }
 }

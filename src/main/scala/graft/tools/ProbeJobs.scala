@@ -68,14 +68,15 @@ object ProbeJobs {
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       // warm pass (JIT + fixture memo), then the listened pass
-      graft.core.TransientCache.clear()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      graft.core.TransientCache.clear()
+      graft.core.Cuts.scoped(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       jobs.clear(); live.clear(); stageToJob.clear()
       listen = true
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = graft.core.Cuts.scoped {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       listen = false
       Thread.sleep(300) // drain async listener events
       import scala.jdk.CollectionConverters._

@@ -48,18 +48,17 @@ object TimeQ {
       // joins, verify, 644 MB of shuffle — vanishes: 0.9 s / 1.5 MB
       // where the real plan is 15 s; a profile of a shadow)
       var lastDf: org.apache.spark.sql.DataFrame = null
-      def once(dir: String): Double = {
-        // per-sample cache isolation, mirroring Bench: the engine's
-        // compute-once persists are session-lifetime, so without this
-        // every run after the first measures a warm-cache shadow
-        // (fixture memoization survives — see TransientCache)
-        graft.core.TransientCache.clear()
-        val t0 = System.nanoTime()
-        val df = fn(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
-        lastDf = df
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(dir: String): Double =
+        // per-sample cache isolation, mirroring Bench: each sample owns
+        // the compute-once cuts it makes, so no run measures a warm-cache
+        // shadow of an earlier one (fixture memoization survives)
+        graft.core.Cuts.scoped {
+          val t0 = System.nanoTime()
+          val df = fn(spark, dir)
+          df.write.format("noop").mode("overwrite").save()
+          lastDf = df
+          (System.nanoTime() - t0) / 1e9
+        }
       once("/root/testdata/sf0.001") // warm
       val rows = fn(spark, sfDir).count() // untimed, display only; BEFORE
       // the timed runs so its (count-pruned) stages never reach any

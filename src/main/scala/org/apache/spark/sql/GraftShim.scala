@@ -44,9 +44,9 @@ object GraftShim {
         withStats.isStreaming)(spark, None, None))
   }
 
-  /** Checkpoint `df` (reliable when the context has a checkpoint dir,
-    * local otherwise) into a fresh leaf with DEFAULT statistics and the
-    * origin plan's FINAL hash partitioning.
+  /** Cut `df` to a [[graft.core.Cuts.leaf]] (reliable or local, owned by
+    * the current scope) and rebuild that leaf with DEFAULT statistics and
+    * the origin plan's FINAL hash partitioning.
     *
     * `Dataset.checkpoint` under AQE records `UnknownPartitioning`: it
     * reads `executedPlan.outputPartitioning` from the
@@ -67,8 +67,7 @@ object GraftShim {
     import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val ds = df.asInstanceOf[classic.Dataset[_]]
-    val ck = (if (spark.sparkContext.getCheckpointDir.isDefined) ds.checkpoint()
-      else ds.localCheckpoint()).asInstanceOf[classic.Dataset[_]]
+    val ck = graft.core.Cuts.leaf(df).asInstanceOf[classic.Dataset[_]]
     def firstLeaf(p: Partitioning): Partitioning = p match {
       case c: PartitioningCollection => firstLeaf(c.partitionings.head)
       case o => o

@@ -51,9 +51,9 @@ class BandStormSpec extends AnyFunSuite {
       .select(col("id"), sig("p", false).as("sig")))
 
   private def withCap[A](cap: Int)(f: => A): A = {
-    graft.core.TransientCache.clear()
     spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
-    try f finally spark.conf.unset("spark.graft.dedup.hotBandCap")
+    try graft.core.Cuts.scoped(f)
+    finally spark.conf.unset("spark.graft.dedup.hotBandCap")
   }
 
   test("planted storm: the guard changes not one verdict") {

@@ -348,9 +348,8 @@ class DedupSpec extends AnyFunSuite {
       val docs = spark.read.parquet(dir)
       assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes > 100000,
         "fixture precondition: raw input estimate must exceed the cap")
-      def planOf(maxBytes: String) = {
+      def planOf(maxBytes: String) = graft.core.Cuts.scoped {
         spark.conf.set("spark.graft.dedup.verifyBroadcastMaxBytes", maxBytes)
-        graft.core.TransientCache.clear()
         val out = Dedup.MinHashLsh.nearDupPairsApprox(docs, "text", "doc_id",
           threshold = 0.35)
         assert(out.count() > 0, "planted pairs must verify (join is exercised)")

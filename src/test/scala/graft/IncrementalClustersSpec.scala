@@ -158,7 +158,7 @@ class IncrementalClustersSpec extends AnyFunSuite {
   }
 
   test("q108 fold ≡ q107 from-scratch closure on the sf0.001 fixture") {
-    def run(name: String) = graft.core.TransientCache.scoped {
+    def run(name: String) = graft.core.Cuts.scoped {
       SparkEntry.queries(name)(spark, TestSpark.sfDir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sorted.toSeq

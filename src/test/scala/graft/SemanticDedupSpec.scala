@@ -139,7 +139,7 @@ class SemanticDedupSpec extends AnyFunSuite {
 
   test("q111 incremental fold ≡ q91 from-scratch SemDeDup on the " +
       "sf0.001 fixture") {
-    def run(name: String) = graft.core.TransientCache.scoped {
+    def run(name: String) = graft.core.Cuts.scoped {
       SparkEntry.queries(name)(spark, TestSpark.sfDir).collect()
         .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster"),
           r.getAs[Any]("centroid_sim"), r.getAs[Boolean]("keep"))).toSet

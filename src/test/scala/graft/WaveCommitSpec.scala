@@ -149,13 +149,17 @@ class WaveCommitSpec extends AnyFunSuite {
     "NearDupStream.approxWriter", "MediaDedupStream.writer",
     "SemanticStream.admitWriter")
 
-  /** Every write command's (output path, plan), as executed. */
-  private class Writes extends QueryExecutionListener {
+  /** Every write command's (output path, plan) under one of `sinks`, as
+    * executed. Other writes are skipped: the listener bus is asynchronous,
+    * so a fixture write made just before registration can arrive late. */
+  private class Writes(sinks: Seq[String]) extends QueryExecutionListener {
     val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit =
       qe.logical.collectFirst { case w: InsertIntoHadoopFsRelationCommand =>
-        w.outputPath.toString }.foreach(p => seen.add((p, qe)))
+        w.outputPath.toString }
+        .filter(p => sinks.exists(p.stripPrefix("file:").startsWith))
+        .foreach(p => seen.add((p, qe)))
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
   }
@@ -234,7 +238,7 @@ class WaveCommitSpec extends AnyFunSuite {
       test(s"${f.name}: no commit reads a cached frame twice") {
         val root = freshDir("graft-wave-plan")
         f.setup(root)
-        val writes = new Writes
+        val writes = new Writes(f.sinks.map(k => s"$root/$k/"))
         spark.listenerManager.register(writes)
         try {
           val w = f.make(root)
