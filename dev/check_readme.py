@@ -32,8 +32,9 @@ Checked claims:
     artifact-sourced; 10% is the documented host-window noise band)
   - PROFILES_SF10.md section headers ("## qNN — <N> s ..."): the query
     must exist in BENCH_SF10.json and the profiled wall must sit in
-    [0.4x, 1.3x] of the artifact wall — PROFILES walls come from TimeQ's
-    min-wall cold-per-sample methodology and run LOWER than in-sweep
+    [0.4x, 1.3x] of the artifact wall — PROFILES walls come from the
+    single-query probe's (graft.tools.ProbeQuery) min-wall cold-per-sample
+    methodology and run LOWER than in-sweep
     BENCH walls by design (PROFILES_SF10.md's own preamble), so this is
     a gross-staleness band, not an equality check.
 """

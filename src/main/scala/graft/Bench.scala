@@ -1,11 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.obs.RunMetrics
 
 /** Benchmark main: times every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line for the driver.
@@ -26,24 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * back-to-back passes all sat inside the stall window and reported a
   * 10× phantom (measured: q41 0.97 s → 11.5 s across two suite runs with
   * an identical plan). Alongside wall time the line carries per-query
-  * EXECUTED-plan metrics (shuffle bytes written, task count) from a stage
-  * listener on the final sweep: wall time says "it got slower",
+  * EXECUTED-plan metrics (shuffle bytes written, task count) from a
+  * [[RunMetrics]] record of the final sweep: wall time says "it got slower",
   * shuffle/tasks say whether the PLAN changed or the machine hiccuped —
   * identical plan metrics with a higher wall time is noise, not
   * regression.
   */
 object Bench {
-
-  final class StageTotals extends SparkListener {
-    val shuffleWriteBytes = new LongAdder
-    val tasks = new LongAdder
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) shuffleWriteBytes.add(m.shuffleWriteMetrics.bytesWritten)
-      tasks.add(sc.stageInfo.numTasks.toLong)
-    }
-    def reset(): Unit = { shuffleWriteBytes.reset(); tasks.reset() }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -59,8 +47,6 @@ object Bench {
       .getOrCreate()
     graft.core.GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    val totals = new StageTotals
-    spark.sparkContext.addSparkListener(totals)
 
     // optional comma-separated subset (e.g. the scale-sensitive family
     // for an sf1 tier whose dir carries only the LLM-pipeline tables)
@@ -112,15 +98,9 @@ object Bench {
     for (sweep <- 1 to 3; (name, fn) <- ordered if !aborted && !failed0(name)) {
       try {
         if (sweep == 3) {
-          // listener events are delivered async: drain the previous
-          // query's stragglers BEFORE the reset and this query's before
-          // reading the totals, so plan metrics stay per-query
-          Thread.sleep(150)
-          totals.reset()
-          val w = once(fn)
-          Thread.sleep(150)
+          val (w, rec) = RunMetrics.measure(spark)(once(fn))
           walls(name) = math.min(walls.getOrElse(name, w), w)
-          plan(name) = (totals.shuffleWriteBytes.sum(), totals.tasks.sum())
+          plan(name) = (rec.total(_.shuffleWriteBytes), rec.total(_.tasks))
         } else {
           val w = once(fn)
           walls(name) = math.min(walls.getOrElse(name, w), w)

@@ -54,10 +54,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 
-  /** Register every table as a temp view (for `spark.sql` entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
-
   /** Cheap content fingerprint of a parquet path (path + per-file sizes +
     * mtimes), usable in an identifier. Lets derived artifacts (e.g. a
     * persisted ANN index) key themselves to the data they were built from:

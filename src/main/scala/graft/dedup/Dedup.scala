@@ -1141,7 +1141,7 @@ object Dedup {
     * exceeds ~2·2¹⁶ sketches the buckets saturate and identical-sketch
     * groups start paying |group|² inside every chunk bucket — exactly when
     * the collapse's three reconstruction joins amortize. Measured at HEAD
-    * (TimeQ min-of-3, local[32]): collapse OFF 0.59 / 1.03 / 9.3 s vs ON
+    * (single-query probe, min-of-3, local[32]): collapse OFF 0.59 / 1.03 / 9.3 s vs ON
     * 1.34 / 3.75 / 5.74 s at sf0.1 / sf1 / sf10 (6k / 50k / 500k docs) —
     * the crossover sits between 50k and 500k, consistent with the 131k
     * saturation gate. The `count()` that drives the gate is a

@@ -77,7 +77,7 @@ object GraftFunctions {
     * range are clamped into the edge buckets, so a slack bound costs
     * balance, never correctness.
     *
-    * Measured shape (IoProbe, sf0.1): the executed plan reads the source
+    * Measured shape (executed input metrics, sf0.1): the executed plan reads the source
     * exactly ONCE for the whole cuts computation — AQE stage reuse dedupes
     * the histogram subtree the static explain shows repeated — and total
     * shuffle volume is the per-value histogram (~50 KB at sf0.1), never
@@ -157,12 +157,6 @@ object GraftFunctions {
     */
   def epochDiffUs(a: Column, b: Column): Column =
     epochUs(a) - epochUs(b)
-
-  /** Seconds difference as double (micros / 1e6) — identical division in
-    * both engines given the same exact integer micros.
-    */
-  def epochDiffSeconds(a: Column, b: Column): Column =
-    (epochUs(a) - epochUs(b)).cast("double") / lit(1000000.0)
 
   /** Epoch micros of a timestamp of either flavor. `unix_micros` declares
     * `TimestampType` input, so an NTZ column goes through a session-TZ cast

@@ -61,10 +61,6 @@ object Ann {
     Array.fill(nPlanes, dim)((next() >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0)
   }
 
-  /** Signature column for external blockers (e.g. embedding near-dup). */
-  def signatureFor(v: Column, nPlanes: Int = 8, dim: Int = 64): Column =
-    signature(v, planes(nPlanes, dim))
-
   /** Bit i = 1 iff dot(v, plane_i) >= 0; bucket = the bits as an int. */
   private[graft] def signature(v: Column, ps: Array[Array[Double]]): Column =
     ps.zipWithIndex.map { case (p, i) =>

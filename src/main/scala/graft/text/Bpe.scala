@@ -144,8 +144,6 @@ object Bpe {
       new String(bos.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     }
 
-    def vocabSize: Int = 256 + merges.length
-
     /** Merges flattened `[a0,b0,a1,b1,…]` — the literal form the native
       * expression carries in the plan.
       */

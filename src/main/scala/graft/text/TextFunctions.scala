@@ -47,10 +47,6 @@ object TextFunctions {
     size(filter(toks, t => array_contains(wordArr, t)))
   }
 
-  /** Distinct-token ratio — a lexical-diversity quality signal. */
-  def uniqueTokenRatio(toks: Column): Column =
-    size(array_distinct(toks)).cast("double") / size(toks).cast("double")
-
   /** Whitespace-normalized md5 document fingerprint (exact-dup key). */
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))

@@ -2,13 +2,11 @@ package graft.tools
 
 import java.nio.file.Files
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.obs.RunMetrics
 import graft.streaming.{IdempotentSink, NearDupStream}
 
 /** Adversarial band-ledger dup-storm at sf10 scale — the committed
@@ -35,30 +33,20 @@ import graft.streaming.{IdempotentSink, NearDupStream}
   */
 object BenchBandStorm {
 
-  final class TaskStats extends SparkListener {
-    val rows = new ArrayBuffer[(Int, Long, Long)] // stage, durMs, shufRecs
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-      val m = te.taskMetrics
-      if (m != null) rows += ((te.stageId, m.executorRunTime,
-        m.shuffleWriteMetrics.recordsWritten))
-    }
-    def reset(): Unit = synchronized { rows.clear() }
-    /** (maxTaskShuffleRecords, straggler ratio of the CANDIDATE stage):
-      * the stage writing the most shuffle records is the candidate
-      * emission; its straggler ratio is max/median duration over the
-      * tasks that actually wrote records (empty partitions would make any
-      * median meaningless). */
-    def skew(): (Long, Double) = synchronized {
-      val maxRecs = if (rows.isEmpty) 0L else rows.map(_._3).max
-      val byStage = rows.groupBy(_._1).values.toSeq
-      val candStage = byStage.sortBy(-_.map(_._3).sum).headOption
-      val ratio = candStage.map { ts =>
-        val busy = ts.filter(_._3 > 0).map(_._2.toDouble).sorted
-        if (busy.length < 2) 1.0
-        else busy.last / math.max(1.0, busy(busy.length / 2))
-      }.getOrElse(1.0)
-      (maxRecs, ratio)
-    }
+  /** (maxTaskShuffleRecords, straggler ratio of the CANDIDATE stage):
+    * the stage writing the most shuffle records is the candidate
+    * emission; its straggler ratio is max/median duration over the
+    * tasks that actually wrote records (empty partitions would make any
+    * median meaningless). */
+  def skew(rec: RunMetrics.Record): (Long, Double) = {
+    val stages = rec.stages
+    val maxRecs = if (stages.isEmpty) 0L else stages.map(_.maxTaskShuffleWriteRecords).max
+    val ratio = stages.sortBy(-_.shuffleWriteRecords).headOption.map { s =>
+      val busy = s.writerRunMs.map(_.toDouble).sorted
+      if (busy.length < 2) 1.0
+      else busy.last / math.max(1.0, busy(busy.length / 2))
+    }.getOrElse(1.0)
+    (maxRecs, ratio)
   }
 
   def main(args: Array[String]): Unit = {
@@ -71,8 +59,6 @@ object BenchBandStorm {
       .getOrCreate()
     graft.core.GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
 
     val nBenign = 450000L; val nStorm = 50000L
     val stormBase = 500000L; val probeBase = 600000L
@@ -130,19 +116,17 @@ object BenchBandStorm {
 
     def run(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
-      Thread.sleep(200); stats.reset()
-      val t0 = System.nanoTime()
-      val v = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-          probe, bands, sigs, threshold = 0.5,
-          knownRows = Some(probeRows))
-        .orderBy("doc_id")
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("admitted"),
-          r.get(r.fieldIndex("first_match"))))
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      val (maxRecs, ratio) = stats.skew()
-      (wall, maxRecs, ratio, v)
+      val (v, rec) = RunMetrics.measure(spark) {
+        Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+            probe, bands, sigs, threshold = 0.5,
+            knownRows = Some(probeRows))
+          .orderBy("doc_id")
+          .collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("admitted"),
+            r.get(r.fieldIndex("first_match"))))
+      }
+      val (maxRecs, ratio) = skew(rec)
+      (rec.wallS, maxRecs, ratio, v)
     }
 
     val (wOff, recsOff, ratioOff, vOff) = run(0)
@@ -190,18 +174,16 @@ object BenchBandStorm {
 
     def runExact(cap: Int): (Double, Long, Double, Array[(Long, Boolean, Any)]) = graft.core.Cuts.scoped {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
-      Thread.sleep(200); stats.reset()
-      val t0 = System.nanoTime()
-      val v = Dedup.MinHashLsh.nearDupAdmitSketched(
-          probeE, probeE, bandsE, setsE, threshold = 0.5)
-        .orderBy("doc_id")
-        .collect()
-        .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("admitted"),
-          r.get(r.fieldIndex("first_match"))))
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
-      val (maxRecs, ratio) = stats.skew()
-      (wall, maxRecs, ratio, v)
+      val (v, rec) = RunMetrics.measure(spark) {
+        Dedup.MinHashLsh.nearDupAdmitSketched(
+            probeE, probeE, bandsE, setsE, threshold = 0.5)
+          .orderBy("doc_id")
+          .collect()
+          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("admitted"),
+            r.get(r.fieldIndex("first_match"))))
+      }
+      val (maxRecs, ratio) = skew(rec)
+      (rec.wallS, maxRecs, ratio, v)
     }
 
     val (wOffE, recsOffE, ratioOffE, vOffE) = runExact(0)

@@ -77,19 +77,16 @@ object BenchStreamCuration {
       require(q.exception.isEmpty, s"wave $i failed: ${q.exception}")
     }
 
-    // wall AND executor-CPU per wave (CpuWaveStats): a host-stalled wave
-    // is wall ≫ its neighbors with CPU in-band; an engine regression
-    // moves both — committed artifacts can now prove which one a spike was
-    val cpu = new CpuWaveStats
-    spark.sparkContext.addSparkListener(cpu)
+    // wall AND executor-CPU per wave (one RunMetrics record per cycle): a
+    // HOST STALL (page-zeroing, a co-tenant burning the cores, thermal
+    // throttle) inflates a wave's wall but leaves its CPU in the band of
+    // its neighbors; an engine regression moves both
     val waveStats = (0 until nWaves).map { b =>
       docs.filter(col("doc_id") >= b * maxId / nWaves &&
           col("doc_id") < (b + 1) * maxId / nWaves)
         .coalesce(4).write.parquet(s"$in/w$b")
-      cpu.takeSeconds() // exclude the fixture ingest write
-      val w = cycle(b)
-      Thread.sleep(200) // listener bus settle
-      (w, cpu.takeSeconds())
+      val (w, rec) = graft.obs.RunMetrics.measure(spark)(cycle(b))
+      (w, rec.total(_.cpuNs) / 1e9)
     }
     val waveWalls = waveStats.map(_._1)
     val waveCpus = waveStats.map(_._2)

@@ -30,8 +30,8 @@ import graft.streaming.{DedupStream, NearDupStream}
   *    signature ledgers — the mode whose state is row-count-sized).
   *
   * Per wave it records the wall and the number of Spark tasks the cycle
-  * ran (SparkListener delta — dominated by the ledger-side scans, the
-  * thing that grows without compaction). Without compaction both series
+  * ran (its [[graft.obs.RunMetrics]] record — dominated by the
+  * ledger-side scans, the thing that grows without compaction). Without compaction both series
   * trend up: every wave re-lists and re-reads one more `batch=` dir per
   * ledger. With the cadence, cost is a bounded sawtooth: dirs accumulate
   * for 8 waves, then a compaction absorbs them into the bucketed table.
@@ -44,10 +44,6 @@ import graft.streaming.{DedupStream, NearDupStream}
   *    1.5× the mean over the first two saturated ones.
   */
 object BenchStreamLong {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf1")
@@ -63,24 +59,6 @@ object BenchStreamLong {
     graft.core.GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("ERROR")
     val root = Files.createTempDirectory("graft-bench-stream-long").toString
-
-    val taskCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskCount.addAndGet(sc.stageInfo.numTasks)
-      })
-    def tasksDuring(f: => Unit): Long = {
-      // settle the async listener bus so a previous wave's stages don't
-      // bleed into this wave's delta (the bus has no public flush; 500 ms
-      // after an AvailableNow cycle's termination is far past its tail)
-      Thread.sleep(500)
-      val t0 = taskCount.get()
-      f
-      Thread.sleep(500)
-      taskCount.get() - t0
-    }
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -135,7 +113,9 @@ object BenchStreamLong {
             f.getName.endsWith(".parquet")).get
         val dest = new java.io.File(in); dest.mkdirs()
         require(part.renameTo(new java.io.File(dest, f"wave-$b%03d.parquet")))
-        tasks(b) = tasksDuring { walls(b) = timed(cycle(s"wave $b")) }
+        val (_, rec) = graft.obs.RunMetrics.measure(spark)(cycle(s"wave $b"))
+        walls(b) = rec.wallS
+        tasks(b) = rec.total(_.tasks)
         System.err.println(
           f"[$name] wave $b%2d wall=${walls(b)}%6.2fs tasks=${tasks(b)}")
       }

@@ -48,29 +48,16 @@ object ProbeKernel {
         .config("spark.ui.enabled", "false").getOrCreate()
       graft.core.GraftSession.tune(spark)
       spark.sparkContext.setLogLevel("ERROR")
-      val exec = new java.util.concurrent.atomic.AtomicLong
-      val cpuA = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            Option(sc.stageInfo.taskMetrics).foreach { m =>
-              exec.addAndGet(m.executorRunTime)
-              cpuA.addAndGet(m.executorCpuTime / 1000000L)
-            }
-        })
       val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val docsDf = graft.core.Tables.documents(spark, dir)
         .select("doc_id", "text").repartition(32).localCheckpoint()
       import graft.text.TextFunctions
       def benchQ(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
         df.write.format("noop").mode("overwrite").save() // warm
-        Thread.sleep(200); val e0 = exec.get(); val c0 = cpuA.get()
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        Thread.sleep(200)
-        println(f"[pass] $tag%-24s wall=${(System.nanoTime() - t0) / 1e9}%6.2f " +
-          f"exec=${(exec.get() - e0) / 1e3}%6.1f cpu=${(cpuA.get() - c0) / 1e3}%6.1f")
+        val (_, r) = graft.obs.RunMetrics.measure(spark)(
+          df.write.format("noop").mode("overwrite").save())
+        println(f"[pass] $tag%-24s wall=${r.wallS}%6.2f " +
+          f"exec=${r.total(_.runMs) / 1e3}%6.1f cpu=${r.total(_.cpuNs) / 1e9}%6.1f")
       }
       val toks = TextFunctions.tokens(col("text"))
       benchQ("id only", docsDf.select("doc_id"))

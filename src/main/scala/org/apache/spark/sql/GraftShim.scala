@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
-/** One `private[sql]` bridge the engine needs from Spark's internals.
+/** The bridges the engine needs into Spark's package-private internals:
+  *  - [[drainListenerBus]], the listener bus's `private[spark]` flush, so
+  *    [[graft.obs.RunMetrics]] reads a run's record only after every event
+  *    the run posted has been delivered;
+  *  - [[resetStats]] and [[checkpointFresh]], which rebuild a cut's leaf
+  *    from `private[sql]` plan nodes, for the reasons below.
   *
   * `Dataset.checkpoint()` builds its `LogicalRDD` leaf via
   * `rewriteStatsAndConstraints`, which copies the ORIGIN plan's computed
@@ -27,6 +32,13 @@ package org.apache.spark.sql
   * minus the origin stats/constraints.
   */
 object GraftShim {
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (Spark's own `waitUntilEmpty`, with its 10 s timeout). Jobs post their
+    * end events before their actions return, so after a drain a listener
+    * has seen all of them. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Rebuild `df` as a bare scan of its (already materialized) internal
     * rows — physical partitioning and ordering preserved, inherited

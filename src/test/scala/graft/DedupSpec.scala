@@ -726,14 +726,6 @@ class DedupSpec extends AnyFunSuite {
       val priv = s"p${i}a p${i}b p${i}c p${i}d p${i}e p${i}f p${i}g p${i}h"
       (i, if (i % 10 != 0) s"$boiler $priv" else priv)
     }.toDF("doc_id", "text").repartition(16)
-    val maxRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          maxRead.getAndUpdate(m => math.max(m,
-            te.taskMetrics.shuffleReadMetrics.recordsRead))
-    }
     // AQE's small-partition coalescing merges this tiny fixture into one
     // reduce task regardless of plan shape (drowning the skew signal),
     // and the shared test session runs 4 shuffle partitions (too coarse
@@ -744,20 +736,19 @@ class DedupSpec extends AnyFunSuite {
     val partsWas = spark.conf.get(partsKey)
     spark.conf.set(coalesceKey, "false")
     spark.conf.set(partsKey, "32")
-    spark.sparkContext.addSparkListener(listener)
     try {
-      val r = Dedup.crossDocShared(docs, "text", "doc_id").collect()
-      Thread.sleep(1000) // let the listener bus drain task-end events
+      val (r, rec) = graft.obs.RunMetrics.measure(spark)(
+        Dedup.crossDocShared(docs, "text", "doc_id").collect())
+      val maxRead = rec.stages.map(_.maxTaskShuffleReadRecords).max
       assert(r.length == 2000)
       // ~16.4k gram rows hash-spread over 32 partitions put the fair
       // per-task read near 512; the partial agg caps the hot gram's
       // contribution at one row per map partition, while the window
       // regression lands its full ~1,800-row occurrence list on ONE task
       // on top of that share — a sharp threshold between the two plans
-      assert(maxRead.get < 1200,
-        s"a single task read ${maxRead.get} shuffle rows — hot-gram straggle")
+      assert(maxRead < 1200,
+        s"a single task read $maxRead shuffle rows — hot-gram straggle")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.set(coalesceKey, coalesceWas)
       spark.conf.set(partsKey, partsWas)
     }

@@ -88,36 +88,24 @@ class KernelPassesSpec extends AnyFunSuite {
     val n = sk.count()
     val bands = graft.dedup.Dedup.MinHashLsh.bandRowsOfSigs(sk.limit(0))
     val sigs = sk.limit(0).select(col("id"), col("sig"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       // without knownRows the gate counts sk at CONSTRUCTION time — one
       // driver-blocking job per wave; with it, construction is lazy
-      // listener events post asynchronously: settle, then read
-      def settled(): Int = { Thread.sleep(1000); jobs.get() }
-      jobs.set(0)
-      val lazyPlan = graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, bands, sigs, threshold = 0.5, knownRows = Some(n))
-      assert(settled() == 0,
-        s"knownRows construction must schedule no jobs: ${jobs.get()}")
-      jobs.set(0)
-      graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-        sk, bands, sigs, threshold = 0.5)
-      assert(settled() >= 1,
+      val (lazyPlan, lazyRun) = graft.obs.RunMetrics.measure(spark)(
+        graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+          sk, bands, sigs, threshold = 0.5, knownRows = Some(n)))
+      assert(lazyRun.jobs.isEmpty,
+        s"knownRows construction must schedule no jobs: ${lazyRun.jobs.size}")
+      val (_, eagerRun) = graft.obs.RunMetrics.measure(spark)(
+        graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+          sk, bands, sigs, threshold = 0.5))
+      assert(eagerRun.jobs.size >= 1,
         "without knownRows the gate count runs at construction (the " +
           "behavior the writers now avoid)")
       // and the threaded-count plan still answers correctly
       val got = lazyPlan.collect().map(r => r.getLong(0) ->
         r.getBoolean(1)).toMap
       assert(got == Map(0L -> true, 1L -> true, 2L -> true), s"$got")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      sk.unpersist()
-    }
+    } finally sk.unpersist()
   }
 }

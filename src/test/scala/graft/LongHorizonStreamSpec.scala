@@ -30,33 +30,21 @@ class LongHorizonStreamSpec extends AnyFunSuite {
     val w = NearDupStream.writer(out, bands, sets, "text", "doc_id", 0.5,
       compactEvery = cadence)
 
-    val taskCount = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        taskCount.addAndGet(sc.stageInfo.numTasks)
-    }
-    spark.sparkContext.addSparkListener(listener)
     val tasks = Array.ofDim[Long](waves)
-    try {
-      (0 until waves).foreach { b =>
-        // cycle 0 grows the ledger (unique docs, all admitted); every
-        // later wave REPLAYS cycle-0 texts under fresh ids — rejected as
-        // near-dups, ledger constant — so any cross-cycle task growth is
-        // stream-AGE cost, not data growth
-        val src = b % cadence
-        val docs = (0 until 2).map { j =>
-          (b * 10L + j, s"wave $src doc $j carries its own words about " +
-            s"signal box ${src * 7 + j} platform ${src + j} depot ${j * 3 + src} " +
-            "and a long enough tail of filler tokens to shingle cleanly")
-        }.toDF("doc_id", "text")
-        Thread.sleep(300) // settle the async listener bus between waves
-        val t0 = taskCount.get()
-        w(docs, b.toLong)
-        Thread.sleep(300)
-        tasks(b) = taskCount.get() - t0
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    (0 until waves).foreach { b =>
+      // cycle 0 grows the ledger (unique docs, all admitted); every
+      // later wave REPLAYS cycle-0 texts under fresh ids — rejected as
+      // near-dups, ledger constant — so any cross-cycle task growth is
+      // stream-AGE cost, not data growth
+      val src = b % cadence
+      val docs = (0 until 2).map { j =>
+        (b * 10L + j, s"wave $src doc $j carries its own words about " +
+          s"signal box ${src * 7 + j} platform ${src + j} depot ${j * 3 + src} " +
+          "and a long enough tail of filler tokens to shingle cleanly")
+      }.toDF("doc_id", "text")
+      tasks(b) = graft.obs.RunMetrics.measure(spark)(w(docs, b.toLong))._2
+        .total(_.tasks)
+    }
 
     // compaction cadence fired: at most one cycle of un-absorbed dirs
     // remains per ledger (dir-count boundedness is WHAT compaction buys)

@@ -1,0 +1,144 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.RunMetrics
+
+/** The contract of the engine's one run-metrics listener
+  * ([[RunMetrics]]): a measure's record holds exactly the jobs its body
+  * ran — read without a sleep, never mixed with a concurrent measure's
+  * jobs, including the jobs of a stream the body started — and a failed
+  * body leaves the next measure working. The guard pins that no other
+  * `src/main` code installs a listener of its own.
+  */
+class RunMetricsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** Run `f` with AQE off, so a plan's jobs, stages and tasks are fixed. */
+  private def aqeOff[A](f: => A): A = {
+    val key = "spark.sql.adaptive.enabled"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try f finally spark.conf.set(key, was)
+  }
+
+  // 3 range partitions → partial aggregate (7 keys each) → 4 shuffle
+  // partitions: one job, two stages, 3 + 4 tasks, 21 shuffle records
+  private def grouped(): Array[org.apache.spark.sql.Row] =
+    spark.range(0, 1000, 1, 3).groupBy((col("id") % 7).as("k")).count().collect()
+
+  // 5 range partitions → a global aggregate: one job, two stages, 5 + 1 tasks
+  private def summed(): Array[org.apache.spark.sql.Row] =
+    spark.range(0, 500, 1, 5).agg(sum("id")).collect()
+
+  private def shape(r: RunMetrics.Record) =
+    (r.jobs.size, r.stages.size, r.total(_.tasks))
+
+  test("a fixed plan reports its known job, stage and task counts") {
+    val (rows, rec) = aqeOff(RunMetrics.measure(spark)(grouped()))
+    assert(rows.length == 7)
+    assert(shape(rec) == ((1, 2, 7L)), rec)
+    assert(rec.total(_.shuffleWriteRecords) == 21, rec)
+    assert(rec.stages.map(_.maxTaskShuffleReadRecords).max <= 21, rec)
+    assert(rec.jobs.head.executionId >= 0, "a SQL action's job carries its execution id")
+    assert(rec.startMs <= rec.jobs.head.startMs && rec.jobs.head.endMs <= rec.endMs, rec)
+  }
+
+  test("20 back-to-back measures read the same counts with no sleep") {
+    val shapes = aqeOff((1 to 20).map(_ => shape(RunMetrics.measure(spark)(grouped())._2)))
+    assert(shapes.distinct == Seq((1, 2, 7L)), shapes)
+  }
+
+  test("two threads measuring concurrently each see only their own jobs") {
+    val go = new CountDownLatch(1)
+    @volatile var failure: Option[Throwable] = None
+    def measuring(plan: () => Any): (Thread, collection.mutable.ArrayBuffer[RunMetrics.Record]) = {
+      val recs = collection.mutable.ArrayBuffer.empty[RunMetrics.Record]
+      val t = new Thread(() =>
+        try {
+          assert(go.await(60, TimeUnit.SECONDS))
+          (1 to 10).foreach(_ => recs += RunMetrics.measure(spark)(plan())._2)
+        } catch { case e: Throwable => failure = Some(e) })
+      (t, recs)
+    }
+    aqeOff {
+      val (a, aRecs) = measuring(() => grouped())
+      val (b, bRecs) = measuring(() => summed())
+      a.start(); b.start(); go.countDown(); a.join(); b.join()
+      failure.foreach(throw _)
+      assert(aRecs.map(shape).distinct == Seq((1, 2, 7L)), aRecs.map(shape))
+      assert(bRecs.map(shape).distinct == Seq((1, 2, 6L)), bRecs.map(shape))
+      assert(aRecs.exists(x => bRecs.exists(y => x.startMs < y.endMs && y.startMs < x.endMs)),
+        "the two threads' measures never overlapped; the case tested nothing")
+    }
+  }
+
+  test("an AvailableNow stream started inside a measure is counted") {
+    val root = Files.createTempDirectory("graft-runmetrics-stream").toString
+    import spark.implicits._
+    (0 until 100).map(_.toLong).toDF("id").repartition(2).write.parquet(s"$root/in")
+    val (_, rec) = RunMetrics.measure(spark) {
+      val q = spark.readStream.schema("id long").parquet(s"$root/in")
+        .writeStream
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.write.format("noop").mode("overwrite").save()
+        }
+        .start()
+      assert(q.awaitTermination(120000))
+      assert(q.exception.isEmpty, q.exception)
+    }
+    assert(rec.jobs.nonEmpty, "the stream thread's jobs must carry the measure's tag")
+    assert(rec.total(_.inputRecords) == 100, rec)
+    FileUtils.deleteQuietly(new File(root))
+  }
+
+  test("after a body throws, the next measure still works") {
+    intercept[Exception](RunMetrics.measure(spark)(
+      spark.range(0, 4, 1, 2).selectExpr("assert_true(id < 2)").collect()))
+    intercept[IllegalArgumentException](RunMetrics.measure(spark)(
+      throw new IllegalArgumentException("boom")))
+    assert(shape(aqeOff(RunMetrics.measure(spark)(grouped())._2)) == ((1, 2, 7L)))
+  }
+
+  test("a nested measure throws") {
+    val e = intercept[IllegalStateException](
+      RunMetrics.measure(spark)(RunMetrics.measure(spark)(1)))
+    assert(e.getMessage.contains("nest"))
+    assert(RunMetrics.measure(spark)(2)._1 == 2)
+  }
+
+  test("guard: no src/main code installs a listener outside RunMetrics") {
+    val raw = ("""extends\s+SparkListener\b|new\s+(org\.apache\.spark\.scheduler\.)?""" +
+      """SparkListener\b|addSparkListener\(|extends\s+QueryExecutionListener\b|""" +
+      """new\s+QueryExecutionListener\b|listenerManager\.register\(""").r
+    // (path suffix, code line) -> why it may listen on its own
+    val exempt = Map(
+      ("graft/lineage/Lineage.scala", "extends QueryExecutionListener {") ->
+        ("LineageListener turns finished queries into OpenLineage run " +
+          "events for an external lineage sink; it records no metrics"))
+    val root = new File("src/main/scala")
+    val files = FileUtils.listFiles(root, Array("scala"), true).toArray
+      .map(_.asInstanceOf[File]).toSeq
+    assert(files.exists(_.getName == "RunMetrics.scala"), s"no sources under $root")
+    val hits = for {
+      f <- files
+      path = f.getPath.replace('\\', '/')
+      if !path.endsWith("graft/obs/RunMetrics.scala")
+      (line, n) <- FileUtils.readFileToString(f, "UTF-8").split("\n").zipWithIndex
+      code = line.replaceAll("//.*$", "").trim
+      if !code.startsWith("*") && !code.startsWith("/**")
+      if raw.findFirstIn(code).isDefined
+      if !exempt.exists { case ((suffix, text), _) => path.endsWith(suffix) && code == text }
+    } yield s"$path:${n + 1}: $code"
+    assert(hits.isEmpty, "listeners outside graft.obs.RunMetrics:\n" + hits.mkString("\n"))
+  }
+}

@@ -245,10 +245,8 @@ class WaveCommitSpec extends AnyFunSuite {
           val waves = f.waves()
           waves.zipWithIndex.foreach { case (b, i) => w(b, i.toLong) }
           val expected = f.sinks.size * waves.size
-          // listener delivery is asynchronous
-          val deadline = System.currentTimeMillis() + 30000
-          while (writes.seen.size < expected &&
-              System.currentTimeMillis() < deadline) Thread.sleep(50)
+          // execution listeners run on the listener bus: deliver its events
+          org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
           val commits = writes.seen.asScala.toSeq
           assert(commits.size == expected, commits.map(_._1).mkString("\n"))
           commits.foreach { case (path, qe) =>
