@@ -20,6 +20,12 @@ import graft.streaming.HeadwaysStream
   * graft.Main curate    <documentsParquet> <outDir>
   * }}}
   *
+  * `stream` runs [[graft.streaming.HeadwaysStream]] once over the raw
+  * files its checkpoint has not seen and maintains the date-partitioned
+  * silver layout the poll path writes: `<silverDir>/stg_arrivals_by_date/`,
+  * `<silverDir>/fct_headways_by_date/` and `<silverDir>/state_last_arrival/`,
+  * each partitioned by `date=<d>`.
+  *
   * Scheduling stays external, as in the reference (its Airflow cron ↔ any
   * scheduler invoking these mains). The synthetic transport stands in for
   * the TfL API in this zero-egress environment; production swaps it for a

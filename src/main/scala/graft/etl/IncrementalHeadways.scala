@@ -17,23 +17,24 @@ import org.apache.spark.sql.functions._
   * history is irrelevant.
   *
   * Contract: the raw zone is APPEND-ONLY in date order (the reference's
-  * model). Backfilling an older date D' would change the boundary of the
-  * first post-D' partitions — recompute those dates too, or run the full
-  * [[FctHeadways]].
+  * model). Backfilling an older date D' changes the boundary of the
+  * first post-D' partitions, so every date from D' on is recomputed
+  * ([[graft.streaming.HeadwaysStream]] does), or the full [[FctHeadways]]
+  * runs.
   *
   * Scale shape: the boundary aggregation is a per-key max over prior
-  * dates — partition-pruned when the caller restricts `prior` (e.g. a
-  * bounded lookback, or a maintained last-arrival state table); the gap
-  * window then runs over (new events + one row per active key), i.e.
-  * O(day volume), not O(history).
+  * dates — O(active keys) when the caller's frame reads a maintained
+  * last-arrival state table for them; the gap window then runs over
+  * (new events + one row per active key), i.e. O(day volume), not
+  * O(history).
   */
 object IncrementalHeadways {
 
   /** The maintained boundary source: one row per (line_id, stop_id) with
     * the key's latest arrival — O(active keys) rows, independent of
-    * history depth. Passing this as `prior` to [[forDate]] replaces the
-    * per-key max scan over all prior partitions with a read of a
-    * key-count-sized table: the 100 TB shape (the fleet has ~thousands of
+    * history depth. In [[forDate]]'s events in place of the prior dates,
+    * it replaces the per-key max scan over all prior partitions with a read
+    * of a key-count-sized table: the 100 TB shape (the fleet has ~thousands of
     * (line, stop) keys regardless of how many years of events exist).
     */
   def lastArrivalState(events: DataFrame): DataFrame =
@@ -41,18 +42,17 @@ object IncrementalHeadways {
       .groupBy("line_id", "stop_id").agg(max("event_ts").as("event_ts"))
 
   /** Mart rows for `date` (ISO `yyyy-MM-dd`), exactly as the full
-    * recompute would produce them. `newEvents`: staged events from any
+    * recompute would produce them. `events`: staged events from any
     * superset of that date's arrivals (a late poll's partition holds
-    * next-date arrivals). `prior`: staged events from any superset of
-    * "each key's latest arrival before `date`" (pass all history for
-    * exactness, a pruned lookback for economy).
+    * next-date arrivals) and of each key's latest arrival before `date`
+    * (a last-arrival state table serves the second part).
     */
-  def forDate(newEvents: DataFrame, prior: DataFrame, date: String): DataFrame = {
+  def forDate(events: DataFrame, date: String): DataFrame = {
     val d = to_date(lit(date))
-    val ev = newEvents.filter(col("event_ts").isNotNull &&
+    val ev = events.filter(col("event_ts").isNotNull &&
         to_date(col("event_ts")) === d)
       .select("line_id", "stop_id", "event_ts")
-    val boundary = prior.filter(col("event_ts").isNotNull &&
+    val boundary = events.filter(col("event_ts").isNotNull &&
         to_date(col("event_ts")) < d)
       .groupBy("line_id", "stop_id").agg(max("event_ts").as("event_ts"))
     val g = FctHeadways.gaps(ev.unionByName(boundary))

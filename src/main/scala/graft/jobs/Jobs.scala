@@ -174,18 +174,16 @@ object Jobs {
     * its events from every staged partition up to `date`, not from its
     * own partition alone.
     *
-    * `lookbackDays`: bound the boundary scan to the last N date
-    * partitions. None = exact over all history; only consulted on the
-    * fallback path — once a LAST-ARRIVAL STATE TABLE exists
-    * (`<silver>/state_last_arrival/date=<d>`: each key's latest arrival
-    * dated `d` or earlier, maintained here), the boundary reads that
-    * instead, plus the staged partitions from the state's date on:
-    * O(active keys) rows regardless of history depth, the extreme-scale
-    * shape. The state is a per-key max, so re-running a date is
-    * idempotent.
+    * The boundary reads every staged partition until a LAST-ARRIVAL
+    * STATE TABLE exists (`<silver>/state_last_arrival/date=<d>`: each
+    * key's latest arrival dated `d` or earlier, maintained here); from
+    * then on it reads that, plus the staged partitions from the state's
+    * date on: O(active keys) rows regardless of history depth, the
+    * extreme-scale shape. The state is a per-key max, so re-running a
+    * date is idempotent.
     */
   def transformIncremental(spark: SparkSession, rawDir: String,
-      silverDir: String, date: String, lookbackDays: Option[Int] = None,
+      silverDir: String, date: String,
       lineage: graft.lineage.LineageSink = graft.lineage.Lineage.NoopSink): Unit =
     graft.lineage.Lineage.tracked(lineage, "graft.transform_incremental",
       inputs = Seq(s"$rawDir/date=$date"),
@@ -199,7 +197,7 @@ object Jobs {
         .write.mode(SaveMode.Overwrite).parquet(s"$stgRoot/date=$date")
       // staged partitions from `from` (inclusive) through `date`
       def staged(from: String) = {
-        val dirs = listPartitionDates(spark, stgRoot)
+        val dirs = partitionDates(spark, stgRoot)
           .filter(d => d >= from && d <= date).map(d => s"$stgRoot/date=$d")
         spark.read.schema(Schemas.stgArrivals).parquet(dirs: _*)
           .select(events.map(col): _*)
@@ -211,7 +209,7 @@ object Jobs {
       // between the mart and state writes, or a date staged but never
       // transformed, leaves later partitions the state has not absorbed),
       // else every staged partition
-      val stateDate = listPartitionDates(spark, stateRoot).filter(_ < date)
+      val stateDate = partitionDates(spark, stateRoot).filter(_ < date)
         .maxOption
       val history = stateDate match {
         case Some(d) => spark.read.schema(Schemas.stgArrivals)
@@ -219,15 +217,7 @@ object Jobs {
           .unionByName(staged(d))
         case None => staged("")
       }
-      // the mart may apply the caller's explicitly-accepted lookback on
-      // the fallback path; the state never does — it is persistent, and a
-      // truncated first build would corrupt every later date
-      val martInput = (stateDate, lookbackDays) match {
-        case (None, Some(n)) =>
-          staged(java.time.LocalDate.parse(date).minusDays(n).toString)
-        case _ => history
-      }
-      graft.etl.IncrementalHeadways.forDate(martInput, martInput, date)
+      graft.etl.IncrementalHeadways.forDate(history, date)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$silverDir/fct_headways_by_date/date=$date")
       graft.etl.IncrementalHeadways.lastArrivalState(
@@ -238,7 +228,7 @@ object Jobs {
   /** Partition dates (`date=<d>` dir names) under a root; empty if the
     * root does not exist. Driver-side listing of O(dates) names.
     */
-  private def listPartitionDates(spark: SparkSession, root: String): Seq[String] = {
+  private[graft] def partitionDates(spark: SparkSession, root: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty

@@ -8,13 +8,13 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{DedupStream, HeadwaysStream, IdempotentSink, NearDupStream}
 
-/** Scale-tier driver for the two streaming paths — the committed evidence
+/** Scale-tier driver for three streaming paths — the committed evidence
   * behind BENCH_STREAM.json: `runMain graft.tools.BenchStream [sfDir] [outJson]`.
   *
   * The kill/restart and exactly-once proofs live in StreamingDedupSpec /
   * StreamingSinkSpec at spec scale; this runs the SAME protocols at a
   * real tier (default sf1: 50k documents / 1M events) and records walls,
-  * state sizes, and the two byte-equality gates:
+  * state sizes, and their byte-equality gates:
   *
   *  A. [[DedupStream]]: 8 id-range waves of `documents`, one fresh
   *     AvailableNow query per wave (= a kill-and-restart cycle over one
@@ -25,11 +25,11 @@ import graft.streaming.{DedupStream, HeadwaysStream, IdempotentSink, NearDupStre
   *     id-RANGE splits so each fingerprint's global-min id lives in the
   *     first wave that sees the fingerprint — the precondition for exact
   *     keep_id equality with the batch path.
-  *  B. [[HeadwaysStream.startIncrementalMart]]: `events` mapped onto the
-  *     raw-arrival contract, 6 time-range waves (equal timestamps never
-  *     straddle a wave, so the cross-batch late-drop policy never fires),
-  *     per-wave restart cycles, a forced replay, and streamed gaps ≡
-  *     batch window recompute.
+  *  B. [[HeadwaysStream]]: `events` mapped onto the raw-arrival
+  *     contract, 6 time-range waves, each wave's rows under the `date=`
+  *     directory of their timestamps, per-wave restart cycles, a forced
+  *     replay that must leave the mart row-identical, and the per-date
+  *     marts ≡ [[graft.jobs.Jobs.transform]]'s mart.
   */
 object BenchStream {
 
@@ -128,8 +128,8 @@ object BenchStream {
     val ledgerFps = DedupStream.ledgerFps(spark, ledger).count()
     val survivorCount = streamed.count()
 
-    // ---- B: incremental headways mart -----------------------------------
-    val rawB = s"$root/rawB"; val outB = s"$root/outB"; val ckptB = s"$root/ckptB"
+    // ---- B: streaming headway mart --------------------------------------
+    val rawB = s"$root/rawB"; val silverB = s"$root/silverB"; val ckptB = s"$root/ckptB"
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
       .filter(col("ts").isNotNull)
       .select(
@@ -138,6 +138,7 @@ object BenchStream {
         lit("p").as("platformName"), lit("d").as("destinationName"),
         (col("value") * 100).cast("long").as("timeToStation"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("timestamp"),
+        date_format(col("ts"), "yyyy-MM-dd").as("date"),
         // events.ts is TIMESTAMP_NTZ at this tier — unix_micros wants TIMESTAMP
         unix_micros(col("ts").cast("timestamp")).as("us"))
     val (lo, hi) = {
@@ -146,7 +147,7 @@ object BenchStream {
     val nEvents = ev.count()
     val martWaves = 6
     def runMart(tag: String): Double = timed {
-      val q = HeadwaysStream.startIncrementalMart(spark, rawB, outB, ckptB)
+      val q = HeadwaysStream.start(spark, rawB, silverB, ckptB)
       require(q.awaitTermination(600000), s"$tag: query did not terminate")
       require(q.exception.isEmpty, s"$tag failed: ${q.exception}")
     }
@@ -155,35 +156,31 @@ object BenchStream {
       val b1 = lo + (i + 1) * (hi - lo) / martWaves
       val tmp = s"$root/tmpB_$i"
       ev.filter(col("us") >= b0 && col("us") < b1).drop("us")
-        .coalesce(1).write.parquet(tmp)
-      val dateDir = new java.io.File(s"$rawB/date=2026-01-01"); dateDir.mkdirs()
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      require(part.renameTo(new java.io.File(dateDir, s"arrivals_w$i.parquet")))
+        .coalesce(1).write.partitionBy("date").parquet(tmp)
+      // raw-zone contract: one arrivals_* snapshot file per date the wave
+      // touches, under that date's directory
+      new java.io.File(tmp).listFiles().filter(_.getName.startsWith("date=")).foreach { d =>
+        val dateDir = new java.io.File(rawB, d.getName); dateDir.mkdirs()
+        val part = d.listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+        require(part.renameTo(new java.io.File(dateDir, s"arrivals_w$i.parquet")))
+      }
       runMart(s"mart wave $i")
     }
-    val martIds = IdempotentSink.committedBatches(spark, outB)
-    val martNewest = martIds.max
+    def mart = spark.read.option("basePath", s"$silverB/fct_headways_by_date")
+      .parquet(s"$silverB/fct_headways_by_date/date=*").drop("date")
+    def same(a: DataFrame, b: DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    mart.write.parquet(s"$root/martB_before_replay")
+    val martNewest = new java.io.File(s"$ckptB/commits").listFiles()
+      .map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong).max
     require(new java.io.File(s"$ckptB/commits/$martNewest").delete())
     new java.io.File(s"$ckptB/commits/.$martNewest.crc").delete()
     val martReplay = runMart("mart forced replay")
-    require(IdempotentSink.committedBatches(spark, outB) == martIds,
-      "mart replay must commit no new batch")
-    val streamedGaps = IdempotentSink.readCommitted(spark, outB)
-      .select("line_id", "stop_id", "event_ts", "headway_s")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("line_id", "stop_id").orderBy("event_ts")
-    val batchGaps = graft.etl.StgArrivals(spark, rawB)
-      .filter(col("event_ts").isNotNull)
-      .select(col("line_id"), col("stop_id"), col("event_ts"))
-      .withColumn("prev_ts", lag("event_ts", 1).over(w))
-      .filter(col("prev_ts").isNotNull)
-      .select(col("line_id"), col("stop_id"), col("event_ts"),
-        ((unix_micros(col("event_ts")) - unix_micros(col("prev_ts")))
-          .cast("double") / 1e6).as("headway_s"))
-    val martEqual = streamedGaps.exceptAll(batchGaps).isEmpty &&
-      batchGaps.exceptAll(streamedGaps).isEmpty
-    val martRows = streamedGaps.count()
+    val replayEqual = same(mart, spark.read.parquet(s"$root/martB_before_replay"))
+    graft.jobs.Jobs.transform(spark, rawB, s"$root/silverB_full")
+    val martEqual = same(mart, spark.read.parquet(s"$root/silverB_full/fct_headways"))
+    val martRows = mart.count()
 
     // ---- C: streaming near-dup admission --------------------------------
     // same wave protocol as A over the near-dup operator: per-wave
@@ -303,8 +300,8 @@ object BenchStream {
       s""""batch_equal":$dedupEqual,"ledger_exchange_free":${!ledgerShuffled},""" +
       s""""ledger_bytes":${dirBytes(ledger)}},""" +
       s""""mart":{"wave_walls":${arr(martWalls)},"replay_s":${f"$martReplay%.3f"},""" +
-      s""""rows":$martRows,"batch_equal":$martEqual,""" +
-      s""""state_ckpt_bytes":${dirBytes(s"$ckptB/state")}},""" +
+      s""""rows":$martRows,"batch_equal":$martEqual,"replay_equal":$replayEqual,""" +
+      s""""state_last_arrival_bytes":${dirBytes(s"$silverB/state_last_arrival")}},""" +
       s""""neardup":{"wave_walls":${arr(ndWalls)},"replay_s":${f"$ndReplay%.3f"},""" +
       s""""compact1_s":${f"$ndCompact1%.3f"},"compact2_s":${f"$ndCompact2%.3f"},""" +
       s""""verdicts":$ndTotal,"admitted":$ndAdmitted,"batch_equal":$ndEqual,""" +
@@ -313,7 +310,7 @@ object BenchStream {
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
-    require(dedupEqual && martEqual && ndEqual && !ledgerShuffled &&
+    require(dedupEqual && martEqual && replayEqual && ndEqual && !ledgerShuffled &&
       !ndLedgerShuffled,
       "scale-tier streaming gates must hold")
     spark.stop()

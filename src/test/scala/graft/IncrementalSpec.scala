@@ -30,12 +30,12 @@ class IncrementalSpec extends AnyFunSuite {
     val ev = Tables3DayFixture()
     val full = FctHeadways(ev)
     val dates = Seq("2026-03-01", "2026-03-02", "2026-03-03")
-    val inc = dates.map(d => IncrementalHeadways.forDate(ev, ev, d))
+    val inc = dates.map(d => IncrementalHeadways.forDate(ev, d))
       .reduce(_ unionByName _)
     sameFrames(full, inc)
     // and the midnight boundary actually exercises: date-2 must contain an
     // hour-0 row whose gap reaches back into date-1
-    val d2h0 = IncrementalHeadways.forDate(ev, ev, "2026-03-02")
+    val d2h0 = IncrementalHeadways.forDate(ev, "2026-03-02")
       .filter(col("hour") === lit("2026-03-02 00:00:00").cast("timestamp_ntz"))
     assert(d2h0.count() > 0, "midnight-straddling gap must land in date-2 hour 0")
   }

@@ -168,61 +168,15 @@ class JobsSpec extends AnyFunSuite {
     }
     val q = HeadwaysStream.start(spark, raw, s"$root/silver", s"$root/ckpt")
     q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$root/silver/fct_headways")
+    assert(q.exception.isEmpty, s"streaming query failed: ${q.exception}")
+    val streamed = spark.read
+      .option("basePath", s"$root/silver/fct_headways_by_date")
+      .parquet(s"$root/silver/fct_headways_by_date/date=*")
+      .drop("date")
     Jobs.transform(spark, raw, s"$root/silver_batch")
     val batch = spark.read.parquet(s"$root/silver_batch/fct_headways")
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("incremental stream: per-key gap state matches the batch mart's gaps") {
-    val root = Files.createTempDirectory("graft-incr").toString
-    val raw = s"$root/raw"
-    (0 until 3).foreach { i =>
-      val at = t0.plusSeconds(i * 120L)
-      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
-    }
-    val q = HeadwaysStream.startIncremental(spark, raw, s"$root/gaps", s"$root/ckpt")
-    q.awaitTermination(60000)
-    val gaps = spark.read.parquet(s"$root/gaps")
-    assert(gaps.count() > 0)
-    // single AvailableNow batch: every staged arrival after the first of
-    // its (line, stop) key emits exactly one gap
-    val stg = graft.etl.StgArrivals(spark, raw).filter(col("event_ts").isNotNull)
-    val expected = stg.count() -
-      stg.select("line_id", "stop_id").distinct().count()
-    assert(gaps.count() == expected, s"gaps=${gaps.count()} expected=$expected")
-    assert(gaps.filter(col("headway_s") < 0).count() == 0, "gaps never negative")
-  }
-
-  test("watermarked windowed aggregation over the raw stream") {
-    val root = Files.createTempDirectory("graft-window").toString
-    val raw = s"$root/raw"
-    (0 until 2).foreach { i =>
-      val at = t0.plusSeconds(i * 120L)
-      Jobs.ingest(spark, raw, at, SyntheticArrivals.transport(at))
-    }
-    val agg = HeadwaysStream.windowedArrivalCounts(spark, raw)
-    assert(agg.isStreaming, "windowed agg must be a streaming frame")
-    // complete mode keeps open windows visible, so the streamed state can
-    // be compared exactly against the batch-equivalent aggregation
-    val q = agg.writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(q.exception.isEmpty, s"streaming query failed: ${q.exception}")
-    val streamed = spark.table("win_counts")
-      .select("hour", "line_id", "n_arrivals")
-    val batchEquiv = graft.etl.StgArrivals(spark, raw)
-      .filter(col("event_ts").isNotNull)
-      .groupBy(org.apache.spark.sql.functions
-        .window(col("event_ts"), "1 hour")("start").as("hour"), col("line_id"))
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n_arrivals"))
-    assert(streamed.count() > 0)
-    assert(streamed.exceptAll(batchEquiv).isEmpty &&
-      batchEquiv.exceptAll(streamed).isEmpty,
-      "streamed windowed counts must equal the batch aggregation")
   }
 
   test("ingest is idempotent under replay: same poll instant writes once") {
