@@ -1,8 +1,9 @@
 package graft.core
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's one way to cut lineage and cache a mid-frame, and to free
@@ -18,7 +19,8 @@ import org.apache.spark.storage.StorageLevel
   *    action would otherwise re-analyze. It is a reliable `checkpoint()`
   *    when the context has a checkpoint dir (`spark.checkpoint.dir` /
   *    `setCheckpointDir`: files that survive executor loss) and a
-  *    `localCheckpoint()` otherwise.
+  *    `localCheckpoint()` otherwise. [[countedLeaf]] also returns the
+  *    leaf's row count, from the same action.
   *  - [[release]] frees a leaf early, once nothing will read it again.
   *  - [[scoped]] opens an OWNER on the calling thread: every cut made on
   *    that thread inside the block is released, newest first, when the
@@ -76,6 +78,15 @@ object Cuts {
       else df.localCheckpoint()
     own(() => release(l))
     l
+  }
+
+  /** [[leaf]], plus the cut's row count, taken by the checkpoint action
+    * itself through `Dataset.observe`: no second job counts the stored
+    * rows. */
+  def countedLeaf(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val l = leaf(df.observe(rows, count(lit(1)).as("rows")))
+    (l, rows.get("rows").asInstanceOf[Long])
   }
 
   @scala.annotation.tailrec

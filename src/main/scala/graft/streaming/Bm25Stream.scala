@@ -92,7 +92,7 @@ object Bm25Stream {
   def writer(postingsDir: String, statsDir: String, totalsDir: String,
       textCol: String, idCol: String,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery,
+    WaveCommit.writer(Seq(postingsDir, statsDir, totalsDir), compactEvery,
         compactLedgers(_, postingsDir, statsDir, totalsDir)) { wave =>
       val (p, st) =
         graft.text.IncrementalBm25.indexWave(wave.batch, textCol, idCol)

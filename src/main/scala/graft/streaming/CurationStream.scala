@@ -30,7 +30,8 @@ import graft.dedup.Dedup
   * rejects by cause without re-deriving anything.
   *
   * Exactly-once by [[WaveCommit]]'s protocol: the verdict commits first,
-  * then the fps → bands → sigs ledgers, derived from the durable verdict.
+  * then the fps, bands and sigs ledgers concurrently, each derived from
+  * the durable verdict and the wave's own frames.
   */
 object CurationStream {
 
@@ -73,13 +74,16 @@ object CurationStream {
     graft.pipeline.Curation.benchGramSet(benchmark, textCol, idCol, n)
       .write.mode("overwrite").parquet(dir)
 
-  /** Compact all three ledgers on the usual maintenance cadence: fps
-    * fp-bucketed ([[DedupStream.compactLedger]]), bands/sigs via
-    * [[NearDupStream.compactLedgersApprox]]. */
+  /** Compact all three ledgers on the usual maintenance cadence, fps ∥
+    * bands ∥ sigs ([[WaveCommit.concurrently]]): fps fp-bucketed
+    * ([[DedupStream.compactLedger]]), bands/sigs via
+    * [[NearDupStream.compactLedgersApprox]]. No ledger's compaction reads
+    * another's rows. */
   def compactLedgers(spark: SparkSession, fpsDir: String, bandsDir: String,
       sigsDir: String, buckets: Int = 8): Unit = {
-    DedupStream.compactLedger(spark, fpsDir, buckets)
-    NearDupStream.compactLedgersApprox(spark, bandsDir, sigsDir, buckets)
+    WaveCommit.concurrently(spark)(Seq(
+      () => DedupStream.compactLedger(spark, fpsDir, buckets),
+      () => NearDupStream.compactLedgersApprox(spark, bandsDir, sigsDir, buckets)))
     ()
   }
 
@@ -128,7 +132,7 @@ object CurationStream {
       sigsDir: String, benchGrams: Option[(String, Int)], textCol: String,
       idCol: String, qualityThreshold: Double, simThreshold: Double,
       portable: Boolean, compactEvery: Int): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery,
+    WaveCommit.writer(Seq(verdictDir, fpsDir, bandsDir, sigsDir), compactEvery,
         compactLedgers(_, fpsDir, bandsDir, sigsDir)) { wave =>
       // quality + fingerprint in one pass over the batch source; every
       // downstream frame reads this cache (lineage = batch source only,
@@ -154,9 +158,10 @@ object CurationStream {
       // The verdict commit reads it from several subtrees (the exact_new
       // flag, the kernel's batch bands, candidates and verify), and the
       // band/sig commits read it again; a lazy persist would be raced by
-      // the verdict's own consumers (WaveCommit's SCOPE)
+      // the verdict's own consumers (WaveCommit's SCOPE). Its checkpoint
+      // action also counts it, for the kernel's broadcast gate
       val toks = graft.text.TextFunctions.tokens(col("text"))
-      val sk = Cuts.leaf(cleanDocs
+      val (sk, skRows) = Cuts.countedLeaf(cleanDocs
         .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
@@ -167,11 +172,11 @@ object CurationStream {
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       // the kernel's band rows, hot keys and candidates feed this one
-      // commit: leaves too (the gate's count of sk reads stored blocks)
+      // commit: leaves too
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, NearDupStream.ApproxBandsSchema),
         wave.ledger(sigsDir, NearDupStream.SigsSchema), simThreshold,
-        Cuts.leaf, hotBandCap = 4096)
+        Cuts.leaf, knownRows = Some(skRows), hotBandCap = 4096)
       val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
         (col("quality") >= qualityThreshold).as("q_pass"))
       val verdict = flags.fold(scoredVerdict)(f =>
@@ -192,13 +197,15 @@ object CurationStream {
             col("first_match")): _*)
       wave.commit(verdictDir, verdict)
       // ledger rows from the durable verdict; the joins read the scored
-      // cache and the sketch leaf — batch-sized work, no stage re-runs
+      // cache (filled by the sk leaf's action) and the sketch leaf —
+      // batch-sized work, no stage re-runs, so the three commit at once
       val durable = wave.committed(verdictDir)
-      wave.commit(fpsDir, scored.join(durable.filter(col("exact_new"))
-        .select(col("doc_id").as("id")), Seq("id")).select("fp"))
       val admittedSk = sk.join(durable.filter(col("admitted"))
         .select(col("doc_id").as("id")), Seq("id"))
-      wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
-      wave.commit(sigsDir, admittedSk.select("id", "sig"))
+      wave.commitAll(
+        fpsDir -> scored.join(durable.filter(col("exact_new"))
+          .select(col("doc_id").as("id")), Seq("id")).select("fp"),
+        bandsDir -> Dedup.MinHashLsh.bandRowsOfSigs(admittedSk),
+        sigsDir -> admittedSk.select("id", "sig"))
     }
 }

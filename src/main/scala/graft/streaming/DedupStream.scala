@@ -89,7 +89,8 @@ object DedupStream {
     */
   def writer(survivorsDir: String, ledgerDir: String, textCol: String,
       idCol: String, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactLedger(_, ledgerDir)) { wave =>
+    WaveCommit.writer(Seq(survivorsDir, ledgerDir), compactEvery,
+        compactLedger(_, ledgerDir)) { wave =>
       // both commits action the same plan; the persist keeps the dedup +
       // anti-join from running twice
       val survivors = Cuts.persist(Dedup.exactIncremental(

@@ -74,6 +74,14 @@ object IdempotentSink {
     ()
   }
 
+  /** Whether batch `batchId` of the sink at `outDir` holds its commit
+    * marker. */
+  def isCommitted(spark: SparkSession, outDir: String, batchId: Long): Boolean = {
+    val root = new Path(outDir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(markerPath(root, batchId))
+  }
+
   /** Batch ids whose commit marker exists — the set a strict reader trusts. */
   def committedBatches(spark: SparkSession, outDir: String): Seq[Long] = {
     val root = new Path(outDir)

@@ -96,7 +96,8 @@ object MediaDedupStream {
   def writer(verdictDir: String, chunksDir: String, idCol: String,
       fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactLedger(_, chunksDir)) { wave =>
+    WaveCommit.writer(Seq(verdictDir, chunksDir), compactEvery,
+        compactLedger(_, chunksDir)) { wave =>
       // one fingerprint leaf per batch: the verdict commit reads it from
       // two subtrees (admission, quarantine) and the ledger write again
       val all = Cuts.leaf(
@@ -137,7 +138,7 @@ object MediaDedupStream {
   def clusterWriter(labelsDir: String, mergesDir: String, chunksDir: String,
       idCol: String, fpCol: String, maxHamming: Int = 3,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery,
+    WaveCommit.writer(Seq(labelsDir, mergesDir, chunksDir), compactEvery,
         compactClusterLedgers(_, labelsDir, mergesDir, chunksDir)) { wave =>
       val fps = Cuts.persist(
         wave.batch.select(col(idCol).as("id"), col(fpCol).as("fp")))

@@ -51,8 +51,8 @@ import graft.dedup.Dedup
   *
   * Exactly-once across crash/replay: admission is a pure function of
   * (batch data, COMMITTED ledgers), committed by [[WaveCommit]]'s
-  * protocol (verdict first, ledgers last, ledger rows re-derived from
-  * the durable verdict).
+  * protocol (verdict first and alone, then the ledgers concurrently,
+  * their rows re-derived from the durable verdict).
   */
 object NearDupStream {
 
@@ -152,14 +152,19 @@ object NearDupStream {
     * mode's schema doesn't carry), signatures bucketed on id (the
     * estimator verify's join key, so a compacted sig ledger ships
     * nothing per batch). The two compact independently, as in the exact
-    * mode: rows, not generations, carry the semantics.
+    * mode: rows, not generations, carry the semantics — and, since
+    * neither reads the other's rows (unlike [[compactLedgers]]' sz
+    * backfill), at once ([[WaveCommit.concurrently]]).
     */
   def compactLedgersApprox(spark: SparkSession, bandsDir: String,
-      sigsDir: String, buckets: Int = 8): (Option[String], Option[String]) =
-    (LedgerCompaction.compact(spark, bandsDir, ApproxBandsSchema,
+      sigsDir: String, buckets: Int = 8): (Option[String], Option[String]) = {
+    val Seq(bands, sigs) = WaveCommit.concurrently(spark)(Seq(
+      () => LedgerCompaction.compact(spark, bandsDir, ApproxBandsSchema,
         Seq("band", "bkey"), buckets, backfillKpfx),
-      LedgerCompaction.compact(spark, sigsDir, SigsSchema,
-        Seq("id"), buckets))
+      () => LedgerCompaction.compact(spark, sigsDir, SigsSchema,
+        Seq("id"), buckets)))
+    (bands, sigs)
+  }
 
   /** Rebuild kpfx/sz for band rows written before the columns existed
     * (read as null through [[BandsSchema]]): a doc's `kpfx` at band b is
@@ -256,7 +261,7 @@ object NearDupStream {
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery,
+    WaveCommit.writer(Seq(verdictDir, bandsDir, setsDir), compactEvery,
         compactLedgers(_, bandsDir, setsDir)) { wave =>
       // ONE sketch leaf for the whole batch: sig and sset come from a
       // single shingle traversal (graft.functions.MinHashSigSet, sz = set
@@ -280,9 +285,10 @@ object NearDupStream {
         threshold, Cuts.leaf, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
-      wave.commit(bandsDir,
-        Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")))
-      wave.commit(setsDir, admittedSk.select("id", "sset"))
+      wave.commitAll(
+        bandsDir ->
+          Dedup.MinHashLsh.bandRowsOf(admittedSk.select("id", "sig", "sz")),
+        setsDir -> admittedSk.select("id", "sset"))
     }
 
   /** APPROXIMATE (signature-only) streaming admission — [[writer]] with
@@ -310,23 +316,25 @@ object NearDupStream {
       textCol: String, idCol: String, threshold: Double = 0.5,
       portable: Boolean = false,
       compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery,
+    WaveCommit.writer(Seq(verdictDir, bandsDir, sigsDir), compactEvery,
         compactLedgersApprox(_, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
-      // ONE (id, sig) leaf per wave: admission (its verify-broadcast gate
-      // counts it too) and both ledger writes read its blocks
-      val sk = Cuts.leaf(wave.batch
+      // ONE (id, sig) leaf per wave: admission and both ledger writes read
+      // its blocks, and its checkpoint action counts it for the kernel's
+      // verify-broadcast gate
+      val (sk, skRows) = Cuts.countedLeaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema),
-        threshold, Cuts.leaf, hotBandCap = 4096))
+        threshold, Cuts.leaf, knownRows = Some(skRows), hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
-      wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(admittedSk))
-      wave.commit(sigsDir, admittedSk.select("id", "sig"))
+      wave.commitAll(
+        bandsDir -> Dedup.MinHashLsh.bandRowsOfSigs(admittedSk),
+        sigsDir -> admittedSk.select("id", "sig"))
     }
 
   /** Incrementally-maintained APPROX duplicate CLUSTERS — the streaming
@@ -360,8 +368,9 @@ object NearDupStream {
       sigsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactClusterLedgers(_, labelsDir,
-        mergesDir, bandsDir, sigsDir)) { wave =>
+    WaveCommit.writer(Seq(labelsDir, mergesDir, bandsDir, sigsDir),
+        compactEvery, compactClusterLedgers(_, labelsDir, mergesDir, bandsDir,
+        sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
       val sk = Cuts.persist(wave.batch
         .select(col(idCol).as("id"),
@@ -399,8 +408,9 @@ object NearDupStream {
       bandsDir: String, setsDir: String, textCol: String, idCol: String,
       threshold: Double = 0.5, portable: Boolean = false,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactClusterLedgersExact(_, labelsDir,
-        mergesDir, bandsDir, setsDir)) { wave =>
+    WaveCommit.writer(Seq(labelsDir, mergesDir, bandsDir, setsDir),
+        compactEvery, compactClusterLedgersExact(_, labelsDir, mergesDir,
+        bandsDir, setsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
       val sk = Cuts.persist(wave.batch
         .select(col(idCol).as("id"),

@@ -96,8 +96,9 @@ object SemanticStream {
       repsDir: String, fpsDir: String, vecCol: String, idCol: String,
       centroids: DataFrame, threshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactSemanticLedgers(_, labelsDir,
-        mergesDir, membersDir, repsDir, fpsDir)) { wave =>
+    WaveCommit.writer(Seq(labelsDir, mergesDir, membersDir, repsDir, fpsDir),
+        compactEvery, compactSemanticLedgers(_, labelsDir, mergesDir,
+        membersDir, repsDir, fpsDir)) { wave =>
       val asg = Cuts.persist(SemanticDedup.assignWithSim(
         wave.batch.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
         centroids))
@@ -168,7 +169,8 @@ object SemanticStream {
       idCol: String, centroids: DataFrame, evalSet: DataFrame,
       dupThreshold: Double = 0.97, decontamThreshold: Double = 0.97,
       compactEvery: Int = 16): (DataFrame, Long) => Unit =
-    WaveCommit.writer(compactEvery, compactAdmitLedger(_, repsDir)) { wave =>
+    WaveCommit.writer(Seq(verdictDir, repsDir), compactEvery,
+        compactAdmitLedger(_, repsDir)) { wave =>
       import org.apache.spark.sql.functions.{coalesce, when}
       // leaves: the verdict commit reads the batch and its contamination
       // flags from several subtrees each (WaveCommit's SCOPE)

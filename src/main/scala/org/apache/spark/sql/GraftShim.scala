@@ -4,6 +4,9 @@ package org.apache.spark.sql
   *  - [[drainListenerBus]], the listener bus's `private[spark]` flush, so
   *    [[graft.obs.RunMetrics]] reads a run's record only after every event
   *    the run posted has been delivered;
+  *  - [[onPoolThread]], which runs a body on a pool thread with the
+  *    caller's session and local properties
+  *    ([[graft.streaming.WaveCommit.concurrently]]);
   *  - [[resetStats]] and [[checkpointFresh]], which rebuild a cut's leaf
   *    from `private[sql]` plan nodes, for the reasons below.
   *
@@ -39,6 +42,17 @@ object GraftShim {
     * has seen all of them. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Run `body` on a thread of `pool` as if on the calling thread: Spark's
+    * own `SQLExecution.withThreadLocalCaptured` carries over the active
+    * session and every local property (SQL execution id, job group, the
+    * [[graft.obs.RunMetrics]] tag), so the body's jobs are attributed
+    * exactly as the caller's. */
+  def onPoolThread[T](spark: SparkSession,
+      pool: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], pool)(body)
 
   /** Rebuild `df` as a bare scan of its (already materialized) internal
     * rows — physical partitioning and ordering preserved, inherited

@@ -80,6 +80,55 @@ class RunMetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("a wave's concurrent ledger commits count in its measure, and not in a concurrent one") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-runmetrics-wave").toString
+    // the write executions under the two ledger dirs, by execution id
+    val ledgerWrites = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val writes = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+                Seq("bands", "sigs").exists(k => s.physicalPlanDescription.contains(s"$root/$k/")) =>
+            ledgerWrites.add(s.executionId)
+          case _ => ()
+        }
+    }
+    val w = graft.streaming.NearDupStream.approxWriter(s"$root/out",
+      s"$root/bands", s"$root/sigs", "text", "doc_id")
+    val wave = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten eleven"))
+      .toDF("doc_id", "text")
+    val solo = shape(RunMetrics.measure(spark)(grouped())._2)
+    spark.sparkContext.addSparkListener(writes)
+    try {
+      val done = new CountDownLatch(1)
+      @volatile var failure: Option[Throwable] = None
+      val others = collection.mutable.ArrayBuffer.empty[RunMetrics.Record]
+      val other = new Thread(() =>
+        try while (done.getCount > 0 || others.isEmpty)
+          others += RunMetrics.measure(spark)(grouped())._2
+        catch { case e: Throwable => failure = Some(e) })
+      other.start()
+      val (_, rec) =
+        try RunMetrics.measure(spark)(w(wave, 0L))
+        finally { done.countDown(); other.join() }
+      failure.foreach(throw _)
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+      val commits = ledgerWrites.toArray.map(_.asInstanceOf[Long]).toSet
+      assert(commits.size == 2, s"one write per ledger: $commits")
+      assert(commits.subsetOf(rec.jobs.map(_.executionId).toSet),
+        s"the commit threads' jobs are missing from the wave's record: $commits")
+      assert(others.forall(r => r.jobs.forall(j => !commits(j.executionId))),
+        "a concurrent measure saw the wave's commit jobs")
+      assert(others.map(shape).distinct == Seq(solo), others.map(shape))
+    } finally {
+      spark.sparkContext.removeSparkListener(writes)
+      FileUtils.deleteQuietly(new File(root))
+    }
+  }
+
   test("an AvailableNow stream started inside a measure is counted") {
     val root = Files.createTempDirectory("graft-runmetrics-stream").toString
     import spark.implicits._

@@ -9,6 +9,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -19,6 +21,8 @@ import org.apache.spark.sql.execution.datasources
   .InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.core.Cuts
+import graft.obs.RunMetrics
 import graft.streaming._
 
 /** The wave-commit protocol ([[WaveCommit]]) across every writer family:
@@ -26,8 +30,12 @@ import graft.streaming._
   * leaves no persisted RDD behind, and a crash after ANY commit step of a
   * wave replays to exactly the uninterrupted run's committed outputs —
   * including windows no per-writer spec reaches (e.g. between the bands
-  * and sigs commits). For the single-commit admission writers, no commit
-  * reads one cached frame from two places of its plan (the scope rule).
+  * and sigs commits), and, for the writers whose ledgers commit
+  * concurrently, any subset of those ledgers. A ledger commit that throws
+  * fails its wave only after its siblings finish, and a fully committed
+  * wave replays without running its body. For the single-commit admission
+  * writers, no commit reads one cached frame from two places of its plan
+  * (the scope rule). No other code starts threads of its own.
   */
 class WaveCommitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -89,10 +97,12 @@ class WaveCommitSpec extends AnyFunSuite {
     Seq((6L, vu), (2L, vu), (99L, zero)))
     .map(_.toDF("vec_id", "embedding"))
 
-  /** A writer over sinks `root/<sink>`, listed in commit order. */
+  /** A writer over sinks `root/<sink>`, listed in commit order;
+    * `concurrent` when every sink after the first commits at once
+    * ([[WaveCommit.commitAll]]). */
   private case class Family(name: String, sinks: Seq[String],
       waves: () => Seq[DataFrame], make: String => (DataFrame, Long) => Unit,
-      setup: String => Unit = _ => ())
+      setup: String => Unit = _ => (), concurrent: Boolean = false)
 
   private def bench(root: String): Unit = CurationStream.writeBenchGrams(
     Seq((900L, "one two three four five benchmark suffix words"))
@@ -101,17 +111,17 @@ class WaveCommitSpec extends AnyFunSuite {
   private val families = Seq(
     Family("CurationStream.writer", Seq("out", "fps", "bands", "sigs"),
       () => textWaves, r => CurationStream.writer(s"$r/out", s"$r/fps",
-        s"$r/bands", s"$r/sigs", "text", "doc_id")),
+        s"$r/bands", s"$r/sigs", "text", "doc_id"), concurrent = true),
     Family("CurationStream.decontamWriter", Seq("out", "fps", "bands", "sigs"),
       () => textWaves, r => CurationStream.decontamWriter(s"$r/out",
         s"$r/fps", s"$r/bands", s"$r/sigs", s"$r/bg", "text", "doc_id"),
-      bench),
+      bench, concurrent = true),
     Family("NearDupStream.writer", Seq("out", "bands", "sets"),
       () => textWaves, r => NearDupStream.writer(s"$r/out", s"$r/bands",
-        s"$r/sets", "text", "doc_id")),
+        s"$r/sets", "text", "doc_id"), concurrent = true),
     Family("NearDupStream.approxWriter", Seq("out", "bands", "sigs"),
       () => textWaves, r => NearDupStream.approxWriter(s"$r/out",
-        s"$r/bands", s"$r/sigs", "text", "doc_id")),
+        s"$r/bands", s"$r/sigs", "text", "doc_id"), concurrent = true),
     Family("NearDupStream.clusterWriter",
       Seq("labels", "merges", "bands", "sigs"), () => textWaves,
       r => NearDupStream.clusterWriter(s"$r/labels", s"$r/merges",
@@ -185,6 +195,55 @@ class WaveCommitSpec extends AnyFunSuite {
     f.sinks.map(s => s -> IdempotentSink.readCommitted(spark, s"$root/$s")
       .collect().map(_.toString).toSeq.sorted).toMap
 
+  private def copyOf(dir: String, tag: String): String = {
+    val d = freshDir(tag)
+    FileUtils.copyDirectory(new File(dir), new File(d))
+    d
+  }
+
+  private def uncommit(run: String, sinks: Seq[String], batchId: Long): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    sinks.foreach { s =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$run/$s/batch=$batchId"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$run/$s/_committed-$batchId"), false)
+    }
+  }
+
+  // per family: the dir after waves 0 and 1, and the outputs after wave 2
+  private val runs = collection.mutable.Map.empty[String, (String, Map[String, Seq[String]])]
+
+  private def uninterrupted(f: Family): (String, Map[String, Seq[String]]) =
+    runs.getOrElseUpdate(f.name, {
+      val waves = f.waves()
+      val base = freshDir("graft-wave-crash")
+      f.setup(base)
+      val w = f.make(base)
+      w(waves(0), 0L)
+      w(waves(1), 1L)
+      val ref = copyOf(base, "graft-wave-ref")
+      f.make(ref)(waves(2), 2L)
+      (base, outputs(ref, f))
+    })
+
+  private def expected(f: Family) = uninterrupted(f)._2
+
+  /** For each entry of `kept`, wave 1 died with only those sinks
+    * committed: replay waves 1 and 2 over a copy of the run and `check`
+    * the copy (with the entry's index). */
+  private def crashReplays(f: Family, kept: Seq[Seq[String]])(
+      check: (String, Int) => Unit): Unit = {
+    val (base, _) = uninterrupted(f)
+    val waves = f.waves()
+    kept.zipWithIndex.foreach { case (k, i) =>
+      val run = copyOf(base, "graft-wave-crash-k")
+      uncommit(run, f.sinks.filterNot(k.contains), 1L)
+      val replay = f.make(run)
+      replay(waves(1), 1L)
+      replay(waves(2), 2L)
+      check(run, i)
+    }
+  }
+
   families.foreach { f =>
     test(s"${f.name}: one wave leaves no persisted RDD") {
       val root = freshDir("graft-wave-scope")
@@ -199,36 +258,23 @@ class WaveCommitSpec extends AnyFunSuite {
     }
 
     test(s"${f.name}: a crash after any commit step replays to the uninterrupted outputs") {
-      val waves = f.waves()
-      val base = freshDir("graft-wave-crash")
-      f.setup(base)
-      val w = f.make(base)
-      w(waves(0), 0L)
-      w(waves(1), 1L)
-      def copyOf(tag: String) = {
-        val d = freshDir(tag)
-        FileUtils.copyDirectory(new File(base), new File(d))
-        d
-      }
-      val ref = copyOf("graft-wave-ref")
-      f.make(ref)(waves(2), 2L)
-      val expected = outputs(ref, f)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      f.sinks.indices.foreach { k =>
-        // wave 1 died after its first k commits
-        val run = copyOf("graft-wave-crash-k")
-        f.sinks.drop(k).foreach { s =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$run/$s/batch=1"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$run/$s/_committed-1"), false)
-        }
-        val replay = f.make(run)
-        replay(waves(1), 1L)
-        replay(waves(2), 2L)
-        assert(outputs(run, f) == expected,
-          s"crash after commit $k of ${f.sinks.mkString(" → ")}")
-      }
+      // wave 1 died after its first k commits
+      crashReplays(f, f.sinks.indices.map(k => f.sinks.take(k)))((run, k) =>
+        assert(outputs(run, f) == expected(f),
+          s"crash after commit $k of ${f.sinks.mkString(" → ")}"))
     }
+
+    if (f.concurrent)
+      test(s"${f.name}: a crash after any subset of its concurrent ledger commits replays to the uninterrupted outputs") {
+        val ledgers = f.sinks.tail
+        val subsets = (0 to ledgers.size).flatMap(ledgers.combinations)
+          .filterNot(s => s == ledgers.take(s.size))
+        assert(subsets.nonEmpty)
+        // wave 1 died after its verdict and `subset` of its ledgers
+        crashReplays(f, subsets.map(f.sinks.head +: _))((run, i) =>
+          assert(outputs(run, f) == expected(f),
+            s"crash with ${subsets(i).mkString(", ")} committed of ${ledgers.mkString(" ∥ ")}"))
+      }
 
     // A lazy persist read twice by ONE action is the cache race: under AQE
     // both consumers start before the cache holds a block, so the chain
@@ -265,5 +311,97 @@ class WaveCommitSpec extends AnyFunSuite {
           }
         } finally spark.listenerManager.unregister(writes)
       }
+  }
+  // --- concurrent ledger commits -----------------------------------------
+
+  private val IdSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** A verdict of the batch ids not yet in ledger `a`, then three ledgers
+    * committed at once: `a` and `c` pass a 400 ms sleep per row, so they
+    * are still writing when `b` throws (with `failing`). */
+  private def ledgerWriter(r: String, failing: Boolean): (DataFrame, Long) => Unit = {
+    val slow = udf((id: Long) => { Thread.sleep(400); id })
+    val boom = udf((id: Long) =>
+      if (id >= 0) throw new IllegalStateException("ledger b failed") else id)
+    WaveCommit.writer(Seq("out", "a", "b", "c").map(k => s"$r/$k")) { wave =>
+      val fresh = Cuts.leaf(wave.batch.select("id")
+        .join(wave.ledger(s"$r/a", IdSchema), Seq("id"), "left_anti"))
+      wave.commit(s"$r/out", fresh)
+      val durable = wave.committed(s"$r/out")
+      wave.commitAll(
+        s"$r/a" -> durable.select(slow(col("id")).as("id")),
+        s"$r/b" -> (if (failing) durable.select(boom(col("id")).as("id")) else durable),
+        s"$r/c" -> fresh.join(durable, "id").select(slow(col("id")).as("id")))
+    }
+  }
+
+  test("a ledger commit that throws fails the wave only after its sibling commits finish; the replay is exact") {
+    val waves = Seq(Seq(1L, 2L, 3L), Seq(2L, 3L, 4L, 5L), Seq(5L, 6L))
+      .map(_.toDF("id").coalesce(1))
+    val sinks = Seq("out", "a", "b", "c")
+    val ledgers = Family("ledgerWriter", sinks, () => waves, ledgerWriter(_, false))
+    val (base, want) = uninterrupted(ledgers)
+    val run = copyOf(base, "graft-wave-throw")
+    uncommit(run, sinks, 1L)
+    val e = intercept[Exception](ledgerWriter(run, failing = true)(waves(1), 1L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("ledger b failed")), e)
+    val committed = sinks.filter(k => IdempotentSink.isCommitted(spark, s"$run/$k", 1L))
+    assert(committed == Seq("out", "a", "c"),
+      "the failure must surface only after the sibling commits finished")
+    val replay = ledgerWriter(run, failing = false)
+    replay(waves(1), 1L)
+    replay(waves(2), 2L)
+    assert(outputs(run, ledgers) == want)
+    // (id, batch): each id enters the verdict once, in its first wave
+    assert(want("out") == Seq("[1,0]", "[2,0]", "[3,0]", "[4,1]", "[5,1]", "[6,2]"))
+  }
+
+  test("a fully committed wave replays without running its body: no leaf job") {
+    val f = families.head
+    val (base, _) = uninterrupted(f)
+    val waves = f.waves()
+    def replayed(run: String) = {
+      val (_, rec) = RunMetrics.measure(spark)(f.make(run)(waves(1), 1L))
+      rec.stages.map(_.name)
+    }
+    val run = copyOf(base, "graft-wave-replay")
+    val before = outputs(run, f)
+    val full = replayed(run)
+    assert(!full.exists(_.startsWith("checkpoint")),
+      s"a replay of a committed wave cut a leaf: ${full.mkString("; ")}")
+    assert(full.size == 1, s"only the source batch is evaluated: ${full.mkString("; ")}")
+    assert(outputs(run, f) == before)
+    // one marker missing: the body runs and cuts its leaves again
+    uncommit(run, Seq(f.sinks.last), 1L)
+    val partial = replayed(run)
+    assert(partial.exists(_.startsWith("checkpoint")), partial.mkString("; "))
+    assert(outputs(run, f) == before)
+  }
+
+  test("guard: no src/main code starts threads outside WaveCommit.concurrently and GraftShim") {
+    val raw = """Executors\.|newFixedThreadPool|ExecutionContext|withThreadLocalCaptured|CompletableFuture|new\s+Thread\(""".r
+    // (path suffix, code line) -> why it may run work on threads of its own
+    val exempt = Map(
+      ("graft/lineage/Lineage.scala", "java.util.concurrent.CompletableFuture") ->
+        ("HttpLineageSink schedules the HTTP redelivery of OpenLineage events " +
+          "on the JDK's delayed executor; it runs no Spark job"))
+    val owners = Seq("graft/streaming/WaveCommit.scala",
+      "org/apache/spark/sql/GraftShim.scala")
+    val root = new File("src/main/scala")
+    val files = FileUtils.listFiles(root, Array("scala"), true).toArray
+      .map(_.asInstanceOf[File]).toSeq
+    assert(files.exists(_.getName == "WaveCommit.scala"), s"no sources under $root")
+    val hits = for {
+      f <- files
+      path = f.getPath.replace('\\', '/')
+      if !owners.exists(path.endsWith)
+      (line, n) <- FileUtils.readFileToString(f, "UTF-8").split("\n").zipWithIndex
+      code = line.replaceAll("//.*$", "").trim
+      if !code.startsWith("*") && !code.startsWith("/**")
+      if raw.findFirstIn(code).isDefined
+      if !exempt.exists { case ((suffix, text), _) => path.endsWith(suffix) && code == text }
+    } yield s"$path:${n + 1}: $code"
+    assert(hits.isEmpty, "threads outside WaveCommit.concurrently:\n" + hits.mkString("\n"))
   }
 }
