@@ -6,21 +6,29 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
+import graft.obs.RunMetrics
+
 /** The engine's one way to cut lineage and cache a mid-frame, and to free
-  * it again.
+  * it again. The operator that builds a frame picks its cut by how the
+  * frame is read; no caller passes a cut in.
   *
-  *  - [[persist]] is LAZY, for frames a caller's SEQUENCED actions
-  *    consume, each reading the frame from one place of its plan: the
-  *    first action fills the cache and the later ones read it.
-  *  - [[leaf]] is an EAGER cut, for frames ONE action consumes from
-  *    several subtrees (a lazy persist there is raced under AQE by its
-  *    own consumers, which start before the cache holds a block and
-  *    compute the chain concurrently) and for subtrees every later
-  *    action would otherwise re-analyze. It is a reliable `checkpoint()`
-  *    when the context has a checkpoint dir (`spark.checkpoint.dir` /
-  *    `setCheckpointDir`: files that survive executor loss) and a
-  *    `localCheckpoint()` otherwise. [[countedLeaf]] also returns the
-  *    leaf's row count, from the same action.
+  *  - [[persist]] is LAZY, for SEQUENCED-action loops, each action
+  *    reading the frame from one place of its plan: the first action
+  *    fills the cache and the later ones read it
+  *    ([[graft.dedup.IncrementalClusters.resolveThrough]]'s join-and-count
+  *    rounds, a query's per-wave sketch).
+  *  - [[leaf]] is an EAGER cut, for anything ONE action reads from
+  *    several subtrees — the dedup, media, semantic and BM25 kernels'
+  *    band rows, candidates, hot keys and rep frames included (a lazy
+  *    persist there is raced under AQE by its own consumers, which start
+  *    before the cache holds a block and compute the chain concurrently)
+  *    — and for subtrees every later action would otherwise re-analyze.
+  *    It is a reliable `checkpoint()` when the context has a checkpoint
+  *    dir (`spark.checkpoint.dir` / `setCheckpointDir`: files that
+  *    survive executor loss) and a `localCheckpoint()` otherwise. Its
+  *    jobs carry the caller's `file:line` as their description
+  *    ([[RunMetrics.described]]). [[countedLeaf]] also returns
+  *    the leaf's row count, from the same action.
   *  - [[release]] frees a leaf early, once nothing will read it again.
   *  - [[scoped]] opens an OWNER on the calling thread: every cut made on
   *    that thread inside the block is released, newest first, when the
@@ -73,12 +81,19 @@ object Cuts {
     * context has a checkpoint dir, local otherwise — and register it with
     * the current scope. */
   def leaf(df: DataFrame): DataFrame = {
-    val l =
+    val l = RunMetrics.described(df.sparkSession, callerSite()) {
       if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
       else df.localCheckpoint()
+    }
     own(() => release(l))
     l
   }
+
+  // `File.scala:line` of the first frame outside Cuts: the code that cut
+  private def callerSite(): String =
+    new Throwable().getStackTrace.iterator
+      .find(!_.getClassName.startsWith("graft.core.Cuts"))
+      .fold("Cuts.leaf")(f => s"${f.getFileName}:${f.getLineNumber}")
 
   /** [[leaf]], plus the cut's row count, taken by the checkpoint action
     * itself through `Dataset.observe`: no second job counts the stored

@@ -30,11 +30,14 @@ import graft.text.TextFunctions
   * subtrees only through ReusedExchange, and per-branch column pruning
   * makes the branches' exchanges canonicalize unequal, so without the cut
   * every branch re-runs the sketch kernel (measured at the 100× tier: 3×
-  * the minhash+shingle pass in q31, ~90 s of ~310 s executor time). A
-  * kernel's `scope` argument is that cut: `Cuts.persist` by default,
-  * `Cuts.leaf` where one action reads the kernel's frames from several
-  * subtrees. The cuts belong to the caller's [[graft.core.Cuts.scoped]]
-  * owner (a query, a streaming wave) and are released when it closes.
+  * the minhash+shingle pass in q31, ~90 s of ~310 s executor time). The
+  * incremental kernels (admission, verified pairs, fingerprint matches)
+  * build a plan that ONE action consumes, reading their band rows, hot
+  * keys and candidates from several subtrees, so by the Cuts rule each
+  * kernel cuts those frames to [[graft.core.Cuts.leaf]]s itself, as it
+  * builds the plan: no caller picks the cut. The cuts belong to the
+  * caller's [[graft.core.Cuts.scoped]] owner (a query, a streaming wave)
+  * and are released when it closes.
   */
 object Dedup {
 
@@ -481,12 +484,10 @@ object Dedup {
       */
     def nearDupIncremental(batch: DataFrame, corpus: DataFrame,
         textCol: String, idCol: String, threshold: Double = 0.5,
-        portable: Boolean = false,
-        scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
+        portable: Boolean = false): DataFrame =
       nearDupIncrementalLedger(batch, textCol, idCol,
         bandsFor(corpus, textCol, idCol, portable),
-        setsFor(corpus, textCol, idCol, portable), threshold, portable,
-        scope)
+        setsFor(corpus, textCol, idCol, portable), threshold, portable)
 
     /** The (band, bkey, id, kpfx, sz) rows of a document frame — what
       * production PERSISTS (bucketed on (band, bkey)) as the near-dup
@@ -573,8 +574,7 @@ object Dedup {
       */
     def nearDupIncrementalLedger(batch: DataFrame, textCol: String,
         idCol: String, corpusBands: DataFrame, corpusSets: DataFrame,
-        threshold: Double = 0.5, portable: Boolean = false,
-        scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
+        threshold: Double = 0.5, portable: Boolean = false): DataFrame = {
       val toks = TextFunctions.tokens(col(textCol))
       // one-pass batch sketch (sig + sset in one shingle traversal, sz =
       // set length); the banding and verification branches below each
@@ -588,11 +588,10 @@ object Dedup {
            else graft.functions.Sketches.minhashSigSet(toks)).as("ms"))
         .select(col("id"), col("ms.sig").as("sig"), col("ms.sset").as("sset"))
         .withColumn("sz", size(col("sset")))
-      // batch-sized scope (cache or eager leaf — the caller's choice):
-      // the banding and verification subtrees below would otherwise each
-      // re-run the kernel over the batch
-      nearDupAdmitSketched(scope(sk), batch, corpusBands, corpusSets,
-        threshold, scope)
+      // a batch-sized leaf: the banding and verification subtrees below
+      // would otherwise each re-run the kernel over the batch
+      nearDupAdmitSketched(Cuts.leaf(sk), batch, corpusBands, corpusSets,
+        threshold)
     }
 
     /** [[nearDupIncrementalLedger]] over an ALREADY-SKETCHED batch:
@@ -606,11 +605,9 @@ object Dedup {
       */
     private[graft] def nearDupAdmitSketched(sk: DataFrame,
         sizeHint: DataFrame, corpusBands: DataFrame, corpusSets: DataFrame,
-        threshold: Double,
-        scope: DataFrame => DataFrame = Cuts.persist,
-        hotBandCap: Int = 0): DataFrame = {
+        threshold: Double, hotBandCap: Int = 0): DataFrame = {
       val verified = exactVerifiedPairs(sk, sizeHint, corpusBands,
-        corpusSets, threshold, scope, hotBandCap)
+        corpusSets, threshold, hotBandCap)
       sk.select(col("id").as("doc_id"))
         .join(verified.withColumnRenamed("bid", "doc_id"), Seq("doc_id"), "left")
         .groupBy("doc_id")
@@ -634,20 +631,15 @@ object Dedup {
       */
     private[graft] def exactVerifiedPairs(sk: DataFrame,
         sizeHint: DataFrame, corpusBands: DataFrame, corpusSets: DataFrame,
-        threshold: Double,
-        scope: DataFrame => DataFrame = Cuts.persist,
-        hotBandCap: Int = 0): DataFrame = {
-      // `scope` = compute-once persist for the batch-bounded mid-frames
-      // several subtrees consume (the banded batch rows feed the corpus
+        threshold: Double, hotBandCap: Int = 0): DataFrame = {
+      // [[exactCandidates]] cuts the batch-bounded mid-frames several
+      // subtrees consume to leaves (the banded batch rows feed the corpus
       // probe and both sides of the within-batch self-join; the candidate
       // pair list feeds set pruning and both verify joins). Measured at
-      // the 100× tier WITHOUT it: the same 110 MB banded-batch exchange
+      // the 100× tier WITHOUT a cut: the same 110 MB banded-batch exchange
       // executed 11× (~17-25 s of executor time each) because the
       // differently-aliased consumer subtrees never canonicalize equal.
-      // The default is a lazy Cuts.persist; the STREAMING writer passes
-      // Cuts.leaf (its verdict is one action reading these frames from
-      // several subtrees). Either way the caller's scope — the query, the
-      // wave — releases them (graft.streaming.NearDupStream.writer).
+      // The caller's scope — the query, the wave — releases them.
       val spark = sk.sparkSession
       // verify-broadcast gate (the micro-batch is the small side by
       // construction; past the gate the plan degrades to the honest
@@ -661,7 +653,7 @@ object Dedup {
       val batchBroadcastable =
         sizeHint.queryExecution.optimizedPlan.stats.sizeInBytes <=
           verifyBroadcastMaxBytes(spark)
-      val cand = exactCandidates(sk, corpusBands, threshold, scope,
+      val cand = exactCandidates(sk, corpusBands, threshold,
         batchBroadcastable, hotBandCap)
       val batchSets = sk.select(col("id"), col("sset"))
       val inter = graft.functions.Sketches
@@ -714,22 +706,21 @@ object Dedup {
       * band-ledger probe plus within-batch self-join, split out (exactly
       * as [[approxCandidates]] is for the approx family) so BandStormSpec
       * can pin the hot-bucket guard's per-partition row distribution on
-      * the exact path too. Returns the SCOPED candidate frame. */
+      * the exact path too. Returns the candidate frame as a leaf. */
     private[graft] def exactCandidates(sk: DataFrame,
-        corpusBands: DataFrame, threshold: Double,
-        scope: DataFrame => DataFrame, fits: Boolean,
+        corpusBands: DataFrame, threshold: Double, fits: Boolean,
         hotBandCap: Int = 0): DataFrame = {
-      // DELIBERATELY cached unpartitioned: each consumer join re-exchanges
+      // DELIBERATELY cut unpartitioned: each consumer join re-exchanges
       // the ~110 MB banded batch (3× at the 100× tier — measured), but the
       // alternative — repartition(band, bkey) BEFORE the persist so the
       // cache carries the join partitioning — measured −220 MB shuffle
       // yet +2 s wall (≈ +18%) at that tier, A/B'd in one host window:
-      // the repartition is a barrier that serializes cache
+      // the repartition is a barrier that serializes the cut's
       // materialization ahead of every consumer, and it FREEZES the
       // (band, bkey) skew of dup-heavy buckets into all downstream
       // stages, where the per-join exchanges let AQE re-split hot
       // partitions adaptively per consumer.
-      val bb = scope(bandRowsOf(sk.select("id", "sig", "sz")))
+      val bb = Cuts.leaf(bandRowsOf(sk.select("id", "sig", "sz")))
       // ledgers written before bandsFor carried kpfx/sz (schema
       // evolution) arrive without the columns; conform with nulls — every
       // predicate below is null-safe, and a Project on the bucketed table
@@ -777,14 +768,14 @@ object Dedup {
       val candCorpus = guardedCorpusCandidates(probe,
         cb.select(col("band"), col("bkey"), col("id").as("mid"),
           col("kpfx").as("kpfx_m"), col("sz").as("sz_m")),
-        firstSharedOnly && sizesCompatible, hotBandCap, fits, scope)
+        firstSharedOnly && sizesCompatible, hotBandCap, fits)
       val candBatch = probe
         .join(bb.select(col("band"), col("bkey"), col("id").as("mid"),
           col("kpfx").as("kpfx_m"), col("sz").as("sz_m")),
           Seq("band", "bkey"))
         .filter(col("mid") < col("bid") && firstSharedOnly && sizesCompatible)
         .select("bid", "mid")
-      scope(candCorpus.unionByName(candBatch))
+      Cuts.leaf(candCorpus.unionByName(candBatch))
     }
 
     // --- APPROXIMATE (signature-only) admission ---------------------------
@@ -843,12 +834,10 @@ object Dedup {
       */
     def nearDupIncrementalApprox(batch: DataFrame, corpus: DataFrame,
         textCol: String, idCol: String, threshold: Double = 0.5,
-        portable: Boolean = false,
-        scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
+        portable: Boolean = false): DataFrame =
       nearDupIncrementalLedgerApprox(batch, textCol, idCol,
         bandsForApprox(corpus, textCol, idCol, portable),
-        sigsFor(corpus, textCol, idCol, portable), threshold, portable,
-        scope)
+        sigsFor(corpus, textCol, idCol, portable), threshold, portable)
 
     /** [[nearDupIncrementalApprox]] against PERSISTED ledgers:
       * `corpusBands` = (band, bkey, id, kpfx) rows and `corpusSigs` =
@@ -862,16 +851,16 @@ object Dedup {
       */
     def nearDupIncrementalLedgerApprox(batch: DataFrame, textCol: String,
         idCol: String, corpusBands: DataFrame, corpusSigs: DataFrame,
-        threshold: Double = 0.5, portable: Boolean = false,
-        scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
+        threshold: Double = 0.5, portable: Boolean = false): DataFrame = {
       val toks = TextFunctions.tokens(col(textCol))
       val sk = graft.core.Parallelism.ensure(
           batch.select(col(idCol), col(textCol)))
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig"))
-      nearDupAdmitApproxSketched(scope(sk), corpusBands, corpusSigs,
-        threshold, scope)
+      // a batch-sized leaf, as in [[nearDupIncrementalLedger]]
+      nearDupAdmitApproxSketched(Cuts.leaf(sk), corpusBands, corpusSigs,
+        threshold)
     }
 
     /** [[nearDupIncrementalLedgerApprox]] over an ALREADY-SKETCHED
@@ -890,10 +879,9 @@ object Dedup {
       */
     private[graft] def nearDupAdmitApproxSketched(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
-        scope: DataFrame => DataFrame = Cuts.persist,
-        knownRows: Option[Long] = None, hotBandCap: Int = 0): DataFrame = {
+        hotBandCap: Int = 0): DataFrame = {
       val verified = approxVerifiedPairs(sk, corpusBands, corpusSigs,
-        threshold, scope, knownRows, hotBandCap)
+        threshold, hotBandCap)
       sk.select(col("id").as("doc_id"))
         .join(verified.withColumnRenamed("bid", "doc_id"), Seq("doc_id"), "left")
         .groupBy("doc_id")
@@ -919,38 +907,33 @@ object Dedup {
       * aggregate absorbs and cluster folding tolerates (CC is idempotent
       * under duplicate edges).
       *
-      * `knownRows` threads an already-materialized batch count into the
-      * broadcast gate (the streaming cluster writer counts its persisted
-      * wave sketch once anyway) so constructing the plan schedules no
-      * extra driver job; without it the gate counts `sk` itself — eager
-      * construction, same caveat as [[nearDupPairsApprox]].
+      * Construction is eager: the batch band rows, the hot keys and the
+      * candidates are cut to leaves here.
       */
     private[graft] def approxVerifiedPairs(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
-        scope: DataFrame => DataFrame = Cuts.persist,
-        knownRows: Option[Long] = None, hotBandCap: Int = 0): DataFrame = {
+        hotBandCap: Int = 0): DataFrame = {
       require(threshold > 0 && threshold <= 1,
         s"similarity threshold must lie in (0, 1], got $threshold")
-      val spark = sk.sparkSession
-      // honest gate reused for every wave-sized broadcast below; count
-      // from the caller when it already materialized the wave sketch
-      val batchRows = knownRows.getOrElse(sk.count())
-      val fits = sigTableFits(batchRows, spark)
-      val cand = approxCandidates(sk, corpusBands, scope, fits, hotBandCap)
+      // batch band rows — consumed by the corpus probe and both sides of
+      // the within-batch self-join, whose differently-aliased subtrees
+      // never canonicalize equal: uncut, each re-runs the kernel. The
+      // leaf's own action counts them, and bandKeys emits exactly Bands
+      // rows per doc (a null signature included), so the honest gate
+      // reused for every wave-sized broadcast below needs no count job
+      val (bb, bandRows) = Cuts.countedLeaf(bandRowsOfSigs(sk))
+      val fits = sigTableFits(bandRows / Bands, sk.sparkSession)
+      val cand = approxCandidates(bb, corpusBands, fits, hotBandCap)
       verifyApproxCandidates(sk, cand, corpusSigs, threshold, fits)
     }
 
-    /** Candidate (bid, mid) emission of [[approxVerifiedPairs]] — split
-      * out so BandStormSpec can pin the per-partition row distribution of
-      * the hot-key guard directly. Returns the SCOPED candidate frame. */
-    private[graft] def approxCandidates(sk: DataFrame,
-        corpusBands: DataFrame, scope: DataFrame => DataFrame,
-        fits: Boolean, hotBandCap: Int = 0): DataFrame = {
-      // batch band rows — consumed by the corpus probe and both sides of
-      // the within-batch self-join (same scoped-persist rationale as
-      // [[nearDupAdmitSketched]]: differently-aliased consumer subtrees
-      // never canonicalize equal, so unscoped each re-runs the kernel)
-      val bb = scope(bandRowsOfSigs(sk))
+    /** Candidate (bid, mid) emission of [[approxVerifiedPairs]] over the
+      * batch band rows `bb` ([[bandRowsOfSigs]]) — split out so
+      * BandStormSpec can pin the per-partition row distribution of the
+      * hot-key guard directly. Returns the candidate frame as a leaf. */
+    private[graft] def approxCandidates(bb: DataFrame,
+        corpusBands: DataFrame, fits: Boolean,
+        hotBandCap: Int = 0): DataFrame = {
       val cb =
         if (corpusBands.columns.contains("kpfx")) corpusBands
         else corpusBands.withColumn("kpfx", lit(null).cast("array<bigint>"))
@@ -969,13 +952,13 @@ object Dedup {
       // keep 0 — measured: always-on cost q108 8.2 → 19.1 s at sf0.1
       // for zero exposure).
       val candCorpus = guardedCorpusCandidates(probe, cbm,
-        firstSharedOnly, hotBandCap, fits, scope)
+        firstSharedOnly, hotBandCap, fits)
       val candBatch = probe
         .join(bb.select(col("band"), col("bkey"), col("id").as("mid"),
           col("kpfx").as("kpfx_m")), Seq("band", "bkey"))
         .filter(col("mid") < col("bid") && firstSharedOnly)
         .select("bid", "mid")
-      scope(candCorpus.unionByName(candBatch))
+      Cuts.leaf(candCorpus.unionByName(candBatch))
     }
 
     /** Estimator-verify tail of [[approxVerifiedPairs]] over an emitted
@@ -1076,7 +1059,6 @@ object Dedup {
     */
   private[graft] def guardedCorpusCandidates(probe: DataFrame,
       cbm: DataFrame, rowFilter: Column, hotBandCap: Int, fits: Boolean,
-      scope: DataFrame => DataFrame,
       keys: Seq[String] = Seq("band", "bkey")): DataFrame = {
     val keyCols = keys.map(col)
     val spark = probe.sparkSession
@@ -1090,7 +1072,8 @@ object Dedup {
       val par = spark.sparkContext.defaultParallelism
       val probeKeys0 = probe.select(keyCols: _*).distinct()
       val probeKeys = if (fits) broadcast(probeKeys0) else probeKeys0
-      val hotKeys = scope(cbm
+      // read by the cold branch and both hot branches of one plan: a leaf
+      val hotKeys = Cuts.leaf(cbm
         .join(probeKeys, keys, "left_semi")
         .groupBy(keyCols: _*).agg(count(lit(1)).as("occ"))
         .filter(col("occ") > hotCap)
@@ -1429,14 +1412,12 @@ object Dedup {
     */
   def fingerprintAdmit(batch: DataFrame, idCol: String, fpCol: String,
       ledgerChunks: DataFrame, maxHamming: Int = 3, nChunks: Int = 4,
-      totalBits: Int = 64,
-      scope: DataFrame => DataFrame = Cuts.persist,
-      hotChunkCap: Int = 0): DataFrame = {
+      totalBits: Int = 64, hotChunkCap: Int = 0): DataFrame = {
     val sh = batch.select(col(idCol).as("id"), col(fpCol).as("fp"))
     // a pair meeting in several chunks duplicates — min() absorbs it
     val matches =
       fingerprintMatches(sh, ledgerChunks, maxHamming, nChunks, totalBits,
-        scope, hotChunkCap)
+        hotChunkCap)
       .groupBy(col("bid").as("doc_id"))
       .agg(min(col("mid")).as("first_match"))
     sh.select(col("id").as("doc_id"))
@@ -1512,7 +1493,7 @@ object Dedup {
       totalBits: Int = 64, hotChunkCap: Int = 0): DataFrame =
     fingerprintMatches(
       wave.select(col(idCol).as("id"), col(fpCol).as("fp")),
-      corpusChunks, maxHamming, nChunks, totalBits, Cuts.persist, hotChunkCap)
+      corpusChunks, maxHamming, nChunks, totalBits, hotChunkCap)
       .dropDuplicates("bid", "mid")
 
   /** Shared candidate+verify kernel of [[fingerprintAdmit]] /
@@ -1523,11 +1504,12 @@ object Dedup {
     * in the chunk rows). */
   private[graft] def fingerprintMatches(sh: DataFrame,
       ledgerChunks: DataFrame, maxHamming: Int, nChunks: Int, totalBits: Int,
-      scope: DataFrame => DataFrame, hotChunkCap: Int = 0): DataFrame = {
+      hotChunkCap: Int = 0): DataFrame = {
     require(maxHamming < nChunks,
       s"pigeonhole blocking is lossy for maxHamming=$maxHamming at " +
         s"$nChunks chunks — need maxHamming < nChunks")
-    val bb = scope(fingerprintChunkRows(sh, "id", "fp", nChunks, totalBits))
+    // the wave's chunk rows feed the ledger probe and both self-join sides
+    val bb = Cuts.leaf(fingerprintChunkRows(sh, "id", "fp", nChunks, totalBits))
     val probe = bb.select(col("chunk"), col("ckey"),
       col("id").as("bid"), col("fp").as("fp_b"))
     def matchSide(src: DataFrame) = src.select(col("chunk"), col("ckey"),
@@ -1550,7 +1532,7 @@ object Dedup {
     // are ≤ nChunks rows per batch doc and the guard is only enabled
     // from micro-batch-bounded streaming writers.
     val candLedger = guardedCorpusCandidates(probe, matchSide(ledgerChunks),
-      hamOk, hotChunkCap, fits = true, scope, Seq("chunk", "ckey"))
+      hamOk, hotChunkCap, fits = true, Seq("chunk", "ckey"))
     candLedger
       .unionByName(probe.join(matchSide(bb), Seq("chunk", "ckey"))
         .filter(col("mid") < col("bid") && hamOk)

@@ -72,19 +72,26 @@ object IncrementalClusters {
     * long-running stream must not hard-fail, and permanently re-throw on
     * every replay, just because maintenance fell behind.
     */
-  private[graft] def resolveThrough(probe: DataFrame, merges: DataFrame,
-      scope: DataFrame => DataFrame): DataFrame = {
+  private[graft] def resolveThrough(probe: DataFrame,
+      merges: DataFrame): DataFrame = {
     val m = merges.select(col("old_label"), col("new_label"))
-    var cur = scope(probe) // (id, lbl)
+    // each round's stepped frame is a lazy persist: its count fills the
+    // cache the round's relabel then reads (sequenced actions). The
+    // relabeled frame fed into the next round is a leaf: persisted
+    // instead, every round nests the previous round's cached plan, and
+    // AQE renders each nested cache's final AND initial plan, so the
+    // explain string doubles per round (a 100-deep chain ran out of
+    // heap inside explainString)
+    var cur = Cuts.persist(probe) // (id, lbl)
     var rounds = 0
     var done = false
     while (!done && rounds < 64) {
-      val stepped = scope(cur
+      val stepped = Cuts.persist(cur
         .join(m.withColumnRenamed("old_label", "lbl"), Seq("lbl"), "left"))
       if (stepped.agg(count(col("new_label"))).head().getLong(0) == 0L) {
         done = true
       } else {
-        cur = scope(stepped
+        cur = Cuts.leaf(stepped
           .select(col("id"), coalesce(col("new_label"), col("lbl")).as("lbl"))
           .groupBy("id").agg(min(col("lbl")).as("lbl")))
       }
@@ -95,7 +102,7 @@ object IncrementalClusters {
         "than 64 — resolving through the full merge closure instead " +
         "(ledger-sized work for this wave); run cluster-ledger " +
         "compaction more often to restore wave-sized resolution")
-      cur = scope(cur
+      cur = Cuts.persist(cur
         .join(mergeClosure(merges).withColumnRenamed("old_label", "lbl"),
           Seq("lbl"), "left")
         .select(col("id"), coalesce(col("root"), col("lbl")).as("lbl"))
@@ -230,9 +237,8 @@ object IncrementalClusters {
       knownRows: Option[Long] = None): DataFrame = {
     val m = merges.select(col("old_label"), col("new_label"))
     // knownRows spares the per-call count job when the caller already
-    // materialized the ledger (the knownRows pattern of the admission
-    // kernels); the read-path gate is lower than the wave-edge gate —
-    // see [[ClosureDriverMaxRowsDefault]]
+    // materialized the ledger; the read-path gate is lower than the
+    // wave-edge gate — see [[ClosureDriverMaxRowsDefault]]
     val n = knownRows.getOrElse(m.count())
     if (n <= closureDriverMaxRows(merges.sparkSession))
       driverComponents(m, "old_label", "new_label")
@@ -298,9 +304,9 @@ object IncrementalClusters {
     * they redirect still resolve to themselves); with everything
     * committed, the sinks' markers skip the writes entirely.
     *
-    * `knownRows` threads the writer's once-per-wave batch count into the
-    * verify-broadcast gate (no extra driver job); the mid-frames several
-    * subtrees consume are [[Cuts.persist]] cuts the wave owns.
+    * The kernel's band rows count themselves for its verify-broadcast
+    * gate (no extra driver job); the mid-frames several subtrees consume
+    * are [[Cuts.leaf]] cuts the wave owns.
     */
   private def packedPairs(df: DataFrame, a: String,
       b: String): Array[Array[Long]] =
@@ -416,13 +422,11 @@ object IncrementalClusters {
 
   def foldWave(sk: DataFrame, corpusBands: DataFrame, corpusSigs: DataFrame,
       labels: DataFrame, merges: DataFrame, threshold: Double,
-      knownRows: Option[Long] = None,
       hotBandCap: Int = 0): (DataFrame, DataFrame) =
     // no cut on the edge frame: foldEdgeFrame cuts it to a leaf itself,
     // and a cache on top would just hold a redundant copy
     foldEdgeFrame(sk, Dedup.MinHashLsh.approxVerifiedPairs(
-      sk, corpusBands, corpusSigs, threshold, Cuts.persist, knownRows,
-      hotBandCap), labels, merges)
+      sk, corpusBands, corpusSigs, threshold, hotBandCap), labels, merges)
 
   /** [[foldWave]] with the EXACT-Jaccard edge kernel
     * ([[Dedup.MinHashLsh.exactVerifiedPairs]] over band + shingle-set
@@ -440,8 +444,8 @@ object IncrementalClusters {
       labels: DataFrame, merges: DataFrame, threshold: Double,
       hotBandCap: Int = 0): (DataFrame, DataFrame) =
     foldEdgeFrame(sk, Dedup.MinHashLsh.exactVerifiedPairs(
-      sk, sizeHint, corpusBands, corpusSets, threshold, Cuts.persist,
-      hotBandCap), labels, merges)
+      sk, sizeHint, corpusBands, corpusSets, threshold, hotBandCap),
+      labels, merges)
 
   /** The shared fold over an already-built (bid, mid) wave edge frame —
     * PUBLIC because the fold is genuinely edge-source-agnostic: any
@@ -461,8 +465,8 @@ object IncrementalClusters {
     * extra eager action+job, for lineage that is already cut.
     *
     * `sk` supplies the wave's ids (column `id`);
-    * `edges` must be cheap to re-evaluate (scoped/persisted by the
-    * caller or built over persisted parents).
+    * `edges` must be cheap to re-evaluate (built over the kernel's own
+    * leaves or over persisted parents).
     *
     * FAILURE SEMANTICS of the lineage cuts: every eager cut in the fold
     * family is a [[Cuts.leaf]]. Without a checkpoint dir that is a
@@ -498,9 +502,8 @@ object IncrementalClusters {
     // re-ANALYZED it (measured at sf0.1: 0.3-0.4 s of driver gap per
     // count across q108/q110's waves; q110's whole wall was 114 tiny
     // stages + 3.6 s of such gaps over 6.7 s total executor time).
-    // Storage class is unchanged — the caller's cut put the
-    // materialized edges in MEMORY_AND_DISK already; a leaf is the same
-    // bytes minus the re-analysis. The distributed
+    // The kernel's candidate frame is a leaf already; this leaf holds
+    // the verified edges, so no action re-runs the verify. The distributed
     // path gets the leaf too (its five consumers then share one
     // materialization).
     val e = Cuts.leaf(edges)
@@ -634,7 +637,7 @@ object IncrementalClusters {
     val stored = eps.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("lbl"))
       .groupBy("id").agg(min(col("lbl")).as("lbl"))
-    val nodeOf = Cuts.persist(resolveThrough(stored, merges, Cuts.persist)
+    val nodeOf = Cuts.persist(resolveThrough(stored, merges)
       .select(col("id"), col("lbl").as("node")))
     val g = edges
       .join(nodeOf.select(col("id").as("bid"), col("node").as("na")), Seq("bid"))

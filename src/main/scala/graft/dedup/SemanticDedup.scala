@@ -398,11 +398,10 @@ object SemanticDedup {
     * therefore pays |distinct|² per cell, never |members|².
     */
   def semanticAdmit(batch: DataFrame, corpus: DataFrame, threshold: Double,
-      centroids: DataFrame,
-      scope: DataFrame => DataFrame = Cuts.persist): DataFrame =
+      centroids: DataFrame): DataFrame =
     admitVsReps(batch,
       repsOfAsg(Ann.indexWithCentroids(corpus, centroids).assigned),
-      threshold, centroids, scope)
+      threshold, centroids)
 
   /** Distinct-vector rep collapse over an assignment frame: one
     * (rep, cell, ce, cn2) row per distinct nonzero vector, rep = min id. */
@@ -422,12 +421,13 @@ object SemanticDedup {
     * corpus. Semantics identical to [[semanticAdmit]] by construction
     * (that method delegates here). */
   private[graft] def admitVsReps(batch: DataFrame, corpusReps: DataFrame,
-      threshold: Double, centroids: DataFrame,
-      scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
+      threshold: Double, centroids: DataFrame): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"semantic-dup cosine threshold must lie in (0, 1], got $threshold")
-    val ba = scope(Ann.indexWithCentroids(batch, centroids).assigned)
-    val br = scope(repsOfAsg(ba))
+    // the verdict reads the assigned batch, its reps and the matches
+    // from several subtrees each: leaves
+    val ba = Cuts.leaf(Ann.indexWithCentroids(batch, centroids).assigned)
+    val br = Cuts.leaf(repsOfAsg(ba))
     val cr = corpusReps
     val cos = VectorFunctions.cosinePrenormed(
       FloatVecDot.dot(col("e_a"), col("e_b")), col("n_a"), col("n_b"))
@@ -448,7 +448,7 @@ object SemanticDedup {
     // itself (identical vector, smaller id — so every non-rep member is
     // rejected with first_match ≤ its rep)
     val repVerdict = br.select(col("rep").as("bid"))
-      .join(scope(matches), Seq("bid"), "left")
+      .join(Cuts.leaf(matches), Seq("bid"), "left")
       .groupBy("bid")
       .agg((count(col("mid")) === 0).as("admitted"),
         min(col("mid")).as("first_match"))
@@ -581,14 +581,14 @@ object SemanticDedup {
     */
   def semanticAdmitDecontam(batch: DataFrame, corpus: DataFrame,
       evalSet: DataFrame, dupThreshold: Double, decontamThreshold: Double,
-      centroids: DataFrame,
-      scope: DataFrame => DataFrame = Cuts.persist): DataFrame = {
-    val contam = scope(
+      centroids: DataFrame): DataFrame = {
+    // the clean filter and the verdict both read the flags: a leaf
+    val contam = Cuts.leaf(
       semanticDecontaminate(batch, evalSet, decontamThreshold))
     val clean = batch.join(
       contam.filter(col("contaminated")).select("vec_id"),
       Seq("vec_id"), "left_anti")
-    val admit = semanticAdmit(clean, corpus, dupThreshold, centroids, scope)
+    val admit = semanticAdmit(clean, corpus, dupThreshold, centroids)
       .withColumnRenamed("first_match", "dup_match")
       .withColumnRenamed("admitted", "clean_admitted")
     contam.select(col("vec_id"), col("contaminated"),

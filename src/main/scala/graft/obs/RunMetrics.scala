@@ -68,6 +68,7 @@ object RunMetrics {
   }
 
   private val Tag = "graft.obs.run"
+  private val Description = "spark.job.description"
   private val nextTag = new AtomicLong
 
   private final class OpenJob(val id: Int, val startMs: Long,
@@ -95,7 +96,7 @@ object RunMetrics {
            run <- Option(open.get(tag))) {
         val j = new OpenJob(e.jobId, e.time,
           Option(p.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong),
-          Option(p.getProperty("spark.job.description")).getOrElse(""))
+          Option(p.getProperty(Description)).getOrElse(""))
         run.synchronized(run += j)
         live(e.jobId) = (j, e.stageIds)
         // a stage shared with a job still running stays with that job
@@ -174,5 +175,18 @@ object RunMetrics {
       sc.setLocalProperty(Tag, outer)
       l.open.remove(tag)
     }
+  }
+
+  /** Run `body` with `name` as the [[Job.description]] of every job it
+    * submits, then restore the previous description. The description is
+    * a local property, so AQE's stage threads and
+    * [[GraftShim.onPoolThread]] threads carry it like the measure tag: a
+    * record names the cut or sink each job served, not the pool's
+    * `CompletableFuture` call site. */
+  def described[A](spark: SparkSession, name: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(Description)
+    sc.setLocalProperty(Description, name)
+    try body finally sc.setLocalProperty(Description, outer)
   }
 }

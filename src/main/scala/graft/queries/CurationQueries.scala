@@ -325,11 +325,8 @@ object CurationQueries extends QueryModule {
         import graft.dedup.Dedup
         import graft.text.TextFunctions
         // one parquet scan for all four waves (each wave filters the
-        // cached projection, not the source); its count doubles as a
-        // safe over-bound for every wave's broadcast gate — one job
-        // replaces four per-wave sk.count() gate jobs
+        // cached projection, not the source)
         val docs = Cuts.persist(Tables.documents(s, dir).select("doc_id", "text"))
-        val nDocs = docs.count()
         val none = docs.filter(lit(false))
         var fpLedger = none.select(
           TextFunctions.fingerprint(col("text")).as("fp"))
@@ -360,8 +357,7 @@ object CurationQueries extends QueryModule {
           val sk = Cuts.leaf(Dedup.MinHashLsh.sigsFor(
             exactNew, "text", "doc_id", portable = true))
           val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-            sk, bands, sigs, threshold = 0.35,
-            knownRows = Some(nDocs))
+            sk, bands, sigs, threshold = 0.35)
           // ONE per-wave lineage cut (q108's discipline, fused): the
           // wave's ENTIRE product — verdict columns + the fp ledger
           // delta + the admitted-survivor sigs — rides a single
@@ -436,7 +432,6 @@ object CurationQueries extends QueryModule {
         val docs = all.filter(pmod(col("doc_id"), lit(97)) =!= 0)
         val bench = all.filter(pmod(col("doc_id"), lit(97)) === 0)
         val benchGrams = Cuts.persist(Curation.benchGramSet(bench, "text", "doc_id"))
-        val nDocs = all.count()
         // contamination is WAVE-INDEPENDENT (fixed gram set, per-doc
         // verdict, no ledger) — the batch fold hoists it OUT of the
         // loop entirely: ONE gram pass over all quality survivors,
@@ -492,8 +487,7 @@ object CurationQueries extends QueryModule {
           val sk = Cuts.leaf(Dedup.MinHashLsh.sigsFor(
             exactNew, "text", "doc_id", portable = true))
           val verdict = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-            sk, bands, sigs, threshold = 0.35,
-            knownRows = Some(nDocs))
+            sk, bands, sigs, threshold = 0.35)
           // same fused per-wave lineage cut as q116 (see its in-fold
           // comment): verdict columns + fp delta + admitted sigs ride
           // ONE Cuts.leaf; ledgers and the output union are leaf

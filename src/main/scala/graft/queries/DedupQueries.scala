@@ -452,18 +452,10 @@ object DedupQueries extends QueryModule {
     "q106_incremental_neardup_approx" -> QueryDef(
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        // scope = EAGER leaf (r17): the admission plan's one action
-        // consumed the batch sketch / banded-batch / candidate persists
-        // from several AQE subtrees at once — concurrent stage
-        // materialization re-computed the chains and blocked on
-        // BlockInfoManager locks (see q113's identical fix). Leaves
-        // compute each mid-frame once; the query's Cuts scope releases
-        // them exactly like the persists they replace.
         Dedup.MinHashLsh.nearDupIncrementalApprox(
             docs.filter(pmod(col("doc_id"), lit(2)) === 1),
             docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-            "text", "doc_id", threshold = 0.35, portable = true,
-            scope = Cuts.leaf)
+            "text", "doc_id", threshold = 0.35, portable = true)
           .orderBy("doc_id")
       },
       Some(incrementalNearDupApproxOracleSql)),
@@ -688,12 +680,10 @@ object DedupQueries extends QueryModule {
     "q104_incremental_neardup" -> QueryDef(
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        // scope = EAGER leaf — see q106's comment (same fix, exact mode)
         Dedup.MinHashLsh.nearDupIncremental(
             docs.filter(pmod(col("doc_id"), lit(2)) === 1),
             docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-            "text", "doc_id", threshold = 0.35, portable = true,
-            scope = Cuts.leaf)
+            "text", "doc_id", threshold = 0.35, portable = true)
           .orderBy("doc_id")
       },
       Some(incrementalNearDupOracleSql)),
@@ -908,13 +898,10 @@ object DedupQueries extends QueryModule {
     "q112_semantic_admit_incr" -> QueryDef(
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        // scope = EAGER leaf — see q106's comment (the assigned batch,
-        // its reps and the candidate frames feed this one action)
         graft.dedup.SemanticDedup.semanticAdmit(
             emb.filter(pmod(col("vec_id"), lit(2)) === 1),
             emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-            threshold = 0.4, graft.similarity.Ann.strideCentroids(emb),
-            scope = Cuts.leaf)
+            threshold = 0.4, graft.similarity.Ann.strideCentroids(emb))
           .orderBy("vec_id")
       },
       Some(semanticAdmitOracleSql)),
@@ -1127,8 +1114,7 @@ object DedupQueries extends QueryModule {
             nonEval.filter(pmod(col("vec_id"), lit(2)) === 0),
             emb.filter(pmod(col("vec_id"), lit(97)) === 0),
             dupThreshold = 0.4, decontamThreshold = 0.4,
-            graft.similarity.Ann.strideCentroids(emb),
-            scope = Cuts.leaf) // as q112
+            graft.similarity.Ann.strideCentroids(emb))
           .orderBy("vec_id")
       },
       Some(s"""WITH $semanticMemCtes, contam AS MATERIALIZED (

@@ -282,12 +282,12 @@ object Text extends QueryModule {
     // BM25 to 1e-6 absolute, measured, rather than claiming bit-equality
     // no engine pair can honestly promise on ln(). Library callers
     // ([[graft.text.Retrieval.bm25]]) get the full-precision doubles.
-    // NOTE on scope: the one-shot path deliberately does NOT pass a
-    // persist scope. Persisting the tokenized base materializes every
+    // NOTE on cuts: the one-shot path deliberately does NOT persist
+    // anything. Persisting the tokenized base materializes every
     // doc's token ARRAY into the block store, and for a single query
     // that build (two 32-task stages at sf0.1) costs more wall than the
     // two codegen re-tokenizes it saves — measured 2.17 s persisted vs
-    // ~1.3 s unscoped (r13 shape) at sf0.1. q113 keeps the persist: its
+    // ~1.3 s uncut (r13 shape) at sf0.1. q113 does cut (leaves): its
     // scoring path re-reads the UNION of 4 wave ledgers, where the
     // re-computation is 4 wave tokenizes per consumer, not one.
     "q92_bm25" -> QueryDef(
@@ -348,17 +348,9 @@ object Text extends QueryModule {
           .agg(count(lit(1)).as("n_docs"),
             coalesce(sum(col("dl").cast("long")), lit(0L)).as("sum_dl"))
         stats = statsLeaf
-        // scope = EAGER leaf, not a lazy persist: scoreFromIndex's dl and
-        // tf frames each feed two consumers, and under AQE both consumers
-        // kick off the unmaterialized cache chain CONCURRENTLY — in-flight
-        // computation doesn't dedup, so the postings explode pass ran
-        // twice (measured: two 128-task explode-shaped stage groups,
-        // 33.6 + 61.4 s executorRunTime). An eager cut computes each
-        // once; both frames are slim (doc_id,dl / term postings).
         quantizeBm25(graft.text.IncrementalBm25.scoreFromIndex(
           postings, stats, Seq("spark", "merge", "stream"),
-          totalsLedger = Some(totals),
-          scope = Cuts.leaf))
+          totalsLedger = Some(totals)))
       },
       Some(bm25OracleSql)),
   ) ++ queries2

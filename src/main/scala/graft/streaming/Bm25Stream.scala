@@ -106,7 +106,9 @@ object Bm25Stream {
 
   /** BM25 scores of `terms` against the ledgered index — hash-identical to
     * [[graft.text.Retrieval.bm25]] over every document the ledgers
-    * absorbed. */
+    * absorbed. The frame reads leaves the call cuts
+    * ([[graft.text.IncrementalBm25.scoreFromIndex]]): a caller inside a
+    * [[graft.core.Cuts.scoped]] block must consume it inside that block. */
   def score(spark: SparkSession, postingsDir: String, statsDir: String,
       totalsDir: String, terms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): DataFrame =

@@ -158,10 +158,9 @@ object CurationStream {
       // The verdict commit reads it from several subtrees (the exact_new
       // flag, the kernel's batch bands, candidates and verify), and the
       // band/sig commits read it again; a lazy persist would be raced by
-      // the verdict's own consumers (WaveCommit's SCOPE). Its checkpoint
-      // action also counts it, for the kernel's broadcast gate
+      // the verdict's own consumers (WaveCommit's SCOPE)
       val toks = graft.text.TextFunctions.tokens(col("text"))
-      val (sk, skRows) = Cuts.countedLeaf(cleanDocs
+      val sk = Cuts.leaf(cleanDocs
         .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
@@ -171,12 +170,10 @@ object CurationStream {
         .select(col("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
-      // the kernel's band rows, hot keys and candidates feed this one
-      // commit: leaves too
       val admission = Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, NearDupStream.ApproxBandsSchema),
         wave.ledger(sigsDir, NearDupStream.SigsSchema), simThreshold,
-        Cuts.leaf, knownRows = Some(skRows), hotBandCap = 4096)
+        hotBandCap = 4096)
       val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
         (col("quality") >= qualityThreshold).as("q_pass"))
       val verdict = flags.fold(scoredVerdict)(f =>

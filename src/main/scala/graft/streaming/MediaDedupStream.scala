@@ -113,7 +113,7 @@ object MediaDedupStream {
       // 16-bit chunk value and stay admitted — Dedup.fingerprintMatches)
       wave.commit(verdictDir, Dedup.fingerprintAdmit(fps, "id", "fp",
         wave.ledger(chunksDir, ChunksSchema), maxHamming,
-        scope = Cuts.leaf, hotChunkCap = 4096)
+        hotChunkCap = 4096)
         .unionByName(quarantined))
       val admitted = fps.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))

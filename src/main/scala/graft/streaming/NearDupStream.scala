@@ -282,7 +282,7 @@ object NearDupStream {
       wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitSketched(
         sk, wave.batch,
         wave.ledger(bandsDir, BandsSchema), wave.ledger(setsDir, SetsSchema),
-        threshold, Cuts.leaf, hotBandCap = 4096))
+        threshold, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commitAll(
@@ -320,16 +320,15 @@ object NearDupStream {
         compactLedgersApprox(_, bandsDir, sigsDir)) { wave =>
       val toks = graft.text.TextFunctions.tokens(col(textCol))
       // ONE (id, sig) leaf per wave: admission and both ledger writes read
-      // its blocks, and its checkpoint action counts it for the kernel's
-      // verify-broadcast gate
-      val (sk, skRows) = Cuts.countedLeaf(wave.batch
+      // its blocks
+      val sk = Cuts.leaf(wave.batch
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
       wave.commit(verdictDir, Dedup.MinHashLsh.nearDupAdmitApproxSketched(
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema),
-        threshold, Cuts.leaf, knownRows = Some(skRows), hotBandCap = 4096))
+        threshold, hotBandCap = 4096))
       val admittedSk = sk.join(wave.committed(verdictDir)
         .filter(col("admitted")).select(col("doc_id").as("id")), Seq("id"))
       wave.commitAll(
@@ -376,15 +375,12 @@ object NearDupStream {
         .select(col(idCol).as("id"),
           (if (portable) graft.functions.Sketches.minhashTokensPortable(toks)
            else graft.functions.Sketches.minhashTokens(toks)).as("sig")))
-      // one count materializes the wave persist AND threads the verify-
-      // broadcast gate (knownRows) — no second driver job inside the fold
-      val waveRows = sk.count()
+      // the kernel's band-row leaf is the first action: it fills the wave
+      // persist and counts the wave for the verify-broadcast gate
       val (labelRows, mergeRows) = graft.dedup.IncrementalClusters.foldWave(
         sk, wave.ledger(bandsDir, ApproxBandsSchema),
         wave.ledger(sigsDir, SigsSchema), wave.ledger(labelsDir, LabelsSchema),
-        wave.ledger(mergesDir, MergesSchema),
-        threshold, knownRows = Some(waveRows),
-        hotBandCap = 4096)
+        wave.ledger(mergesDir, MergesSchema), threshold, hotBandCap = 4096)
       wave.commit(labelsDir, labelRows)
       wave.commit(mergesDir, mergeRows)
       wave.commit(bandsDir, Dedup.MinHashLsh.bandRowsOfSigs(sk))

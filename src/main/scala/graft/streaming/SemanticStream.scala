@@ -184,7 +184,7 @@ object SemanticStream {
       val admit = SemanticDedup.admitVsReps(clean,
           wave.ledger(repsDir, RepsSchema)
             .select(col("rep"), col("cell"), col("ce"), col("cn2")),
-          dupThreshold, centroids, Cuts.leaf)
+          dupThreshold, centroids)
         .withColumnRenamed("admitted", "clean_admitted")
         .withColumnRenamed("first_match", "dup_match")
       wave.commit(verdictDir, contam

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Cuts
+import graft.obs.RunMetrics
 
 /** One streaming WAVE — the single definition of the exactly-once
   * protocol every `foreachBatch` writer in this package runs. A writer
@@ -17,17 +18,16 @@ import graft.core.Cuts
   *    so every cut the wave makes — its own and the ones its kernels
   *    make, fold deltas included — is released when the body returns or
   *    throws, and an unbounded stream holds no wave's blocks past its
-  *    wave. The body picks each cut by the Cuts rule: `Cuts.persist` for
-  *    frames the wave's SEQUENCED commits consume, each reading the frame
-  *    from one place of its plan; `Cuts.leaf` for frames ONE action
-  *    consumes from several subtrees, for subtrees every commit would
-  *    otherwise re-analyze, and for frames CONCURRENT commits
-  *    ([[commitAll]]) read. A kernel's `scope` argument (Dedup /
-  *    SemanticDedup) follows the same rule: `Cuts.leaf` when the kernel's
-  *    output feeds a single commit (the admission writers' verdict), the
-  *    default `Cuts.persist` when sequenced actions fold it (the cluster
-  *    writers' label/merge state). A verdict frame one commit consumes is
-  *    not cut at all.
+  *    wave. Every cut follows the Cuts rule: `Cuts.persist` for frames
+  *    the wave's SEQUENCED commits consume, each reading the frame from
+  *    one place of its plan; `Cuts.leaf` for frames ONE action consumes
+  *    from several subtrees, for subtrees every commit would otherwise
+  *    re-analyze, and for frames CONCURRENT commits ([[commitAll]]) read.
+  *    The kernels (Dedup, SemanticDedup) apply the same rule to their own
+  *    mid-frames and cut them to leaves as they build the plan, so a
+  *    verdict the body commits reads leaves the wave owns. A verdict
+  *    frame one commit consumes is not cut at all. Each commit's jobs
+  *    are described by its sink dir, each leaf's by the code that cut it.
   *  - COMMIT ORDER: the verdict (or the delta every later sink derives
   *    from) commits FIRST and ALONE through [[commit]], so a ledger never
   *    commits ahead of the rows that justify it. The ledgers then commit
@@ -98,8 +98,14 @@ final class WaveCommit private (val batch: DataFrame, val batchId: Long,
   def commit(dir: String, rows: DataFrame): Unit = {
     val onReplay: DataFrame => Unit =
       if (begin(dir, rows)) _ => batch.foreach(_ => ()) else _ => ()
-    IdempotentSink.writer(dir, onReplay)(rows, batchId)
+    write(dir, rows, onReplay)
   }
+
+  // the sink's write, its jobs described by the sink dir
+  private def write(dir: String, rows: DataFrame,
+      onReplay: DataFrame => Unit): Unit =
+    RunMetrics.described(spark, dir)(
+      IdempotentSink.writer(dir, onReplay)(rows, batchId))
 
   /** Commit each `dir -> rows` as this wave's batch of its sink, all at
     * once ([[WaveCommit.concurrently]]). Only after the verdict
@@ -109,7 +115,7 @@ final class WaveCommit private (val batch: DataFrame, val batchId: Long,
     require(commits > 0, "commitAll follows the verdict commit")
     ledgers.foreach { case (dir, rows) => begin(dir, rows) }
     WaveCommit.concurrently(spark)(ledgers.map { case (dir, rows) =>
-      () => IdempotentSink.writer(dir, _ => ())(rows, batchId) })
+      () => write(dir, rows, _ => ()) })
     ()
   }
 

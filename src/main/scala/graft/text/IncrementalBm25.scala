@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Cuts
+
 /** Incrementally-maintained BM25 index: the streaming/incremental twin of
   * [[Retrieval.bm25]] (q92), completing the batch → incremental → streaming
   * progression for lexical retrieval the way the dedup family already runs
@@ -76,19 +78,24 @@ object IncrementalBm25 {
     * on the bucket partitioning. `totalsLedger` (batch-keyed rows from
     * [[totalsDelta]]) replaces the docstats scan for N/Σdl when provided —
     * integer sums of per-wave integer totals, so exactness is unaffected.
+    *
+    * Construction is eager: the per-doc lengths and the query terms'
+    * postings are cut to leaves, owned by the caller's
+    * [[graft.core.Cuts.scoped]] owner, so a scoped caller consumes the
+    * scores inside its scope.
     */
   def scoreFromIndex(postings: DataFrame, docstats: DataFrame,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      totalsLedger: Option[DataFrame] = None,
-      scope: DataFrame => DataFrame = identity): DataFrame = {
+      totalsLedger: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty && terms == terms.distinct,
       s"query terms must be non-empty and distinct: $terms")
-    // `scope` cuts the two multiply-consumed frames (identity: no cut;
-    // q113 passes [[graft.core.Cuts.leaf]]): dl feeds the tf
+    // the two multiply-consumed frames are leaves: dl feeds the tf
     // prune, the scoring join, and (absent a totals ledger) the totals
-    // aggregate; tf feeds df and the scoring join — unscoped, the
-    // postings/stats reads run once per consumer. Values identical.
-    val dl = scope(docstats.groupBy("doc_id").agg(min(col("dl")).as("dl")))
+    // aggregate; tf feeds df and the scoring join — uncut, the
+    // postings/stats reads run once per consumer, and a lazy persist is
+    // raced by those consumers under AQE. Values identical.
+    val dl = Cuts.leaf(
+      docstats.groupBy("doc_id").agg(min(col("dl")).as("dl")))
     // the semi-join against docstats keeps df PURE under a torn wave
     // (postings committed, stats not yet — the streaming writer's crash
     // window): scoreCore's inner tf⋈dl join already hides a stats-less
@@ -98,7 +105,7 @@ object IncrementalBm25 {
     // passes everything through. Cost: the small query-term tf frame
     // exchanges to doc_id — the same partitioning scoreCore's join needs
     // anyway; the docstats side is bucketed on doc_id after compaction.
-    val tf = scope(postings
+    val tf = Cuts.leaf(postings
       .filter(col("token").isin(terms: _*))
       .groupBy("doc_id", "token").agg(min(col("tf")).as("tf"))
       .join(dl.select("doc_id"), Seq("doc_id"), "left_semi"))

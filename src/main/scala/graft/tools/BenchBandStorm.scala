@@ -118,8 +118,7 @@ object BenchBandStorm {
       spark.conf.set("spark.graft.dedup.hotBandCap", cap.toString)
       val (v, rec) = RunMetrics.measure(spark) {
         Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-            probe, bands, sigs, threshold = 0.5,
-            knownRows = Some(probeRows))
+            probe, bands, sigs, threshold = 0.5)
           .orderBy("doc_id")
           .collect()
           .map(r => (r.getAs[Long]("doc_id"), r.getAs[Boolean]("admitted"),

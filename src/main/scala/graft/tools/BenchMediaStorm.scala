@@ -100,8 +100,7 @@ object BenchMediaStorm {
       val cand = Dedup.guardedCorpusCandidates(
         bb.select(col("chunk"), col("ckey"), col("id").as("bid")),
         chunks.select(col("chunk"), col("ckey"), col("id").as("mid")),
-        lit(true), hotBandCap = 0, fits = true, identity,
-        Seq("chunk", "ckey"))
+        lit(true), hotBandCap = 0, fits = true, Seq("chunk", "ckey"))
       cand.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
     }
 

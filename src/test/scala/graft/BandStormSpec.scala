@@ -81,8 +81,8 @@ class BandStormSpec extends AnyFunSuite {
     // broadcast join emitted them from; with the guard ON the salted join
     // spreads them over the salt space (defaultParallelism = 4 here)
     def partitionRows(cap: Int): Seq[Long] = withCap(cap) {
-      val cand = Dedup.MinHashLsh.approxCandidates(probe, ledgerBands,
-        identity, fits = true)
+      val cand = Dedup.MinHashLsh.approxCandidates(
+        Dedup.MinHashLsh.bandRowsOfSigs(probe), ledgerBands, fits = true)
       cand.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
     }
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -170,7 +170,7 @@ class BandStormSpec extends AnyFunSuite {
       "across partitions under the guard") {
     def partitionRows(cap: Int): Seq[Long] = withCap(cap) {
       val cand = Dedup.MinHashLsh.exactCandidates(probeExact,
-        ledgerBandsExact, threshold = 0.5, identity, fits = true)
+        ledgerBandsExact, threshold = 0.5, fits = true)
       cand.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
     }
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -256,8 +256,7 @@ class BandStormSpec extends AnyFunSuite {
       val cbm = ledgerChunkRows.select(col("chunk"), col("ckey"),
         col("id").as("mid"), col("fp").as("fp_m"))
       val cand = graft.dedup.Dedup.guardedCorpusCandidates(probe, cbm,
-        lit(true), hotBandCap = 0, fits = true, identity,
-        Seq("chunk", "ckey"))
+        lit(true), hotBandCap = 0, fits = true, Seq("chunk", "ckey"))
       cand.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
     }
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")

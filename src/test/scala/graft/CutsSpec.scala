@@ -118,15 +118,22 @@ class CutsSpec extends AnyFunSuite {
   // deltas, connected-components rounds) are all owned by the scope.
   // Diffed around the scope because other suites' fixtures may be live.
   for (name <- Seq("q107_dup_clusters_approx", "q108_dup_clusters_incremental",
-      "q112_semantic_admit_incr", "q113_bm25_incremental",
-      "q116_curation_pipeline_incr"))
+      "q110_dup_clusters_minhash_incr", "q112_semantic_admit_incr",
+      "q113_bm25_incremental", "q114_media_admit_incremental",
+      "q115_media_clusters_incremental", "q116_curation_pipeline_incr",
+      "q117_audio_admit_incremental", "q119_curation_decontam_incr"))
     test(s"hygiene: $name in one scope leaves no cached blocks or checkpoint files") {
-      val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
-      val dirs0 = TestSpark.checkpointRddDirs
-      Cuts.scoped {
+      def run(): Unit = Cuts.scoped {
         SparkEntry.queries(name)(spark, TestSpark.sfDir)
           .write.format("noop").mode("overwrite").save()
       }
+      // a first run builds the session-lifetime fixtures (Multimodal's
+      // memoized media tables stay cached on purpose); a query that leaks
+      // a cut leaks it again in the measured run
+      run()
+      val rdds0 = spark.sparkContext.getPersistentRDDs.keySet
+      val dirs0 = TestSpark.checkpointRddDirs
+      run()
       val rdds = spark.sparkContext.getPersistentRDDs.keySet -- rdds0
       val dirs = TestSpark.checkpointRddDirs -- dirs0
       assert(rdds.isEmpty, s"$name leaked persisted RDDs: $rdds")
@@ -163,6 +170,8 @@ class CutsSpec extends AnyFunSuite {
 
   test("guard: no src/main code cuts, caches or picks a checkpoint mode outside Cuts") {
     val raw = """(?<!Cuts)\.(localCheckpoint|checkpoint|persist|unpersist)\(|\.cache\(\)|getCheckpointDir""".r
+    // an operator takes its cuts from the Cuts rule; no caller passes one in
+    val scopeParam = """scope\s*:\s*DataFrame\s*=>\s*DataFrame""".r
     // (path suffix, code line) -> why it may cut on its own
     val exempt = Map(
       ("graft/multimodal/Multimodal.scala", "df.persist()") ->
@@ -186,5 +195,11 @@ class CutsSpec extends AnyFunSuite {
       if !exempt.exists { case ((suffix, text), _) => path.endsWith(suffix) && code == text }
     } yield s"$path:${n + 1}: $code"
     assert(hits.isEmpty, "raw cuts outside graft.core.Cuts:\n" + hits.mkString("\n"))
+    val params = for {
+      f <- files
+      (line, n) <- FileUtils.readFileToString(f, "UTF-8").split("\n").zipWithIndex
+      if scopeParam.findFirstIn(line.replaceAll("//.*$", "")).isDefined
+    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
+    assert(params.isEmpty, "cut-choice parameters in src/main:\n" + params.mkString("\n"))
   }
 }

@@ -324,6 +324,25 @@ class DedupSpec extends AnyFunSuite {
       "compounded band+sig duplication must be absorbed too")
   }
 
+  test("approx broadcast gate: band rows / Bands equals sk.count() with " +
+      "empty-text and null-signature docs") {
+    // the gate's batch count is the band-row leaf's own row count over
+    // Bands: bandKeys must emit exactly Bands rows for EVERY doc — one
+    // with no tokens and one with no signature at all included
+    val sk = Dedup.MinHashLsh.sigsFor(
+        Seq((1L, "alpha beta gamma delta epsilon"), (2L, ""), (3L, "   "))
+          .toDF("doc_id", "text"), "text", "doc_id")
+      .unionByName(spark.range(4, 5)
+        .select(col("id"), lit(null).cast("array<bigint>").as("sig")))
+    graft.core.Cuts.scoped {
+      val (_, bandRows) = graft.core.Cuts.countedLeaf(
+        Dedup.MinHashLsh.bandRowsOfSigs(sk))
+      assert(bandRows == sk.count() * Dedup.MinHashLsh.Bands,
+        s"$bandRows band rows for ${sk.count()} docs")
+      assert(bandRows / Dedup.MinHashLsh.Bands == 4)
+    }
+  }
+
   test("approx broadcast gate sizes the SIG table, not the fat text input") {
     // 50 planted near-dup pairs of ~300 random hex words each: the raw
     // text's plan-time estimate exceeds the byte cap (the old gate, which

@@ -123,7 +123,7 @@ class IncrementalClustersSpec extends AnyFunSuite {
       .toDF("old_label", "new_label")
     val probe = Seq(7L -> 101L, 8L -> 50L, 9L -> 999L).toDF("id", "lbl")
     val resolved = rows2(
-      IncrementalClusters.resolveThrough(probe, deep, identity))
+      IncrementalClusters.resolveThrough(probe, deep))
     assert(resolved == Set(7L -> 1L, 8L -> 1L, 9L -> 999L), s"$resolved")
   }
 

@@ -79,31 +79,29 @@ class KernelPassesSpec extends AnyFunSuite {
       "fold against existing cluster state must sketch only the wave")
   }
 
-  test("knownRows threads the wave count into the broadcast gate: " +
-      "constructing the approx admission plan schedules zero jobs") {
+  test("constructing the approx admission plan runs no count job, only " +
+      "the kernel's own leaf checkpoints") {
     import org.apache.spark.sql.functions.col
     val sk = graft.dedup.Dedup.MinHashLsh.sigsFor(
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text"), "text", "doc_id").persist()
-    val n = sk.count()
+    sk.count()
     val bands = graft.dedup.Dedup.MinHashLsh.bandRowsOfSigs(sk.limit(0))
     val sigs = sk.limit(0).select(col("id"), col("sig"))
-    try {
-      // without knownRows the gate counts sk at CONSTRUCTION time — one
-      // driver-blocking job per wave; with it, construction is lazy
-      val (lazyPlan, lazyRun) = graft.obs.RunMetrics.measure(spark)(
-        graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
-          sk, bands, sigs, threshold = 0.5, knownRows = Some(n)))
-      assert(lazyRun.jobs.isEmpty,
-        s"knownRows construction must schedule no jobs: ${lazyRun.jobs.size}")
-      val (_, eagerRun) = graft.obs.RunMetrics.measure(spark)(
+    try graft.core.Cuts.scoped {
+      // the gate takes its batch count from the band-row leaf's own
+      // checkpoint action: every construction job is a leaf the kernel
+      // cut, described by its Dedup.scala line — a count of `sk` would
+      // run undescribed
+      val (plan, run) = graft.obs.RunMetrics.measure(spark)(
         graft.dedup.Dedup.MinHashLsh.nearDupAdmitApproxSketched(
           sk, bands, sigs, threshold = 0.5))
-      assert(eagerRun.jobs.size >= 1,
-        "without knownRows the gate count runs at construction (the " +
-          "behavior the writers now avoid)")
-      // and the threaded-count plan still answers correctly
-      val got = lazyPlan.collect().map(r => r.getLong(0) ->
+      assert(run.jobs.nonEmpty &&
+        run.jobs.forall(_.description.startsWith("Dedup.scala:")),
+        s"construction ran a job outside the kernel's leaves: " +
+          run.jobs.map(_.description))
+      // and the plan still answers correctly
+      val got = plan.collect().map(r => r.getLong(0) ->
         r.getBoolean(1)).toMap
       assert(got == Map(0L -> true, 1L -> true, 2L -> true), s"$got")
     } finally sk.unpersist()

@@ -129,6 +129,31 @@ class RunMetricsSpec extends AnyFunSuite {
     }
   }
 
+  test("every job of a wave's leaves and commits names the cut or sink it served") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-runmetrics-names").toString
+    val sinks = Seq("out", "bands", "sigs").map(d => s"$root/$d")
+    val w = graft.streaming.NearDupStream.approxWriter(sinks(0), sinks(1),
+      sinks(2), "text", "doc_id")
+    val wave = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten eleven"),
+      (3L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"))
+      .toDF("doc_id", "text")
+    try {
+      val (_, rec) = RunMetrics.measure(spark)(w(wave, 0L))
+      val names = rec.jobs.map(_.description)
+      // a leaf's jobs carry the `File.scala:line` that cut it, a commit's
+      // (AQE stage jobs and commitAll's pool threads included) its sink dir
+      val site = """[A-Za-z]+\.scala:\d+""".r
+      val unnamed = names.filterNot(d => sinks.contains(d) || site.matches(d))
+      assert(unnamed.isEmpty, s"jobs naming no cut or sink: $unnamed of $names")
+      assert(sinks.forall(names.contains), s"a commit is missing: $names")
+      assert(names.exists(_.startsWith("NearDupStream.scala:")) &&
+        names.exists(_.startsWith("Dedup.scala:")),
+        s"the wave's sketch leaf or the kernel's leaves are missing: $names")
+    } finally FileUtils.deleteQuietly(new File(root))
+  }
+
   test("an AvailableNow stream started inside a measure is counted") {
     val root = Files.createTempDirectory("graft-runmetrics-stream").toString
     import spark.implicits._
