@@ -868,25 +868,30 @@ object Dedup {
       * [[nearDupAdmitSketched]] — first-shared-band candidate emission
       * (null-safe: a ledger row without `kpfx`, e.g. one written by a
       * foreign producer, falls back to per-shared-band emission, which
-      * the count/min verdict aggregate absorbs exactly), per-source sig
-      * joins so a bucketed ledger ships nothing, verdict-per-batch-doc —
-      * with the estimator verify in place of the sset machinery: no
-      * shingle sets are computed, cached, or shipped anywhere in this
-      * plan. The batch sig table is candidate-pruned and broadcast under
-      * the honest rows × [[SigRowBytes]] gate (the batch is the small
-      * side by construction; past the cap the plan degrades to the
-      * shuffled sig join, never a driver OOM).
+      * the per-doc min absorbs exactly), per-source sig joins so a
+      * bucketed ledger ships nothing, verdict-per-batch-doc — with the
+      * estimator verify in place of the sset machinery: no shingle sets
+      * are computed, cached, or shipped anywhere in this plan. The
+      * verified pairs collapse to their smallest match per batch doc; the
+      * batch sig table, those matches and the returned admission broadcast
+      * under the honest rows × [[SigRowBytes]] gate (the batch is the small
+      * side by construction; past the cap the plan degrades to shuffled
+      * joins, never a driver OOM).
       */
     private[graft] def nearDupAdmitApproxSketched(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
         hotBandCap: Int = 0): DataFrame = {
-      val verified = approxVerifiedPairs(sk, corpusBands, corpusSigs,
-        threshold, hotBandCap)
-      sk.select(col("id").as("doc_id"))
-        .join(verified.withColumnRenamed("bid", "doc_id"), Seq("doc_id"), "left")
-        .groupBy("doc_id")
-        .agg((count(col("mid")) === 0).as("admitted"),
-          min(col("mid")).as("first_match"))
+      val (verified, fits) = approxVerifiedPairs(sk, corpusBands,
+        corpusSigs, threshold, hotBandCap)
+      val firstMatch = verified.groupBy(col("bid").as("doc_id"))
+        .agg(min(col("mid")).as("first_match"))
+      // `mid` is a non-null join key: no collapsed row ⇔ count(mid) = 0
+      val admission = sk.select(col("id").as("doc_id"))
+        .join(if (fits) broadcast(firstMatch) else firstMatch,
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), col("first_match").isNull.as("admitted"),
+          col("first_match"))
+      if (fits) broadcast(admission) else admission
     }
 
     /** The estimator-VERIFIED (bid, mid) pairs of a sketched batch against
@@ -907,12 +912,13 @@ object Dedup {
       * aggregate absorbs and cluster folding tolerates (CC is idempotent
       * under duplicate edges).
       *
-      * Construction is eager: the batch band rows, the hot keys and the
-      * candidates are cut to leaves here.
+      * Construction is eager: the batch band rows and the hot keys are cut
+      * to leaves here; the verify reads the candidates once, so they stay
+      * lazy. Also returns the gate: whether the batch sig table fits.
       */
     private[graft] def approxVerifiedPairs(sk: DataFrame,
         corpusBands: DataFrame, corpusSigs: DataFrame, threshold: Double,
-        hotBandCap: Int = 0): DataFrame = {
+        hotBandCap: Int = 0): (DataFrame, Boolean) = {
       require(threshold > 0 && threshold <= 1,
         s"similarity threshold must lie in (0, 1], got $threshold")
       // batch band rows — consumed by the corpus probe and both sides of
@@ -924,13 +930,13 @@ object Dedup {
       val (bb, bandRows) = Cuts.countedLeaf(bandRowsOfSigs(sk))
       val fits = sigTableFits(bandRows / Bands, sk.sparkSession)
       val cand = approxCandidates(bb, corpusBands, fits, hotBandCap)
-      verifyApproxCandidates(sk, cand, corpusSigs, threshold, fits)
+      (verifyApproxCandidates(sk, cand, corpusSigs, threshold, fits), fits)
     }
 
     /** Candidate (bid, mid) emission of [[approxVerifiedPairs]] over the
       * batch band rows `bb` ([[bandRowsOfSigs]]) — split out so
       * BandStormSpec can pin the per-partition row distribution of the
-      * hot-key guard directly. Returns the candidate frame as a leaf. */
+      * hot-key guard directly. Lazy: the verify reads it once. */
     private[graft] def approxCandidates(bb: DataFrame,
         corpusBands: DataFrame, fits: Boolean,
         hotBandCap: Int = 0): DataFrame = {
@@ -958,40 +964,35 @@ object Dedup {
           col("kpfx").as("kpfx_m")), Seq("band", "bkey"))
         .filter(col("mid") < col("bid") && firstSharedOnly)
         .select("bid", "mid")
-      Cuts.leaf(candCorpus.unionByName(candBatch))
+      candCorpus.unionByName(candBatch)
     }
 
     /** Estimator-verify tail of [[approxVerifiedPairs]] over an emitted
-      * candidate frame. */
+      * candidate frame, which it reads once. */
     private def verifyApproxCandidates(sk: DataFrame, cand: DataFrame,
         corpusSigs: DataFrame, threshold: Double, fits: Boolean): DataFrame = {
-      // batch sigs pruned to candidate-involved ids, ONE broadcast
-      // relation referenced through aliases on both verify sides
-      // (BroadcastExchange + ReusedExchange, as in the exact path)
-      val candIds = cand
-        .select(explode(array(col("bid"), col("mid"))).as("id")).distinct()
-      val prunedBatchSigs = sk.select(col("id"), col("sig"))
-        .join(candIds, Seq("id"), "left_semi")
-      // honest gate: batch rows × SigRowBytes; the candidate-pruned
-      // relation is a subset, so the estimate bounds it from above (the
-      // shared `fits` from the caller)
-      val bs = if (fits) broadcast(prunedBatchSigs)
-        else prunedBatchSigs
+      // the whole batch sig table, ONE broadcast relation referenced
+      // through aliases on both verify sides (BroadcastExchange +
+      // ReusedExchange); `fits` counted every batch row, so it bounds
+      // this table as is
+      val sigs = sk.select(col("id"), col("sig"))
+      val bs = if (fits) broadcast(sigs) else sigs
       // match-side sig attached PER SOURCE, never through a batch∪corpus
       // union (which would discard the compacted sig ledger's id-bucketed
-      // output partitioning and re-exchange the ledger every micro-batch;
-      // a mid resolves on exactly one side — ledger and batch ids are
-      // disjoint)
-      val withM = cand
-        .join(corpusSigs.select(col("id").as("mid"), col("sig").as("sig_m")),
-          Seq("mid"))
-        .unionByName(cand
-          .join(bs.as("vbm"), col("mid") === col("vbm.id"))
-          .select(col("bid"), col("mid"), col("vbm.sig").as("sig_m")))
+      // output partitioning and re-exchange the ledger every micro-batch):
+      // two left joins on `mid`, the first straight onto the ledger. A mid
+      // resolves on exactly one side — ledger and batch ids are disjoint —
+      // and one it resolves on neither side has a null estimate, which
+      // the threshold filter drops
       val est = graft.functions.Sketches
         .sigAgreement(col("vba.sig"), col("sig_m"))
         .cast("double") / lit(NumHashes.toDouble)
-      withM
+      cand
+        .join(corpusSigs.select(col("id").as("mid"), col("sig").as("sig_c")),
+          Seq("mid"), "left")
+        .join(bs.as("vbm"), col("mid") === col("vbm.id"), "left")
+        .select(col("bid"), col("mid"),
+          coalesce(col("sig_c"), col("vbm.sig")).as("sig_m"))
         .join(bs.as("vba"), col("bid") === col("vba.id"))
         .filter(est >= threshold)
         .select("bid", "mid")
@@ -1018,10 +1019,11 @@ object Dedup {
     * Guard: per-key ledger occupancy over the WAVE'S OWN keys (one
     * extra band-ledger probe per wave, wave-key-pruned — never a
     * corpus-wide aggregate); keys past the cap leave the bucketed
-    * join for a SALTED shuffled join — ledger rows salt by mid, probe
-    * rows replicate per salt — spreading each hot key over
-    * defaultParallelism tasks. Key-disjoint split + the caller's
-    * per-row filter applied identically on both branches ⇒ the
+    * join for a SALTED shuffled join — ledger rows spread round-robin
+    * and salt by their partition, probe rows replicate per salt —
+    * spreading each hot key evenly over defaultParallelism tasks.
+    * Key-disjoint split + the caller's per-row filter applied
+    * identically on both branches ⇒ the
     * emitted pair relation is IDENTICAL (the oracles gate
     * q105/q106/q31/q109/q110 either way); only the plan changes.
     *
@@ -1070,8 +1072,10 @@ object Dedup {
       .select("bid", "mid")
     else {
       val par = spark.sparkContext.defaultParallelism
-      val probeKeys0 = probe.select(keyCols: _*).distinct()
-      val probeKeys = if (fits) broadcast(probeKeys0) else probeKeys0
+      // a semi-join build side tolerates duplicate keys: broadcast them
+      // as they come (Bands rows per doc, inside the wave's sig gate)
+      val probeKeys = if (fits) broadcast(probe.select(keyCols: _*))
+        else probe.select(keyCols: _*).distinct()
       // read by the cold branch and both hot branches of one plan: a leaf
       val hotKeys = Cuts.leaf(cbm
         .join(probeKeys, keys, "left_semi")
@@ -1084,13 +1088,15 @@ object Dedup {
         .select("bid", "mid")
       val hotLedger = cbm
         .join(broadcast(hotKeys), keys, "left_semi")
-        .withColumn("salt", pmod(xxhash64(col("mid")), lit(par.toLong)))
         // the EXPLICIT spread: when the (small) replicated probe side
         // broadcasts, the join output inherits THIS partitioning — and
         // without it that is the bucketed layout with the whole hot key
         // in one partition, i.e. the straggler the guard exists to kill.
+        // Salted by its round-robin output partition, each salt owns one
+        // (hashing salts 0 … par−1 put two of four in one partition).
         // O(hot ledger rows) exchange, linear in occupancy.
-        .repartition(par, col("salt"))
+        .repartition(par)
+        .withColumn("salt", spark_partition_id().cast("long"))
       val hotProbe = probe
         .join(broadcast(hotKeys), keys, "left_semi")
         .withColumn("salt",

@@ -426,7 +426,7 @@ object IncrementalClusters {
     // no cut on the edge frame: foldEdgeFrame cuts it to a leaf itself,
     // and a cache on top would just hold a redundant copy
     foldEdgeFrame(sk, Dedup.MinHashLsh.approxVerifiedPairs(
-      sk, corpusBands, corpusSigs, threshold, hotBandCap), labels, merges)
+      sk, corpusBands, corpusSigs, threshold, hotBandCap)._1, labels, merges)
 
   /** [[foldWave]] with the EXACT-Jaccard edge kernel
     * ([[Dedup.MinHashLsh.exactVerifiedPairs]] over band + shingle-set
@@ -502,10 +502,9 @@ object IncrementalClusters {
     // re-ANALYZED it (measured at sf0.1: 0.3-0.4 s of driver gap per
     // count across q108/q110's waves; q110's whole wall was 114 tiny
     // stages + 3.6 s of such gaps over 6.7 s total executor time).
-    // The kernel's candidate frame is a leaf already; this leaf holds
-    // the verified edges, so no action re-runs the verify. The distributed
-    // path gets the leaf too (its five consumers then share one
-    // materialization).
+    // This leaf holds the verified edges, so no action re-runs the
+    // candidate emission or the verify. The distributed path gets the
+    // leaf too (its five consumers then share one materialization).
     val e = Cuts.leaf(edges)
     val nPairs = e.count()
     if (nPairs > driverMaxPairs(spark)) {

@@ -155,13 +155,14 @@ object CurationStream {
       val cleanDocs = flags.fold(qp)(f =>
         qp.join(f.filter(!col("contaminated")).select("id"), Seq("id")))
       // ONE eager leaf: the exact-new survivors with their minhash sketch.
-      // The verdict commit reads it from several subtrees (the exact_new
-      // flag, the kernel's batch bands, candidates and verify), and the
-      // band/sig commits read it again; a lazy persist would be raced by
-      // the verdict's own consumers (WaveCommit's SCOPE)
+      // The verdict commit reads it from several subtrees (the admission's
+      // batch ids and the kernel's verify sigs; the kernel's band rows are
+      // its own leaf), and the band/sig commits read it again; a lazy
+      // persist would be raced by the verdict's own consumers (WaveCommit's
+      // SCOPE). The anti-join's build side tolerates duplicate fps
       val toks = graft.text.TextFunctions.tokens(col("text"))
       val sk = Cuts.leaf(cleanDocs
-        .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp").distinct(),
+        .join(wave.ledger(fpsDir, DedupStream.FpSchema).select("fp"),
           Seq("fp"), "left_anti")
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window
@@ -176,11 +177,11 @@ object CurationStream {
         hotBandCap = 4096)
       val scoredVerdict = scored.select(col("id").as("doc_id"), col("quality"),
         (col("quality") >= qualityThreshold).as("q_pass"))
+      // the admission holds exactly one row per `sk` doc, with a non-null
+      // `admitted`: a joined row IS the exact_new flag
       val verdict = flags.fold(scoredVerdict)(f =>
           scoredVerdict.join(f.select(col("id").as("doc_id"),
             col("n_shared_grams"), col("contaminated")), Seq("doc_id"), "left"))
-        .join(sk.select(col("id").as("doc_id"),
-          lit(true).as("en")), Seq("doc_id"), "left")
         .join(admission.select(col("doc_id"),
           col("admitted").as("adm"), col("first_match")),
           Seq("doc_id"), "left")
@@ -189,7 +190,7 @@ object CurationStream {
             // flags rows exist iff q_pass — already (q_pass AND clean)
             coalesce(!col("contaminated"), lit(false)).as("clean")))
             .getOrElse(Nil) ++
-          Seq(coalesce(col("en"), lit(false)).as("exact_new"),
+          Seq(col("adm").isNotNull.as("exact_new"),
             coalesce(col("adm"), lit(false)).as("admitted"),
             col("first_match")): _*)
       wave.commit(verdictDir, verdict)

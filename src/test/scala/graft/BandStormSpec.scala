@@ -56,6 +56,15 @@ class BandStormSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.dedup.hotBandCap")
   }
 
+  /** Each salt owns one partition: the hot bucket's candidates fill all
+    * defaultParallelism of them, each with at least half an even share
+    * (hashing the salts would put two of four in one partition). */
+  private def assertFillsSalts(on: Seq[Long]): Unit = {
+    val par = spark.sparkContext.defaultParallelism
+    assert(on.count(_ * 2 * par >= on.sum) >= par,
+      s"the guard's emission must fill all $par salt partitions: $on")
+  }
+
   test("planted storm: the guard changes not one verdict") {
     def verdicts(cap: Int) = withCap(cap) {
       Dedup.MinHashLsh.nearDupAdmitApproxSketched(
@@ -108,6 +117,7 @@ class BandStormSpec extends AnyFunSuite {
       val busy = on.filter(_ > 0)
       assert(on.max <= 4 * (busy.sum / busy.size),
         s"no partition may carry a >4x-mean share under the guard: $on")
+      assertFillsSalts(on)
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
@@ -188,6 +198,7 @@ class BandStormSpec extends AnyFunSuite {
       val busy = on.filter(_ > 0)
       assert(on.max <= 4 * (busy.sum / busy.size),
         s"no partition may carry a >4x-mean share under the guard: $on")
+      assertFillsSalts(on)
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
@@ -274,6 +285,7 @@ class BandStormSpec extends AnyFunSuite {
       val busy = on.filter(_ > 0)
       assert(on.max <= 4 * (busy.sum / busy.size),
         s"no partition may carry a >4x-mean share under the guard: $on")
+      assertFillsSalts(on)
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

@@ -324,6 +324,59 @@ class DedupSpec extends AnyFunSuite {
       "compounded band+sig duplication must be absorbed too")
   }
 
+  test("approx admission: the per-doc collapse equals the left-join + " +
+      "count/min formulation, broadcast or shuffled") {
+    val ledger = Seq((10L, base), (14L, unrelated)).toDF("doc_id", "text")
+    val novel = "totally novel sentence describing depots timetables " +
+      "rivers and junctions after the last train has gone home tonight"
+    val wave = Seq(
+      (3L, base),                       // ledger match: first_match 10
+      (12L, base),                      // ledger 10 AND batch 3: min is 3
+      (20L, novel),                     // clean
+      (21L, novel.replace("rivers", "lakes")), // within-wave near copy of 20
+      (22L, novel),                     // within-wave exact copy of 20
+      (30L, ""), (31L, ""),             // empty text
+      (40L, "a clean doc about buses"))
+      .toDF("doc_id", "text")
+    val sk = Dedup.MinHashLsh.sigsFor(wave, "text", "doc_id")
+      .unionByName(spark.range(50, 51)  // no signature at all
+        .select(col("id"), lit(null).cast("array<bigint>").as("sig")))
+    val bands = Dedup.MinHashLsh.bandsForApprox(ledger, "text", "doc_id")
+    val sigs = Dedup.MinHashLsh.sigsFor(ledger, "text", "doc_id")
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_id", "admitted", "first_match").collect()
+      .map(r => (r.getLong(0), r.getBoolean(1),
+        Option(r.get(2)).map(_.asInstanceOf[Long])))
+      .sortBy(_._1).toSeq
+    def withOracle(maxBytes: String) = graft.core.Cuts.scoped {
+      spark.conf.set("spark.graft.dedup.verifyBroadcastMaxBytes", maxBytes)
+      val got = rows(Dedup.MinHashLsh.nearDupAdmitApproxSketched(
+        sk, bands, sigs, threshold = 0.5))
+      val (verified, _) = Dedup.MinHashLsh.approxVerifiedPairs(
+        sk, bands, sigs, threshold = 0.5)
+      val oracle = rows(sk.select(col("id").as("doc_id"))
+        .join(verified.withColumnRenamed("bid", "doc_id"), Seq("doc_id"), "left")
+        .groupBy("doc_id")
+        .agg((count(col("mid")) === 0).as("admitted"),
+          min(col("mid")).as("first_match")))
+      (got, oracle)
+    }
+    try {
+      Seq("1000000000", "1").foreach { maxBytes =>
+        val (got, oracle) = withOracle(maxBytes)
+        assert(got == oracle, s"gate $maxBytes: $got vs $oracle")
+        val v = got.map(t => t._1 -> ((t._2, t._3))).toMap
+        assert(v(3L) == ((false, Some(10L))), s"ledger match: $v")
+        assert(v(12L) == ((false, Some(3L))), s"smaller batch id wins: $v")
+        assert(v(20L) == ((true, None)) && v(40L) == ((true, None)), s"$v")
+        assert(v(21L) == ((false, Some(20L))) && v(22L) == ((false, Some(20L))),
+          s"within-wave copies reject toward the smaller id: $v")
+        assert(v(50L) == ((true, None)), s"a null signature matches nothing: $v")
+        assert(got.size == 9, s"one verdict row per batch doc: $got")
+      }
+    } finally spark.conf.unset("spark.graft.dedup.verifyBroadcastMaxBytes")
+  }
+
   test("approx broadcast gate: band rows / Bands equals sk.count() with " +
       "empty-text and null-signature docs") {
     // the gate's batch count is the band-row leaf's own row count over

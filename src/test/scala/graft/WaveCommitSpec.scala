@@ -17,6 +17,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
   InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.datasources
   .InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -377,6 +378,35 @@ class WaveCommitSpec extends AnyFunSuite {
     val partial = replayed(run)
     assert(partial.exists(_.startsWith("checkpoint")), partial.mkString("; "))
     assert(outputs(run, f) == before)
+  }
+
+  test("CurationStream.writer: a wave runs at most 23 jobs, and its verdict commit plans one shuffle exchange at most") {
+    val f = families.head
+    val root = freshDir("graft-wave-shape")
+    val writes = new Writes(Seq(s"$root/out/"))
+    val w = f.make(root)
+    val waves = f.waves()
+    w(waves(0), 0L)
+    spark.listenerManager.register(writes)
+    try {
+      // wave 1 probes the ledgers wave 0 committed
+      val (_, rec) = RunMetrics.measure(spark)(w(waves(1), 1L))
+      assert(rec.jobs.size <= 23, s"${rec.jobs.size} jobs: " +
+        rec.jobs.map(_.description).mkString("; "))
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark.sparkContext)
+      val verdicts = writes.seen.asScala.toSeq
+      assert(verdicts.size == 1, verdicts.map(_._1).mkString("\n"))
+      def shuffles(p: SparkPlan): Int = p match {
+        case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+        case q: QueryStageExec => shuffles(q.plan)
+        case e: ShuffleExchangeLike => 1 + e.children.map(shuffles).sum
+        case other => (other.children ++ other.subqueries).map(shuffles).sum
+      }
+      val plan = verdicts.head._2.executedPlan
+      // the batch sigs fit the broadcast gate here: the per-doc collapse
+      // of the verified pairs is the one exchange left
+      assert(shuffles(plan) <= 1, s"verdict commit plan:\n$plan")
+    } finally spark.listenerManager.unregister(writes)
   }
 
   test("guard: no src/main code starts threads outside WaveCommit.concurrently and GraftShim") {
