@@ -122,14 +122,15 @@ object Jobs {
     * quality gate. Returns the check results (the 9 dbt not_null tests,
     * then the 2 GX checks); callers decide error-vs-warn.
     *
-    * The dbt tests ride the writes as observed metrics
-    * ([[graft.quality.Expectations.observe]]): the 3 staging tests on the
-    * `stg_arrivals` write, the 6 mart tests on the `fct_headways` write,
-    * so each counts exactly the rows written in the write's own pass. The
-    * GX checks keep their own job over the reference's 10k-row `limit`
-    * sample of the written staging table (`tfl_transform_dag.py:15`).
-    * Every read has a declared schema, so no listing or schema-inference
-    * job runs besides these.
+    * Every check rides a write as observed metrics
+    * ([[graft.quality.Expectations.observe]]): the 3 staging tests and
+    * the 2 GX checks on the `stg_arrivals` write, the 6 mart tests on the
+    * `fct_headways` write, so each counts exactly the rows written in the
+    * write's own pass. The GX checks therefore see every staged row, not
+    * the reference's 10k-row `limit` sample (`tfl_transform_dag.py:15`),
+    * which only bounds its pandas transfer: a check that passes on every
+    * row passes on any sample. Every read has a declared schema, so the
+    * two writes' jobs are the only ones that run.
     *
     * `lineage` (default off) emits an OpenLineage-shaped START/COMPLETE
     * run-event pair with the job's dataset URIs — the counterpart of the
@@ -143,19 +144,19 @@ object Jobs {
       inputs = Seq(rawDir),
       outputs = Seq(s"$silverDir/stg_arrivals", s"$silverDir/fct_headways")) {
       GraftSession.tune(spark)
-      val (stg, stgChecks) = Expectations.observe(StgArrivals(spark, rawDir),
-        Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts")))
+      val stgTests = Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts"))
+      val gxChecks = Seq(Between("time_to_station_s", 0, 3600, Warning),
+        NotNull("line_id", Warning))
+      val (stg, stgResults) = Expectations.observe(StgArrivals(spark, rawDir),
+        stgTests ++ gxChecks)
       stg.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/stg_arrivals")
       val stgBack = spark.read.schema(Schemas.stgArrivals)
         .parquet(s"$silverDir/stg_arrivals")
-      val (fct, fctChecks) = Expectations.observe(FctHeadways(stgBack), Seq(
-        NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
-        NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
+      val fctTests = Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
+        NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s"))
+      val (fct, fctResults) = Expectations.observe(FctHeadways(stgBack), fctTests)
       fct.write.mode(SaveMode.Overwrite).parquet(s"$silverDir/fct_headways")
-      val gxChecks = Expectations.run(stgBack, Seq(
-        Between("time_to_station_s", 0, 3600, Warning),
-        NotNull("line_id", Warning)), sample = Some(10000))
-      stgChecks() ++ fctChecks() ++ gxChecks
+      stgResults(stgTests) ++ fctResults(fctTests) ++ stgResults(gxChecks)
     }
 
   /** E2-incremental — maintain a DATE-PARTITIONED silver layout for one

@@ -8,6 +8,7 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftShim, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** The engine's one run-metrics listener: [[measure]] runs a body and
   * returns one [[RunMetrics.Record]] of the Spark jobs that body ran.
@@ -46,9 +47,16 @@ object RunMetrics {
   final case class Job(id: Int, startMs: Long, endMs: Long, executionId: Long,
       description: String, stages: Seq[Stage])
 
-  /** Every job one [[measure]] ran, in start order, and the body's
-    * interval. */
-  final case class Record(startMs: Long, endMs: Long, jobs: Seq[Job]) {
+  /** One SQL execution: its analysis, optimization and physical planning
+    * times, as its `QueryExecution.tracker` recorded them. */
+  final case class Execution(id: Long, analysisMs: Long, optimizationMs: Long,
+      planningMs: Long)
+
+  /** Every job one [[measure]] ran, in start order, every SQL execution
+    * those jobs ran under that ended inside the body, in end order, and
+    * the body's interval. */
+  final case class Record(startMs: Long, endMs: Long, jobs: Seq[Job],
+      executions: Seq[Execution]) {
     def wallS: Double = (endMs - startMs) / 1e3
     def stages: Seq[Stage] = jobs.flatMap(_.stages)
     def total(f: Stage => Long): Long = stages.iterator.map(f).sum
@@ -77,6 +85,11 @@ object RunMetrics {
     val stages = mutable.ArrayBuffer.empty[Stage]
   }
 
+  private final class OpenRun {
+    val jobs = mutable.ArrayBuffer.empty[OpenJob]
+    val executions = mutable.ArrayBuffer.empty[Execution]
+  }
+
   private final class TaskMaxima {
     var read = 0L
     var write = 0L
@@ -86,8 +99,9 @@ object RunMetrics {
   /** Callbacks run on the bus's one dispatch thread; the open runs are
     * read by measuring threads, under the run's lock. */
   private final class Listener extends SparkListener {
-    val open = new ConcurrentHashMap[String, mutable.ArrayBuffer[OpenJob]]
+    val open = new ConcurrentHashMap[String, OpenRun]
     private val live = mutable.HashMap.empty[Int, (OpenJob, Seq[Int])]
+    private val executionRun = mutable.HashMap.empty[Long, OpenRun]
     private val stageJob = mutable.HashMap.empty[Int, OpenJob]
     private val tasks = mutable.HashMap.empty[(Int, Int), TaskMaxima]
 
@@ -97,7 +111,8 @@ object RunMetrics {
         val j = new OpenJob(e.jobId, e.time,
           Option(p.getProperty("spark.sql.execution.id")).fold(-1L)(_.toLong),
           Option(p.getProperty(Description)).getOrElse(""))
-        run.synchronized(run += j)
+        run.synchronized(run.jobs += j)
+        if (j.executionId >= 0) executionRun(j.executionId) = run
         live(e.jobId) = (j, e.stageIds)
         // a stage shared with a job still running stays with that job
         e.stageIds.foreach(stageJob.getOrElseUpdate(_, j))
@@ -108,6 +123,13 @@ object RunMetrics {
         j.endMs = e.time
         ids.foreach(s => if (stageJob.get(s).contains(j)) stageJob.remove(s))
       }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case end: SparkListenerSQLExecutionEnd =>
+        for (run <- executionRun.remove(end.executionId); x <- GraftShim.phases(end))
+          run.synchronized(run.executions += x)
+      case _ =>
+    }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       for (m <- Option(e.taskMetrics) if stageJob.contains(e.stageId)) {
@@ -158,7 +180,7 @@ object RunMetrics {
     if (outer != null && l.open.containsKey(outer))
       throw new IllegalStateException("RunMetrics.measure does not nest")
     val tag = s"run-${nextTag.incrementAndGet()}"
-    val run = mutable.ArrayBuffer.empty[OpenJob]
+    val run = new OpenRun
     l.open.put(tag, run)
     sc.setLocalProperty(Tag, tag)
     try {
@@ -166,11 +188,12 @@ object RunMetrics {
       val a = body
       val end = System.currentTimeMillis()
       GraftShim.drainListenerBus(sc)
-      val jobs = run.synchronized(run.toSeq).sortBy(_.startMs).map { j =>
+      val (open, executions) = run.synchronized((run.jobs.toSeq, run.executions.toSeq))
+      val jobs = open.sortBy(_.startMs).map { j =>
         Job(j.id, j.startMs, j.endMs, j.executionId, j.description,
           j.synchronized(j.stages.toSeq))
       }
-      (a, Record(start, end, jobs))
+      (a, Record(start, end, jobs, executions))
     } finally {
       sc.setLocalProperty(Tag, outer)
       l.open.remove(tag)

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *    compiled to count-failing-rows SQL);
   *  - Great Expectations runtime checks (`tfl_transform_dag.py:50-61`):
   *    `ExpectColumnValuesToBeBetween(time_to_station_s, 0, 3600)` and
-  *    `ExpectColumnValuesToNotBeNull(line_id)`, both warning severity, on a
-  *    ≤10k-row sample.
+  *    `ExpectColumnValuesToNotBeNull(line_id)`, both warning severity. The
+  *    reference checks a `limit 10000` sample only to bound its
+  *    DuckDB→pandas transfer; here they count every row.
   *
   * Design: all expectations against one frame evaluate in a SINGLE
   * aggregation pass (one job, one scan) — each check is a conditional-count
@@ -21,9 +22,8 @@ import org.apache.spark.sql.functions._
   * write) through `Dataset.observe`, so they cost no pass of their own and
   * cover exactly the rows that action processed.
   *
-  * GX parity notes: `Between` checks only non-null values (GX semantics —
-  * nulls are the `NotNull` check's business); `sample` reproduces the
-  * reference's `limit 10000` pre-check sampling.
+  * GX parity note: `Between` checks only non-null values (GX semantics —
+  * nulls are the `NotNull` check's business).
   */
 object Expectations {
 
@@ -60,11 +60,9 @@ object Expectations {
   /** One-pass evaluation → tidy frame (check_name, failures, passed),
     * ordered by check name for deterministic output.
     */
-  def check(df: DataFrame, expectations: Seq[Expectation],
-      sample: Option[Int] = None): DataFrame = {
-    val sampled = sample.fold(df)(df.limit)
+  def check(df: DataFrame, expectations: Seq[Expectation]): DataFrame = {
     val aggs = failureCounts(expectations)
-    val oneRow = sampled.agg(aggs.head, aggs.tail: _*)
+    val oneRow = df.agg(aggs.head, aggs.tail: _*)
     // pivot the single row of counts into (check_name, failures) rows
     val stackExpr = expectations
       .map(e => s"'${e.name}', `${e.name}`").mkString(", ")
@@ -78,27 +76,29 @@ object Expectations {
   /** Driver-side evaluation for jobs that gate on severity (TransformJob):
     * one aggregation, collected as one row.
     */
-  def run(df: DataFrame, expectations: Seq[Expectation],
-      sample: Option[Int] = None): Seq[Result] = {
+  def run(df: DataFrame, expectations: Seq[Expectation]): Seq[Result] = {
     val aggs = failureCounts(expectations)
-    val row = sample.fold(df)(df.limit).agg(aggs.head, aggs.tail: _*).collect().head
+    val row = df.agg(aggs.head, aggs.tail: _*).collect().head
     results(expectations, row.getValuesMap[Any](expectations.map(_.name)))
   }
 
-  /** `df` with `expectations` attached as observed metrics, and their
-    * results over the rows an action on that frame processes, in the
-    * action's own pass. The results block until such an action finished.
+  /** `df` with `expectations` attached as observed metrics, and a lookup
+    * of any of their results over the rows an action on that frame
+    * processes, in the action's own pass. The lookup blocks until such an
+    * action finished.
     */
   def observe(df: DataFrame, expectations: Seq[Expectation]):
-      (DataFrame, () => Seq[Result]) = {
+      (DataFrame, Seq[Expectation] => Seq[Result]) = {
     val observation = Observation()
     val aggs = failureCounts(expectations)
     (df.observe(observation, aggs.head, aggs.tail: _*),
-      () => results(expectations, observation.get))
+      wanted => results(wanted, observation.get))
   }
 
+  /** One count per distinct check name: two checks of one name (a dbt and
+    * a GX `not_null` on one column) count the same rows. */
   private def failureCounts(expectations: Seq[Expectation]): Seq[Column] =
-    expectations.map(e => sum(e.failureFlag).as(e.name))
+    expectations.distinctBy(_.name).map(e => sum(e.failureFlag).as(e.name))
 
   /** Results ordered by check name, from the failure counts by name (a
     * null count — no rows — is zero failures).

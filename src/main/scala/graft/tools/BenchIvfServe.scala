@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.similarity.Ann
+import graft.tools.BenchKit.timed
 
 /** Scale-tier driver for the PERSISTED-INDEX ANN serving shape — the
   * committed evidence behind BENCH_IVF_SERVE.json:
@@ -37,9 +38,6 @@ object BenchIvfServe {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") % 10 === 0)
     val name = s"graft_ivfserve_${Tables.fingerprint(spark, s"$sfDir/embeddings.parquet")}"
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // build + persist: the once-per-corpus indexing job
     var built: Ann.IvfIndex = null
     val buildWall = timed {

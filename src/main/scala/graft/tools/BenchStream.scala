@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{DedupStream, HeadwaysStream, IdempotentSink, NearDupStream}
+import graft.tools.BenchKit.{arr, dirBytes, timed}
 
 /** Scale-tier driver for three streaming paths — the committed evidence
   * behind BENCH_STREAM.json: `runMain graft.tools.BenchStream [sfDir] [outJson]`.
@@ -32,17 +33,6 @@ import graft.streaming.{DedupStream, HeadwaysStream, IdempotentSink, NearDupStre
   *     marts ≡ [[graft.jobs.Jobs.transform]]'s mart.
   */
 object BenchStream {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def dirBytes(p: String): Long = {
-    val f = new java.io.File(p)
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else f.listFiles().map(c => dirBytes(c.toString)).sum
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf1")
@@ -291,7 +281,6 @@ object BenchStream {
     val ndAdmitted = streamedVerdicts.filter(col("admitted")).count()
     val ndTotal = streamedVerdicts.count()
 
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val line =
       s"""{"sf":"$sfDir","docs":$nDocs,"events":$nEvents,""" +
       s""""dedup":{"wave_walls":${arr(waveWalls)},"compact1_s":${f"$compact1%.3f"},""" +

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{IdempotentSink, LedgerCompaction, NearDupStream}
+import graft.streaming.{IdempotentSink, NearDupStream}
+import graft.tools.BenchKit.{arr, ledgerBytes, timed}
 
 /** Exact-vs-approximate streaming near-dup admission on the SAME waves —
   * the committed evidence behind BENCH_STREAM_APPROX.json:
@@ -34,33 +35,6 @@ import graft.streaming.{IdempotentSink, LedgerCompaction, NearDupStream}
   * once.
   */
 object BenchStreamApprox {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def dirBytes(p: String): Long = {
-    val f = new java.io.File(p)
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else f.listFiles().map(c => dirBytes(c.toString)).sum
-  }
-
-  /** Ledger state at rest: remaining batch dirs + markers under the
-    * ledger dir, plus the ACTIVE compacted generation's table data
-    * directory (the sweep moves absorbed rows there — counting the dir
-    * alone would understate a compacted ledger to near zero). */
-  private def ledgerBytes(spark: SparkSession, dir: String): Long =
-    dirBytes(dir) + LedgerCompaction.currentCompaction(spark, dir)
-      .map { case (_, table) =>
-        val parts = table.split('.')
-        val ti =
-          if (parts.length == 2)
-            org.apache.spark.sql.catalyst.TableIdentifier(parts(1), Some(parts(0)))
-          else org.apache.spark.sql.catalyst.TableIdentifier(table)
-        dirBytes(new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.getTableMetadata(ti).location).toUri.getPath)
-      }.getOrElse(0L)
 
   private def ledgerExchangeFree(df: DataFrame): Boolean = {
     df.write.format("noop").mode("overwrite").save()
@@ -228,7 +202,6 @@ object BenchStreamApprox {
       }
     }.mkString("[", ",", "]")
 
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val line =
       s"""{"sf":"$sfDir","docs":$nDocs,"doc_group":$groupN,"waves":$nWaves,""" +
       s""""approx":{"wave_walls":${arr(approxWalls)},""" +

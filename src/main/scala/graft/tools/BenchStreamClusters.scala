@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{LedgerCompaction, NearDupStream}
+import graft.streaming.NearDupStream
+import graft.tools.BenchKit.{arr, ledgerBytes, timed}
 
 /** Incremental cluster maintenance vs from-scratch recompute — the
   * committed evidence behind BENCH_STREAM_CLUSTERS.json:
@@ -31,10 +32,6 @@ import graft.streaming.{LedgerCompaction, NearDupStream}
   * ledger probe joins run exchange-free once compacted.
   */
 object BenchStreamClusters {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   private def scratchClusters(docs: DataFrame): DataFrame = {
     val pairs = graft.dedup.Dedup.MinHashLsh.nearDupPairsApprox(
@@ -116,26 +113,6 @@ object BenchStreamClusters {
     }
 
     // state at rest (bytes): the whole cluster deployment's four ledgers
-    def ledgerBytes(dir: String): Long = {
-      def sz(p: String): Long = {
-        val f = new java.io.File(p)
-        if (!f.exists()) 0L
-        else if (f.isFile) f.length()
-        else f.listFiles().map(c => sz(c.toString)).sum
-      }
-      sz(dir) + LedgerCompaction.currentCompaction(spark, dir)
-        .map { case (_, table) =>
-          val parts = table.split('.')
-          val ti =
-            if (parts.length == 2) org.apache.spark.sql.catalyst
-              .TableIdentifier(parts(1), Some(parts(0)))
-            else org.apache.spark.sql.catalyst.TableIdentifier(table)
-          sz(new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-            .getTableMetadata(ti).location).toUri.getPath)
-        }.getOrElse(0L)
-    }
-
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val tail = waveWalls.drop(nWaves / 2)
     // STEADY-STATE FLATNESS: compaction-inclusive walls spike by design
     // (the wave that fires compaction pays the ledger rewrite), so the
@@ -170,9 +147,9 @@ object BenchStreamClusters {
       s""""wave_wall_tail_mean":${f"${tail.sum / tail.size}%.3f"},""" +
       s""""scratch_walls":${scratchWalls.map { case (w, s) =>
         s"""{"after_wave":$w,"s":${f"$s%.3f"}}""" }.mkString("[", ",", "]")},""" +
-      s""""state_bytes":{"labels":${ledgerBytes(labels)},""" +
-      s""""merges":${ledgerBytes(merges)},"bands":${ledgerBytes(bands)},""" +
-      s""""sigs":${ledgerBytes(sigs)}},""" +
+      s""""state_bytes":{"labels":${ledgerBytes(spark, labels)},""" +
+      s""""merges":${ledgerBytes(spark, merges)},"bands":${ledgerBytes(spark, bands)},""" +
+      s""""sigs":${ledgerBytes(spark, sigs)}},""" +
       s""""clusters":{"ledger_rows":$nLedger,"scratch_rows":$nScratch,""" +
       s""""diff_rows":$diff}}"""
     println(line)

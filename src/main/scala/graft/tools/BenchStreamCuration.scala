@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{CurationStream, LedgerCompaction, NearDupStream}
+import graft.streaming.{CurationStream, NearDupStream}
+import graft.tools.BenchKit.{arr, ledgerBytes, timed}
 
 /** The composed streaming curation pipeline (quality → exact dedup →
   * approx near-dup admission, q116's streaming form) at the sf10 tier —
@@ -24,10 +25,6 @@ import graft.streaming.{CurationStream, LedgerCompaction, NearDupStream}
   * oracle at sf0.01/sf0.1).
   */
 object BenchStreamCuration {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf10")
@@ -183,26 +180,6 @@ object BenchStreamCuration {
         s"stream verdicts must equal the batch-sequential recompute: $diff")
     }
 
-    def ledgerBytes(dir: String): Long = {
-      def sz(p: String): Long = {
-        val f = new java.io.File(p)
-        if (!f.exists()) 0L
-        else if (f.isFile) f.length()
-        else f.listFiles().map(c => sz(c.toString)).sum
-      }
-      sz(dir) + LedgerCompaction.currentCompaction(spark, dir)
-        .map { case (_, table) =>
-          val parts = table.split('.')
-          val ti =
-            if (parts.length == 2) org.apache.spark.sql.catalyst
-              .TableIdentifier(parts(1), Some(parts(0)))
-            else org.apache.spark.sql.catalyst.TableIdentifier(table)
-          sz(new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-            .getTableMetadata(ti).location).toUri.getPath)
-        }.getOrElse(0L)
-    }
-
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val compactWaves = (0 until nWaves).filter(b => b % 4 == 3).map(_ + 1)
     val plain = waveWalls.zipWithIndex.filter { case (_, b) => b % 4 != 3 }
     val cycleMeans = plain.groupBy(_._2 / 4).toSeq.sortBy(_._1)
@@ -227,8 +204,8 @@ object BenchStreamCuration {
       s""""exact_reject":${stages.getLong(3)},""" +
       s""""neardup_reject":${stages.getLong(4)},""" +
       s""""admitted":${stages.getLong(5)}},""" +
-      s""""state_bytes":{"fps":${ledgerBytes(fps)},""" +
-      s""""bands":${ledgerBytes(bands)},"sigs":${ledgerBytes(sigs)}},""" +
+      s""""state_bytes":{"fps":${ledgerBytes(spark, fps)},""" +
+      s""""bands":${ledgerBytes(spark, bands)},"sigs":${ledgerBytes(spark, sigs)}},""" +
       s""""seq_recompute_wall_s":${f"$seqWall%.3f"},"diff_rows":0}"""
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

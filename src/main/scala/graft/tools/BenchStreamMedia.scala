@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.streaming.{IdempotentSink, MediaDedupStream, NearDupStream}
+import graft.tools.BenchKit.{arr, dirBytes, timed}
 
 /** Streaming multimodal (fingerprint) admission + cluster maintenance at
   * scale — the committed evidence behind BENCH_STREAM_MEDIA.json:
@@ -30,10 +31,6 @@ import graft.streaming.{IdempotentSink, MediaDedupStream, NearDupStream}
   * this artifact measures the admission machinery, not ImageIO).
   */
 object BenchStreamMedia {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf10")
@@ -166,13 +163,6 @@ object BenchStreamMedia {
       scratch.exceptAll(ledgerClusters).count()
     val nLedgerC = ledgerClusters.count(); val nScratchC = scratch.count()
 
-    def dirBytes(d: String): Long = {
-      def sz(f: java.io.File): Long =
-        if (!f.exists()) 0L else if (f.isFile) f.length()
-        else f.listFiles().map(sz).sum
-      sz(new java.io.File(d))
-    }
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val line =
       s"""{"sf":"$sfDir","docs":$nDocs,"waves":$nWaves,""" +
       s""""admission":{"wave_walls":${arr(waveWalls)},""" +

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{Bm25Stream, LedgerCompaction}
+import graft.streaming.Bm25Stream
 import graft.text.Retrieval
+import graft.tools.BenchKit.{arr, ledgerBytes, timed}
 
 /** Streaming BM25 index maintenance vs from-scratch retrieval — the
   * committed evidence behind BENCH_STREAM_BM25.json:
@@ -33,10 +34,6 @@ import graft.text.Retrieval
   * full corpus — same doubles, same order.
   */
 object BenchStreamRetrieval {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   /** min-of-2 for the QUERY samples: the host stalls in multi-second
     * waves under sustained load (see Bench's noise-gate rationale) and a
@@ -122,26 +119,6 @@ object BenchStreamRetrieval {
     val scratchRows = Retrieval.bm25(docs, "text", "doc_id", terms)
       .collect().toSeq.map(_.toSeq)
 
-    def ledgerBytes(dir: String): Long = {
-      def sz(f: java.io.File): Long =
-        if (!f.exists()) 0L
-        else if (f.isFile) f.length()
-        else f.listFiles().map(sz).sum
-      sz(new java.io.File(dir)) +
-        LedgerCompaction.currentCompaction(spark, dir)
-          .map { case (_, table) =>
-            val parts = table.split('.')
-            val ti =
-              if (parts.length == 2) org.apache.spark.sql.catalyst
-                .TableIdentifier(parts(1), Some(parts(0)))
-              else org.apache.spark.sql.catalyst.TableIdentifier(table)
-            sz(new java.io.File(new org.apache.hadoop.fs.Path(
-              spark.sessionState.catalog.getTableMetadata(ti).location)
-              .toUri.getPath))
-          }.getOrElse(0L)
-    }
-
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val line =
       s"""{"sf":"$sfDir","docs":$nDocs,"waves":$nWaves,""" +
       s""""terms":${terms.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
@@ -153,8 +130,8 @@ object BenchStreamRetrieval {
       s""""sel_ledger_query_walls":${arr(selQueryWalls.toSeq)},""" +
       s""""sel_scratch_query_walls":${selScratchWalls.map { case (w, s) =>
         s"""{"after_wave":$w,"s":${f"$s%.3f"}}""" }.mkString("[", ",", "]")},""" +
-      s""""state_bytes":{"postings":${ledgerBytes(p)},""" +
-      s""""stats":${ledgerBytes(st)},"totals":${ledgerBytes(t)}},""" +
+      s""""state_bytes":{"postings":${ledgerBytes(spark, p)},""" +
+      s""""stats":${ledgerBytes(spark, st)},"totals":${ledgerBytes(spark, t)}},""" +
       s""""output":{"ledger_rows":${ledgerRows.length},""" +
       s""""scratch_rows":${scratchRows.length},""" +
       s""""identical":${ledgerRows == scratchRows}}}"""

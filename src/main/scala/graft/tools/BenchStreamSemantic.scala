@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.dedup.SemanticDedup
 import graft.similarity.Ann
-import graft.streaming.{LedgerCompaction, SemanticStream}
+import graft.streaming.SemanticStream
+import graft.tools.BenchKit.{arr, ledgerBytes, timed}
 
 /** Incremental SEMANTIC dedup maintenance vs from-scratch SemDeDup — the
   * committed evidence behind BENCH_STREAM_SEMANTIC.json:
@@ -36,10 +37,6 @@ import graft.streaming.{LedgerCompaction, SemanticStream}
   * corpus.
   */
 object BenchStreamSemantic {
-
-  private def timed(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf10")
@@ -117,35 +114,15 @@ object BenchStreamSemantic {
     }
 
     // state at rest (bytes): the five-ledger semantic deployment
-    def ledgerBytes(dir: String): Long = {
-      def sz(p: String): Long = {
-        val f = new java.io.File(p)
-        if (!f.exists()) 0L
-        else if (f.isFile) f.length()
-        else f.listFiles().map(c => sz(c.toString)).sum
-      }
-      sz(dir) + LedgerCompaction.currentCompaction(spark, dir)
-        .map { case (_, table) =>
-          val parts = table.split('.')
-          val ti =
-            if (parts.length == 2) org.apache.spark.sql.catalyst
-              .TableIdentifier(parts(1), Some(parts(0)))
-            else org.apache.spark.sql.catalyst.TableIdentifier(table)
-          sz(new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-            .getTableMetadata(ti).location).toUri.getPath)
-        }.getOrElse(0L)
-    }
-
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
     val line =
       s"""{"sf":"$sfDir","vecs":$nVecs,"waves":$nWaves,""" +
       s""""threshold":$threshold,""" +
       s""""wave_walls":${arr(waveWalls)},""" +
       s""""scratch_walls":${scratchWalls.map { case (w, s) =>
         s"""{"after_wave":$w,"s":${f"$s%.3f"}}""" }.mkString("[", ",", "]")},""" +
-      s""""state_bytes":{"labels":${ledgerBytes(labels)},""" +
-      s""""merges":${ledgerBytes(merges)},"members":${ledgerBytes(members)},""" +
-      s""""reps":${ledgerBytes(reps)},"fps":${ledgerBytes(fps)}},""" +
+      s""""state_bytes":{"labels":${ledgerBytes(spark, labels)},""" +
+      s""""merges":${ledgerBytes(spark, merges)},"members":${ledgerBytes(spark, members)},""" +
+      s""""reps":${ledgerBytes(spark, reps)},"fps":${ledgerBytes(spark, fps)}},""" +
       s""""output":{"ledger_rows":$nLedger,"scratch_rows":$nScratch,""" +
       s""""diff_rows":$diff}}"""
     println(line)

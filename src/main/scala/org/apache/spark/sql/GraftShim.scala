@@ -4,6 +4,8 @@ package org.apache.spark.sql
   *  - [[drainListenerBus]], the listener bus's `private[spark]` flush, so
   *    [[graft.obs.RunMetrics]] reads a run's record only after every event
   *    the run posted has been delivered;
+  *  - [[phases]], the planning phases of the `private[sql]` query
+  *    execution an execution-end event carries;
   *  - [[onPoolThread]], which runs a body on a pool thread with the
   *    caller's session and local properties
   *    ([[graft.streaming.WaveCommit.concurrently]]);
@@ -42,6 +44,16 @@ object GraftShim {
     * has seen all of them. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The analysis, optimization and planning times of the query
+    * execution an execution-end event closes; None when it carries none. */
+  def phases(e: execution.ui.SparkListenerSQLExecutionEnd):
+      Option[graft.obs.RunMetrics.Execution] =
+    Option(e.qe).map { qe =>
+      def ms(phase: String) = qe.tracker.phases.get(phase).fold(0L)(_.durationMs)
+      graft.obs.RunMetrics.Execution(e.executionId,
+        ms("analysis"), ms("optimization"), ms("planning"))
+    }
 
   /** Run `body` on a thread of `pool` as if on the calling thread: Spark's
     * own `SQLExecution.withThreadLocalCaptured` carries over the active

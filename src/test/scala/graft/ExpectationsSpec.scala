@@ -6,7 +6,7 @@ import graft.quality.Expectations
 import graft.quality.Expectations._
 
 /** The reference's quality surface: dbt not_null semantics, GX
-  * null-tolerant bounds, 10k sampling, severity routing (SURVEY A5-A7).
+  * null-tolerant bounds, severity routing (SURVEY A5-A7).
   */
 class ExpectationsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -38,13 +38,6 @@ class ExpectationsSpec extends AnyFunSuite {
     assert(r.map(_.name) == r.map(_.name).sorted)
   }
 
-  test("sampling caps the checked rows (reference limit 10000)") {
-    val big = (1 to 100).map(i => (i, i.toDouble)).toDF("id", "v")
-    val r = Expectations.run(big, Seq(Between("v", 0, 50)), sample = Some(10))
-    // only the first 10 rows are inspected — none exceed 50
-    assert(r.head.failures == 0)
-  }
-
   test("severity is carried through for warn-vs-error routing") {
     val r = Expectations.run(df, Seq(
       NotNull("id", Warning), Between("v", 0, 3600, Warning)))
@@ -52,14 +45,21 @@ class ExpectationsSpec extends AnyFunSuite {
   }
 
   test("observe counts the rows an action writes, as run does (no rows: zero failures)") {
-    val checks = Seq(NotNull("id"), NotNull("v"), Between("v", 0, 3600))
+    // a dbt and a GX check of one name count the same rows once; each
+    // result keeps its own severity
+    val dbt = Seq(NotNull("id"), NotNull("v"))
+    val checks = dbt ++ Seq(Between("v", 0, 3600, Warning), NotNull("id", Warning))
     Seq(df, df.filter($"id" > 100)).foreach { frame =>
       val (observed, results) = Expectations.observe(frame, checks)
       observed.write.format("noop").mode("overwrite").save()
-      assert(results() == Expectations.run(frame, checks))
+      assert(results(checks) == Expectations.run(frame, checks))
+      assert(results(dbt) == Expectations.run(frame, dbt))
     }
+    assert(Expectations.run(df, checks).map(r => (r.name, r.failures, r.severity)) == Seq(
+      ("between_v_0.0_3600.0", 2L, Warning), ("not_null_id", 1L, Error),
+      ("not_null_id", 1L, Warning), ("not_null_v", 1L, Error)))
     val (none, results) = Expectations.observe(df.filter($"id" > 100), checks)
     none.write.format("noop").mode("overwrite").save()
-    assert(results().forall(r => r.failures == 0 && r.passed))
+    assert(results(checks).forall(r => r.failures == 0 && r.passed))
   }
 }

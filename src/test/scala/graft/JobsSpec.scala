@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.{Http, SyntheticArrivals}
 import graft.jobs.Jobs
+import graft.obs.RunMetrics
 import graft.quality.Expectations
-import graft.quality.Expectations.NotNull
+import graft.quality.Expectations.{Between, NotNull, Warning}
 import graft.streaming.HeadwaysStream
 
 /** End-to-end pipeline tests: ingest → raw zone → transform → silver →
@@ -95,18 +96,56 @@ class JobsSpec extends AnyFunSuite {
     assert(results.size == 11, "9 dbt not_null + 2 GX checks")
   }
 
+  test("transform runs 3 jobs in 2 SQL executions: the two writes, no check pass") {
+    val raw = raw33 // ingested outside the measure
+    val silver = s"${Files.createTempDirectory("graft-jobs3")}/silver"
+    val (results, rec) = RunMetrics.measure(spark)(Jobs.transform(spark, raw, silver))
+    assert(results.size == 11)
+    val executions = rec.jobs.map(_.executionId)
+    assert(!executions.contains(-1L), s"jobs outside any SQL execution: ${rec.jobs}")
+    assert((rec.jobs.size, executions.distinct.size) == ((3, 2)), rec.jobs)
+  }
+
   test("observed dbt counts equal Expectations.run over the written tables") {
     val silver = s"${Files.createTempDirectory("graft-parity")}/silver"
-    val observed = Jobs.transform(spark, raw33, silver).take(9)
+    val observed = Jobs.transform(spark, raw33, silver)
     val stgBack = spark.read.parquet(s"$silver/stg_arrivals")
     val fctBack = spark.read.parquet(s"$silver/fct_headways")
     val recomputed =
       Expectations.run(stgBack, Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("event_ts"))) ++
         Expectations.run(fctBack, Seq(NotNull("line_id"), NotNull("stop_id"), NotNull("hour"),
-          NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s")))
+          NotNull("avg_headway_s"), NotNull("p50_headway_s"), NotNull("p90_headway_s"))) ++
+        // the GX pair over the whole written staging table
+        Expectations.run(stgBack, Seq(Between("time_to_station_s", 0, 3600, Warning),
+          NotNull("line_id", Warning)))
     assert(observed == recomputed)
     // the dirty synthetic data must exercise a non-zero count
     assert(observed.find(_.name == "not_null_event_ts").get.failures > 0, s"$observed")
+  }
+
+  test("the GX bounds check counts every staged row, not a 10k-row sample") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-gx").toString
+    // one snapshot of 12,000 rows in file order; only rows past the
+    // 10,000th are out of [0, 3600] (-1 and 3601 alternately)
+    val rows = 12000
+    val tmp = s"$root/tmp"
+    spark.range(0, rows, 1, 1).select(
+      lit("940GZZLUOXC").as("stopId"), lit("central").as("lineId"),
+      lit("Westbound - Platform 1").as("platformName"),
+      lit("Ealing Broadway").as("destinationName"),
+      when($"id" < 10000, $"id" % 3601).when($"id" % 2 === 0, -1L).otherwise(3601L)
+        .as("timeToStation"),
+      lit("2025-11-20T10:00:00Z").as("timestamp"))
+      .write.parquet(tmp)
+    val dateDir = Paths.get(s"$root/raw/date=2025-11-20")
+    Files.createDirectories(dateDir)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.startsWith("part-")).get
+    Files.move(part.toPath, dateDir.resolve("arrivals_20251120_100000.parquet"))
+    val results = Jobs.transform(spark, s"$root/raw", s"$root/silver")
+    assert(results.map(r => (r.name, r.failures)).takeRight(2) ==
+      Seq(("between_time_to_station_s_0.0_3600.0", 2000L), ("not_null_line_id", 0L)),
+      results)
   }
 
   test("empty raw zone: 11 zero-failure checks, no wait on the observation") {

@@ -14,9 +14,10 @@ import graft.obs.RunMetrics
 /** The contract of the engine's one run-metrics listener
   * ([[RunMetrics]]): a measure's record holds exactly the jobs its body
   * ran — read without a sleep, never mixed with a concurrent measure's
-  * jobs, including the jobs of a stream the body started — and a failed
-  * body leaves the next measure working. The guard pins that no other
-  * `src/main` code installs a listener of its own.
+  * jobs, including the jobs of a stream the body started — with the
+  * planning phases of their SQL executions, and a failed body leaves the
+  * next measure working. The guard pins that no other `src/main` code
+  * installs a listener of its own.
   */
 class RunMetricsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -172,6 +173,22 @@ class RunMetricsSpec extends AnyFunSuite {
     }
     assert(rec.jobs.nonEmpty, "the stream thread's jobs must carry the measure's tag")
     assert(rec.total(_.inputRecords) == 100, rec)
+    FileUtils.deleteQuietly(new File(root))
+  }
+
+  test("a transform's record holds its 2 SQL executions with their planning phases") {
+    val root = Files.createTempDirectory("graft-runmetrics-phases").toString
+    val t0 = java.time.Instant.parse("2025-11-20T10:00:00Z")
+    (0 until 3).foreach { i =>
+      val at = t0.plusSeconds(i * 120L)
+      graft.jobs.Jobs.ingest(spark, s"$root/raw", at, graft.ingest.SyntheticArrivals.transport(at))
+    }
+    val (_, rec) = RunMetrics.measure(spark)(
+      graft.jobs.Jobs.transform(spark, s"$root/raw", s"$root/silver"))
+    assert(rec.executions.map(_.id).sorted == rec.jobs.map(_.executionId).distinct.sorted, rec)
+    assert(rec.executions.size == 2, rec.executions)
+    assert(rec.executions.forall(e =>
+      e.analysisMs >= 0 && e.optimizationMs >= 0 && e.planningMs >= 0), rec.executions)
     FileUtils.deleteQuietly(new File(root))
   }
 
